@@ -241,7 +241,7 @@ def semantic_dedup_threshold(qdf: DataFrame, emb: DataFrame,
     ``allow_fixed_k_quadratic=True`` — the same engine-decides-regimes
     discipline as the r8 set-join chooser (dedup.set_similarity_join's
     candidate probe). The linear 100 TB paths remain hyperplane-LSH
-    (similarity.cosine_near_dup_pairs) and PQ coarse buckets.
+    (similarity.cosine_near_dup_pairs_planted) and PQ coarse buckets.
 
     Scale shape — the published SemDeDup argument, Spark-first: the
     corpus-wide O(n²) cosine join becomes k cluster-local joins via ONE
@@ -369,7 +369,8 @@ def semantic_dedup_auto(qdf: DataFrame, emb: DataFrame,
     the right tool at mid scale, but EXACT threshold dedup cannot be
     linear end-to-end this way. The linear 100 TB paths in this repo
     are hyperplane-LSH candidates + exact verify
-    (similarity.cosine_near_dup_pairs — candidates track output size)
+    (similarity.cosine_near_dup_pairs_planted — candidates track output
+    size)
     and the PQ coarse-bucket pass (q_pq_semantic_buckets); run those
     first and reserve cluster-bounded exact dedup for the survivor set.
 

@@ -3,7 +3,7 @@ SimHash, n-gram Jaccard.
 
 Design for 100 TB: every stage is shuffle-minimal and built-in-function-only.
 - exact dedup: one hash-aggregate on the content key
-- MinHash: shingle → seeded xxhash64 → per-doc min per permutation — a
+- MinHash: shingle → md5 universal hash → per-doc min per permutation — a
   single explode + groupBy (one shuffle); banding turns O(n²) pair search
   into a self-join on (band_id, band_signature), which only materializes
   rows for colliding buckets
@@ -107,20 +107,6 @@ def _sig_array_sql(num_hashes: int) -> str:
     return "array(" + ",".join(f"h{i}" for i in range(num_hashes)) + ")"
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """(doc, minhash array[num_hashes]) via seeded xxhash64: permutation i is
-    xxhash64(shingle, i); signature_i = min over the doc's shingles. One
-    groupBy — the mins for all permutations compute in the same aggregate.
-
-    Prefer `minhash_signatures_from_sets` when a shingle-set frame already
-    exists: it computes the same signature with zero shuffles."""
-    aggs = [F.expr(f"min(xxhash64(shingle, {i}))").alias(f"h{i}")
-            for i in range(num_hashes)]
-    sigs = shingles.groupBy("doc").agg(*aggs)
-    return sigs.select("doc",
-                       F.expr(_sig_array_sql(num_hashes)).alias("signature"))
-
-
 MINHASH_P = 2_147_483_647  # 2^31 - 1, Mersenne prime
 
 # r11 measured dead end (do NOT retry): replacing `%` with a Mersenne
@@ -134,7 +120,7 @@ MINHASH_P = 2_147_483_647  # 2^31 - 1, Mersenne prime
 # times, so chaining the fold per band element grows the expression
 # tree ~3^4 per band and the generated method burst the 64 KB Janino
 # limit (whole-stage codegen disabled for the plan — observed). The
-# actual third-decade fix is `_portable_minhash_agg_signatures`:
+# actual third-decade fix is `minhash_signatures_from_sets`' shape:
 # get the arithmetic OUT of interpreted lambdas and into a codegen'd
 # aggregate, where plain `%` is cheap.
 
@@ -153,51 +139,27 @@ def minhash_perm_constants(num_hashes: int) -> list[tuple[int, int]]:
     return [(draw("a", i, 1), draw("b", i, 0)) for i in range(num_hashes)]
 
 
-def _portable_lambda_signatures(sets: DataFrame,
-                                num_hashes: int = 32) -> DataFrame:
-    """The r10 portable signature shape — array_min over per-permutation
-    transforms of a shared md5-derived base-hash projection. Kept for
-    the A/B in scripts/minhash_sig_probe.py: HOF lambdas are
-    CodegenFallback (interpreted per-node eval), which is exactly the
-    measured third-decade gap `_portable_minhash_agg_signatures`
-    closes. Not a production call site."""
-    hs = F.transform(
-        "sh",
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10)
-        .cast("long"))
-    based = sets.select("doc", hs.alias("hs"))
-    ab = minhash_perm_constants(num_hashes)
+def minhash_signatures_from_sets(sets: DataFrame,
+                                 num_hashes: int = 32) -> DataFrame:
+    """(doc, signature array<bigint>[num_hashes]) from the shingle-set
+    frame of `shingle_sets`: universal-hash MinHash over ONE md5 per
+    shingle. h = the first 7 hex digits of md5(shingle) as a 28-bit int,
+    permutation i = (a_i·h + b_i) mod P with P = 2^31−1 and
+    sha256-derived literal constants (`minhash_perm_constants`) — every
+    op replays exactly in any SQL engine, and the products stay under
+    2^60 so the arithmetic is overflow-safe int64. It is the only hash
+    family because seeded xxhash64 surfaced the same verified pairs and
+    was no faster at 5M docs (SCALE.md r11).
 
-    def perm(a: int, b: int):
-        # one-arg closure: a two-parameter transform lambda would
-        # receive the element INDEX as its second argument
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    sig = F.array(*[
-        F.array_min(F.transform("hs", perm(a, b))) for a, b in ab
-    ])
-    return based.select("doc", sig.alias("signature"))
-
-
-def _portable_minhash_agg_signatures(sets: DataFrame,
-                                     num_hashes: int = 32) -> DataFrame:
-    """Portable universal-hash MinHash signatures via explode + a
-    codegen'd 32-way MIN aggregate (the r11 third-decade fix).
-
-    Identical values to `_portable_lambda_signatures` — h = first 7 md5
-    hex digits as a 28-bit int, permutation i = (a_i·h + b_i) mod P,
-    P = 2^31−1, sha256-derived literal constants — but a different
-    physical plan: explode the shingle-set array, compute the base hash
-    ONCE per (doc, shingle) row in a codegen'd projection, then take
-    all 32 permutation mins in one hash aggregate. Declarative MIN aggs
-    over long arithmetic stay inside whole-stage codegen (primitive
-    longs, no boxing), whereas the transform/array_min lambda shape is
-    CodegenFallback — interpreted per-node eval whose dispatch overhead
-    dominated the 1000x signature stage (113.6 s vs xxhash64's 35.2 s
-    at 5M docs, SCALE.md r10). The added shuffle is key-reduced by the
-    map-side partial MIN to num_hashes longs per doc — ~1.3 GB at 5M
-    docs — and AQE coalesces it; measured wall at the third decade is
-    what scripts/minhash_sig_probe.py records."""
+    Shape (the r11 third-decade fix): explode the set array, compute the
+    base hash ONCE per (doc, shingle) row in a codegen'd projection,
+    then take all num_hashes permutation mins in one hash aggregate.
+    Declarative MIN aggs over long arithmetic stay inside whole-stage
+    codegen, whereas a transform/array_min lambda shape is
+    CodegenFallback — interpreted per-node eval, 111.2 s vs 35.7 s for
+    the signature stage at 5M docs (SCALE.md r11). The added shuffle is
+    key-reduced by the map-side partial MIN to num_hashes longs per
+    doc, and AQE coalesces it."""
     ab = minhash_perm_constants(num_hashes)
     h = F.conv(F.substring(F.md5(F.col("g")), 1, 7), 16, 10).cast("long")
     exploded = (sets.select("doc", F.explode("sh").alias("g"))
@@ -212,49 +174,8 @@ def _portable_minhash_agg_signatures(sets: DataFrame,
         "doc", F.expr(_sig_array_sql(num_hashes)).alias("signature"))
 
 
-def minhash_signatures_from_sets(sets: DataFrame,
-                                 num_hashes: int = 32,
-                                 portable_hash: bool = False) -> DataFrame:
-    """Same signature as `minhash_signatures`, computed from the
-    shingle-set array.
-
-    ``portable_hash=True`` swaps the seeded xxhash64 permutations for
-    the textbook universal-hash construction over ONE md5 per shingle:
-    h = the first 7 hex digits of md5(shingle) as a 28-bit int,
-    permutation i = (a_i·h + b_i) mod P with P = 2^31−1 and
-    sha256-derived literal constants (`minhash_perm_constants`) — every
-    op replays exactly in any SQL engine, and the products stay under
-    2^60 so the arithmetic is overflow-safe int64.
-
-    Since r11 BOTH bases route through the explode + codegen'd 32-way
-    MIN aggregate shape: the former zero-shuffle transform/array_min
-    projection paid interpreted CodegenFallback eval per element×
-    permutation — measured at 5M docs (scripts/minhash_sig_probe.py):
-    xxhash64 132 s lambda vs 33.4 s agg, portable 111 s lambda vs
-    35.7 s agg, so the two bases are at PARITY once the interpreter is
-    out of the way and the r10 'portable tax' disappears entirely. One
-    key-reduced partial-agg shuffle (num_hashes longs per doc) buys
-    fully codegen'd arithmetic. NOTE the r10 'xxhash64 35.2 s' stage
-    number was an artifact of the permutation-seed bug fixed this round
-    (a two-parameter `lambda s, i=i:` received the ELEMENT INDEX as i,
-    so all 32 array elements were the identical expression tree and
-    subexpression elimination evaluated it once — the basis was
-    silently a single-permutation MinHash; scripts/minhash_sig_probe.py
-    now asserts lambda≡agg bit-equality for both bases, which is the
-    differential that caught it)."""
-    if portable_hash:
-        return _portable_minhash_agg_signatures(sets, num_hashes)
-    exploded = sets.select("doc", F.explode("sh").alias("g"))
-    aggs = [F.expr(f"min(xxhash64(g, {i}))").alias(f"h{i}")
-            for i in range(num_hashes)]
-    sigs = exploded.groupBy("doc").agg(*aggs)
-    return sigs.select(
-        "doc", F.expr(_sig_array_sql(num_hashes)).alias("signature"))
-
-
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 8,
-                        num_hashes: int = 32,
-                        portable_hash: bool = False) -> DataFrame:
+                        num_hashes: int = 32) -> DataFrame:
     """Band the signatures and self-join on (band, band_hash): docs agreeing
     on any full band become a candidate pair. Output (a, b) with a < b.
 
@@ -262,34 +183,14 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 8,
     docs that collide in a bucket meet. Skewed buckets (boilerplate docs)
     are handled by AQE skew-join splitting.
 
-    Band hashes are flat xxhash64 calls over statically-indexed signature
-    elements (rows-per-band resolved at plan-build time) — one codegen'd
-    hash per band, no slice/cast/concat chain. ``portable_hash=True``
-    (for the universal-hash integer signatures) folds the band key as a
-    polynomial rolling hash mod P (seeded with the band index, 1000003
-    multiplier — products < 2^62, overflow-safe) — pure arithmetic,
-    reproducible in SQL. Band-key collisions only ADD candidates, which
-    exact verification then rejects, so the 2^-31 collision rate costs
-    recall nothing."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rows = num_hashes // bands
-    if portable_hash:
-        # ONE definition of the portable polynomial fold — shared with
-        # the banded admission state, whose persisted keys must match
-        # this self-join's banding bit-for-bit
-        banded = portable_band_table(sigs, bands, num_hashes)
-    else:
-        def band_key_sql(b: int) -> str:
-            args = ",".join(f"signature[{b * rows + j}]"
-                            for j in range(rows))
-            return f"xxhash64({args}, {b})"
-        banded = sigs.select(
-            "doc",
-            F.expr("posexplode(array("
-                   + ",".join(band_key_sql(b) for b in range(bands))
-                   + "))").alias("band", "band_hash"),
-        )
+    Band keys are `portable_band_table`'s polynomial fold mod P — pure
+    arithmetic, reproducible in SQL. Band-key collisions only ADD
+    candidates, which exact verification then rejects, so the 2^-31
+    collision rate costs recall nothing."""
+    # ONE definition of the band fold — shared with the banded admission
+    # state, whose persisted keys must match this self-join's banding
+    # bit-for-bit
+    banded = portable_band_table(sigs, bands, num_hashes)
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (
@@ -404,22 +305,11 @@ def verify_pairs_jaccard(sets: DataFrame, pairs: DataFrame,
 
 def near_dup_pairs_minhash(df: DataFrame, id_col: str, text_col: str,
                            n: int = 2, num_hashes: int = 32, bands: int = 8,
-                           threshold: float = 0.7,
-                           portable_hash: bool = False) -> DataFrame:
+                           threshold: float = 0.7) -> DataFrame:
     """Full near-dup pipeline: shingle → MinHash → LSH candidates → exact
     Jaccard verification ≥ threshold. The canonical LLM-corpus near-dedup.
-
-    ``portable_hash=True`` uses md5-derived universal-hash permutations
-    and polynomial band keys so the whole pipeline (signatures → banding
-    → candidate join → verification) is bit-reproducible by a SQL
-    oracle; the verified output differs only through which candidate
-    pairs the hash family surfaces — verification itself is exact
-    either way. Since the r11 agg-shaped signatures the two bases are
-    at measured PARITY at the third decade (same-session alternating
-    A/B at 5M docs: portable 149.9 s vs xxhash64 198.6 s best-of-2,
-    255,980 vs 255,994 verified pairs — SCALE.md r11), so the portable
-    basis is no longer a correctness-scale-only trade; xxhash64 remains
-    the default only for contexts that don't need SQL replay."""
+    Every stage (signatures → banding → candidate join → verification)
+    is bit-reproducible by a SQL oracle."""
     # materialized once (localCheckpoint, not cache — its blocks release
     # on GC, so a long session running many queries doesn't accumulate
     # cached partitions): the set frame feeds signature banding (self-join
@@ -427,8 +317,8 @@ def near_dup_pairs_minhash(df: DataFrame, id_col: str, text_col: str,
     # ngram+hash projection recomputes 4x (no shuffle boundary means no
     # exchange reuse).
     sets = shingle_sets(df, id_col, text_col, n).localCheckpoint(eager=True)
-    sigs = minhash_signatures_from_sets(sets, num_hashes, portable_hash)
-    cands = lsh_candidate_pairs(sigs, bands, num_hashes, portable_hash)
+    sigs = minhash_signatures_from_sets(sets, num_hashes)
+    cands = lsh_candidate_pairs(sigs, bands, num_hashes)
     return verify_pairs_jaccard(sets, cands, threshold=threshold)
 
 
@@ -568,8 +458,8 @@ def containment_pairs(shingles: DataFrame,
 
 def containment_pairs_banded(sets: DataFrame,
                              threshold_units: int = 800_000,
-                             num_hashes: int = 32, bands: int = 8,
-                             portable_hash: bool = True) -> DataFrame:
+                             num_hashes: int = 32,
+                             bands: int = 8) -> DataFrame:
     """BOUNDED-RECALL containment pairs — the 100 TB path for corpora
     with NO rare tail, where BOTH exact regimes of `containment_pairs`
     are inherently near-all-pairs (the flat-vocab fixture's measured
@@ -592,13 +482,10 @@ def containment_pairs_banded(sets: DataFrame,
     corner: A tiny inside huge B has containment ~1 but Jaccard ~
     |A|/|B|, which banding under-samples — pytest pins the measured
     recall vs the exact operator on the fixture, and the honest scale
-    statement lives in SCALE.md.
-
-    ``portable_hash=True`` (default here, unlike the Jaccard pipeline)
-    keeps every stage SQL-replayable so the registry entry carries a
-    full oracle."""
-    sigs = minhash_signatures_from_sets(sets, num_hashes, portable_hash)
-    cands = lsh_candidate_pairs(sigs, bands, num_hashes, portable_hash)
+    statement lives in SCALE.md. Every stage is SQL-replayable, so the
+    registry entry carries a full oracle."""
+    sigs = minhash_signatures_from_sets(sets, num_hashes)
+    cands = lsh_candidate_pairs(sigs, bands, num_hashes)
     joined = (
         cands
         .join(sets.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a"),
@@ -961,12 +848,12 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
 
 def portable_band_table(sigs: DataFrame, bands: int = 8,
                         num_hashes: int = 32) -> DataFrame:
-    """(doc, band, band_hash) from portable-basis signatures — the
-    polynomial band fold of `lsh_candidate_pairs`' portable branch
-    (same multiplier 1000003, same seed = band index, same mod P), as a
-    standalone frame so the banded ADMISSION state can persist exactly
-    the keys the self-join banding uses. Replayed in SQL by
-    plans/llm._minhash_band_fold_sql."""
+    """(doc, band, band_hash) from MinHash signatures: each band's key is
+    a polynomial rolling hash of its signature elements mod P (seeded
+    with the band index, 1000003 multiplier — products < 2^62,
+    overflow-safe). A standalone frame so the banded ADMISSION state
+    persists exactly the keys `lsh_candidate_pairs` joins on. Replayed
+    in SQL by plans/llm._minhash_band_fold_sql."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rows = num_hashes // bands
@@ -1015,8 +902,7 @@ def admission_state_init_banded(corpus: DataFrame, state_dir: str,
     import os
 
     sets = shingle_sets(corpus, id_col, text_col, n)
-    sigs = minhash_signatures_from_sets(sets, num_hashes,
-                                        portable_hash=True)
+    sigs = minhash_signatures_from_sets(sets, num_hashes)
     (portable_band_table(sigs, bands, num_hashes)
      .withColumn("bucket", F.pmod(F.xxhash64("band_hash"), F.lit(buckets)))
      .repartition("bucket")
@@ -1083,8 +969,7 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
     sp = batch.sparkSession
     batch = batch.localCheckpoint(eager=True)
     bsets = shingle_sets(batch, "doc_id", "text", n)
-    bsigs = minhash_signatures_from_sets(bsets, num_hashes,
-                                         portable_hash=True)
+    bsigs = minhash_signatures_from_sets(bsets, num_hashes)
     bbands = (portable_band_table(bsigs, bands, num_hashes)
               .select(F.col("doc").alias("bdoc"), "band", "band_hash")
               .localCheckpoint(eager=True))

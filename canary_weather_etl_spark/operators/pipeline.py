@@ -59,7 +59,6 @@ def curate_corpus(
     mix_fractions: dict[str, float] | None = None,
     source_col: str = "source",
     seed: int = 42,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Returns the curated chunk table:
     (doc_id, source, chunk_idx, chunk, chunk_tokens).
@@ -71,10 +70,9 @@ def curate_corpus(
     checkpoint fix had to pin — now the choice is deterministic outright,
     identical across engines, partitionings and retries).
 
-    ``portable_hash=True`` swaps xxhash64 for md5 as the exact-dedup key
-    and runs the MinHash stage on its universal-hash portable basis — the
-    WHOLE five-stage composition then replays bit-for-bit in a SQL
-    oracle (q_corpus_curation since r10). xxhash64 stays the default.
+    The exact-dedup key is md5(text) and the MinHash stage runs the md5
+    universal-hash family, so the WHOLE five-stage composition replays
+    bit-for-bit in a SQL oracle (q_corpus_curation since r10).
 
     PRECONDITION: ``id_col`` must be UNIQUE in ``docs`` (ADVICE r9). The
     chunk stage rebuilds survivor text by semi-joining the RAW scan on
@@ -88,8 +86,7 @@ def curate_corpus(
     """
     survivors = curation_survivors(
         docs, id_col=id_col, text_col=text_col, keep_langs=keep_langs,
-        min_tokens=min_tokens, near_dup_threshold=near_dup_threshold,
-        portable_hash=portable_hash)
+        min_tokens=min_tokens, near_dup_threshold=near_dup_threshold)
 
     # 4. stratified source mixing (data-mix weights)
     if mix_fractions:
@@ -108,7 +105,6 @@ def curation_survivors(
     keep_langs: tuple[str, ...] = ("en", "und"),
     min_tokens: int = 20,
     near_dup_threshold: float = 0.5,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Stages 1-3 of the curation pipeline — quality/language gate, exact
     content-hash dedup (deterministic min-id keeper) and MinHash/LSH
@@ -123,25 +119,21 @@ def curation_survivors(
         .filter(lang_id(text_col).isin(*keep_langs))
     )
 
-    # 2. exact dedup on the content hash (8-byte shuffle key), keeper =
-    # min id per hash group: one window over the hash shuffle, no
-    # arbitrary-survivor nondeterminism
+    # 2. exact dedup on the content hash, keeper = min id per hash group:
+    # one window over the hash shuffle, no arbitrary-survivor
+    # nondeterminism
     from pyspark.sql import Window
 
-    hash_key = (F.md5(F.col(text_col)) if portable_hash
-                else F.xxhash64(text_col))
     wh = Window.partitionBy("__h")
-    exact = (gated.withColumn("__h", hash_key)
+    exact = (gated.withColumn("__h", F.md5(F.col(text_col)))
              .withColumn("__keep", F.min(id_col).over(wh))
              .filter(F.col(id_col) == F.col("__keep"))
              .drop("__h", "__keep"))
 
     # 3. near-dup removal: LSH candidates → verified pairs → drop b-side
     sets = shingle_sets(exact, id_col, text_col, n=2).localCheckpoint(eager=True)
-    sigs = minhash_signatures_from_sets(sets, num_hashes=32,
-                                        portable_hash=portable_hash)
-    cands = lsh_candidate_pairs(sigs, bands=8, num_hashes=32,
-                                portable_hash=portable_hash)
+    sigs = minhash_signatures_from_sets(sets, num_hashes=32)
+    cands = lsh_candidate_pairs(sigs, bands=8, num_hashes=32)
     dup_pairs = verify_pairs_jaccard(sets, cands,
                                      threshold=near_dup_threshold)
     drop_ids = dup_pairs.select(F.col("b").alias(id_col)).distinct()

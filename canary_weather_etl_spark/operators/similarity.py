@@ -126,6 +126,8 @@ def hyperplane_signature(vec: F.Column | str, dim: int, bits: int = 16,
     (ADVICE r14: external-caller convenience — same analyzed expression,
     composed per bit, so names needing backtick quoting work via
     F.col; construction cost is the old per-bit lambda price)."""
+    if bits < 1:
+        raise ValueError(f"bits must be >= 1, got {bits}")
     if isinstance(vec, str):
         def bit_sql(j: int) -> str:
             proj = (f"aggregate(zip_with({vec}, {_plane_sql(j, dim, seed)}, "
@@ -210,35 +212,6 @@ def topk_lsh(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          dim: int = 64, bits: int = 10,
-                          probes: int = 4) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b, cos ≥ threshold) via
-    LSH bucketing + exact verification — semantic dedup for an LLM corpus."""
-    base = embeddings.select(F.col(id_col).alias("id"),
-                             as_double(vec_col).alias("v"))
-    bucketed = base.select(
-        "*",
-        F.posexplode(F.array(*[
-            hyperplane_signature("v", dim, bits, seed=2000 + p)
-            for p in range(probes)
-        ])).alias("probe", "bucket"),
-    )
-    l, r = bucketed.alias("l"), bucketed.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.probe") == F.col("r.probe"))
-               & (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"),
-                F.col("l.v").alias("va"), F.col("r.v").alias("vb"))
-        .distinct()
-        .select("a", "b", cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-    return pairs
-
-
 def planted_hyperplanes(probes: int, bits: int, dim: int,
                         tag: str = "hyperplane") -> list[list[list[float]]]:
     """Deterministic ±1 hyperplane tensor [probe][bit][dim], derived from
@@ -294,11 +267,12 @@ def cosine_near_dup_pairs_planted(embeddings: DataFrame,
                                   dim: int = 64, bits: int = 10,
                                   probes: int = 4,
                                   round_to: int = 6) -> DataFrame:
-    """`cosine_near_dup_pairs` with PLANTED literal hyperplanes and a
-    deterministically rounded score — the fully-oracle-able variant: bucket
-    assignment, candidate set, and verified cosines are all replayable in
-    plain SQL from the same literals. Same 100 TB shape (banded equi
-    self-join on (probe, bucket), exact rescoring on candidates only)."""
+    """Embedding-cosine near-duplicate pairs (a < b, cos ≥ threshold) —
+    semantic dedup for an LLM corpus — via PLANTED literal hyperplanes and
+    a deterministically rounded score: bucket assignment, candidate set,
+    and verified cosines are all replayable in plain SQL from the same
+    literals. 100 TB shape: banded equi self-join on (probe, bucket),
+    exact rescoring on candidates only."""
     if planes is None:
         planes = planted_hyperplanes(probes, bits, dim)
     from ..functions import round_det
@@ -326,64 +300,17 @@ def cosine_near_dup_pairs_planted(embeddings: DataFrame,
     )
 
 
-def train_ivf_quantizer(embeddings: DataFrame, n_lists: int = 8,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        seed: int = 42) -> DataFrame:
-    """Train the IVF coarse quantizer: KMeans over the corpus, returning the
-    (list_id, centroid array<double>) table. This is a TRAINING JOB — run it
-    once (or on a refresh schedule), persist the result as a table, and feed
-    it to `topk_ivf` via `centroids`; don't re-train per query."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = embeddings.sparkSession
-    base = embeddings.select(F.col(id_col).alias("vec_id"),
-                             as_double(vec_col).alias("v"))
-    train = base.select("vec_id", array_to_vector("v").alias("features"))
-    model = KMeans(k=n_lists, seed=seed, maxIter=10).fit(train)
-    centers = [(i, list(map(float, c)))
-               for i, c in enumerate(model.clusterCenters())]
-    return spark.createDataFrame(centers, "list_id int, centroid array<double>")
-
-
-def persist_ivf_quantizer(embeddings: DataFrame, path: str, n_lists: int = 8,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          seed: int = 42) -> DataFrame:
-    """Train-once/reuse-forever wrapper: read the quantizer table at `path`
-    if it exists, else train and write it. KMeans with a fixed seed over the
-    same corpus is deterministic, so the persisted table is reproducible.
-    Returns the centroid DataFrame (always read back from the table, so
-    query plans reference the parquet scan, not a fit job)."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    spark = embeddings.sparkSession
-    # trust the table only if the write committed (_SUCCESS): a crashed
-    # prior write leaves a partial directory that parquet would happily
-    # read as a short centroid table (ADVICE r2)
-    committed = (not path.startswith("/")  # non-local FS: trust the catalog
-                 or os.path.isfile(os.path.join(path, "_SUCCESS")))
-    if committed:
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            pass  # path missing → train below; other errors surface
-    cdf = train_ivf_quantizer(embeddings, n_lists, id_col, vec_col, seed)
-    cdf.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def train_ivf_quantizer_fixed(embeddings: DataFrame, n_lists: int = 8,
                               iterations: int = 2,
                               id_col: str = "vec_id",
                               vec_col: str = "embedding") -> DataFrame:
     """Deterministic IVF coarse quantizer: the repo's integer fixed-point
-    Lloyd (clustering.kmeans_fixed) instead of MLlib KMeans — bit-
-    reproducible across engines, partitionings and retries, so an IVF
-    query over it is FULLY SQL-oracle-able (the r8 PQ-ADC discipline).
-    Same train-once/persist contract as `train_ivf_quantizer`; returns
-    (list_id int, centroid array<bigint>) in 1e6 fixed-point units."""
+    Lloyd (clustering.kmeans_fixed) — bit-reproducible across engines,
+    partitionings and retries, so an IVF query over it is FULLY
+    SQL-oracle-able (the r8 PQ-ADC discipline). This is a TRAINING JOB:
+    persist it once (`persist_ivf_quantizer_fixed`) and feed it to
+    `topk_ivf_fixed` via `centroids`. Returns (list_id int, centroid
+    array<bigint>) in 1e6 fixed-point units."""
     from .clustering import kmeans_fixed, quantize_vectors
 
     spark = embeddings.sparkSession
@@ -399,14 +326,18 @@ def persist_ivf_quantizer_fixed(embeddings: DataFrame, path: str,
                                 n_lists: int = 8, iterations: int = 2,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding") -> DataFrame:
-    """`persist_ivf_quantizer`'s train-once/_SUCCESS-gated contract for
-    the deterministic fixed-point quantizer."""
+    """Train-once/reuse-forever wrapper: read the quantizer table at
+    `path` if its write committed (_SUCCESS), else train and write it.
+    Returns the centroid DataFrame read back from the table, so query
+    plans reference the parquet scan, not a training job."""
     import os
 
     from pyspark.errors import AnalysisException
 
     spark = embeddings.sparkSession
-    committed = (not path.startswith("/")
+    # a crashed prior write leaves a partial directory that parquet would
+    # happily read as a short centroid table (ADVICE r2)
+    committed = (not path.startswith("/")  # non-local FS: trust the catalog
                  or os.path.isfile(os.path.join(path, "_SUCCESS")))
     if committed:
         try:
@@ -425,7 +356,10 @@ def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                    n_probe: int = 4, iterations: int = 2,
                    round_to: int = 6,
                    centroids: DataFrame | None = None) -> DataFrame:
-    """`topk_ivf` over the DETERMINISTIC fixed-point quantizer: corpus
+    """IVF-style approximate top-k: the corpus is partitioned into
+    `n_lists` inverted lists by the DETERMINISTIC fixed-point quantizer
+    and each query is scored only against its `n_probe` nearest lists —
+    the data-adaptive complement to `topk_lsh`. Corpus
     assignment and query probing are integer L2 folds against the
     (persisted) centroid-units table — broadcast crossJoin of n_lists
     rows + one window per side, ties to (dist, list_id) exactly like
@@ -471,72 +405,6 @@ def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         scored = scored.withColumn("cos", round_det("cos", round_to))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
                                                F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.col("cos").alias("cos_sim"))
-    )
-
-
-def topk_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", n_lists: int = 8,
-             n_probe: int = 3, seed: int = 42,
-             round_to: int | None = 6,
-             centroids: DataFrame | None = None) -> DataFrame:
-    """IVF-style approximate top-k: a KMeans coarse quantizer partitions the
-    corpus into `n_lists` inverted lists; each query is scored only against
-    the `n_probe` lists whose centroids are nearest to it.
-
-    The complementary scale path to `topk_lsh`: IVF adapts to the data
-    distribution (centroids follow clusters, so recall on clustered
-    embedding corpora is high with small n_probe), at the cost of a
-    training pass. Candidate volume ≈ n_probe/n_lists of the corpus.
-    Everything after training is DataFrame-only: assignment via
-    crossJoin-free broadcast of centroids, candidate probing via equi-join
-    on list id.
-
-    Pass `centroids` (from `train_ivf_quantizer` / `persist_ivf_quantizer`)
-    to probe a pre-trained quantizer — the production shape: the query plan
-    then contains no KMeans fit job, just a broadcast of the tiny centroid
-    table. Without it, training runs inline (convenience for ad-hoc use).
-    """
-    spark = embeddings.sparkSession
-    base = embeddings.select(F.col(id_col).alias("vec_id"),
-                             as_double(vec_col).alias("v"))
-    cdf = centroids if centroids is not None else train_ivf_quantizer(
-        embeddings, n_lists, id_col, vec_col, seed)
-
-    def nearest_lists(df: DataFrame, idc: str, vcol: str, n: int) -> DataFrame:
-        """Attach the n nearest list ids (by L2 to centroid) to each row."""
-        from pyspark.sql import Window
-        scored = (df.crossJoin(F.broadcast(cdf))
-                  .withColumn("d2", F.aggregate(
-                      F.zip_with(F.col(vcol), F.col("centroid"),
-                                 lambda a, b: (a - b) * (a - b)),
-                      F.lit(0.0), lambda acc, x: acc + x)))
-        w = Window.partitionBy(idc).orderBy(F.asc("d2"), F.asc("list_id"))
-        return (scored.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= n).drop("d2", "rk", "centroid"))
-
-    # corpus side: each vector lives in exactly its nearest list
-    assigned = nearest_lists(base, "vec_id", "v", 1)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       as_double(vec_col).alias("qv"))
-    probes_df = nearest_lists(q, "query_id", "qv", n_probe)
-
-    scored = (
-        assigned.join(probes_df, on="list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id",
-                cosine(F.col("qv"), F.col("v")).alias("cos"))
-        .distinct()
-    )
-    if round_to is not None:
-        from ..functions import round_det
-        scored = scored.withColumn("cos", round_det("cos", round_to))
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

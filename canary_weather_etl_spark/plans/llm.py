@@ -433,29 +433,28 @@ _MINHASH_LSH_SQL = rf"""
     oracle=_MINHASH_LSH_SQL,
     doc="MinHash(32 perms) + LSH(8 bands) near-dup pipeline with exact "
         "Jaccard verification ≥0.5 (operators/dedup.near_dup_pairs_minhash)."
-        " r10: runs the operator's portable_hash basis — ONE md5 per "
+        " r10: the operator's hash family is ONE md5 per "
         "shingle (first 7 hex digits as a 28-bit int) + the textbook "
         "universal-hash permutations (a_i·h + b_i) mod 2^31−1 with "
         "sha256-derived literal constants, band keys as polynomial folds "
         "mod the same prime — which upgrades this entry from rows-only "
         "to a FULL SQL oracle: the DuckDB twin rebuilds signatures, "
         "banding, the candidate join and exact verification bit-for-bit "
-        "from the same literals. r11: signatures for BOTH bases moved "
-        "from transform/array_min lambdas (CodegenFallback — interpreted "
+        "from the same literals. r11: signatures moved from "
+        "transform/array_min lambdas (CodegenFallback — interpreted "
         "per-node eval, the whole r10 third-decade gap) to an explode + "
         "codegen'd 32-way MIN aggregate, taking this registered entry "
-        "from 306 s to 75.6 s at 1000x (24x wall per 1000x data) and "
-        "putting the two bases at measured parity (SCALE.md r11) — the "
-        "portable basis is the at-scale path, not a testability tax. "
-        "pytest asserts the recall floor vs exact q_ngram_jaccard_pairs "
-        "for BOTH hash bases and lambda≡agg shape bit-equality.",
+        "from 306 s to 75.6 s at 1000x (24x wall per 1000x data); the "
+        "seeded-xxhash64 family measured no faster (SCALE.md r11) and is "
+        "gone. pytest asserts the recall floor vs exact "
+        "q_ngram_jaccard_pairs and lambda≡agg shape bit-equality.",
     tags=("llm", "dedup", "approx"), bench=True,
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
     return D.near_dup_pairs_minhash(d, "doc_id", "text",
                                     n=2, num_hashes=32, bands=8,
-                                    threshold=0.5, portable_hash=True)
+                                    threshold=0.5)
 
 
 _SIMHASH_SQL = r"""
@@ -864,9 +863,8 @@ _COSINE_NEAR_DUP_ORACLE = f"""
         "literals shared with the oracle, which replays bucket assignment "
         "(sign of the plane projection, OR-ed bit weights), the banded "
         "candidate self-join, and the exact cosine verify from the same "
-        "literals. The xxhash64-derived operator (cosine_near_dup_pairs) "
-        "remains the in-engine path; this planted variant is the "
-        "differential-testing twin with the identical join shape.",
+        "literals. The planted operator is the only cosine near-dup "
+        "path; its banded self-join shape is the 100 TB one.",
     tags=("llm", "similarity", "dedup", "approx"),
 )
 def q_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,8 +982,8 @@ def _ivf_fixed_oracle() -> str:
         "q_kmeans_lloyd's unrolled-iteration prefix rebuilds the SAME "
         "final centroids, then the oracle replays integer-L2 probing, "
         "the list equi-join and the rounded exact-cosine rank cut "
-        "(the r8 PQ-ADC discipline). The MLlib quantizer remains "
-        "available (train_ivf_quantizer) with its recall pytest.",
+        "(the r8 PQ-ADC discipline). The fixed-point quantizer is the "
+        "only one; its recall vs brute force is pytest-asserted.",
     tags=("llm", "similarity", "approx"),
 )
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1002,8 +1000,9 @@ def _ivf_quantizer_path(sf_dir: str) -> str:
     """Deterministic per-corpus location for the persisted quantizer —
     the stand-in for a catalog table at production scale. Scoped by uid so
     shared-tempdir hosts don't collide across users (ADVICE r2); same-user
-    concurrent runs are safe because training is seed-deterministic and
-    `persist_ivf_quantizer` only trusts a committed (_SUCCESS) table."""
+    concurrent runs are safe because training is deterministic and
+    `persist_ivf_quantizer_fixed` only trusts a committed (_SUCCESS)
+    table."""
     import hashlib
     import os
     import tempfile
@@ -1565,14 +1564,14 @@ def _curation_oracle() -> str:
         "(operators/pipeline.curate_corpus): quality gate -> language "
         "filter -> exact hash dedup -> MinHash/LSH near-dup removal -> "
         "chunking. r10: upgraded from rows-only to a FULL SQL oracle — "
-        "the composition runs the portable hash basis (md5 exact-dedup "
+        "the composition runs the md5 hash family (md5 exact-dedup "
         "key with a DETERMINISTIC min-id keeper, universal-hash MinHash "
         "permutations) and the oracle replays ALL FIVE stages from the "
         "fragments their standalone oracles already proved "
         "(q_observe_quality_gate's gate, q_dedup_minhash_lsh's "
         "signature/band/verify arithmetic, q_text_chunking's slice). "
         "The arbitrary-survivor exact dedup that forced rows-only is "
-        "gone in BOTH bases (min-id keeper). Invariants (monotone row "
+        "gone (min-id keeper). Invariants (monotone row "
         "bookkeeping, no near-dup survivors, chunk arithmetic) remain "
         "asserted in tests/test_llm_operators.",
     tags=("llm", "pipeline"), bench=True,
@@ -1580,7 +1579,7 @@ def _curation_oracle() -> str:
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import curate_corpus
     d = load_par(spark, sf_dir, "documents")
-    return curate_corpus(d, portable_hash=True)
+    return curate_corpus(d)
 
 
 @register(

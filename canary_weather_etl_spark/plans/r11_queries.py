@@ -125,8 +125,7 @@ def q_containment_banded_recall(spark: SparkSession,
     d = load_par(spark, sf_dir, "documents")
     sets = D.shingle_sets(d, "doc_id", "text", n=2)
     return D.containment_pairs_banded(sets, threshold_units=800_000,
-                                      num_hashes=32, bands=8,
-                                      portable_hash=True)
+                                      num_hashes=32, bands=8)
 
 
 # ---------------------------------------------------------------------------

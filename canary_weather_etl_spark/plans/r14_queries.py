@@ -109,8 +109,7 @@ def curate_corpus_drift_mix(docs: DataFrame,
                             min_tokens: int = 20,
                             near_dup_threshold: float = 0.5,
                             chunk_tokens: int = 40,
-                            chunk_overlap: int = 10,
-                            portable_hash: bool = True) -> DataFrame:
+                            chunk_overlap: int = 10) -> DataFrame:
     """`curate_corpus` with the mix stage driven BY MEASURED DRIFT
     instead of static fractions: stages 1-3 produce the survivor frame
     (pipeline.curation_survivors — the identical derivation), the
@@ -134,8 +133,8 @@ def curate_corpus_drift_mix(docs: DataFrame,
     write would need anyway."""
     surv = curation_survivors(
         docs, id_col=id_col, text_col=text_col, keep_langs=keep_langs,
-        min_tokens=min_tokens, near_dup_threshold=near_dup_threshold,
-        portable_hash=portable_hash).localCheckpoint(eager=True)
+        min_tokens=min_tokens,
+        near_dup_threshold=near_dup_threshold).localCheckpoint(eager=True)
     quota = (mix_weights_drift_adjusted(surv)
              .select(source_col, "docs_per_epoch"))
     rn = F.row_number().over(
@@ -171,7 +170,7 @@ def curate_corpus_drift_mix(docs: DataFrame,
 )
 def q_corpus_curation_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    return curate_corpus_drift_mix(d, portable_hash=True)
+    return curate_corpus_drift_mix(d)
 
 # ---------------------------------------------------------------------------
 # Streaming drift-adjusted mix: the weights re-derived from stream state

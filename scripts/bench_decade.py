@@ -14,10 +14,12 @@ Protocol (fixed — change it and the artifact is no longer comparable):
   - one warm session (same warm-up as bench.py), reps=3 per query,
     ALL rep times recorded (spread is part of the artifact), min is
     the headline number;
-  - hash sink (bit_xor of xxhash64 over every output column -> 1 row):
+  - hash sink (sum of xxhash64 over every output column -> 1 row):
     full computation, no driver result serialization — the guide §1.4
     noop-sink discipline adapted to keep an output-equality fingerprint
-    (the hash doubles as a cheap cross-run result check).
+    (the hash doubles as a cheap cross-run result check;
+    BENCH_DECADE_r15.json's result_hash values are bit_xor fingerprints
+    from before the sum and do not compare with later captures).
 
 Usage: python scripts/bench_decade.py [--reps N] [names...]
 Prints ONE JSON line.
@@ -65,7 +67,7 @@ def main() -> None:
     warm_up(spark)
 
     out: dict[str, list[float]] = {}
-    hashes: dict[str, int] = {}
+    hashes: dict[str, int | None] = {}
     for name in names:
         spec = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"decade {name}")
@@ -73,12 +75,16 @@ def main() -> None:
         for _ in range(reps):
             t0 = time.perf_counter()
             df = spec.fn(spark, big)
+            # order-free SUM, not bit_xor: XOR cancels rows that appear
+            # an even number of times, so paired duplicates would hide
             h = df.select(
-                F.bit_xor(F.xxhash64(*df.columns)).alias("h")).collect()
+                F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+                .alias("h")).collect()
             runs.append(round(time.perf_counter() - t0, 3))
         spark.sparkContext.setJobDescription(None)
         out[name] = runs
-        hashes[name] = h[0]["h"]
+        # Decimal is not JSON-serializable; NULL is an empty result
+        hashes[name] = None if h[0]["h"] is None else int(h[0]["h"])
         print(f"  {name}: {runs} (min {min(runs)})", file=sys.stderr)
     mins = {n: min(r) for n, r in out.items()}
     print(json.dumps({

@@ -11,12 +11,16 @@ Shapes compared, identical output (asserted):
          buffer (a single group's collect_list state cannot spill)
          before the filter discards it — the per-task OOM vector the
          r14 verdict flagged.
-- r15  — groupBy(cell).count().filter(<= cap) (constant per-group
-         state, map-side combined) -> left_semi join back onto the
-         activity frame -> collect_list: hot-cell rows are dropped
-         BEFORE any list is built, so aggregation state is <= cap longs
-         per group by construction. The probe side hashes by the same
-         cell keys as the count aggregate, so the exchange is reused.
+- r15  — count(*) OVER (PARTITION BY cell) -> filter(<= cap) ->
+         collect_list (shipped): one scan, one cell exchange (the
+         collect_list aggregate inherits the window's partitioning).
+         Hot-cell rows buffer in WindowExec's spillable array and are
+         dropped BEFORE any list is built, so aggregation state is
+         <= cap longs per group by construction.
+- semijoin — groupBy(cell).count().filter(<= cap) -> left_semi join
+         back onto the activity frame -> collect_list (the sketch from
+         the r14 verdict, rejected): Catalyst pushes the LeftSemi below
+         the left branch's distinct, so the scan + distinct run twice.
 
 Modes:
 

@@ -106,9 +106,8 @@ def main() -> None:
     def p_neardup():
         sets = D.shingle_sets(exact_df(), "doc_id", "text",
                               n=2).localCheckpoint(eager=True)
-        sigs = D.minhash_signatures_from_sets(sets, 32, portable_hash=True)
-        cands = D.lsh_candidate_pairs(sigs, bands=8, num_hashes=32,
-                                      portable_hash=True)
+        sigs = D.minhash_signatures_from_sets(sets, 32)
+        cands = D.lsh_candidate_pairs(sigs, bands=8, num_hashes=32)
         dup = D.verify_pairs_jaccard(sets, cands, threshold=0.5)
         drop_ids = dup.select(F.col("b").alias("doc_id")).distinct()
         surv = (sets.select(F.col("doc").alias("doc_id"))
@@ -118,9 +117,8 @@ def main() -> None:
     def p_survivors():
         sets = D.shingle_sets(exact_df(), "doc_id", "text",
                               n=2).localCheckpoint(eager=True)
-        sigs = D.minhash_signatures_from_sets(sets, 32, portable_hash=True)
-        cands = D.lsh_candidate_pairs(sigs, bands=8, num_hashes=32,
-                                      portable_hash=True)
+        sigs = D.minhash_signatures_from_sets(sets, 32)
+        cands = D.lsh_candidate_pairs(sigs, bands=8, num_hashes=32)
         dup = D.verify_pairs_jaccard(sets, cands, threshold=0.5)
         drop_ids = dup.select(F.col("b").alias("doc_id")).distinct()
         surv_ids = (sets.select(F.col("doc").alias("doc_id"))
@@ -128,8 +126,7 @@ def main() -> None:
         return force(docs.join(surv_ids, "doc_id", "left_semi"))
 
     def p_full():
-        return force(curate_corpus(docs, portable_hash=True,
-                                   near_dup_threshold=0.5))
+        return force(curate_corpus(docs, near_dup_threshold=0.5))
 
     # UNTIMED full-pipeline warm pass first: the first measured prefix
     # otherwise absorbs the JIT/codegen warm-up of the regex-heavy gate

@@ -157,59 +157,34 @@ def test_minhash_shapes_match_elementwise(spark):
     df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     sets = D.shingle_sets(df, "doc_id", "text", n=2)
 
-    for portable in (False, True):
-        new = D.minhash_signatures_from_sets(sets, 32, portable)
-        if portable:
-            ab = D.minhash_perm_constants(32)
-            h = F.conv(F.substring(F.md5(F.col("g")), 1, 7), 16, 10) \
-                 .cast("long")
-            exploded = (sets.select("doc", F.explode("sh").alias("g"))
-                        .select("doc", h.alias("h")))
-            aggs = [F.min((F.lit(a) * F.col("h") + F.lit(b))
-                          % F.lit(D.MINHASH_P)).alias(f"h{i}")
-                    for i, (a, b) in enumerate(ab)]
-        else:
-            exploded = sets.select("doc", F.explode("sh").alias("g"))
-            aggs = [F.min(F.xxhash64("g", F.lit(i))).alias(f"h{i}")
-                    for i in range(32)]
-        old = (exploded.groupBy("doc").agg(*aggs)
-               .select("doc", F.array(*[f"h{i}" for i in range(32)])
-                       .alias("signature")))
-        assert old.schema == new.schema, portable
-        assert (sorted(map(tuple, old.collect()))
-                == sorted(map(tuple, new.collect()))), portable
+    new = D.minhash_signatures_from_sets(sets, 32)
+    ab = D.minhash_perm_constants(32)
+    h = F.conv(F.substring(F.md5(F.col("g")), 1, 7), 16, 10).cast("long")
+    exploded = (sets.select("doc", F.explode("sh").alias("g"))
+                .select("doc", h.alias("h")))
+    aggs = [F.min((F.lit(a) * F.col("h") + F.lit(b))
+                  % F.lit(D.MINHASH_P)).alias(f"h{i}")
+            for i, (a, b) in enumerate(ab)]
+    old = (exploded.groupBy("doc").agg(*aggs)
+           .select("doc", F.array(*[f"h{i}" for i in range(32)])
+                   .alias("signature")))
+    assert old.schema == new.schema
+    assert (sorted(map(tuple, old.collect()))
+            == sorted(map(tuple, new.collect())))
 
-        # band keys, both bases
-        sigs = new
-        if portable:
-            def band_key(b):
-                bv = F.lit(b).cast("long")
-                for j in range(4):
-                    bv = (bv * F.lit(1_000_003)
-                          + F.col("signature")[b * 4 + j]) \
-                        % F.lit(D.MINHASH_P)
-                return bv
-            old_b = sigs.select("doc", F.posexplode(F.array(
-                *[band_key(b) for b in range(8)]))
-                .alias("band", "band_hash"))
-            new_b = D.portable_band_table(sigs, 8, 32)
-        else:
-            def band_key(b):
-                return F.xxhash64(
-                    *[F.col("signature")[b * 4 + j] for j in range(4)],
-                    F.lit(b))
-            old_b = sigs.select("doc", F.posexplode(F.array(
-                *[band_key(b) for b in range(8)]))
-                .alias("band", "band_hash"))
-            new_b = sigs.select("doc", F.expr(
-                "posexplode(array(" + ",".join(
-                    "xxhash64(" + ",".join(
-                        f"signature[{b * 4 + j}]" for j in range(4))
-                    + f", {b})" for b in range(8))
-                + "))").alias("band", "band_hash"))
-        assert old_b.schema == new_b.schema, portable
-        assert (sorted(map(tuple, old_b.collect()))
-                == sorted(map(tuple, new_b.collect()))), portable
+    # band keys
+    def band_key(b):
+        bv = F.lit(b).cast("long")
+        for j in range(4):
+            bv = (bv * F.lit(1_000_003)
+                  + F.col("signature")[b * 4 + j]) % F.lit(D.MINHASH_P)
+        return bv
+    old_b = new.select("doc", F.posexplode(F.array(
+        *[band_key(b) for b in range(8)])).alias("band", "band_hash"))
+    new_b = D.portable_band_table(new, 8, 32)
+    assert old_b.schema == new_b.schema
+    assert (sorted(map(tuple, old_b.collect()))
+            == sorted(map(tuple, new_b.collect())))
 
 
 def test_int_map_sql_matches_create_map(spark):
@@ -286,3 +261,8 @@ def test_hyperplane_signature_accepts_column(spark):
     q = odd.select(hyperplane_signature(F.col("v vec"), 8, 5, 77).alias("s"),
                    "id").orderBy("id")
     assert q.collect() == s_txt.collect()
+
+    # bits=0 is rejected on both paths (the Column path once returned None)
+    for vec in ("v", F.col("v")):
+        with pytest.raises(ValueError, match="bits"):
+            hyperplane_signature(vec, 8, 0, 77)

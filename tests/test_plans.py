@@ -66,8 +66,8 @@ def test_minhash_pipeline_no_fullwidth_shingle_join(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")
     sets = D.shingle_sets(d, "doc_id", "text", 2)
-    sigs = D.minhash_signatures_from_sets(sets, 32, portable_hash=True)
-    cands = D.lsh_candidate_pairs(sigs, 8, 32, portable_hash=True)
+    sigs = D.minhash_signatures_from_sets(sets, 32)
+    cands = D.lsh_candidate_pairs(sigs, 8, 32)
     cplan = cands._jdf.queryExecution().executedPlan().toString()
     assert "band_hash" in cplan, \
         "candidate generation must self-join on the folded band key"
@@ -163,19 +163,24 @@ def test_coactivity_cap_applied_before_collect(spark, sf_dir):
     count over the cell partition (spillable row buffer) + filter; the
     collect_list aggregate must inherit the window's hash partitioning
     (no Exchange between the cap filter and the collect)."""
+    import re
+
     from canary_weather_etl_spark.plans.advanced_sql import coactivity_edges
 
-    plan = (coactivity_edges(spark, sf_dir)
+    cap = 37  # not the default: the filter literal must come from the arg
+    plan = (coactivity_edges(spark, sf_dir, cell_cap=cap)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "collect_list" in plan and "Window" in plan, plan[:2000]
-    i_collect = plan.index("collect_list")
-    i_window = plan.index("Window")
+    collect = "functions=[collect_list("
+    window = "Window [count(1) windowspecdefinition("
+    assert collect in plan and window in plan, plan[:2000]
+    i_collect = plan.index(collect)
+    i_window = plan.index(window)
     # the plan tree prints downstream-first: the collect aggregate must
     # sit ABOVE the window+filter (i.e. consume already-capped rows)
     assert i_collect < i_window, \
         "cap/window must run below the collect_list aggregate"
     between = plan[i_collect:i_window]
-    assert "<= 40" in between, \
+    assert re.search(rf"Filter \(__n#\d+L <= {cap}\)", between), \
         "the cell_cap filter must sit between the collect and the window"
     assert "Exchange" not in between, \
         "collect_list must inherit the window's cell partitioning"

@@ -1,8 +1,7 @@
 """Round-11 operator tests: bounded-recall banded containment, the Zipf
 containment corpus (chooser's prefix side), the persisted-postings
 admission screen, sketch error bounds, and the r11 minhash fixes
-(the agg-shaped portable signatures and the xxhash64 permutation-seed
-regression)."""
+(the agg-shaped signatures and the permutation-seed regression)."""
 
 from __future__ import annotations
 
@@ -21,36 +20,49 @@ SF = "/root/testdata/sf0.01"
 
 # --- minhash signature shapes and the permutation-seed regression ----------
 
+def _lambda_signatures(sets, num_hashes: int):
+    """Independent reference: the r10 signature shape — array_min over
+    per-permutation transforms of a shared md5-derived base-hash
+    projection. Same spec as the shipped agg shape, different physical
+    plan (HOF lambdas are CodegenFallback, which is why it is not the
+    production path)."""
+    hs = F.transform(
+        "sh",
+        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10)
+        .cast("long"))
+    based = sets.select("doc", hs.alias("hs"))
+    ab = D.minhash_perm_constants(num_hashes)
+
+    def perm(a: int, b: int):
+        # one-arg closure: a two-parameter transform lambda would
+        # receive the element INDEX as its second argument
+        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(D.MINHASH_P)
+
+    sig = F.array(*[
+        F.array_min(F.transform("hs", perm(a, b))) for a, b in ab
+    ])
+    return based.select("doc", sig.alias("signature"))
+
+
 def test_minhash_signature_shapes_bit_equal(spark):
-    """The portable agg-shaped signatures (r11, codegen'd explode+MIN)
-    must be bit-identical to the r10 lambda shape — same spec, different
-    physical plan. Likewise the xxhash64 basis must produce DIFFERENT
-    mins per permutation: the r10 `lambda s, i=i:` silently received the
-    ELEMENT INDEX as its second argument (Spark binds extra transform
-    lambda params positionally), so every signature element per doc was
-    the same single-permutation min — found r11 by this very A/B."""
+    """The agg-shaped signatures (r11, codegen'd explode+MIN) must be
+    bit-identical to the r10 lambda shape — same spec, different
+    physical plan. And the permutations must produce DIFFERENT mins per
+    doc: the r10 `lambda s, i=i:` silently received the ELEMENT INDEX as
+    its second argument (Spark binds extra transform lambda params
+    positionally), so every signature element per doc was the same
+    single-permutation min — found r11 by this very A/B."""
     docs = load_par(spark, SF, "documents").limit(100)
     sets = D.shingle_sets(docs, "doc_id", "text", n=2)
 
     agg = {r["doc"]: r["signature"] for r in
-           D._portable_minhash_agg_signatures(sets, 8).collect()}
+           D.minhash_signatures_from_sets(sets, 8).collect()}
     lam = {r["doc"]: r["signature"] for r in
-           D._portable_lambda_signatures(sets, 8).collect()}
+           _lambda_signatures(sets, 8).collect()}
     assert agg == lam
-
-    xx = {r["doc"]: r["signature"] for r in
-          D.minhash_signatures_from_sets(sets, 8).collect()}
     # the regression: all permutations collapsing to one value per doc
-    assert any(len(set(sig)) > 1 for sig in xx.values()), \
-        "xxhash64 permutations are not varying — seed bound to element index?"
-    # and the grouped-aggregate form is the same family: bit-equal
-    exploded = sets.select("doc", F.explode("sh").alias("g"))
-    via_agg = (exploded.groupBy("doc")
-               .agg(*[F.min(F.xxhash64("g", F.lit(i))).alias(f"h{i}")
-                      for i in range(8)]))
-    xa = {r["doc"]: [r[f"h{i}"] for i in range(8)]
-          for r in via_agg.collect()}
-    assert xx == xa
+    assert any(len(set(sig)) > 1 for sig in agg.values()), \
+        "minhash permutations are not varying — seed bound to element index?"
 
 
 # --- bounded-recall banded containment --------------------------------------
@@ -71,8 +83,7 @@ def test_containment_banded_subset_and_recall(spark):
                  sh, threshold_units=800_000).collect()}
     banded = {(r["contained"], r["container"]): r["containment_units"]
               for r in D.containment_pairs_banded(
-                  sets, threshold_units=800_000,
-                  portable_hash=True).collect()}
+                  sets, threshold_units=800_000).collect()}
     assert banded, "banded containment found nothing on the fixture"
     assert set(banded).issubset(set(exact))
     for k, units in banded.items():

@@ -412,7 +412,7 @@ def test_minhash_lsh_chain_fuzz_matches_duckdb(spark, texts):
     sdf = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
     eng = {(r["a"], r["b"], r["jaccard"]) for r in
            near_dup_pairs_minhash(sdf, "doc_id", "text", n=2,
-                                  threshold=0.5, portable_hash=True)
+                                  threshold=0.5)
            .collect()}
     con = duckdb.connect()
     try:

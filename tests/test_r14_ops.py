@@ -37,7 +37,7 @@ def test_curation_drift_pick_matches_quota(spark):
     )
 
     d = load_par(spark, SF_SMALL, "documents")
-    surv = curation_survivors(d, portable_hash=True).localCheckpoint(True)
+    surv = curation_survivors(d).localCheckpoint(True)
     n_surv = {r["source"]: r["n"] for r in
               surv.groupBy("source").agg(F.count("*").alias("n")).collect()}
     quota = {r["source"]: r["docs_per_epoch"] for r in
@@ -81,7 +81,7 @@ def test_curation_drift_fully_drifted_source_dropped(spark):
     from canary_weather_etl_spark.plans.r14_queries import (
         curate_corpus_drift_mix,
     )
-    out = curate_corpus_drift_mix(df, portable_hash=True).localCheckpoint(True)
+    out = curate_corpus_drift_mix(df).localCheckpoint(True)
     per_src = {r["source"]: r["n"] for r in
                out.select("doc_id", "source").distinct()
                .groupBy("source").agg(F.count("*").alias("n")).collect()}
@@ -233,8 +233,8 @@ def test_verify_pairs_guarded_broadcast_shape(spark, monkeypatch):
 
     docs = load(spark, SF_SMALL, "documents").select("doc_id", "text")
     sets = D.shingle_sets(docs, "doc_id", "text", 2).localCheckpoint(True)
-    sigs = D.minhash_signatures_from_sets(sets, 32, portable_hash=True)
-    cands = D.lsh_candidate_pairs(sigs, 8, 32, portable_hash=True)
+    sigs = D.minhash_signatures_from_sets(sets, 32)
+    cands = D.lsh_candidate_pairs(sigs, 8, 32)
 
     out = D.verify_pairs_jaccard(sets, cands, threshold=0.5)
     plan = out._jdf.queryExecution().executedPlan().toString()
