@@ -518,32 +518,25 @@ def containment_pairs_banded(sets: DataFrame,
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str,
-            bits: int = 64, portable_hash: bool = False) -> DataFrame:
+            bits: int = 60) -> DataFrame:
     """SimHash per doc: hash each token, sum ±1 per bit position weighted by
     term frequency, bit b of the result = sign of the sum. Near-dup docs
     land at small Hamming distance. One explode + one groupBy (the per-bit
     sums all ride in the same aggregate).
 
-    `bits` up to 64: the signature assembles via shiftleft+bitwiseOR, so
-    the sign bit is safe. The default is 64 — the width you'd ship at
-    100 TB: band buckets need enough distinct values that
-    corpus/2^(bits/(max_hamming+1)) rows per bucket stays small, and
-    32 bits (8-bit bands) saturates around 10⁴ docs (SCALE.md sizing
-    rule). Pass bits=32 explicitly only for tiny corpora where the
-    narrower aggregate is worth the quadratic cliff.
-
-    ``portable_hash=True`` derives the per-token hash from md5's first
-    15 hex digits (60 usable bits, so it requires ``bits <= 60``) —
-    bit-reproducible by a SQL oracle (`CAST('0x' || substr(md5(tok),1,15)
-    AS BIGINT)` in DuckDB, ``conv(substring(md5(tok),1,15),16,10)``
-    here); the xxhash64 default is the throughput path."""
-    if not 1 <= bits <= 64:
-        raise ValueError("bits must be in [1, 64]")
-    if portable_hash and bits > 60:
-        raise ValueError("portable_hash draws 60 bits from md5's first "
-                         f"15 hex digits; bits={bits} > 60")
-    tok_hash = (F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-                .cast("long") if portable_hash else F.xxhash64("tok"))
+    The token hash is md5's first 15 hex digits, a 60-bit value, so
+    `bits` is at most 60. A SQL oracle rebuilds the identical signature
+    (`CAST('0x' || substr(md5(tok),1,15) AS BIGINT)` in DuckDB,
+    ``conv(substring(md5(tok),1,15),16,10)`` here). The default of 60 is
+    the width you'd ship at 100 TB: band buckets need enough distinct
+    values that corpus/2^(bits/(max_hamming+1)) rows per bucket stays
+    small, and 32 bits (8-bit bands) saturates around 10⁴ docs (SCALE.md
+    sizing rule). Pass bits=32 explicitly only for tiny corpora where the
+    narrower aggregate is worth the quadratic cliff."""
+    if not 1 <= bits <= 60:
+        raise ValueError("the md5 token hash carries 60 bits; "
+                         f"bits must be in [1, 60], got {bits}")
+    tok_hash = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
     toks = (
         df.select(F.col(id_col).alias("doc"),
                   F.explode(F.split(F.lower(F.trim(F.col(text_col))),
@@ -612,17 +605,12 @@ def simhash_candidate_pairs(sim: DataFrame, bits: int = 64,
 
 
 def near_dup_pairs_simhash(df: DataFrame, id_col: str, text_col: str,
-                           bits: int = 64, max_hamming: int = 3,
-                           portable_hash: bool = False) -> DataFrame:
+                           bits: int = 60, max_hamming: int = 3
+                           ) -> DataFrame:
     """SimHash near-dup pipeline at 100 TB shape: signatures (one explode +
     one groupBy) → pigeonhole band buckets (equi self-join, exact recall)
-    → Hamming verification on candidates only. Output (a, b, hamming).
-
-    ``portable_hash=True``: md5-derived 60-bit-max token hashes so a SQL
-    oracle rebuilds the identical signature; banding/verification are
-    hash-agnostic (pigeonhole recall stays exact at any width)."""
-    sig = simhash(df, id_col, text_col, bits,
-                  portable_hash).localCheckpoint(eager=True)
+    → Hamming verification on candidates only. Output (a, b, hamming)."""
+    sig = simhash(df, id_col, text_col, bits).localCheckpoint(eager=True)
     cands = simhash_candidate_pairs(sig, bits, max_hamming)
     out = (
         cands
@@ -1075,8 +1063,7 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
 
 
 def duplicated_span_table(df: DataFrame, id_col: str, text_col: str,
-                          k: int = 8, min_docs: int = 2,
-                          portable_hash: bool = False) -> DataFrame:
+                          k: int = 8, min_docs: int = 2) -> DataFrame:
     """Exact substring-duplication spans, the Lee-et-al-style pass
     ("Deduplicating Training Data Makes Language Models Better",
     arXiv:2107.06499) re-expressed for Spark: instead of a monolithic
@@ -1089,14 +1076,13 @@ def duplicated_span_table(df: DataFrame, id_col: str, text_col: str,
     length >= k, at shuffle-join cost.
 
     Plan shape at 100 TB: one explode (rows = total tokens), one groupBy
-    on the 8-byte shingle hash (the ONLY wide exchange; keys are hashes,
+    on the shingle hash (the ONLY wide exchange; keys are hashes,
     never text), a semi-join back, then a per-doc window over hit
     positions (partitioned by doc — bounded by the longest document, not
     the corpus). No all-pairs anything.
 
-    `portable_hash=True` swaps xxhash64 for md5 so a SQL oracle can
-    rebuild identical hashes; the default stays xxhash64 (8-byte keys
-    shuffle ~4x less than 32-char md5 strings).
+    Shingle keys are md5 hex strings, so a SQL oracle rebuilds identical
+    hashes.
 
     Output: (doc, span_start, span_end, n_tokens, n_shingles) — token
     positions 0-based inclusive."""
@@ -1104,7 +1090,6 @@ def duplicated_span_table(df: DataFrame, id_col: str, text_col: str,
 
     toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT_RE)
     base = df.select(F.col(id_col).alias("doc"), toks.alias("ts"))
-    hash_fn = F.md5 if portable_hash else F.xxhash64
     sh = (
         base
         # the short-doc filter MUST sit below the generator: sequence(0,
@@ -1118,7 +1103,7 @@ def duplicated_span_table(df: DataFrame, id_col: str, text_col: str,
             F.sequence(F.lit(0), F.size("ts") - k),
             lambda i: F.struct(
                 i.alias("pos"),
-                hash_fn(F.concat_ws(" ", F.slice("ts", i + 1, k)))
+                F.md5(F.concat_ws(" ", F.slice("ts", i + 1, k)))
                 .alias("h")))).alias("s"))
         .select("doc", F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
     )

@@ -9,8 +9,8 @@ with probability 1 − e^(−depth) per probe. Unlike Spark's built-in
 `count_min_sketch` aggregate (an opaque binary with no SQL estimator),
 this one materializes the sketch as a (d, w, cnt) TABLE:
 
-- built in one pass: per row, explode `depth` seeded (row, bucket)
-  coordinates (xxhash64(item, seed_d) mod width) and hash-aggregate —
+- built in one pass: per row, explode `depth` (row, bucket) coordinates
+  (md5(item ':' d) prefix mod width) and hash-aggregate —
   map-side partial combine does most of the summing, the shuffle carries
   at most depth·width rows;
 - mergeable by construction: sketches of two corpus shards combine with
@@ -27,24 +27,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _coords(item: F.Column, width: int, depth: int,
-            portable_hash: bool = False) -> F.Column:
-    """array<struct<d, w>> of the item's sketch coordinates, one per
-    seeded hash row. Default: xxhash64's seed argument gives depth
-    independent hash functions; pmod keeps buckets non-negative.
-    ``portable_hash=True`` derives row d's bucket from md5(item ':' d)'s
-    first 7 hex digits (a 28-bit int) mod width — bit-replayable by a
-    SQL oracle (`CAST('0x' || substr(md5(x || ':' || d), 1, 7) AS
-    BIGINT) % width` in DuckDB), same one-sided CMS guarantee (the
-    bound depends only on bucket uniformity, not the family)."""
-    if portable_hash:
-        def bucket(d: int) -> F.Column:
-            key = F.concat(item.cast("string"), F.lit(f":{d}"))
-            h = F.conv(F.substring(F.md5(key), 1, 7), 16, 10).cast("long")
-            return h % F.lit(width)
-    else:
-        def bucket(d: int) -> F.Column:
-            return F.pmod(F.xxhash64(item, F.lit(d)), F.lit(width))
+def _coords(item: F.Column, width: int, depth: int) -> F.Column:
+    """array<struct<d, w>> of the item's sketch coordinates, one per hash
+    row: row d's bucket is md5(item ':' d)'s first 7 hex digits (a 28-bit
+    int) mod width — bit-replayable by a SQL oracle (`CAST('0x' ||
+    substr(md5(x || ':' || d), 1, 7) AS BIGINT) % width` in DuckDB). The
+    one-sided CMS guarantee rests on bucket uniformity, not on the hash
+    function."""
+    def bucket(d: int) -> F.Column:
+        key = F.concat(item.cast("string"), F.lit(f":{d}"))
+        h = F.conv(F.substring(F.md5(key), 1, 7), 16, 10).cast("long")
+        return h % F.lit(width)
     return F.array(*[
         F.struct(F.lit(d).alias("d"), bucket(d).alias("w"))
         for d in range(depth)
@@ -52,12 +45,10 @@ def _coords(item: F.Column, width: int, depth: int,
 
 
 def cms_build(df: DataFrame, item_col: str,
-              width: int = 2048, depth: int = 4,
-              portable_hash: bool = False) -> DataFrame:
+              width: int = 2048, depth: int = 4) -> DataFrame:
     """One-pass CMS build → (d, w, cnt) rows (≤ depth·width of them)."""
     return (
-        df.select(F.explode(_coords(F.col(item_col), width, depth,
-                                    portable_hash))
+        df.select(F.explode(_coords(F.col(item_col), width, depth))
                   .alias("c"))
         .groupBy(F.col("c.d").alias("d"), F.col("c.w").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -74,17 +65,15 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
 
 
 def cms_estimate(sketch: DataFrame, items: DataFrame, item_col: str,
-                 width: int = 2048, depth: int = 4,
-                 portable_hash: bool = False) -> DataFrame:
+                 width: int = 2048, depth: int = 4) -> DataFrame:
     """Point-query every item: explode its depth coordinates, left-join
     the sketch on (d, w) — the sketch side is tiny, so this broadcasts —
-    and take the min cell as the estimate. Returns (item_col, est).
-    ``portable_hash`` must match the build's."""
+    and take the min cell as the estimate. Returns (item_col, est)."""
     probes = (
         items.select(item_col).distinct()
         .select(item_col,
-                F.explode(_coords(F.col(item_col), width, depth,
-                                  portable_hash)).alias("c"))
+                F.explode(_coords(F.col(item_col), width, depth))
+                .alias("c"))
         .select(item_col, F.col("c.d").alias("d"), F.col("c.w").alias("w"))
     )
     return (

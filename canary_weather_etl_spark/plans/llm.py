@@ -502,23 +502,20 @@ _SIMHASH_SQL = r"""
         "(width/4-bit chunks; Hamming ≤3 ⇒ ≥1 identical chunk, so recall "
         "is exact) → equi self-join on (band, band_val) → bit_count(xor) "
         "verification on candidates only. r10: runs the operator's "
-        "portable_hash basis (60-bit md5-derived token hashes, 4×15-bit "
-        "bands) which upgrades the entry from rows-only to a FULL SQL "
-        "oracle — DuckDB rebuilds the tf-weighted bit sums, signature "
-        "assembly, banding and Hamming verify bit-for-bit. The operator "
-        "default stays xxhash64@64-bit for throughput (buckets stay "
-        "sparse past 10⁴ docs either way: corpus/2^15 per bucket at 60 "
-        "bits); the 32-bit width SCALE.md's sizing rule flags quadratic "
-        "remains an explicit opt-in. No BroadcastNestedLoopJoin anywhere "
-        "in the plan; pytest asserts set equality with the brute-force "
-        "all-pairs result for both hash bases.",
+        "md5 basis (60-bit md5-derived token hashes, 4×15-bit bands), "
+        "a FULL SQL oracle — DuckDB rebuilds the tf-weighted bit sums, "
+        "signature assembly, banding and Hamming verify bit-for-bit. "
+        "60 bits is also the operator default (buckets stay sparse past "
+        "10⁴ docs: corpus/2^15 per bucket); the 32-bit width SCALE.md's "
+        "sizing rule flags quadratic remains an explicit opt-in. No "
+        "BroadcastNestedLoopJoin anywhere in the plan; pytest asserts "
+        "set equality with the brute-force all-pairs result.",
     tags=("llm", "dedup", "approx"),
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
     out = D.near_dup_pairs_simhash(d, "doc_id", "text",
-                                   bits=60, max_hamming=3,
-                                   portable_hash=True)
+                                   bits=60, max_hamming=3)
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
@@ -567,16 +564,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "yields t-7 consecutive hits, so the island IS the full "
         "duplicated substring. One wide exchange total (groupBy on the "
         "shingle hash); the per-doc window is bounded by document "
-        "length. This registry entry runs the portable md5 hash so the "
-        "oracle rebuilds identical shingle keys; the operator default "
-        "is xxhash64 (8-byte shuffle keys) with a pytest pinning both "
-        "hashes produce identical spans.",
+        "length. Shingle keys are md5 hashes, so the oracle rebuilds "
+        "identical keys.",
     tags=("llm", "dedup"),
 )
 def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    return D.duplicated_span_table(d, "doc_id", "text", k=8,
-                                   portable_hash=True)
+    return D.duplicated_span_table(d, "doc_id", "text", k=8)
 
 
 # --------------------------- similarity search ------------------------------

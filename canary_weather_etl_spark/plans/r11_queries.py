@@ -402,12 +402,13 @@ def q_bloom_membership_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "element-rank it actually lands on in lineitem.l_extendedprice "
         "— rank deviation must sit within the published n/accuracy "
         "guarantee (100 ppm of n); the repo's CMS (width 2048, depth 4, "
-        "operators/sketch.py) point estimates vs exact event_type "
-        "counts — CMS never undercounts and the max overcount must sit "
-        "within the e/width expectation bound. Rows-only BY DESIGN: the "
-        "approx values are engine-defined (hash-seeded sketches a SQL "
-        "oracle cannot replay); the within_bound flags are additionally "
-        "pytest-asserted (tests/test_r11_ops.py).",
+        "md5 coordinate family, operators/sketch.py) point estimates vs "
+        "exact event_type counts — CMS never undercounts and the max "
+        "overcount must sit within the e/width expectation bound. "
+        "Rows-only BY DESIGN: the HLL and percentile values are "
+        "engine-defined (sketches a SQL oracle cannot replay); the "
+        "within_bound flags are additionally pytest-asserted "
+        "(tests/test_r11_ops.py).",
     tags=("sketch", "approx"),
 )
 def q_sketch_error_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:

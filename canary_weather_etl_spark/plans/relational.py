@@ -518,8 +518,8 @@ _CMS_HH_SQL = r"""
         "the oracle rebuilds cells, point queries and the top-20 "
         "bit-for-bit; the oracle builds the whole-corpus sketch "
         "directly because cell counters make shard-merge ≡ whole-build "
-        "(the pytest identity). xxhash64 stays the operator default "
-        "for engine-internal use.",
+        "(the pytest identity). The md5 family is the operator's only "
+        "coordinate family.",
     tags=("agg", "approx", "sketch"),
 )
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,12 +528,11 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shard sketches (one per returnflag) merged to the corpus sketch —
     # the incremental path: each shard's KB-sized table is built once
     shards = [SK.cms_build(li.filter(F.col("l_returnflag") == f),
-                           "l_partkey", width=2048, depth=4,
-                           portable_hash=True)
+                           "l_partkey", width=2048, depth=4)
               for f in ("A", "N", "R")]
     merged = SK.cms_merge(*shards)
     est = SK.cms_estimate(merged, li.select("l_partkey"), "l_partkey",
-                          width=2048, depth=4, portable_hash=True)
+                          width=2048, depth=4)
     return (est.orderBy(F.desc("est"), F.asc("l_partkey")).limit(20)
             .select("l_partkey", "est"))
 

@@ -25,8 +25,8 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Upserts rewrite only the partitions present in the incoming frame
-    # (reference semantics, README.md:1488-1545, without the driver loop).
+    # A partitioned overwrite replaces only the partitions present in the
+    # written frame (the admission-state writes in operators/dedup.py).
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Arrow-batched transfer for pandas_udf / mapInPandas extension ops.
     "spark.sql.execution.arrow.pyspark.enabled": "true",

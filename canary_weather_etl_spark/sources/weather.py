@@ -13,7 +13,7 @@ single declarative plan:
 - per-location loop → one global read; lineage recovered from file paths
   with ``input_file_name`` + ``regexp_extract`` (README.md:622-623)
 - per-partition upsert loop (B6, README.md:1488-1545) → left_anti +
-  unionByName + dynamic partition overwrite, one write
+  unionByName, one staged write + partition-directory promote
 
 Schemas are explicit ``StructType``s (no inference — at 100 TB schema
 inference is an extra full scan per read, SURVEY.md §1.3).
@@ -130,8 +130,7 @@ def lineage_from_path(df: DataFrame) -> DataFrame:
     )
 
 
-def read_open_meteo(spark: SparkSession, path: str,
-                    validate_lengths: bool = True) -> DataFrame:
+def read_open_meteo(spark: SparkSession, path: str) -> DataFrame:
     """Read + flatten the struct-of-arrays shape, one row per (location, date).
 
     Replaces README.md:694-728 (per-field collect() + Python zip loop +
@@ -142,29 +141,32 @@ def read_open_meteo(spark: SparkSession, path: str,
     """
     raw = (spark.read.schema(OPEN_METEO_SCHEMA)
            .option("multiLine", "true").json(path))
-    raw = lineage_from_path(raw)
+    return flatten_open_meteo(lineage_from_path(raw))
 
+
+def flatten_open_meteo(raw: DataFrame) -> DataFrame:
+    """The flatten behind `read_open_meteo`, for batch and streaming reads.
+
+    The reference treats unequal parallel-array lengths as fatal
+    (README.md:699-704). The check rides inside the projection: a row
+    whose arrays differ in length raises at the first action, so the raw
+    JSON is parsed once. A NULL size comparison passes, as a filter would
+    let it."""
     fields = ["date", *OPEN_METEO_DAILY_VARS]
-    if validate_lengths:
-        # Reference treats unequal parallel-array lengths as fatal
-        # (README.md:699-704) — but probes with one size()+collect() job per
-        # field (21 jobs). Single distributed pass instead.
-        mism = raw.filter(
-            ~functools_reduce_and([
-                F.size(F.col(f"daily.{f}")) == F.size(F.col("daily.date"))
-                for f in OPEN_METEO_DAILY_VARS
-            ])
-        ).select("location").limit(1).collect()
-        if mism:
-            raise ValueError(
-                f"parallel daily arrays have unequal lengths for "
-                f"location={mism[0]['location']!r}")
-
+    same_len = F.lit(True)
+    for f in OPEN_METEO_DAILY_VARS:
+        same_len = same_len & (F.size(F.col(f"daily.{f}"))
+                               == F.size(F.col("daily.date")))
+    days = (
+        F.when(~same_len, F.raise_error(F.format_string(
+            "parallel daily arrays have unequal lengths for location='%s'",
+            F.col("location"))))
+        .otherwise(F.arrays_zip(*[F.col(f"daily.{f}").alias(f)
+                                  for f in fields]))
+    )
     zipped = raw.select(
         "location", "latitude", "longitude", "elevation", "timezone",
-        "island", "location_name",
-        F.explode(F.arrays_zip(*[F.col(f"daily.{f}").alias(f) for f in fields]))
-         .alias("day"),
+        "island", "location_name", F.explode(days).alias("day"),
     )
     return zipped.select(
         "location", "latitude", "longitude", "elevation", "timezone",
@@ -172,13 +174,6 @@ def read_open_meteo(spark: SparkSession, path: str,
         F.col("day.date").alias("date"),
         *[F.col(f"day.{f}").alias(f) for f in OPEN_METEO_DAILY_VARS],
     )
-
-
-def functools_reduce_and(conds: list) -> F.Column:
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
 
 
 def read_visual_crossing(spark: SparkSession, path: str) -> DataFrame:
@@ -259,7 +254,8 @@ def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
     the combined frame lands in staging first; at production scale this is
     where an ACID table format (Iceberg/Delta MERGE) slots in.
     """
-    recover_pending_promotes(table_path)
+    staging = _clear_staging(table_path,
+                             staging_path or f"{table_path}__staging")
     existing = spark.read.parquet(table_path)
     if validate_schema:
         # drift gate (B6's schema introspection, README.md:1248-1262): fail
@@ -279,8 +275,6 @@ def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
     survivors = existing.join(new_batch.select(*keys), on=list(keys),
                               how="left_anti")
     combined = survivors.select(*cols).unionByName(new_batch.select(*cols))
-
-    staging = staging_path or f"{table_path}__staging"
     _stage_and_promote(combined, table_path, part_cols, staging)
 
 
@@ -301,13 +295,30 @@ def _stage_and_promote(combined: DataFrame, table_path: str,
     appears leaves the live table untouched. On object stores rename isn't
     atomic — that deployment slots in an ACID table format (Iceberg/Delta
     MERGE) behind this same API instead.
+
+    `staging` must not exist (`_clear_staging` runs before the table is
+    read), so the plain write fails rather than mixing with leftovers.
     """
+    writer = combined.write.mode("errorifexists")
     if part_cols:
-        (combined.write.mode("overwrite")
-                 .partitionBy(*part_cols).parquet(staging))
-    else:
-        combined.write.mode("overwrite").parquet(staging)
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(staging)
     promote_staged(staging, table_path, partitioned=bool(part_cols))
+
+
+def _clear_staging(table_path: str, staging: str) -> str:
+    """Make `staging` safe to write, BEFORE the table is read: finish any
+    pending promote (the module's default staging dirs and versions, then
+    `staging` itself if it carries `_PROMOTE_PENDING`), and delete what
+    is left. An unmarked leftover is a write interrupted before its
+    promote began; promoting it would put stale partitions live. Returns
+    `staging`."""
+    import shutil
+
+    recover_pending_promotes(table_path)
+    _finish_pending_promote(staging, table_path)
+    shutil.rmtree(staging, ignore_errors=True)
+    return staging
 
 
 def promote_staged(staging: str, table_path: str,
@@ -402,19 +413,15 @@ def recover_pending_promotes(table_path: str) -> list[str]:
     table and a fresh write to the default staging path silently discarded
     the unfinished promote). Scans the module's staging suffixes plus
     versioned dirs for a `_PROMOTE_PENDING` marker and re-runs the promote
-    to completion. Returns the paths it recovered. Custom `staging_path`
-    arguments outside these conventions are the caller's responsibility.
+    to completion. Returns the paths it recovered. A custom `staging_path`
+    is recovered by the write that reuses it (`_clear_staging`).
     """
     import os
 
     recovered = []
     for suffix in ("__staging", "__compact_staging", "__scd2_staging"):
         s = f"{table_path}{suffix}"
-        if os.path.isfile(os.path.join(s, "_PROMOTE_PENDING")):
-            entries = [e for e in os.listdir(s)
-                       if os.path.isdir(os.path.join(s, e))]
-            partitioned = any("=" in e for e in entries)
-            promote_staged(s, table_path, partitioned=partitioned)
+        if _finish_pending_promote(s, table_path):
             recovered.append(s)
     # crash after the staged dir became a version but before the pointer flip
     for n in _list_versions(table_path):
@@ -426,6 +433,19 @@ def recover_pending_promotes(table_path: str) -> list[str]:
             os.remove(marker)
             recovered.append(vdir)
     return recovered
+
+
+def _finish_pending_promote(staging: str, table_path: str) -> bool:
+    """Re-run the promote marked pending in `staging`, if any."""
+    import os
+
+    if not os.path.isfile(os.path.join(staging, "_PROMOTE_PENDING")):
+        return False
+    entries = [e for e in os.listdir(staging)
+               if os.path.isdir(os.path.join(staging, e))]
+    promote_staged(staging, table_path,
+                   partitioned=any("=" in e for e in entries))
+    return True
 
 
 def compact_partitions(spark: SparkSession, table_path: str,
@@ -441,12 +461,12 @@ def compact_partitions(spark: SparkSession, table_path: str,
     stay byte-identical, same guarantee as `upsert_clean`. At production
     scale this runs per-partition-group on a schedule, not table-wide.
     """
-    recover_pending_promotes(table_path)
+    staged_path = _clear_staging(table_path,
+                                 f"{table_path}__compact_staging")
     df = spark.read.parquet(table_path)
     if partitions_predicate is not None:
         df = df.filter(partitions_predicate)
     part_cols = [c for c in PARTITION_COLS if c in df.columns]
-    staged_path = f"{table_path}__compact_staging"
     _stage_and_promote(df.repartition(target_files_per_partition, *part_cols),
                        table_path, part_cols, staged_path)
 
@@ -471,7 +491,8 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
     ``WHERE effective_to IS NULL``; a time-travel view is
     ``WHERE effective_from <= t AND (effective_to > t OR effective_to IS NULL)``.
     """
-    recover_pending_promotes(table_path)
+    staging = _clear_staging(table_path,
+                             staging_path or f"{table_path}__scd2_staging")
     ts = F.lit(batch_ts).cast("timestamp")
     existing = spark.read.parquet(table_path)
     part_cols = [c for c in PARTITION_COLS if c in existing.columns]
@@ -501,6 +522,4 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
                 .unionByName(closed_now.select(*cols))
                 .unionByName(untouched_open.select(*cols))
                 .unionByName(batch.select(*cols)))
-
-    staging = staging_path or f"{table_path}__scd2_staging"
     _stage_and_promote(combined, table_path, part_cols, staging)

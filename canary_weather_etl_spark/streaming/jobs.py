@@ -231,36 +231,23 @@ def stream_upsert_sink(stream: DataFrame, table_path: str,
 def stream_weather_ingest(spark: SparkSession, raw_glob: str,
                           table_path: str, checkpoint: str):
     """Streaming twin of the batch Open-Meteo ingestion: readStream over the
-    raw struct-of-arrays JSON drops, the SAME arrays_zip/explode flatten
-    (sources.weather.read_open_meteo's plan, minus the eager length probe —
-    streaming can't run pre-flight actions), partitioned parquet sink.
+    raw struct-of-arrays JSON drops, the SAME flatten and length check
+    (sources.weather.flatten_open_meteo), partitioned parquet sink.
 
     New raw files landing under the glob are flattened and appended
     incrementally — the reference's 'crawler notices new files monthly'
     loop as a continuous query."""
     from ..sources.weather import (
-        OPEN_METEO_DAILY_VARS,
         OPEN_METEO_SCHEMA,
+        flatten_open_meteo,
         lineage_from_path,
     )
 
     raw = (spark.readStream.schema(OPEN_METEO_SCHEMA)
            .option("multiLine", "true").json(raw_glob))
-    raw = lineage_from_path(raw)
-    fields = ["date", *OPEN_METEO_DAILY_VARS]
     flat = (
-        raw.select(
-            "location", "latitude", "longitude", "elevation", "timezone",
-            "island", "location_name",
-            F.explode(F.arrays_zip(*[F.col(f"daily.{f}").alias(f)
-                                     for f in fields])).alias("day"),
-        )
-        .select(
-            "location", "latitude", "longitude", "elevation", "timezone",
-            "island", "location_name",
-            F.to_date(F.col("day.date"), "yyyy-MM-dd").alias("date"),
-            *[F.col(f"day.{f}").alias(f) for f in OPEN_METEO_DAILY_VARS],
-        )
+        flatten_open_meteo(lineage_from_path(raw))
+        .withColumn("date", F.to_date("date", "yyyy-MM-dd"))
         .withColumn("year", F.year("date"))
         .withColumn("month", F.month("date"))
     )

@@ -11,6 +11,9 @@ corpus-size axis). In-copy near-dup structure is preserved (both members of
 a planted pair get the same rewrite), so true pair count grows ~linearly
 with the multiplier.
 
+SimHash and the substring spans run the operators' md5 hash family:
+60-bit signatures in 15-bit pigeonhole bands, and md5 shingle keys.
+
 Usage: python scripts/scale_probe.py [mult ...]   (default: 1 10 100)
 Prints one JSON line per multiplier.
 """
@@ -82,12 +85,12 @@ def main() -> None:
             lambda: D.near_dup_pairs_minhash(
                 docs, "doc_id", "text", n=2, num_hashes=32, bands=8,
                 threshold=0.5).count())
-        # 64-bit signatures: 16-bit pigeonhole bands keep bucket sizes
-        # sub-linear at amplified corpus sizes (8-bit bands saturate at
-        # ~10^4 docs — the band-width sizing rule in SCALE.md)
+        # 60-bit md5 signatures: 15-bit pigeonhole bands keep bucket
+        # sizes sub-linear at amplified corpus sizes (8-bit bands saturate
+        # at ~10^4 docs — the band-width sizing rule in SCALE.md)
         t_simhash, n_sim = timed(
             lambda: D.near_dup_pairs_simhash(
-                docs, "doc_id", "text", bits=64, max_hamming=3).count())
+                docs, "doc_id", "text", bits=60, max_hamming=3).count())
 
         # hash-sink (bench_scale discipline): a bare count could prune the
         # span-bound aggregates; xoring every output column forces them
@@ -104,8 +107,10 @@ def main() -> None:
             "mult": mult, "n_docs": n_docs,
             "exact_dedup_sec": t_exact, "exact_groups": n_groups,
             "minhash_lsh_sec": t_minhash, "minhash_pairs": n_pairs,
-            "simhash_sec": t_simhash, "simhash_pairs": n_sim,
-            "substring_spans_sec": t_spans, "substring_spans": n_spans,
+            "simhash_md5_60bit_sec": t_simhash,
+            "simhash_md5_60bit_pairs": n_sim,
+            "substring_spans_md5_sec": t_spans,
+            "substring_spans_md5": n_spans,
         }), flush=True)
     for mult in mults:
         shutil.rmtree(f"/tmp/scale_probe_docs_x{mult}.parquet",

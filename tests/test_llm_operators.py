@@ -64,16 +64,14 @@ def test_simhash_separates_near_dups(spark, docs):
 
 def test_simhash_banded_pairs_match_bruteforce(spark, docs):
     """Pigeonhole banding is exact (hamming<=3 with 4 bands => >=1 band
-    identical): the banded pipeline at the 64-bit DEFAULT width must return
-    the SAME pair set as an all-pairs scan of the signatures, with no
-    BroadcastNestedLoopJoin. 64-bit signatures come back as signed longs,
-    so the brute-force popcount masks to two's complement."""
+    identical): the banded pipeline at the 60-bit DEFAULT width (the
+    registered q_dedup_simhash run) must return the SAME pair set as an
+    all-pairs scan of the signatures, with no BroadcastNestedLoopJoin."""
     sim = D.simhash(docs, "doc_id", "text")
     sigs = {r["doc"]: r["simhash"] for r in sim.collect()}
     ids = sorted(sigs)
-    m64 = (1 << 64) - 1
     brute = {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]
-             if bin((sigs[a] ^ sigs[b]) & m64).count("1") <= 3}
+             if bin(sigs[a] ^ sigs[b]).count("1") <= 3}
     banded_df = D.near_dup_pairs_simhash(docs, "doc_id", "text",
                                          max_hamming=3)
     plan = banded_df._jdf.queryExecution().executedPlan().toString()
@@ -85,11 +83,12 @@ def test_simhash_banded_pairs_match_bruteforce(spark, docs):
 
 
 def test_simhash_portable_matches_bruteforce_and_validates(spark, docs):
-    """The md5-portable 60-bit basis (the registered q_dedup_simhash run,
-    r10): banded pipeline equals the all-pairs scan of its own signatures
-    (60-bit values are non-negative, no mask needed), and the >60-bit
-    portable request fails loudly at build time."""
-    sim = D.simhash(docs, "doc_id", "text", bits=60, portable_hash=True)
+    """The md5 60-bit basis requested explicitly: signatures are
+    non-negative and sit in [0, 2^60) (no mask needed), the banded
+    pipeline equals the all-pairs scan of its own signatures, and a
+    request wider than the 60 bits the md5 token hash carries fails
+    loudly at build time."""
+    sim = D.simhash(docs, "doc_id", "text", bits=60)
     sigs = {r["doc"]: r["simhash"] for r in sim.collect()}
     assert all(0 <= s < (1 << 60) for s in sigs.values())
     ids = sorted(sigs)
@@ -97,11 +96,11 @@ def test_simhash_portable_matches_bruteforce_and_validates(spark, docs):
              if bin(sigs[a] ^ sigs[b]).count("1") <= 3}
     banded = {(r["a"], r["b"]) for r in
               D.near_dup_pairs_simhash(docs, "doc_id", "text", bits=60,
-                                       max_hamming=3,
-                                       portable_hash=True).collect()}
+                                       max_hamming=3).collect()}
     assert banded == brute
-    with pytest.raises(ValueError, match="60"):
-        D.simhash(docs, "doc_id", "text", bits=64, portable_hash=True)
+    for bits in (61, 64):
+        with pytest.raises(ValueError, match="60"):
+            D.simhash(docs, "doc_id", "text", bits=bits)
 
 
 def test_heavy_hitters_plan_is_distributed_topk(spark, sf_dir):
@@ -371,18 +370,22 @@ def test_observed_quality_gate_one_pass_metrics(spark, docs):
     assert m["rows_in"] == m["quality_fail"] + m["lang_fail"] + m["rows_out"]
 
 
-def test_simhash_banding_width64_and_validation(spark, docs):
+def test_simhash_banding_width64_and_validation(spark):
     """bits=64 with max_hamming=0 makes one 64-bit band — the all-bits mask
     must not overflow the signed long (ADVICE r2); only identical
-    signatures may pair. Bad arguments fail loudly."""
+    signatures may pair, negative (sign-bit-set) ones included. The
+    banding is hash-agnostic, so hand-made 64-bit signatures stand in for
+    a 64-bit hash. Bad arguments fail loudly."""
     import pytest
 
-    sim = D.simhash(docs, "doc_id", "text", bits=64)
+    sigs = {1: -1, 2: -1, 3: -(1 << 63), 4: -(1 << 63), 5: (1 << 63) - 1,
+            6: 0, 7: 0, 8: 12345, 9: -12345}
+    sim = spark.createDataFrame(sorted(sigs.items()),
+                                "doc long, simhash long")
     pairs = {(r["a"], r["b"]) for r in
              D.simhash_candidate_pairs(sim, bits=64, max_hamming=0).collect()}
-    sigs = {r["doc"]: r["simhash"] for r in sim.collect()}
     want = {(a, b) for a in sigs for b in sigs if a < b and sigs[a] == sigs[b]}
-    assert pairs == want
+    assert pairs == want == {(1, 2), (3, 4), (6, 7)}
 
     with pytest.raises(ValueError, match=r"bits"):
         D.simhash_candidate_pairs(sim, bits=65)
@@ -545,25 +548,14 @@ def test_multimodal_resize_and_embed_stubs(spark):
     assert all(emb[k] == pytest.approx(emb2[k]) for k in emb)
 
 
-def test_substring_spans_xxhash_matches_portable_md5(spark, docs):
-    """The scale hash (xxhash64, 8-byte shuffle keys) and the oracle hash
-    (md5) must produce IDENTICAL span tables — the hash only supplies
-    equality, so the engine choice cannot change results (collision
-    probability at fixture scale is negligible for both)."""
-    fast = {tuple(r) for r in
-            D.duplicated_span_table(docs, "doc_id", "text", k=8).collect()}
-    portable = {tuple(r) for r in
-                D.duplicated_span_table(docs, "doc_id", "text", k=8,
-                                        portable_hash=True).collect()}
-    assert fast == portable
-    assert fast, "fixture corpus has no cross-doc 8-token duplicates?"
-
-
-def test_substring_spans_recover_planted_duplicate(spark):
+def test_substring_spans_recover_planted_duplicate(spark, docs):
     """A 12-token run planted in two documents must come back as ONE
     merged span of exactly 12 tokens (5 consecutive 8-shingle hits) in
     each document, at the planted offsets; a doc sharing nothing stays
-    absent."""
+    absent. The fixture corpus has cross-doc spans too, so the
+    q_dedup_substring_spans oracle check does not compare empty sets."""
+    assert D.duplicated_span_table(docs, "doc_id", "text", k=8).take(1), (
+        "fixture corpus has no cross-doc 8-token duplicates?")
     run = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     d = spark.createDataFrame(
         [(1, "unique one two three " + run),

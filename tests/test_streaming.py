@@ -16,12 +16,23 @@ from canary_weather_etl_spark.streaming import jobs as J
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir, tmp_path_factory):
     """Materialize the events fixture as a micro-batched directory (3 file
-    drops) so the file-source stream has a real backlog to chew through."""
+    drops) so the file-source stream has a real backlog to chew through.
+
+    The drops are event-time thirds, each written by its own job in time
+    order, so the file source (which orders files by modification time)
+    replays them as a landing stream would. Drops that each spanned the
+    whole month let the watermark set by one drop discard the next drop's
+    rows as late, so a watermarked append-mode query only matched its
+    batch twin when the file order happened to keep two data drops
+    adjacent."""
     out = str(tmp_path_factory.mktemp("events_stream"))
     ev = load(spark, sf_dir, "events")
-    ev.withColumn("bucket", F.pmod(F.xxhash64("event_id"), F.lit(3))) \
-      .repartition(3, "bucket").drop("bucket") \
-      .write.mode("overwrite").parquet(out)
+    lo, hi = ev.agg(F.min(F.unix_micros("ts")),
+                    F.max(F.unix_micros("ts"))).first()
+    third = (F.unix_micros("ts") - F.lit(lo)) * 3 / F.lit(hi - lo + 1)
+    for k in range(3):
+        ev.filter(F.floor(third) == k).coalesce(1) \
+          .write.mode("append").parquet(out)
     return out
 
 

@@ -12,6 +12,7 @@ import json
 import os
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from canary_weather_etl_spark.sources import weather as W
@@ -52,8 +53,9 @@ def test_open_meteo_unequal_arrays_fatal(spark, tmp_path):
     doc["daily"]["rain_sum"] = doc["daily"]["rain_sum"][:-2]  # truncate one array
     with open(os.path.join(d, "om_bad.json"), "w") as f:
         json.dump(doc, f)
-    with pytest.raises(ValueError, match="unequal lengths"):
-        W.read_open_meteo(spark, f"{root}/*/*/om*.json")
+    om = W.read_open_meteo(spark, f"{root}/*/*/om*.json")  # lazy: no job
+    with pytest.raises(SparkRuntimeException, match="unequal lengths"):
+        om.collect()
 
 
 def test_visual_crossing_flatten(spark, raw_dir):
@@ -257,19 +259,32 @@ def test_upsert_recovers_abandoned_promote(spark, raw_dir, tmp_path):
     """A staging dir left behind with _PROMOTE_PENDING (crash after staging,
     before/mid promote) must be promoted to completion at the next
     upsert_clean entry — not silently discarded by the fresh write."""
+    _check_abandoned_promote_recovered(spark, raw_dir, tmp_path, None)
+
+
+def test_upsert_recovers_abandoned_promote_at_custom_staging(
+        spark, raw_dir, tmp_path):
+    """Same contract at a caller-chosen `staging_path` (the streaming sink
+    passes one per micro-batch), which no default-suffix scan finds."""
+    _check_abandoned_promote_recovered(spark, raw_dir, tmp_path,
+                                       str(tmp_path / "custom_staging"))
+
+
+def _check_abandoned_promote_recovered(spark, raw_dir, tmp_path,
+                                       staging_path):
     out = str(tmp_path / "clean")
     om = W.read_open_meteo(spark, f"{raw_dir}/*/*/om*.json")
     vc = W.read_visual_crossing(spark, f"{raw_dir}/*/*/vc*.json")
     clean = W.build_clean(om, vc)
     W.write_clean(clean, out)
 
-    # abandoned promote at the DEFAULT staging path: days 1-10 rewritten
-    # with bias=200 values, marker present, promote never ran
+    # abandoned promote at the staging path: days 1-10 rewritten with
+    # bias=200 values, marker present, promote never ran
     raw2 = str(tmp_path / "raw2")
     _write_raw(raw2, _dates(1, 10), bias=200.0, suffix="b")
     staged = W.build_clean(W.read_open_meteo(spark, f"{raw2}/*/*/om*.json"),
                            W.read_visual_crossing(spark, f"{raw2}/*/*/vc*.json"))
-    staging = f"{out}__staging"
+    staging = staging_path or f"{out}__staging"
     (staged.select(*spark.read.parquet(out).columns)
            .write.mode("overwrite").partitionBy(*W.PARTITION_COLS)
            .parquet(staging))
@@ -280,7 +295,7 @@ def test_upsert_recovers_abandoned_promote(spark, raw_dir, tmp_path):
     _write_raw(raw3, _dates(5, 6), bias=50.0, suffix="c")
     batch = W.build_clean(W.read_open_meteo(spark, f"{raw3}/*/*/om*.json"),
                           W.read_visual_crossing(spark, f"{raw3}/*/*/vc*.json"))
-    W.upsert_clean(spark, out, batch)
+    W.upsert_clean(spark, out, batch, staging_path=staging_path)
 
     assert not os.path.exists(staging)
     final = {(r["location"], str(r["date"])): r
@@ -290,6 +305,42 @@ def test_upsert_recovers_abandoned_promote(spark, raw_dir, tmp_path):
     # day 5: the new batch (bias=50, in [50, 200)) won over everything
     t5 = final[("Tenerife/Vilaflor", "2024-01-05")]["temperature_2m_max"]
     assert 50 <= t5 < 200
+
+
+@pytest.mark.parametrize("op", ["upsert", "compact"])
+def test_unmarked_staging_leftover_not_promoted(spark, raw_dir, tmp_path, op):
+    """A staging dir left by a write interrupted before _PROMOTE_PENDING
+    existed holds no promote to finish: the next write must discard it.
+    Here it holds a stale copy of a partition OUTSIDE the batch (or the
+    compaction predicate), which must stay byte-identical."""
+    out = str(tmp_path / "clean")
+    W.write_clean(W.build_clean(
+        W.read_open_meteo(spark, f"{raw_dir}/*/*/om*.json"),
+        W.read_visual_crossing(spark, f"{raw_dir}/*/*/vc*.json")), out)
+    keep = f"{out}/island=Tenerife/location_name=Vilaflor/year=2024/month=1"
+    files_before = sorted(os.listdir(keep))
+    is_kept = F.col("location") == "Tenerife/Vilaflor"
+
+    staging = f"{out}__staging" if op == "upsert" else f"{out}__compact_staging"
+    (spark.read.parquet(out).filter(is_kept)
+     .withColumn("temperature_2m_max", F.lit(-999.0))
+     .write.partitionBy(*W.PARTITION_COLS).parquet(staging))
+
+    if op == "upsert":
+        raw2 = str(tmp_path / "raw2")
+        _write_raw(raw2, _dates(5, 6), bias=50.0, suffix="b")
+        batch = W.build_clean(
+            W.read_open_meteo(spark, f"{raw2}/*/*/om*.json"),
+            W.read_visual_crossing(spark, f"{raw2}/*/*/vc*.json"))
+        W.upsert_clean(spark, out, batch.filter(~is_kept))
+    else:
+        W.compact_partitions(spark, out, partitions_predicate=~is_kept)
+
+    assert not os.path.exists(staging)
+    assert sorted(os.listdir(keep)) == files_before
+    back = spark.read.parquet(out)
+    assert back.count() == 30
+    assert back.filter(F.col("temperature_2m_max") == -999.0).count() == 0
 
 
 def test_unpartitioned_promote_versioned_swap(spark, tmp_path):
