@@ -180,9 +180,10 @@ _STREAM_UPSERT_ORACLE = """
         "daily-aggregate batches land as file drops, a foreachBatch "
         "stream (streaming/jobs.stream_upsert_sink → the SAME "
         "sources.weather.upsert_clean operator as the batch path: "
-        "left_anti survivors + unionByName + staged partition promote) "
-        "upserts them new-wins-on-(user_id, date) into a partitioned "
-        "table, and the query returns the table READ BACK from disk. The "
+        "left_anti survivors + unionByName, committed as a new version of "
+        "the table's file manifest) upserts them new-wins-on-(user_id, "
+        "date) into a partitioned table, and the query returns the table "
+        "READ BACK from the files its manifest lists. The "
         "oracle is the pure-SQL new-wins twin (batch2 ∪ batch1-not-in-"
         "batch2). Only affected partitions are rewritten — at 100 TB the "
         "upsert cost is O(touched partitions), not table size.",
@@ -194,6 +195,7 @@ def q_stream_upsert_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from ..sources.weather import read_clean
     from ..streaming.jobs import drain, stream_upsert_sink
 
     e = load(spark, sf_dir, "events")
@@ -237,7 +239,7 @@ def q_stream_upsert_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(schema).parquet(drops), table, ckpt,
         keys=("user_id", "date")))
 
-    return (spark.read.parquet(table)
+    return (read_clean(spark, table)
             .select("user_id", "date", F.col("metric").cast("bigint")
                     .alias("metric")))
 

@@ -177,8 +177,9 @@ def q_weather_clean_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="New-wins incremental upsert THROUGH THE REAL WRITE PATH "
         "(README.md:1485-1545): batch_a written as the 4-level partitioned "
         "clean table, batch_b (overlapping days 08-10, shifted values) "
-        "upserted via left_anti + unionByName + dynamic partition "
-        "overwrite, result re-read from disk. Oracle: NOT EXISTS survivors "
+        "upserted via left_anti + unionByName, its files replacing the "
+        "touched partitions' in a new manifest version, result re-read "
+        "from the manifest's files. Oracle: NOT EXISTS survivors "
         "∪ batch_b over the same JSON. Verifies new-wins on the overlap, "
         "survivor retention, and untouched partitions in one hash.",
     tags=("weather", "ingest", "upsert"),
@@ -197,12 +198,12 @@ def q_weather_upsert_newwins(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = os.path.join(base, "clean")
 
     om_a, vc_a = _read_batch(spark, "batch_a", "a")
-    W.write_clean(W.build_clean(om_a, vc_a), table, mode="overwrite")
+    W.write_clean(W.build_clean(om_a, vc_a), table)
 
     om_b, vc_b = _read_batch(spark, "batch_b", "b")
     W.upsert_clean(spark, table, W.build_clean(om_b, vc_b))
 
-    out = spark.read.parquet(table)
+    out = W.read_clean(spark, table)
     return out.select(
         *[F.col(c).cast("int").alias(c) if c in ("year", "month") else c
           for c in _CLEAN_COLS])

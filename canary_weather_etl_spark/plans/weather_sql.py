@@ -12,13 +12,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.weather import read_clean
+
 VIEW = "canary_weather_clean"
 
 
 def register_clean_view(spark: SparkSession, table_path: str) -> None:
     """The Glue-crawler step (README.md:762-772): expose the clean layer to
-    SQL. Partition columns come from the Hive directory layout."""
-    spark.read.parquet(table_path).createOrReplaceTempView(VIEW)
+    SQL. The view reads the files of the table's current manifest;
+    partition columns come from their Hive paths."""
+    read_clean(spark, table_path).createOrReplaceTempView(VIEW)
 
 
 def q1_sunniest_location(spark: SparkSession) -> DataFrame:

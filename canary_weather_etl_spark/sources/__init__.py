@@ -6,6 +6,7 @@ from .weather import (  # noqa: F401
     VISUAL_CROSSING_SCHEMA,
     build_clean,
     lineage_from_path,
+    read_clean,
     read_open_meteo,
     read_visual_crossing,
     upsert_clean,

@@ -13,12 +13,15 @@ layer every table format builds on:
 - commits run on the DRIVER only after every task succeeded and publish
   `_MANIFEST.json` — the manifest IS the table state. One schema for
   both writers: ``{"batches": {key: [entries]}, "files": flat,
-  "total_rows": n}``, where batch jobs commit under a unique job key and
-  streaming commits under the micro-batch id (which makes replayed-batch
-  commits idempotent: the replay REPLACES its batch entry, never
-  double-counts);
-- the manifest is published with write-to-tmp + `os.replace`, so a
-  reader sees the old or the new state, never a mix;
+  "total_rows": n, "version": v}``, where batch jobs commit under a
+  unique job key and streaming commits under the micro-batch id (which
+  makes replayed-batch commits idempotent: the replay REPLACES its batch
+  entry, never double-counts). The clean weather table
+  (sources/weather.py) commits through the same lock, publish and delete
+  helpers, keyed by partition path;
+- the manifest is published with write-to-tmp + fsync + `os.replace`
+  (each publish bumps ``version``), so a reader sees the old or the new
+  state, never a mix, and a power loss keeps one of the two;
 - `abort()` deletes whatever partial task files reported in; superseded
   files (overwrite, replaced stream batches) are deleted AFTER the new
   manifest lands, so no reader window observes missing live files;
@@ -94,14 +97,24 @@ def _load_state(path: str) -> dict:
 
 
 def _publish_state(path: str, state: dict) -> None:
-    flat = [e for entries in state["batches"].values() for e in entries]
-    state["files"] = flat
-    state["total_rows"] = sum(e["rows"] for e in flat)
+    """Publish ``state`` as the next manifest version, durably: the temp
+    file is synced before the rename and the directory after it, so a
+    power loss keeps the old manifest or the new one."""
+    state["files"] = [e for entries in state["batches"].values()
+                      for e in entries]
+    state["version"] = state.get("version", 0) + 1
     manifest_path = os.path.join(path, _MANIFEST)
     tmp = manifest_path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(state, f)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, manifest_path)  # atomic: old list or new, never a mix
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _remove_files(path: str, names) -> None:
@@ -161,6 +174,8 @@ def _commit_under_key(path: str, key: str, entries: list,
         elif key in state["batches"]:  # replayed stream batch: idempotent
             superseded = [e["file"] for e in state["batches"][key]]
         state["batches"][key] = entries
+        state["total_rows"] = sum(e["rows"] for entries_ in
+                                  state["batches"].values() for e in entries_)
         _publish_state(path, state)
     _remove_files(path, superseded)
 
@@ -266,9 +281,13 @@ def read_manifest_jsonl(spark: SparkSession, path: str,
 
 
 def vacuum_manifest_dir(path: str, force_unlock: bool = False) -> list[str]:
-    """Delete part files NOT referenced by the manifest — the VACUUM
+    """Delete data files NOT referenced by the manifest — the VACUUM
     complement to manifest isolation: orphans from crashed jobs are
-    already invisible to readers, this reclaims their storage.
+    already invisible to readers, this reclaims their storage. Data files
+    are the ``part-*`` files at any depth (the sink's JSONL files, the
+    clean table's partitioned Parquet files, sources/weather.py) with
+    their ``.crc`` sidecars, plus all of a crashed table write's
+    ``_write-*`` directory; directories left empty go too.
 
     The scan+delete runs UNDER the commit lock, so vacuum cannot race a
     concurrent committer: a job that is mid-commit holds the lock while
@@ -280,16 +299,26 @@ def vacuum_manifest_dir(path: str, force_unlock: bool = False) -> list[str]:
     that haven't started committing (same retention caveat as
     table-format VACUUM). force_unlock=True clears a stale commit lock
     left by a crashed writer FIRST (otherwise a dead lock makes vacuum
-    fail like any other writer). Returns the deleted file names."""
+    fail like any other writer). Returns the deleted files' paths,
+    relative to ``path``."""
     if force_unlock:
         _remove_files(path, [_LOCK])
     with _manifest_lock(path):
         with open(os.path.join(path, _MANIFEST), encoding="utf-8") as f:
             live = {e["file"] for e in json.load(f)["files"]}
         deleted = []
-        for name in os.listdir(path):
-            if (name.startswith("part-") and name.endswith(".jsonl")
-                    and name not in live):
-                os.remove(os.path.join(path, name))
-                deleted.append(name)
+        for dirpath, _dirs, files in os.walk(path, topdown=False):
+            rel_dir = os.path.relpath(dirpath, path)
+            crashed_write = rel_dir.startswith("_write-")
+            for name in files:
+                data = (name[1:-4] if name.startswith(".part-")
+                        and name.endswith(".crc") else name)
+                if crashed_write or (
+                        data.startswith("part-") and os.path.normpath(
+                            os.path.join(rel_dir, data)) not in live):
+                    os.remove(os.path.join(dirpath, name))
+                    deleted.append(os.path.normpath(
+                        os.path.join(rel_dir, name)))
+            if dirpath != path and not os.listdir(dirpath):
+                os.rmdir(dirpath)
     return sorted(deleted)

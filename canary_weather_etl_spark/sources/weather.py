@@ -13,13 +13,18 @@ single declarative plan:
 - per-location loop → one global read; lineage recovered from file paths
   with ``input_file_name`` + ``regexp_extract`` (README.md:622-623)
 - per-partition upsert loop (B6, README.md:1488-1545) → left_anti +
-  unionByName, one staged write + partition-directory promote
+  unionByName, one write committed as a new version of the table's file
+  manifest (`_commit`, the protocol of sources/manifest_sink.py)
 
 Schemas are explicit ``StructType``s (no inference — at 100 TB schema
 inference is an extra full scan per read, SURVEY.md §1.3).
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +36,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .manifest_sink import (_MANIFEST, ConcurrentWriteError, _load_state,
+                            _manifest_lock, _publish_state, _remove_files)
+from .schema_guard import check_batch_compatible
 
 # The 20 daily variables (README.md:174-181) + the parallel date array.
 OPEN_METEO_DAILY_VARS: dict[str, type] = {
@@ -220,22 +229,52 @@ def build_clean(om: DataFrame, vc: DataFrame) -> DataFrame:
 PARTITION_COLS = ("island", "location_name", "year", "month")
 
 
-def write_clean(df: DataFrame, out: str, mode: str = "append",
-                sort_col: str | None = "date") -> None:
+def table_exists(table_path: str) -> bool:
+    """Whether ``table_path`` holds a committed clean table (a manifest)."""
+    return os.path.exists(os.path.join(table_path, _MANIFEST))
+
+
+def read_clean(spark: SparkSession, table_path: str) -> DataFrame:
+    """The table's current snapshot: exactly the files its manifest lists,
+    partition columns parsed from their paths under ``basePath``. Nothing
+    is listed, so the unlisted files of a crashed write are never read."""
+    return _snapshot(spark, table_path)[1]
+
+
+def _snapshot(spark: SparkSession, table_path: str) -> tuple[int, DataFrame]:
+    """(manifest version, frame over the files that version lists)."""
+    if not table_exists(table_path):
+        raise FileNotFoundError(
+            f"{table_path} is not a clean table: it has no {_MANIFEST} "
+            "(create the table with write_clean)")
+    state = _load_state(table_path)
+    files = [os.path.join(table_path, e["file"]) for e in state["files"]]
+    if not files:
+        raise ValueError(f"clean table {table_path} lists no data files")
+    return state["version"], (spark.read.option("basePath", table_path)
+                              .parquet(*files))
+
+
+def write_clean(df: DataFrame, out: str) -> None:
     """Hive-partitioned parquet sink (README.md:750-752): 4-level layout so
     partition pruning replaces Athena's scan-cost cut (14x claim at
-    README.md:801). Rows are sorted within partitions by ``sort_col`` so
+    README.md:801). Rows are sorted within partitions by ``date`` so
     parquet row-group min/max statistics prune date-range scans inside a
-    month partition too (free at write time, pays on every range query)."""
-    if sort_col and sort_col in df.columns:
-        df = df.sortWithinPartitions(sort_col)
-    df.write.mode(mode).partitionBy(*PARTITION_COLS).parquet(out)
+    month partition too (free at write time, pays on every range query).
+
+    Creates the table at ``out``, or adds the frame's files to it: rows
+    already in a partition stay (`upsert_clean` replaces them)."""
+    if not table_exists(out) and os.path.isdir(out) and os.listdir(out):
+        raise FileExistsError(
+            f"{out} holds files but no {_MANIFEST}: not a clean table")
+    version = _load_state(out).get("version", 0)
+    if "date" in df.columns:
+        df = df.sortWithinPartitions("date")
+    _commit(df, out, version, replace=False)
 
 
 def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
-                 keys: tuple[str, ...] = ("location", "date"),
-                 staging_path: str | None = None,
-                 validate_schema: bool = True) -> None:
+                 keys: tuple[str, ...] = ("location", "date")) -> None:
     """Partition-level upsert: new batch wins on ``keys``; only partitions
     present in the batch are rewritten, all others stay byte-identical.
 
@@ -246,206 +285,101 @@ def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
     1. survivors = existing rows in affected partitions whose key is NOT in
        the new batch (left_anti — Catalyst's own rewrite of NOT EXISTS)
     2. output = survivors ∪ new batch (unionByName)
-    3. ONE partitioned write to staging + directory promote (rename) into
-       the live table — see `_stage_and_promote` for the write-once and
-       crash-recovery contract.
+    3. ONE partitioned write, committed by `_commit`: its files replace
+       the files of the partitions it writes.
 
-    Spark can't safely overwrite a path it is reading in the same job, so
-    the combined frame lands in staging first; at production scale this is
-    where an ACID table format (Iceberg/Delta MERGE) slots in.
+    A batch whose schema drifted from the table's fails before anything is
+    written (B6's schema introspection, README.md:1248-1262).
     """
-    staging = _clear_staging(table_path,
-                             staging_path or f"{table_path}__staging")
-    existing = spark.read.parquet(table_path)
-    if validate_schema:
-        # drift gate (B6's schema introspection, README.md:1248-1262): fail
-        # loudly before writing rather than appending mixed-schema files
-        from .schema_guard import check_batch_compatible
-        check_batch_compatible(new_batch, existing.schema)
+    version, existing = _snapshot(spark, table_path)
+    check_batch_compatible(new_batch, existing.schema)
     cols = existing.columns
-    part_cols = [c for c in PARTITION_COLS if c in cols]
-
-    if part_cols:
-        affected = new_batch.select(*part_cols).distinct()
-        # restrict to affected partitions (broadcast semi join → the scan
-        # prunes everything else; untouched partitions are never read)
-        existing = existing.join(F.broadcast(affected), on=part_cols,
-                                 how="left_semi")
-    # else: unpartitioned table — whole-table rewrite is the only option
+    affected = new_batch.select(*PARTITION_COLS).distinct()
+    # restrict to affected partitions (broadcast semi join → the scan
+    # prunes everything else; untouched partitions are never read)
+    existing = existing.join(F.broadcast(affected), on=list(PARTITION_COLS),
+                             how="left_semi")
     survivors = existing.join(new_batch.select(*keys), on=list(keys),
                               how="left_anti")
     combined = survivors.select(*cols).unionByName(new_batch.select(*cols))
-    _stage_and_promote(combined, table_path, part_cols, staging)
+    _commit(combined, table_path, version, replace=True)
 
 
-def _stage_and_promote(combined: DataFrame, table_path: str,
-                       part_cols: list[str], staging: str) -> None:
-    """Write the combined frame ONCE (already partitioned) to a staging
-    directory, then promote each staged partition directory into the live
-    table by rename — touched-partition bytes are written exactly once
-    (VERDICT r1 item 6; the previous two-phase staged an unpartitioned copy
-    and re-wrote it, 2× write amplification on touched partitions).
+def _with_crc(rel: str) -> list[str]:
+    """A data file and the checksum sidecar Hadoop's local file system
+    writes next to it."""
+    head, name = os.path.split(rel)
+    return [rel, os.path.join(head, f".{name}.crc")]
 
-    Crash-safety contract (ADVICE r1): staging always holds COMPLETE new
-    versions of every affected partition, and `_PROMOTE_PENDING` marks an
-    in-flight promote. A crash mid-promote leaves already-promoted
-    partitions live and the rest intact in staging — rerun
-    `promote_staged(staging, table_path)` to finish (idempotent: promoted
-    partitions are no longer present in staging). A crash before the marker
-    appears leaves the live table untouched. On object stores rename isn't
-    atomic — that deployment slots in an ACID table format (Iceberg/Delta
-    MERGE) behind this same API instead.
 
-    `staging` must not exist (`_clear_staging` runs before the table is
-    read), so the plain write fails rather than mixing with leftovers.
+def _commit(df: DataFrame, table_path: str, version: int,
+            replace: bool) -> None:
+    """The table's one commit protocol, shared with the manifest sink
+    (sources/manifest_sink.py; the design table formats build on, Delta
+    Lake, Armbrust et al., VLDB 2020). The manifest lists the live files
+    of each partition path.
+
+    1. Spark writes ``df`` to a uniquely named directory inside the table
+       (``_write-<id>``; the underscore hides it from directory reads).
+    2. Each data file, then its ``.crc`` sidecar, is renamed into its
+       partition directory. Spark names files after its write job, so they
+       never collide with live files.
+    3. Under the manifest lock, if the manifest is still at ``version``
+       (the one the write read), publish the new file lists: with
+       ``replace`` each written partition's files replace its old ones,
+       else they are added. If not, raise `ConcurrentWriteError` and
+       remove this write's files.
+    4. Delete the superseded files and the write directory.
+
+    Readers see the old snapshot until the publish and the new one after
+    it. A crash before the publish leaves files no manifest lists: no
+    reader opens them and `vacuum_manifest_dir` reclaims them. At rest the
+    directory holds exactly the snapshot.
     """
-    writer = combined.write.mode("errorifexists")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-    promote_staged(staging, table_path, partitioned=bool(part_cols))
-
-
-def _clear_staging(table_path: str, staging: str) -> str:
-    """Make `staging` safe to write, BEFORE the table is read: finish any
-    pending promote (the module's default staging dirs and versions, then
-    `staging` itself if it carries `_PROMOTE_PENDING`), and delete what
-    is left. An unmarked leftover is a write interrupted before its
-    promote began; promoting it would put stale partitions live. Returns
-    `staging`."""
-    import shutil
-
-    recover_pending_promotes(table_path)
-    _finish_pending_promote(staging, table_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    return staging
-
-
-def promote_staged(staging: str, table_path: str,
-                   partitioned: bool = True) -> None:
-    """Swap staged partition directories into the live table (local / HDFS
-    rename semantics). Re-runnable after a crash: walks whatever is still
-    in staging and moves it into place, then removes the marker + staging.
-    """
-    import os
-    import shutil
-
-    marker = os.path.join(staging, "_PROMOTE_PENDING")
-    open(marker, "w").close()
-    if not partitioned:
-        _promote_unpartitioned(staging, table_path)
+    staged = os.path.join(table_path, f"_write-{uuid.uuid4().hex}")
+    df.write.partitionBy(*PARTITION_COLS).parquet(staged)
+    written: dict[str, list[dict]] = {}
+    moved = []
+    for dirpath, _dirs, files in os.walk(staged):
+        part = os.path.relpath(dirpath, staged)
+        for name in sorted(f for f in files if not f.startswith(("_", "."))):
+            rel = os.path.join(part, name)
+            os.makedirs(os.path.join(table_path, part), exist_ok=True)
+            for f in _with_crc(rel):
+                if os.path.exists(os.path.join(staged, f)):
+                    os.rename(os.path.join(staged, f),
+                              os.path.join(table_path, f))
+                    moved.append(f)
+            written.setdefault(part, []).append({
+                "file": rel,
+                "bytes": os.path.getsize(os.path.join(table_path, rel))})
+    if not written:  # an empty frame changes no partition
+        shutil.rmtree(staged)
         return
-    # collect leaf partition dirs (they contain data files) before moving
-    leaves = []
-    for dirpath, _dirs, files in os.walk(staging):
-        if dirpath == staging:
-            continue
-        if any(not f.startswith(("_", ".")) for f in files):
-            leaves.append(dirpath)
-    for leaf in leaves:
-        rel = os.path.relpath(leaf, staging)
-        target = os.path.join(table_path, rel)
-        shutil.rmtree(target, ignore_errors=True)
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        shutil.move(leaf, target)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _promote_unpartitioned(staging: str, table_path: str) -> None:
-    """Whole-table swap with no reader-visible gap: the staged copy becomes
-    a versioned sibling directory (`<table>__v<N>`) and `table_path` is an
-    atomically-replaced symlink pointing at the current version (ADVICE r2:
-    the previous rename-away-then-move-in sequence had a window where the
-    live table did not exist). The `_PROMOTE_PENDING` marker travels with
-    the data until the pointer flip lands, so recovery can finish from any
-    crash point. One-time migration: if `table_path` is still a real
-    directory (pre-symlink layout), it is renamed aside before the first
-    flip — that single migration retains a microscopic no-table window;
-    every later promote is one atomic `os.replace` on the symlink.
-    """
-    import os
-    import shutil
-
-    versions = _list_versions(table_path)
-    vdir = f"{table_path}__v{(max(versions) if versions else 0) + 1}"
-    shutil.move(staging, vdir)  # marker rides along; staging name freed
-    _flip_pointer(table_path, vdir)
-    os.remove(os.path.join(vdir, "_PROMOTE_PENDING"))
-    # GC superseded versions (never the one the pointer targets)
-    for n in versions:
-        old = f"{table_path}__v{n}"
-        if os.path.realpath(old) != os.path.realpath(table_path):
-            shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(f"{table_path}__old", ignore_errors=True)
-
-
-def _list_versions(table_path: str) -> list[int]:
-    import glob
-    import os
-
-    out = []
-    for p in glob.glob(f"{table_path}__v*"):
-        suffix = p[len(table_path) + 3:]
-        if suffix.isdigit() and os.path.isdir(p):
-            out.append(int(suffix))
-    return sorted(out)
-
-
-def _flip_pointer(table_path: str, vdir: str) -> None:
-    import os
-
-    tmp_link = f"{table_path}__ptr_tmp"
-    if os.path.islink(tmp_link) or os.path.exists(tmp_link):
-        os.remove(tmp_link)
-    os.symlink(os.path.abspath(vdir), tmp_link)
-    if os.path.isdir(table_path) and not os.path.islink(table_path):
-        # legacy real-directory layout: rename aside once, then flip
-        old = f"{table_path}__old"
-        import shutil
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(table_path, old)
-    os.replace(tmp_link, table_path)  # atomic for symlink/file targets
-
-
-def recover_pending_promotes(table_path: str) -> list[str]:
-    """Finish any promote interrupted by a crash, BEFORE reading or staging
-    against the table (ADVICE r2: upsert_clean used to read a half-promoted
-    table and a fresh write to the default staging path silently discarded
-    the unfinished promote). Scans the module's staging suffixes plus
-    versioned dirs for a `_PROMOTE_PENDING` marker and re-runs the promote
-    to completion. Returns the paths it recovered. A custom `staging_path`
-    is recovered by the write that reuses it (`_clear_staging`).
-    """
-    import os
-
-    recovered = []
-    for suffix in ("__staging", "__compact_staging", "__scd2_staging"):
-        s = f"{table_path}{suffix}"
-        if _finish_pending_promote(s, table_path):
-            recovered.append(s)
-    # crash after the staged dir became a version but before the pointer flip
-    for n in _list_versions(table_path):
-        vdir = f"{table_path}__v{n}"
-        marker = os.path.join(vdir, "_PROMOTE_PENDING")
-        if os.path.isfile(marker):
-            if os.path.realpath(table_path) != os.path.realpath(vdir):
-                _flip_pointer(table_path, vdir)
-            os.remove(marker)
-            recovered.append(vdir)
-    return recovered
-
-
-def _finish_pending_promote(staging: str, table_path: str) -> bool:
-    """Re-run the promote marked pending in `staging`, if any."""
-    import os
-
-    if not os.path.isfile(os.path.join(staging, "_PROMOTE_PENDING")):
-        return False
-    entries = [e for e in os.listdir(staging)
-               if os.path.isdir(os.path.join(staging, e))]
-    promote_staged(staging, table_path,
-                   partitioned=any("=" in e for e in entries))
-    return True
+    try:
+        with _manifest_lock(table_path):
+            state = _load_state(table_path)
+            now = state.get("version", 0)
+            if now != version:
+                raise ConcurrentWriteError(
+                    f"{table_path} moved from version {version} to {now} "
+                    "while this write ran")
+            superseded = []
+            for part, entries in written.items():
+                old = state["batches"].get(part, [])
+                if replace:
+                    superseded += [f for e in old
+                                   for f in _with_crc(e["file"])]
+                else:
+                    entries = old + entries
+                state["batches"][part] = entries
+            _publish_state(table_path, state)
+    except ConcurrentWriteError:
+        _remove_files(table_path, moved)
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    _remove_files(table_path, superseded)
+    shutil.rmtree(staged)
 
 
 def compact_partitions(spark: SparkSession, table_path: str,
@@ -456,25 +390,21 @@ def compact_partitions(spark: SparkSession, table_path: str,
     rewritten partition with as many files as write tasks; read-heavy
     tables want few large files per partition.
 
-    Rewrites (optionally predicate-selected) partitions via the staged
-    write + directory promote (`_stage_and_promote`) — untouched partitions
-    stay byte-identical, same guarantee as `upsert_clean`. At production
-    scale this runs per-partition-group on a schedule, not table-wide.
+    Rewrites (optionally predicate-selected) partitions through `_commit`,
+    replacing their files — untouched partitions stay byte-identical, same
+    guarantee as `upsert_clean`. At production scale this runs
+    per-partition-group on a schedule, not table-wide.
     """
-    staged_path = _clear_staging(table_path,
-                                 f"{table_path}__compact_staging")
-    df = spark.read.parquet(table_path)
+    version, df = _snapshot(spark, table_path)
     if partitions_predicate is not None:
         df = df.filter(partitions_predicate)
-    part_cols = [c for c in PARTITION_COLS if c in df.columns]
-    _stage_and_promote(df.repartition(target_files_per_partition, *part_cols),
-                       table_path, part_cols, staged_path)
+    _commit(df.repartition(target_files_per_partition, *PARTITION_COLS),
+            table_path, version, replace=True)
 
 
 def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
                 keys: tuple[str, ...] = ("location", "date"),
-                batch_ts: str = "1970-01-01T00:00:00",
-                staging_path: str | None = None) -> None:
+                batch_ts: str = "1970-01-01T00:00:00") -> None:
     """History-preserving (SCD-type-2) upsert: instead of discarding
     overwritten rows (the reference's new-wins semantics,
     README.md:1517-1529), close them out.
@@ -483,19 +413,16 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
     `effective_to` timestamp (null = current). On each batch:
     - rows whose key is re-delivered get `effective_to = batch_ts`
     - the new versions land with `effective_from = batch_ts`, open-ended
-    - unaffected rows/partitions stay untouched (same staged write +
-      directory-promote machinery as `upsert_clean`)
+    - unaffected rows/partitions stay untouched (the same partition-
+      replacing `_commit` as `upsert_clean`)
 
     `batch_ts` is passed explicitly (ISO string) — deterministic reruns,
     no wall-clock in the data path. The current view is
     ``WHERE effective_to IS NULL``; a time-travel view is
     ``WHERE effective_from <= t AND (effective_to > t OR effective_to IS NULL)``.
     """
-    staging = _clear_staging(table_path,
-                             staging_path or f"{table_path}__scd2_staging")
     ts = F.lit(batch_ts).cast("timestamp")
-    existing = spark.read.parquet(table_path)
-    part_cols = [c for c in PARTITION_COLS if c in existing.columns]
+    version, existing = _snapshot(spark, table_path)
 
     batch = (new_batch
              .withColumn("effective_from", ts)
@@ -506,10 +433,9 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
             "table is not SCD2-shaped; expected columns "
             f"{sorted(cols)}, found {sorted(existing.columns)}")
 
-    if part_cols:
-        affected = batch.select(*part_cols).distinct()
-        existing = existing.join(F.broadcast(affected), on=part_cols,
-                                 how="left_semi")
+    affected = batch.select(*PARTITION_COLS).distinct()
+    existing = existing.join(F.broadcast(affected), on=list(PARTITION_COLS),
+                             how="left_semi")
     redelivered = batch.select(*keys).distinct()
     # close out still-open rows for re-delivered keys; history rows pass as-is
     open_rows = existing.filter(F.col("effective_to").isNull())
@@ -522,4 +448,4 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
                 .unionByName(closed_now.select(*cols))
                 .unionByName(untouched_open.select(*cols))
                 .unionByName(batch.select(*cols)))
-    _stage_and_promote(combined, table_path, part_cols, staging)
+    _commit(combined, table_path, version, replace=True)

@@ -204,21 +204,15 @@ def stream_upsert_sink(stream: DataFrame, table_path: str,
     """foreachBatch sink running the SAME upsert operator as the batch path
     (sources.weather.upsert_clean): each micro-batch is a '31-day window
     re-fetch' and lands with new-wins-on-key, partition-scoped-rewrite
-    semantics. Returns the StreamingQuery."""
-    from ..sources.weather import upsert_clean, write_clean
+    semantics. The first micro-batch creates the table; a later one
+    upserts into it. Returns the StreamingQuery."""
+    from ..sources.weather import table_exists, upsert_clean, write_clean
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            spark.read.parquet(table_path).limit(1).collect()
-            exists = True
-        except Exception:
-            exists = False
-        if not exists:
-            write_clean(batch, table_path)
+        if table_exists(table_path):
+            upsert_clean(batch.sparkSession, table_path, batch, keys=keys)
         else:
-            upsert_clean(spark, table_path, batch, keys=keys,
-                         staging_path=f"{checkpoint}/_staging_{batch_id}")
+            write_clean(batch, table_path)
 
     return (
         stream.writeStream.foreachBatch(apply)

@@ -4,8 +4,9 @@
 q_stream_upsert_readback claims the upsert is O(touched partitions +
 batch), not O(table): `sources.weather.upsert_clean` restricts the
 existing-table scan to the batch's partitions via a broadcast left_semi
-on the partition columns, rewrites ONLY those partitions through the
-staged promote, and never reads the rest. This probe measures that claim
+on the partition columns, rewrites ONLY those partitions (their new
+files replace the old ones in the table manifest), and never reads the
+rest. This probe measures that claim
 directly with three cells built from sf0.1 events' daily aggregate
 (40k rows, 4 leaf partitions at 1x):
 
@@ -21,7 +22,7 @@ directly with three cells built from sf0.1 events' daily aggregate
 
 Each cell drops the batch as parquet files, runs the REAL streaming path
 (streaming.jobs.stream_upsert_sink: readStream -> foreachBatch ->
-upsert_clean -> staged promote, availableNow) against a fresh rsync'd
+upsert_clean -> manifest commit, availableNow) against a fresh rsync'd
 copy of the pristine table, and reports best-of-N wall seconds plus the
 readback row count. Prints one JSON line per cell.
 

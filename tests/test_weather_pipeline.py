@@ -10,11 +10,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 import pytest
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
+from canary_weather_etl_spark.plans import weather_sql as Q
+from canary_weather_etl_spark.sources import manifest_sink as M
 from canary_weather_etl_spark.sources import weather as W
 
 from canary_weather_etl_spark.sources import weather_fixtures as WF
@@ -152,40 +156,13 @@ def test_upsert_idempotent(spark, tmp_path):
     batch = W.build_clean(W.read_open_meteo(spark, f"{raw2}/*/*/om*.json"),
                           W.read_visual_crossing(spark, f"{raw2}/*/*/vc*.json"))
 
-    W.upsert_clean(spark, out, batch, staging_path=str(tmp_path / "s1"))
+    W.upsert_clean(spark, out, batch)
     snap1 = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    W.upsert_clean(spark, out, batch, staging_path=str(tmp_path / "s2"))
+    W.upsert_clean(spark, out, batch)
     snap2 = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     assert snap1 == snap2  # running the same 31-day batch twice is a no-op
-
-
-def test_promote_staged_resumes_after_crash(spark, raw_dir, tmp_path):
-    """A crash mid-promote leaves staging with the unpromoted partitions +
-    the _PROMOTE_PENDING marker; re-running promote_staged completes the
-    swap and the table equals the fully-upserted result."""
-    out = str(tmp_path / "clean")
-    om = W.read_open_meteo(spark, f"{raw_dir}/*/*/om*.json")
-    vc = W.read_visual_crossing(spark, f"{raw_dir}/*/*/vc*.json")
-    clean = W.build_clean(om, vc)
-    W.write_clean(clean, out)
-
-    # stage a compaction but "crash" before promoting: build staging only
-    staging = str(tmp_path / "staging")
-    (clean.repartition(1, *W.PARTITION_COLS)
-          .write.mode("overwrite").partitionBy(*W.PARTITION_COLS)
-          .parquet(staging))
-    open(os.path.join(staging, "_PROMOTE_PENDING"), "w").close()
-    # simulate partial promote: move one partition by hand
-    part = "island=Tenerife/location_name=Vilaflor/year=2024/month=1"
-    import shutil
-    shutil.rmtree(f"{out}/{part}")
-    shutil.move(f"{staging}/{part}", f"{out}/{part}")
-
-    W.promote_staged(staging, out)  # recovery rerun
-    assert not os.path.exists(staging)
-    back = spark.read.parquet(out)
-    assert back.count() == 30
-    assert back.select("location", "date").distinct().count() == 30
+    W.upsert_clean(spark, out, batch.limit(0))  # so is an empty batch
+    assert sorted(tuple(r) for r in W.read_clean(spark, out).collect()) == snap1
 
 
 def test_compact_partitions(spark, raw_dir, tmp_path):
@@ -219,12 +196,13 @@ def test_upsert_scd2_history_preserved(spark, tmp_path):
 
     base = mk([("a", f"2024-01-{i:02d}", 1.0) for i in range(1, 6)], None)
     out = str(tmp_path / "scd2")
-    (base.withColumn("effective_from", F.lit("2024-02-01").cast("timestamp"))
-         .withColumn("effective_to", F.lit(None).cast("timestamp"))
-         .write.mode("overwrite")
-         .partitionBy("island", "location_name", "year", "month").parquet(out))
-
     batch = mk([("a", f"2024-01-{i:02d}", 2.0) for i in range(4, 8)], None)
+    with pytest.raises(FileNotFoundError, match="not a clean table"):
+        W.upsert_scd2(spark, out, batch, batch_ts="2024-03-01T00:00:00")
+    W.write_clean(
+        base.withColumn("effective_from", F.lit("2024-02-01").cast("timestamp"))
+            .withColumn("effective_to", F.lit(None).cast("timestamp")), out)
+
     W.upsert_scd2(spark, out, batch, keys=("location", "date"),
                   batch_ts="2024-03-01T00:00:00")
 
@@ -255,123 +233,181 @@ def test_upsert_scd2_history_preserved(spark, tmp_path):
     assert spark.read.parquet(out).filter(F.col("effective_to").isNull()).count() == 7
 
 
-def test_upsert_recovers_abandoned_promote(spark, raw_dir, tmp_path):
-    """A staging dir left behind with _PROMOTE_PENDING (crash after staging,
-    before/mid promote) must be promoted to completion at the next
-    upsert_clean entry — not silently discarded by the fresh write."""
-    _check_abandoned_promote_recovered(spark, raw_dir, tmp_path, None)
+# --- the manifest commit: crashes, a concurrent reader, a second writer ----
+
+def _clean(spark, root, start_day, n_days, bias=0.0, suffix="a"):
+    _write_raw(root, _dates(start_day, n_days), bias=bias, suffix=suffix)
+    return W.build_clean(W.read_open_meteo(spark, f"{root}/*/*/om*.json"),
+                         W.read_visual_crossing(spark, f"{root}/*/*/vc*.json"))
 
 
-def test_upsert_recovers_abandoned_promote_at_custom_staging(
-        spark, raw_dir, tmp_path):
-    """Same contract at a caller-chosen `staging_path` (the streaming sink
-    passes one per micro-batch), which no default-suffix scan finds."""
-    _check_abandoned_promote_recovered(spark, raw_dir, tmp_path,
-                                       str(tmp_path / "custom_staging"))
+def _live_files(out):
+    """The manifest's files with their checksum sidecars, and the manifest."""
+    with open(os.path.join(out, "_MANIFEST.json")) as f:
+        live = [e["file"] for e in json.load(f)["files"]]
+    return {"_MANIFEST.json", *live,
+            *(os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+              for p in live)}
 
 
-def _check_abandoned_promote_recovered(spark, raw_dir, tmp_path,
-                                       staging_path):
+def _files_on_disk(out):
+    return {os.path.relpath(os.path.join(d, f), out)
+            for d, _, fs in os.walk(out) for f in fs}
+
+
+def _which_snapshot(spark, out):
+    """'old' (days 1-10 at bias 0) or 'new' (days 6-15 upserted at bias
+    100 over them), after checking the table invariants: stations x days
+    rows, unique (location, date), the newest delivery wins."""
+    rows = W.read_clean(spark, out).select(
+        "location", "date", "temperature_2m_max").collect()
+    days = {r["date"].day for r in rows}
+    assert days in (set(range(1, 11)), set(range(1, 16)))
+    assert len(rows) == len(LOCATIONS) * len(days)
+    assert len({(r["location"], r["date"]) for r in rows}) == len(rows)
+    new = len(days) == 15
+    for r in rows:
+        assert (r["temperature_2m_max"] >= 100) == (new and r["date"].day >= 6)
+    return "new" if new else "old"
+
+
+class _Crash(Exception):
+    pass
+
+
+# (object, attribute, the call that raises, the snapshot a reader then sees)
+_COMMIT_STEPS = {
+    "after_spark_write": (os, "rename", 1, "old"),
+    "after_rename_1": (os, "rename", 2, "old"),
+    "after_rename_3": (os, "rename", 4, "old"),
+    "after_publish": (W, "_remove_files", 1, "new"),
+    "after_delete": (shutil, "rmtree", 1, "new"),
+}
+
+
+@pytest.mark.parametrize("step", list(_COMMIT_STEPS))
+def test_upsert_crash_leaves_old_or_new_table(spark, tmp_path, monkeypatch,
+                                              step):
+    """A write that dies at any step of the commit leaves the old table or
+    the new one; the next upsert succeeds and vacuum leaves a directory
+    that holds exactly the snapshot."""
     out = str(tmp_path / "clean")
-    om = W.read_open_meteo(spark, f"{raw_dir}/*/*/om*.json")
-    vc = W.read_visual_crossing(spark, f"{raw_dir}/*/*/vc*.json")
-    clean = W.build_clean(om, vc)
-    W.write_clean(clean, out)
+    W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
+    batch = _clean(spark, str(tmp_path / "raw2"), 6, 10, bias=100.0,
+                   suffix="b")
+    obj, attr, crash_at, expect = _COMMIT_STEPS[step]
+    real, calls = getattr(obj, attr), []
 
-    # abandoned promote at the staging path: days 1-10 rewritten with
-    # bias=200 values, marker present, promote never ran
-    raw2 = str(tmp_path / "raw2")
-    _write_raw(raw2, _dates(1, 10), bias=200.0, suffix="b")
-    staged = W.build_clean(W.read_open_meteo(spark, f"{raw2}/*/*/om*.json"),
-                           W.read_visual_crossing(spark, f"{raw2}/*/*/vc*.json"))
-    staging = staging_path or f"{out}__staging"
-    (staged.select(*spark.read.parquet(out).columns)
-           .write.mode("overwrite").partitionBy(*W.PARTITION_COLS)
-           .parquet(staging))
-    open(os.path.join(staging, "_PROMOTE_PENDING"), "w").close()
+    def crashing(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == crash_at:
+            raise _Crash(step)
+        return real(*args, **kwargs)
 
-    # next upsert (days 5-6, bias=50) must first finish the pending promote
-    raw3 = str(tmp_path / "raw3")
-    _write_raw(raw3, _dates(5, 6), bias=50.0, suffix="c")
-    batch = W.build_clean(W.read_open_meteo(spark, f"{raw3}/*/*/om*.json"),
-                          W.read_visual_crossing(spark, f"{raw3}/*/*/vc*.json"))
-    W.upsert_clean(spark, out, batch, staging_path=staging_path)
+    monkeypatch.setattr(obj, attr, crashing)
+    with pytest.raises(_Crash):
+        W.upsert_clean(spark, out, batch)
+    monkeypatch.undo()
+    assert _which_snapshot(spark, out) == expect
 
-    assert not os.path.exists(staging)
-    final = {(r["location"], str(r["date"])): r
-             for r in spark.read.parquet(out).collect()}
-    # day 2: recovered promote's values (bias=200) won over the original
-    assert final[("Tenerife/Vilaflor", "2024-01-02")]["temperature_2m_max"] >= 200
-    # day 5: the new batch (bias=50, in [50, 200)) won over everything
-    t5 = final[("Tenerife/Vilaflor", "2024-01-05")]["temperature_2m_max"]
-    assert 50 <= t5 < 200
+    W.upsert_clean(spark, out, batch)
+    assert _which_snapshot(spark, out) == "new"
+    M.vacuum_manifest_dir(out)
+    assert _files_on_disk(out) == _live_files(out)
+    assert spark.read.parquet(out).count() == len(LOCATIONS) * 15
 
 
-@pytest.mark.parametrize("op", ["upsert", "compact"])
-def test_unmarked_staging_leftover_not_promoted(spark, raw_dir, tmp_path, op):
-    """A staging dir left by a write interrupted before _PROMOTE_PENDING
-    existed holds no promote to finish: the next write must discard it.
-    Here it holds a stale copy of a partition OUTSIDE the batch (or the
-    compaction predicate), which must stay byte-identical."""
+def test_reader_sees_whole_table_during_upsert(spark, tmp_path, monkeypatch):
+    """A reader that registers the view and counts while the upsert is
+    paused inside its commit sees every row."""
     out = str(tmp_path / "clean")
-    W.write_clean(W.build_clean(
-        W.read_open_meteo(spark, f"{raw_dir}/*/*/om*.json"),
-        W.read_visual_crossing(spark, f"{raw_dir}/*/*/vc*.json")), out)
-    keep = f"{out}/island=Tenerife/location_name=Vilaflor/year=2024/month=1"
-    files_before = sorted(os.listdir(keep))
-    is_kept = F.col("location") == "Tenerife/Vilaflor"
+    W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
+    batch = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0,
+                   suffix="b")
+    real, seen = os.rename, []
 
-    staging = f"{out}__staging" if op == "upsert" else f"{out}__compact_staging"
-    (spark.read.parquet(out).filter(is_kept)
-     .withColumn("temperature_2m_max", F.lit(-999.0))
-     .write.partitionBy(*W.PARTITION_COLS).parquet(staging))
+    def paused_rename(src, dst):
+        Q.register_clean_view(spark, out)
+        seen.append(spark.table(Q.VIEW).count())
+        real(src, dst)
 
-    if op == "upsert":
-        raw2 = str(tmp_path / "raw2")
-        _write_raw(raw2, _dates(5, 6), bias=50.0, suffix="b")
-        batch = W.build_clean(
-            W.read_open_meteo(spark, f"{raw2}/*/*/om*.json"),
-            W.read_visual_crossing(spark, f"{raw2}/*/*/vc*.json"))
-        W.upsert_clean(spark, out, batch.filter(~is_kept))
-    else:
-        W.compact_partitions(spark, out, partitions_predicate=~is_kept)
-
-    assert not os.path.exists(staging)
-    assert sorted(os.listdir(keep)) == files_before
-    back = spark.read.parquet(out)
-    assert back.count() == 30
-    assert back.filter(F.col("temperature_2m_max") == -999.0).count() == 0
+    monkeypatch.setattr(os, "rename", paused_rename)
+    W.upsert_clean(spark, out, batch)
+    monkeypatch.undo()
+    assert seen and set(seen) == {30}
+    assert W.read_clean(spark, out).count() == 30
 
 
-def test_unpartitioned_promote_versioned_swap(spark, tmp_path):
-    """Unpartitioned whole-table swap: the live path becomes a pointer to a
-    versioned directory, every promote flips it atomically, superseded
-    versions are garbage-collected, and the table is readable throughout."""
-    out = str(tmp_path / "t")
-    spark.range(10).write.parquet(out)
+def test_second_writer_fails_loudly(spark, tmp_path, monkeypatch):
+    """Two upserts that read the same table version: the one that commits
+    second raises ConcurrentWriteError and none of its files go live."""
+    out = str(tmp_path / "clean")
+    W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
+    late = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0, suffix="b")
+    early = _clean(spark, str(tmp_path / "raw3"), 1, 3, bias=200.0,
+                   suffix="c")
+    real, late_files = os.rename, []
 
-    for i, n in enumerate((20, 30)):
-        staging = str(tmp_path / f"s{i}")
-        spark.range(n).write.parquet(staging)
-        W.promote_staged(staging, out, partitioned=False)
-        assert spark.read.parquet(out).count() == n
-        assert not os.path.exists(staging)
+    def late_rename(src, dst):
+        if not late_files:  # the late writer has read and written: pause
+            monkeypatch.setattr(os, "rename", real)
+            W.upsert_clean(spark, out, early)
+            monkeypatch.setattr(os, "rename", late_rename)
+        late_files.append(os.path.relpath(dst, out))
+        real(src, dst)
 
-    assert os.path.islink(out)  # pointer layout after first promote
-    versions = W._list_versions(out)
-    assert len(versions) == 1  # superseded versions GC'd
+    monkeypatch.setattr(os, "rename", late_rename)
+    with pytest.raises(M.ConcurrentWriteError, match="version"):
+        W.upsert_clean(spark, out, late)
+    monkeypatch.undo()
+
+    assert late_files and not set(late_files) & _live_files(out)
+    assert _files_on_disk(out) == _live_files(out)
+    rows = W.read_clean(spark, out).collect()
+    assert len(rows) == 30
+    for r in rows:
+        assert (r["temperature_2m_max"] >= 200) == (r["date"].day <= 3)
 
 
-def test_recover_pending_promotes_finishes_pointer_flip(spark, tmp_path):
-    """Crash window: staged data became a versioned dir (marker inside) but
-    the pointer never flipped — recovery must flip and clear the marker."""
-    out = str(tmp_path / "t")
-    spark.range(10).write.parquet(out)
-    vdir = f"{out}__v7"
-    spark.range(99).write.parquet(vdir)
-    open(os.path.join(vdir, "_PROMOTE_PENDING"), "w").close()
+def test_manifest_publish_is_durable(tmp_path, monkeypatch):
+    """The manifest's temp file is synced before the rename that publishes
+    it, and the directory after."""
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
 
-    recovered = W.recover_pending_promotes(out)
-    assert vdir in recovered
-    assert spark.read.parquet(out).count() == 99
-    assert not os.path.exists(os.path.join(vdir, "_PROMOTE_PENDING"))
+    def fsync(fd):
+        calls.append("fsync")
+        real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append("replace")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    M._publish_state(str(tmp_path), {"batches": {"0": [
+        {"file": "part-0.jsonl", "rows": 1, "bytes": 2}]}})
+    assert calls == ["fsync", "replace", "fsync"]
+
+
+def test_register_clean_view_runs_one_job(spark, tmp_path):
+    """The view over a manifest of more than 32 files (Spark's default
+    parallel-listing threshold) runs only the schema footer read."""
+    out = str(tmp_path / "clean")
+    loc = F.concat(F.lit("L"), F.col("id").cast("string"))
+    W.write_clean(spark.range(40).select(
+        F.concat(F.lit("isl/"), loc).alias("location"),
+        F.lit("isl").alias("island"), loc.alias("location_name"),
+        F.to_date(F.lit("2024-01-01")).alias("date"),
+        F.lit(2024).alias("year"), F.lit(1).alias("month")), out)
+    with open(os.path.join(out, "_MANIFEST.json")) as f:
+        assert len(json.load(f)["files"]) > 32
+    sc = spark.sparkContext
+    group = f"register-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "register_clean_view")
+    try:
+        Q.register_clean_view(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert spark.table(Q.VIEW).count() == 40
