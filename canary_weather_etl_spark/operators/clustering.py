@@ -31,18 +31,18 @@ Spark engine should run it at 100 TB:
   integer in a double (< 2^53), one deterministic divide, one floor —
   identical in every IEEE-754 engine.
 
-Determinism contract: init takes the first ``k`` points by id
-(vec_id < k), ties in the argmin break toward the smaller centroid id,
-and empty clusters keep their previous centroid — each rule mirrored in
-the oracle.
+Determinism contract: init takes the first ``k`` points in vec_id
+order (on the dense ids of every oracle fixture: vec_id < k), ties in
+the argmin break toward the smaller centroid id, and empty clusters keep
+their previous centroid — each rule mirrored in the oracle.
 
-k-scaling limit: the literal-centroid argmin inlines k·dims integers
-into one expression tree — ideal for the small-k regimes here (k ≤ ~50;
-plan size and codegen grow linearly in k·dims). For large-k corpus
-clustering (k in the thousands), switch the assignment to a broadcast
-join against a centroid DataFrame + ``min_by`` aggregation: one extra
-shuffle of assignment rows per iteration, but constant-size plans. Same
-integer arithmetic, same oracle semantics.
+k-scaling: the literal-centroid argmin inlines k·dims integers into one
+expression tree — plan size and codegen grow linearly in k·dims — so
+``kmeans_fixed`` uses it up to ``LITERAL_K_MAX`` and switches above that
+to a broadcast join against a centroid DataFrame + min-struct
+aggregation (``assign_clusters_join``): one extra shuffle of assignment
+rows per iteration, but constant-size plans. Same integer arithmetic,
+same oracle semantics.
 """
 
 from __future__ import annotations
@@ -53,6 +53,11 @@ from pyspark.sql import functions as F
 from ..functions.litexpr import argmin_struct_sql, sqdist_sql
 
 UNIT_SCALE = 1_000_000
+# largest k assigned by the literal-centroid argmin (module docstring)
+LITERAL_K_MAX = 50
+# SemDeDup's engine-chosen k = max(K_MIN, n // TARGET_CLUSTER)
+K_MIN = 8
+TARGET_CLUSTER = 64
 
 
 def quantize_vectors(df: DataFrame, id_col: str = "vec_id",
@@ -97,6 +102,37 @@ def assign_clusters(qdf: DataFrame, centroids: dict[int, list[int]]) -> DataFram
             .drop("_best"))
 
 
+def assign_clusters_join(qdf: DataFrame,
+                         centroids: dict[int, list[int]]) -> DataFrame:
+    """Large-k assignment: the centroid table rides a BROADCAST join and
+    the argmin is a min-struct aggregate — constant-size plans where
+    ``assign_clusters``'s literal-inlined argmin would blow codegen past
+    LITERAL_K_MAX (module docstring). Costs one shuffle of (vec_id)
+    groups per round — the documented large-k trade. Bit-identical
+    semantics: integer squared L2, ties to the smaller cluster id (min
+    struct (dist, cid) is lexicographic), any_value(qvec) is
+    deterministic because qvec is functionally dependent on vec_id."""
+    spark = qdf.sparkSession
+    # cid is BIGINT: with sparse production ids the init points' ids can
+    # exceed int32 (the literal path's int cid only ever sees small-k
+    # dense fixtures)
+    cent = spark.createDataFrame(
+        [(int(cid), [int(v) for v in vec])
+         for cid, vec in sorted(centroids.items())],
+        "cid BIGINT, cvec ARRAY<BIGINT>")
+    d = F.aggregate(
+        F.zip_with(F.col("qvec"), F.col("cvec"),
+                   lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return (qdf.join(F.broadcast(cent), F.lit(True))
+            .select("vec_id", "qvec",
+                    F.struct(d.alias("d"), F.col("cid")).alias("s"))
+            .groupBy("vec_id")
+            .agg(F.min("s").alias("b"), F.any_value("qvec").alias("qvec"))
+            .select("vec_id", "qvec", F.col("b.cid").alias("cluster_id"),
+                    F.col("b.d").alias("dist_units")))
+
+
 def kmeans_fixed(qdf: DataFrame, k: int = 4,
                  iterations: int = 3) -> tuple[DataFrame, dict[int, list[int]]]:
     """Lloyd's k-means over a quantized (vec_id, qvec) frame.
@@ -105,21 +141,24 @@ def kmeans_fixed(qdf: DataFrame, k: int = 4,
     assign→update rounds, then one final assignment against the last
     centroids (the frame the caller aggregates). Empty clusters keep
     their previous centroid — mirrored by the oracle's LEFT JOIN +
-    COALESCE.
+    COALESCE. Assignment is ``assign_clusters`` for k <= LITERAL_K_MAX
+    and ``assign_clusters_join`` above it (module docstring).
     """
-    dims = None
-    # init: the first k points by id — k bounded rows to the driver
-    init_rows = (qdf.filter(F.col("vec_id") < k)
-                 .select("vec_id", "qvec").collect())
+    assign = assign_clusters if k <= LITERAL_K_MAX else assign_clusters_join
+    # init: the first k points in vec_id order — one TakeOrdered job, k
+    # bounded rows to the driver. Unlike a `vec_id < k` filter it also
+    # holds on sparse ids (the scale amplifier shifts ids per copy)
+    init_rows = (qdf.select("vec_id", "qvec")
+                 .orderBy("vec_id").limit(k).collect())
     centroids = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
                  for r in init_rows}
     if len(centroids) != k:
-        raise ValueError(f"init expects vec_id 0..{k-1} present, "
-                         f"got {sorted(centroids)}")
+        raise ValueError(f"init needs k={k} distinct vec_ids, corpus "
+                         f"has only {len(centroids)}")
     dims = len(next(iter(centroids.values())))
 
     for _ in range(iterations):
-        asg = assign_clusters(qdf, centroids)
+        asg = assign(qdf, centroids)
         # one shuffle of k*dims keys, partial-aggregated map-side
         sums = (asg.select("cluster_id",
                            F.posexplode("qvec").alias("ord", "qv"))
@@ -140,7 +179,7 @@ def kmeans_fixed(qdf: DataFrame, k: int = 4,
             new_cent[cid] = [by_ord[i] for i in range(dims)]
         centroids = new_cent
 
-    return assign_clusters(qdf, centroids), centroids
+    return assign(qdf, centroids), centroids
 
 
 def kmeans_cluster_profile(asg: DataFrame) -> DataFrame:
@@ -171,11 +210,11 @@ def semantic_dedup(qdf: DataFrame, k: int = 8,
     update shuffle; the medoid pick is ONE more map-side-combined
     aggregate over the final assignment (min struct (dist, vec_id) per
     cluster) — no new corpus-sized state, no join. At 100 TB, k grows
-    with corpus diversity; see the module docstring's large-k note
-    (switch assignment to a broadcast join + min_by at k in the
-    thousands). Deterministic end-to-end: integer distances, total
-    tie-breaks, so the survivor set is bit-stable across partitionings
-    and retries — a dedup pass you can re-run idempotently.
+    with corpus diversity; above LITERAL_K_MAX the assignment becomes a
+    broadcast join (module docstring). Deterministic end-to-end: integer
+    distances, total tie-breaks, so the survivor set is bit-stable
+    across partitionings and retries — a dedup pass you can re-run
+    idempotently.
     """
     asg, _cent = kmeans_fixed(qdf, k=k, iterations=iterations)
     return (asg.groupBy("cluster_id")
@@ -214,13 +253,10 @@ def _within_cluster_drop_survivors(asg, emb, threshold: float,
 
 
 def semantic_dedup_threshold(qdf: DataFrame, emb: DataFrame,
-                             k: int | None = None, iterations: int = 2,
+                             iterations: int = 2,
                              threshold: float = 0.40,
-                             target_cluster: int = 64,
                              id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             allow_fixed_k_quadratic: bool = False
-                             ) -> DataFrame:
+                             vec_col: str = "embedding") -> DataFrame:
     """SemDeDup-style thresholded semantic dedup (Abbas et al. 2023,
     public method): k-means clusters bound the quadratic, then WITHIN
     each cluster every pair with cosine >= ``threshold`` drops its
@@ -231,156 +267,25 @@ def semantic_dedup_threshold(qdf: DataFrame, emb: DataFrame,
 
     Returns survivors: (cluster_id, vec_id).
 
-    SAFE BY DEFAULT (r9 verdict #2 → r10): ``k=None`` routes through
-    the ENGINE-CHOSEN regime (``semantic_dedup_auto``) — k scales with
-    corpus size so mean cluster size stays ~``target_cluster`` and the
-    within-cluster pair join stays ~n·target/2. A FIXED small k is the
-    measured quadratic trap (cluster size grows with corpus: k=8 made
-    the pair join n²/8 and ABORTED at 45 min at 100x, SCALE.md r9), so
-    passing an explicit ``k`` now requires the caller to also pass
-    ``allow_fixed_k_quadratic=True`` — the same engine-decides-regimes
-    discipline as the r8 set-join chooser (dedup.set_similarity_join's
-    candidate probe). The linear 100 TB paths remain hyperplane-LSH
-    (similarity.cosine_near_dup_pairs_planted) and PQ coarse buckets.
-
-    Scale shape — the published SemDeDup argument, Spark-first: the
-    corpus-wide O(n²) cosine join becomes k cluster-local joins via ONE
-    equi-join on cluster_id (candidates = Σ C(|cluster|,2), controlled
-    by k); assignment is the regime-chosen literal-fold / broadcast-join
-    path; the equi-join shuffles (id, cluster, vector) rows once on
-    cluster_id.
-    """
-    if k is None:
-        return semantic_dedup_auto(qdf, emb, target_cluster=target_cluster,
-                                   iterations=iterations, threshold=threshold,
-                                   id_col=id_col, vec_col=vec_col)
-    if not allow_fixed_k_quadratic:
-        raise ValueError(
-            "semantic_dedup_threshold with a FIXED k makes the "
-            "within-cluster pair join ~n^2/k — measured ABORT at 45 min "
-            "at 100x with k=8 (SCALE.md r9). Omit k to let the engine "
-            "choose (k = max(8, n // target_cluster), pair volume "
-            "~n*target/2), or pass allow_fixed_k_quadratic=True if the "
-            "corpus is genuinely small/bounded.")
-    asg, _cent = kmeans_fixed(qdf, k=k, iterations=iterations)
-    return _within_cluster_drop_survivors(asg, emb, threshold,
-                                          id_col, vec_col)
-
-
-def assign_clusters_join(qdf: DataFrame,
-                         centroids: dict[int, list[int]]) -> DataFrame:
-    """Large-k assignment: the centroid table rides a BROADCAST join and
-    the argmin is a min-struct aggregate — constant-size plans where
-    ``assign_clusters``'s literal-inlined argmin would blow codegen past
-    k ≈ 50 (module docstring). Costs one shuffle of (vec_id) groups per
-    round — the documented large-k trade. Bit-identical semantics:
-    integer squared L2, ties to the smaller cluster id (min struct
-    (dist, cid) is lexicographic), any_value(qvec) is deterministic
-    because qvec is functionally dependent on vec_id."""
-    spark = qdf.sparkSession
-    # cid is BIGINT: with sparse production ids the init points' ids can
-    # exceed int32 (the literal path's int cid only ever sees small-k
-    # dense fixtures)
-    cent = spark.createDataFrame(
-        [(int(cid), [int(v) for v in vec])
-         for cid, vec in sorted(centroids.items())],
-        "cid BIGINT, cvec ARRAY<BIGINT>")
-    d = F.aggregate(
-        F.zip_with(F.col("qvec"), F.col("cvec"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    return (qdf.join(F.broadcast(cent), F.lit(True))
-            .select("vec_id", "qvec",
-                    F.struct(d.alias("d"), F.col("cid")).alias("s"))
-            .groupBy("vec_id")
-            .agg(F.min("s").alias("b"), F.any_value("qvec").alias("qvec"))
-            .select("vec_id", "qvec", F.col("b.cid").alias("cluster_id"),
-                    F.col("b.d").alias("dist_units")))
-
-
-def kmeans_fixed_joined(qdf: DataFrame, k: int,
-                        iterations: int = 2
-                        ) -> tuple[DataFrame, dict[int, list[int]]]:
-    """``kmeans_fixed`` with the broadcast-join assignment — the large-k
-    regime (k beyond ~50, where literal-centroid codegen stops scaling).
-    Same FLOOR(sum/n) update and empty-cluster carry; pytest pins
-    bit-equality with kmeans_fixed on shared k over dense ids. Init is
-    the first k points by id ORDER (TakeOrdered, k bounded rows) — NOT
-    ``vec_id < k``: large-k callers run on amplified/production corpora
-    whose ids are sparse (the 100x amplifier shifts ids per copy), where
-    the density assumption breaks. On dense ids the two rules coincide,
-    which is what the equality pytest relies on. Driver traffic per
-    round stays k·dims bounded ints."""
-    init_rows = (qdf.select("vec_id", "qvec")
-                 .orderBy("vec_id").limit(k).collect())
-    centroids = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
-                 for r in init_rows}
-    if len(centroids) != k:
-        raise ValueError(f"init needs k={k} distinct vec_ids, corpus "
-                         f"has only {len(centroids)}")
-    dims = len(next(iter(centroids.values())))
-
-    for _ in range(iterations):
-        asg = assign_clusters_join(qdf, centroids)
-        sums = (asg.select("cluster_id",
-                           F.posexplode("qvec").alias("ord", "qv"))
-                .groupBy("cluster_id", "ord")
-                .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-                .withColumn("cv", F.floor(F.col("s").cast("double")
-                                          / F.col("n")).cast("long"))
-                .select("cluster_id", "ord", "cv")
-                .collect())  # bounded: k*dims longs
-        new_cent = {cid: list(vec) for cid, vec in centroids.items()}
-        got: dict[int, dict[int, int]] = {}
-        for r in sums:
-            got.setdefault(int(r["cluster_id"]), {})[int(r["ord"])] = \
-                int(r["cv"])
-        for cid, by_ord in got.items():
-            new_cent[cid] = [by_ord[i] for i in range(dims)]
-        centroids = new_cent
-
-    return assign_clusters_join(qdf, centroids), centroids
-
-
-def semantic_dedup_auto(qdf: DataFrame, emb: DataFrame,
-                        target_cluster: int = 64,
-                        iterations: int = 2,
-                        threshold: float = 0.40,
-                        k_min: int = 8,
-                        literal_k_max: int = 50,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """``semantic_dedup_threshold`` with ENGINE-CHOSEN k — the SemDeDup
-    scaling argument made operational (the r8 set-join regime chooser's
-    discipline applied to clustering): k = max(k_min, n // target_cluster)
-    keeps mean cluster size ~constant, so the within-cluster pair volume
-    is Σ C(|cluster|,2) ≈ n·target_cluster/2 — linear in corpus size —
-    where a fixed small k degenerates quadratically on the PAIR join
-    (measured: fixed k=8 at 100x sf0.1 was aborted after 45 min on
-    ~156M within-cluster pairs, SCALE.md r9). The assignment path is
-    likewise regime-chosen: literal-centroid codegen up to
-    ``literal_k_max`` (zero-shuffle), broadcast-join + min-struct beyond
-    it (constant plan size; one vec_id-group shuffle per round).
+    k is ENGINE-CHOSEN from one bounded count(): k = max(K_MIN,
+    n // TARGET_CLUSTER) keeps mean cluster size ~constant, so the
+    within-cluster pair volume Σ C(|cluster|,2) ≈ n·TARGET_CLUSTER/2 is
+    linear in corpus size. A fixed small k degenerates quadratically on
+    the pair join (measured: fixed k=8 at 100x sf0.1 was aborted after
+    45 min on ~156M within-cluster pairs, SCALE.md r9). The equi-join on
+    cluster_id shuffles (id, cluster, vector) rows once.
 
     HONEST SCALE LIMIT (measured, SCALE.md r9): with k ∝ n the
     brute-force assignment does n·k distance folds per round — itself
-    O(n²/target_cluster). Auto-k buys a large constant factor over
-    fixed-k (the pair join collapses from n²/k to n·target/2) and is
-    the right tool at mid scale, but EXACT threshold dedup cannot be
-    linear end-to-end this way. The linear 100 TB paths in this repo
-    are hyperplane-LSH candidates + exact verify
-    (similarity.cosine_near_dup_pairs_planted — candidates track output
-    size)
-    and the PQ coarse-bucket pass (q_pq_semantic_buckets); run those
-    first and reserve cluster-bounded exact dedup for the survivor set.
-
-    One bounded count() picks k; both paths share the same integer
-    arithmetic and survivor rule, pinned by pytest equality.
+    O(n²/TARGET_CLUSTER) — so EXACT threshold dedup cannot be linear
+    end-to-end this way. The linear 100 TB paths in this repo are
+    hyperplane-LSH candidates + exact verify
+    (similarity.cosine_near_dup_pairs_planted) and the PQ coarse-bucket
+    pass (q_pq_semantic_buckets); run those first and reserve
+    cluster-bounded exact dedup for the survivor set.
     """
-    n = qdf.count()  # bounded driver scalar — the regime probe
-    k = max(k_min, int(n) // target_cluster)
-    train = kmeans_fixed if k <= literal_k_max else kmeans_fixed_joined
-    asg, _cent = train(qdf, k=k, iterations=iterations)
-
+    n = qdf.count()  # bounded driver scalar — picks k
+    k = max(K_MIN, int(n) // TARGET_CLUSTER)
+    asg, _cent = kmeans_fixed(qdf, k=k, iterations=iterations)
     return _within_cluster_drop_survivors(asg, emb, threshold,
                                           id_col, vec_col)

@@ -340,8 +340,8 @@ def containment_pairs(shingles: DataFrame,
     is engine-exact (same DIV in any SQL engine). Mutual containment
     (near-identical docs) correctly emits both directions.
 
-    ENGINE-CHOSEN REGIME (same discipline as `set_similarity_join`'s
-    probe, dedup.py:523), two exact plans with a measured crossover
+    ENGINE-CHOSEN REGIME (same discipline as `near_dup_pairs_exact`'s
+    candidate probe), two exact plans with a measured crossover
     (SCALE.md r10):
 
     - ``naive``: shared-shingle self-join → count per ordered pair.
@@ -663,7 +663,7 @@ def admission_state_init(corpus: DataFrame, state_dir: str,
                          id_col: str = "doc_id", text_col: str = "text",
                          n: int = 2, buckets: int = 64) -> None:
     """Seed the persisted admission state for `admission_screen_batch`'s
-    postings regime: ``state_dir/postings`` — (shingle, doc, sz) rows
+    postings screen: ``state_dir/postings`` — (shingle, doc, sz) rows
     partitioned by a shingle-hash ``bucket`` (routing only, results
     never depend on it), and ``state_dir/hashes`` — distinct content
     md5s for the exact gate, partitioned by an md5-hash bucket for the
@@ -690,21 +690,15 @@ def admission_state_init(corpus: DataFrame, state_dir: str,
 
 def admission_screen_batch(batch: DataFrame, corpus_dir: str,
                            state_dir: str | None = None,
-                           regime: str = "auto",
                            threshold: float = 0.5, n: int = 2,
                            buckets: int = 64,
                            writeback: bool = True) -> DataFrame:
     """One micro-batch of corpus admission (exact content gate + exact
-    cross-Jaccard near gate vs the CURRENT corpus), with an
-    ENGINE-CHOSEN cost regime — the same two-exact-plans discipline as
-    `containment_pairs` / `set_similarity_join`:
+    cross-Jaccard near gate vs the CURRENT corpus). Two exact screens,
+    picked by whether persisted state exists:
 
-    - ``rescan`` (the r10 shape, the correctness-scale twin): re-read
-      the corpus text and re-shingle it this batch. Per-batch cost is
-      O(corpus) regex/ngram work — fine while the corpus is small,
-      linear-in-corpus-per-batch at scale (the r10 verdict's named gap).
-    - ``postings`` (the 100 TB shape): equi-join the batch's shingles
-      against the PERSISTED postings table seeded by
+    - with ``state_dir`` (postings, the 100 TB shape): equi-join the
+      batch's shingles against the PERSISTED postings table seeded by
       `admission_state_init` and maintained by appends here — the
       corpus text is never touched. Per-batch cost is O(batch shingles
       x df-hit); the scan is pruned to the shingle-hash buckets the
@@ -712,49 +706,41 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
       a partition-column IN filter). On a real deployment the postings
       table lives in a format with point data-skipping; Hive-style
       bucket partitions are the vanilla-parquet approximation.
+    - without it (rescan): re-read the corpus text and re-shingle it
+      this batch — O(corpus) regex/ngram work per batch. It maintains
+      no state and is the exact reference the postings screen is
+      pytest-pinned against.
 
-    Both regimes are EXACT and verdict-identical (pytest-pinned):
-    Jaccard is computed from the same integer counts either way, so the
-    SQL oracle is regime-independent. ``auto`` picks postings whenever
-    the state tables exist: scripts/admission_scale.py probed a fixed
-    2000-doc batch against 5k/50k/500k corpora and postings won at
-    EVERY point (6.1/5.4/8.7 s vs rescan's 9.6/10.0/15.6 s best-of-2 —
-    per-batch wall tracks batch size under postings and grows with the
-    corpus under rescan), so there is no measured crossover to guard;
-    the one-off seed (2.7/4.2/15.2 s) amortizes across batches. Without
-    ``state_dir`` the screen is the plain r10 rescan and maintains no
-    state — the stateless fallback and the differential twin.
+    Both are EXACT and verdict-identical: Jaccard is computed from the
+    same integer counts either way. scripts/admission_scale.py probed a
+    fixed 2000-doc batch against 5k/50k/500k corpora and postings won
+    at EVERY point (6.1/5.4/8.7 s vs rescan's 9.6/10.0/15.6 s
+    best-of-2 — per-batch wall tracks batch size under postings and
+    grows with the corpus under rescan); the one-off seed
+    (2.7/4.2/15.2 s) amortizes across batches.
 
     Returns the verdict frame (doc_id, text, verdict, n_near), eagerly
     checkpointed; appends admitted docs to ``corpus_dir`` and, when
     ``state_dir`` is given, their postings/hashes to the state tables —
-    so the NEXT batch sees this batch's admits, whichever regime it
-    picks. ``writeback=False`` is the SCREEN-ONLY mode: score a
-    candidate batch against the current corpus without committing
-    anything — the read-only audit shape (and the one that keeps a
-    shared seeded state immutable, so q_stream_admission_fixed_batch
-    can cache its seed across invocations and measure the pure
-    per-batch screen cost)."""
+    so the NEXT batch sees this batch's admits. ``writeback=False`` is
+    the SCREEN-ONLY mode: score a candidate batch against the current
+    corpus without committing anything — the read-only audit shape (and
+    the one that keeps a shared seeded state immutable, so
+    q_stream_admission_fixed_batch can cache its seed across
+    invocations and measure the pure per-batch screen cost)."""
     import os
 
-    if regime not in ("auto", "rescan", "postings"):
-        raise ValueError(f"unknown regime {regime!r}")
-    if state_dir is None and regime in ("postings",):
-        raise ValueError("postings regime requires state_dir")
     sp = batch.sparkSession
     batch = batch.localCheckpoint(eager=True)
-    bsets = shingle_sets(batch, "doc_id", "text", n)
-    bsh = (bsets.select(F.col("doc").alias("doc_id"),
-                        F.col("sz").alias("sz_a"),
-                        F.explode("sh").alias("shingle"))
-           .withColumn("bucket",
-                       F.pmod(F.xxhash64("shingle"), F.lit(buckets)))
-           .localCheckpoint(eager=True))
 
-    if regime == "auto":
-        regime = "rescan" if state_dir is None else "postings"
-
-    if regime == "postings":
+    if state_dir is not None:
+        bsets = shingle_sets(batch, "doc_id", "text", n)
+        bsh = (bsets.select(F.col("doc").alias("doc_id"),
+                            F.col("sz").alias("sz_a"),
+                            F.explode("sh").alias("shingle"))
+               .withColumn("bucket",
+                           F.pmod(F.xxhash64("shingle"), F.lit(buckets)))
+               .localCheckpoint(eager=True))
         # exact gate: prune the hash scan to the batch's md5 buckets
         bh = (batch.select("doc_id", F.md5("text").alias("h"))
               .withColumn("hb", F.pmod(F.xxhash64("h"), F.lit(buckets))))
@@ -1200,23 +1186,6 @@ def prefix_filter_candidates(sets: DataFrame,
     )
 
 
-def near_dup_pairs_prefix_filter(df: DataFrame, id_col: str, text_col: str,
-                                 n: int = 2,
-                                 threshold: float = 0.5) -> DataFrame:
-    """EXACT Jaccard near-dup pairs at scale: prefix-filtered candidates,
-    then candidate-only verification. Same result set as `exact_jaccard`
-    (pytest pins the equality), but the join runs on rare-prefix shingles
-    only — the 100 TB path when exactness is required and MinHash recall
-    (< 1) is not acceptable."""
-    sets = shingle_sets(df, id_col, text_col, n=n)
-    # sets feeds prefix generation AND both verify sides — one
-    # materialization, three consumers (localCheckpoint: blocks release on
-    # GC, so a session running many queries doesn't accumulate pinned cache)
-    sets = sets.localCheckpoint(eager=True)
-    cand = prefix_filter_candidates(sets, threshold=threshold)
-    return verify_pairs_jaccard(sets, cand, threshold=threshold)
-
-
 def estimate_allpairs_candidates(sets: DataFrame) -> int:
     """Cheap df-distribution probe: the exact all-pairs shared-shingle
     join materializes Σ_s C(df_s, 2) candidate rows (df_s = per-shingle
@@ -1263,7 +1232,8 @@ def near_dup_pairs_exact(df: DataFrame, id_col: str, text_col: str,
     near-FLAT in corpus size (candidates track output size), so the
     crossover sits where the quadratic all-pairs term overtakes that flat
     cost — ~300M candidates here; budget = 150M leaves 2x headroom. On a
-    wider cluster both sides scale with width: raise proportionally."""
+    wider cluster both sides scale with width: raise proportionally. A
+    negative budget always takes the prefix path."""
     sets = shingle_sets(df, id_col, text_col, n=n)
     sets = sets.localCheckpoint(eager=True)  # probe + both paths consume it
     c_all = estimate_allpairs_candidates(sets)

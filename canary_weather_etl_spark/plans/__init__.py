@@ -42,13 +42,10 @@ from . import r14_queries   # noqa: E402,F401  drift-adjusted curation compositi
 # evidence-age cycle (r13 verdict #4, executed every round since):
 # entries ordered by ASCENDING driver-evidence vintage, computed from
 # the CORRECTNESS_r*.json files themselves (latest round each name
-# appears in). After r14 the oldest evidence is the 27-entry r9-vintage
-# remainder (the r14 sample consumed the r8 block and 22+1 of the r9
-# block) followed by the 50-entry r10-vintage block; the first 50 of
-# this list = all 27 r9 + the first 23 of the r10 block (alphabetical
-# within a vintage); the r10 remainder (q_intersect_distinct ...)
-# queues as the r16 head. No entries are new this round (optimization
-# round — no features).
+# appears in). After r14 the oldest evidence is the r9-vintage remainder
+# (26 entries) followed by the r10-vintage block; the first 50 of this
+# list = all 26 r9 + the first 24 of the r10 block (alphabetical within a
+# vintage); the r10 remainder (q_join_broadcast_dims ...) queues next.
 _DRIVER_PRIORITY = (
     # r9-vintage remainder (last driver row r9).
     "q_ann_filtered_topk", "q_anomaly_mad", "q_boolean_retrieval",
@@ -58,10 +55,10 @@ _DRIVER_PRIORITY = (
     "q_maxsim_late_interaction", "q_nearest_view",
     "q_observe_quality_gate", "q_parameterized_sql", "q_pmi_bigrams",
     "q_pq_adc_topk", "q_pq_semantic_buckets", "q_semantic_dedup",
-    "q_semdedup_auto_k", "q_semdedup_threshold", "q_setjoin_auto_regime",
+    "q_semdedup_threshold", "q_setjoin_auto_regime",
     "q_shingle_containment", "q_stream_upsert_readback",
     "q_temperature_mix", "q_tokenizer_fertility",
-    # r10-vintage block, first 23 (27 + 23 = 50).
+    # r10-vintage block, first 24 (26 + 24 = 50).
     "q_array_composite", "q_bpe_encode_ids", "q_containment_pairs",
     "q_contamination_ngrams", "q_correlated_subquery", "q_cosine_near_dup",
     "q_cross_join", "q_csv_roundtrip", "q_cube",
@@ -70,6 +67,7 @@ _DRIVER_PRIORITY = (
     "q_events_scalar_composite", "q_events_session", "q_events_sliding",
     "q_events_tumbling", "q_except_all", "q_gap_fill_calendar",
     "q_global_rank", "q_grouping_sets", "q_intersect_all",
+    "q_intersect_distinct",
 )
 
 

@@ -201,23 +201,6 @@ _JACCARD_SQL = r"""
 
 
 @register(
-    "q_ngram_jaccard_pairs",
-    oracle=_JACCARD_SQL,
-    doc="Exact word-bigram Jaccard near-dup pairs (≥0.5): shingle → "
-        "shared-shingle join → |∩|/|∪| from exact integer counts "
-        "(deterministic double). The oracle-checkable ground truth that "
-        "the MinHash/LSH path (q_dedup_minhash_lsh) approximates. "
-        "Quadratic in shingle document-frequency — correctness-scale only; "
-        "the benched scale path is the LSH variant.",
-    tags=("llm", "dedup"),
-)
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_par(spark, sf_dir, "documents")
-    sh = D.shingle_table(d, "doc_id", "text", n=2)
-    return D.exact_jaccard(sh, threshold=0.5)
-
-
-@register(
     "q_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE pairs AS ({_JACCARD_SQL}),
@@ -433,21 +416,18 @@ _MINHASH_LSH_SQL = rf"""
     oracle=_MINHASH_LSH_SQL,
     doc="MinHash(32 perms) + LSH(8 bands) near-dup pipeline with exact "
         "Jaccard verification ≥0.5 (operators/dedup.near_dup_pairs_minhash)."
-        " r10: the operator's hash family is ONE md5 per "
-        "shingle (first 7 hex digits as a 28-bit int) + the textbook "
-        "universal-hash permutations (a_i·h + b_i) mod 2^31−1 with "
-        "sha256-derived literal constants, band keys as polynomial folds "
-        "mod the same prime — which upgrades this entry from rows-only "
-        "to a FULL SQL oracle: the DuckDB twin rebuilds signatures, "
-        "banding, the candidate join and exact verification bit-for-bit "
-        "from the same literals. r11: signatures moved from "
-        "transform/array_min lambdas (CodegenFallback — interpreted "
-        "per-node eval, the whole r10 third-decade gap) to an explode + "
-        "codegen'd 32-way MIN aggregate, taking this registered entry "
-        "from 306 s to 75.6 s at 1000x (24x wall per 1000x data); the "
-        "seeded-xxhash64 family measured no faster (SCALE.md r11) and is "
-        "gone. pytest asserts the recall floor vs exact "
-        "q_ngram_jaccard_pairs and lambda≡agg shape bit-equality.",
+        " The hash family is ONE md5 per shingle (first 7 hex digits as "
+        "a 28-bit int) + the textbook universal-hash permutations "
+        "(a_i·h + b_i) mod 2^31−1 with sha256-derived literal constants, "
+        "band keys as polynomial folds mod the same prime, so the DuckDB "
+        "oracle rebuilds signatures, banding, the candidate join and "
+        "exact verification bit-for-bit from the same literals. "
+        "Signatures are an explode + codegen'd 32-way MIN aggregate, not "
+        "transform/array_min lambdas (CodegenFallback, interpreted "
+        "per node): 75.6 s against 306 s at 1000x, 24x wall per 1000x "
+        "data (SCALE.md r11). pytest asserts the recall floor vs exact "
+        "Jaccard (dedup.exact_jaccard) and the signature shape "
+        "bit-equality.",
     tags=("llm", "dedup", "approx"), bench=True,
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -204,7 +204,7 @@ def q_quality_logit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming corpus admission: incremental dedup as an ingest stream
+# Streaming corpus admission: oracle SQL shared by the admission entries
 # ---------------------------------------------------------------------------
 
 def _admission_round_sql(batch: str, corpus_grams: str, corpus_sz: str,
@@ -254,121 +254,3 @@ def _grams_sql(src: str, out: str) -> str:
         FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-1)) AS i
               FROM {out}_t))),
     {out}_sz AS (SELECT doc_id, COUNT(*) AS sz FROM {out} GROUP BY doc_id)"""
-
-
-_STREAM_ADMISSION_SQL = f"""
-    WITH c0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2),
-    ba AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-    bb AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1),
-    {_grams_sql('c0', 'g_c0')},
-    {_grams_sql('ba', 'g_ba')},
-    {_grams_sql('bb', 'g_bb')},
-    md5_c0 AS (SELECT DISTINCT md5(text) AS h FROM c0),
-    {_admission_round_sql('ba', 'g_c0', 'g_c0_sz', 'md5_c0',
-                          'g_ba', 'g_ba_sz')},
-    adm_a AS (SELECT doc_id FROM verd_ba WHERE verdict = 'admit'),
-    -- corpus after round 1 = seed + round-1 admits
-    g_c1 AS (SELECT * FROM g_c0
-             UNION ALL
-             SELECT g.* FROM g_ba g JOIN adm_a USING (doc_id)),
-    g_c1_sz AS (SELECT doc_id, COUNT(*) AS sz FROM g_c1 GROUP BY doc_id),
-    md5_c1 AS (SELECT h FROM md5_c0
-               UNION
-               SELECT md5(b.text) AS h FROM ba b JOIN adm_a USING (doc_id)),
-    {_admission_round_sql('bb', 'g_c1', 'g_c1_sz', 'md5_c1',
-                          'g_bb', 'g_bb_sz')}
-    SELECT doc_id, verdict, n_near FROM verd_ba
-    UNION ALL
-    SELECT doc_id, verdict, n_near FROM verd_bb
-"""
-
-
-@register(
-    "q_stream_corpus_admission",
-    oracle=_STREAM_ADMISSION_SQL,
-    doc="STREAMING corpus admission — the incremental-dedup decision "
-        "(q_dedup_incremental's exact gates: content-md5 semi-join + "
-        "cross-table bigram Jaccard ≥0.5) run as an INGEST STREAM: "
-        "document batches land as parquet drops, a foreachBatch sink "
-        "screens each batch against the CURRENT persisted corpus state, "
-        "appends the verdict log, and admits survivors INTO the corpus — "
-        "so batch 2's near-dup checks see batch 1's admits (the oracle "
-        "replays both rounds against the evolving corpus in SQL). Drop "
-        "order is pinned by running the availableNow stream to "
-        "completion per drop against one checkpoint (the "
-        "q_stream_upsert_readback pattern, drained via the checked "
-        "helper). This entry IS the rescan twin — the 100 TB shape "
-        "(persisted hash + shingle-postings tables the batch equi-joins "
-        "against, never a corpus re-shingle) is implemented since r11 "
-        "as operators/dedup.admission_screen_batch's postings regime "
-        "and registered as q_stream_admission_postings with this same "
-        "oracle; both regimes are verdict-identical (pytest-pinned) "
-        "and scripts/admission_scale.py prices them per decade.",
-    tags=("llm", "dedup", "streaming"),
-)
-def q_stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.jobs import drain
-
-    d = load(spark, sf_dir, "documents")
-    corpus0 = d.filter(F.col("doc_id") % 3 == 2).select("doc_id", "text")
-    batch_a = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-    batch_b = d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text")
-
-    base = tempfile.mkdtemp(prefix="canary_stream_admission_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    drops = os.path.join(base, "drops")
-    corpus_dir = os.path.join(base, "corpus")
-    verdicts_dir = os.path.join(base, "verdicts")
-    ckpt = os.path.join(base, "ckpt")
-    corpus0.write.mode("overwrite").parquet(corpus_dir)
-
-    def screen(batch: DataFrame, _batch_id: int) -> None:
-        sp = batch.sparkSession
-        batch = batch.localCheckpoint(eager=True)
-        corpus = sp.read.parquet(corpus_dir).localCheckpoint(eager=True)
-        exact = (
-            batch.select("doc_id", F.md5("text").alias("h"))
-            .join(corpus.select(F.md5("text").alias("h")).distinct(),
-                  "h", "left_semi")
-            .select("doc_id").distinct()
-            .withColumn("is_exact", F.lit(True)))
-        near = (
-            D.exact_jaccard_cross(
-                D.shingle_table(batch, "doc_id", "text", n=2),
-                D.shingle_table(corpus, "doc_id", "text", n=2),
-                threshold=0.5)
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.count(F.lit(1)).alias("n_near")))
-        verdicts = (
-            batch.select("doc_id", "text")
-            .join(exact, "doc_id", "left")
-            .join(near, "doc_id", "left")
-            .select(
-                "doc_id", "text",
-                F.when(F.col("is_exact"), "exact_dup")
-                 .when(F.coalesce("n_near", F.lit(0)) > 0, "near_dup")
-                 .otherwise("admit").alias("verdict"),
-                F.coalesce("n_near", F.lit(0).cast("bigint"))
-                 .alias("n_near"))
-            .localCheckpoint(eager=True))
-        (verdicts.select("doc_id", "verdict", "n_near")
-         .write.mode("append").parquet(verdicts_dir))
-        (verdicts.filter(F.col("verdict") == "admit")
-         .select("doc_id", "text")
-         .write.mode("append").parquet(corpus_dir))
-
-    schema = "doc_id BIGINT, text STRING"
-    for b in (batch_a, batch_b):
-        b.coalesce(1).write.mode("append").parquet(drops)
-        q = (spark.readStream.schema(schema).parquet(drops)
-             .writeStream.foreachBatch(screen)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        drain(q)
-
-    return spark.read.parquet(verdicts_dir)

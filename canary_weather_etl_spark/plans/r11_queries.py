@@ -6,7 +6,7 @@ the corner where both exact regimes are inherently near-all-pairs), a
 driver-visible Zipf-corpus containment entry (the chooser's prefix side
 as a CORRECTNESS row, not just a script table), the streaming
 admission's persisted-postings screen (the 100 TB regime, exact and
-verdict-identical to the r10 rescan twin), the sketch families'
+verdict-identical to the stateless rescan), the sketch families'
 measured error bounds as driver-visible data rows (the q_sim_ann_recall
 pattern: the RESULT is the error measurement), a fully-oracled
 Bloom membership gate (bit-packed words table — the broadcastable
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators import sketch as SK
 from .llm import _minhash_ab_sql, _minhash_band_fold_sql
-from .r10_queries import _STREAM_ADMISSION_SQL
+from .r10_queries import _admission_round_sql, _grams_sql
 from .registry import load, load_par, register
 
 # ---------------------------------------------------------------------------
@@ -234,27 +234,55 @@ def q_containment_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming admission: the persisted-postings screen (100 TB regime)
 # ---------------------------------------------------------------------------
 
+_STREAM_ADMISSION_SQL = f"""
+    WITH c0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2),
+    ba AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+    bb AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1),
+    {_grams_sql('c0', 'g_c0')},
+    {_grams_sql('ba', 'g_ba')},
+    {_grams_sql('bb', 'g_bb')},
+    md5_c0 AS (SELECT DISTINCT md5(text) AS h FROM c0),
+    {_admission_round_sql('ba', 'g_c0', 'g_c0_sz', 'md5_c0',
+                          'g_ba', 'g_ba_sz')},
+    adm_a AS (SELECT doc_id FROM verd_ba WHERE verdict = 'admit'),
+    -- corpus after round 1 = seed + round-1 admits
+    g_c1 AS (SELECT * FROM g_c0
+             UNION ALL
+             SELECT g.* FROM g_ba g JOIN adm_a USING (doc_id)),
+    g_c1_sz AS (SELECT doc_id, COUNT(*) AS sz FROM g_c1 GROUP BY doc_id),
+    md5_c1 AS (SELECT h FROM md5_c0
+               UNION
+               SELECT md5(b.text) AS h FROM ba b JOIN adm_a USING (doc_id)),
+    {_admission_round_sql('bb', 'g_c1', 'g_c1_sz', 'md5_c1',
+                          'g_bb', 'g_bb_sz')}
+    SELECT doc_id, verdict, n_near FROM verd_ba
+    UNION ALL
+    SELECT doc_id, verdict, n_near FROM verd_bb
+"""
+
+
 @register(
     "q_stream_admission_postings",
     oracle=_STREAM_ADMISSION_SQL,
-    doc="STREAMING corpus admission via the PERSISTED-POSTINGS screen — "
-        "the 100 TB regime the r10 entry documented as design and r11 "
-        "implements as code (operators/dedup.admission_screen_batch, "
-        "regime='postings'): corpus state lives as a (shingle, doc, sz) "
-        "postings table partitioned by shingle-hash bucket plus a "
-        "content-md5 table, seeded once (admission_state_init); each "
-        "micro-batch equi-joins its OWN shingles against the postings "
-        "(scan pruned to the <= 64 buckets the batch touches) and "
-        "appends admitted docs' postings/hashes — the corpus text is "
-        "NEVER re-shingled after the seed, so per-batch cost is "
-        "O(batch-shingles x df-hit), not O(corpus). The screen is "
-        "EXACT and verdict-identical to the r10 rescan twin "
-        "(pytest-pinned), so this entry shares its oracle verbatim: "
-        "the SQL replays both micro-batch rounds against the evolving "
-        "corpus. Scale evidence: scripts/admission_scale.py holds the "
-        "batch fixed while the corpus grows 10x/100x and records that "
-        "per-batch wall tracks batch size under postings while the "
-        "rescan twin grows with the corpus.",
+    doc="STREAMING corpus admission via the PERSISTED-POSTINGS screen "
+        "(operators/dedup.admission_screen_batch with a state_dir): "
+        "document batches land as parquet drops and a foreachBatch sink "
+        "screens each against the CURRENT corpus with an exact "
+        "content-md5 gate and an exact bigram Jaccard >= 0.5 near gate, "
+        "so batch 2 sees batch 1's admits. Corpus state lives as a "
+        "(shingle, doc, sz) postings table partitioned by shingle-hash "
+        "bucket plus a content-md5 table, seeded once "
+        "(admission_state_init); each micro-batch equi-joins its OWN "
+        "shingles against the postings (scan pruned to the <= 64 "
+        "buckets the batch touches) and appends admitted docs' "
+        "postings/hashes — the corpus text is NEVER re-shingled after "
+        "the seed, so per-batch cost is O(batch-shingles x df-hit), not "
+        "O(corpus). The SQL oracle replays both micro-batch rounds "
+        "against the evolving corpus. The stateless rescan screen is "
+        "verdict-identical (pytest-pinned); scripts/admission_scale.py "
+        "holds the batch fixed while the corpus grows 10x/100x and "
+        "records that per-batch wall tracks batch size under postings "
+        "while the rescan grows with the corpus.",
     tags=("llm", "dedup", "streaming"),
 )
 def q_stream_admission_postings(spark: SparkSession,
@@ -283,8 +311,7 @@ def q_stream_admission_postings(spark: SparkSession,
 
     def screen(batch: DataFrame, _batch_id: int) -> None:
         verdicts = D.admission_screen_batch(
-            batch, corpus_dir, state_dir=state_dir, regime="postings",
-            threshold=0.5, n=2)
+            batch, corpus_dir, state_dir=state_dir, threshold=0.5, n=2)
         (verdicts.select("doc_id", "verdict", "n_near")
          .write.mode("append").parquet(verdicts_dir))
 

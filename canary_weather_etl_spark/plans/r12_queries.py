@@ -97,7 +97,7 @@ def _corpus_fingerprint(corpus: DataFrame, sf_dir: str) -> str:
         "decade rows measure exactly the fixed-batch/growing-corpus "
         "axis: per-batch wall must stay ~flat while the corpus grows "
         "10x/100x. The screen runs admission_screen_batch's postings "
-        "regime in SCREEN-ONLY mode (writeback=False): the corpus is "
+        "screen in SCREEN-ONLY mode (writeback=False): the corpus is "
         "FIXED for both batches, so the seeded state is immutable and "
         "cached across invocations under a content fingerprint "
         "(/tmp, keyed on fixture path + corpus count + id sum + an "
@@ -153,8 +153,8 @@ def q_stream_admission_fixed_batch(spark: SparkSession,
 
     def screen(batch: DataFrame, batch_id: int) -> None:
         verdicts = D.admission_screen_batch(
-            batch, corpus_dir, state_dir=state_dir, regime="postings",
-            threshold=0.5, n=2, writeback=False)
+            batch, corpus_dir, state_dir=state_dir, threshold=0.5, n=2,
+            writeback=False)
         # batch_id-keyed overwrite: idempotent under foreachBatch's
         # at-least-once replays (the r12 sink discipline)
         (verdicts.select("doc_id", "verdict", "n_near")

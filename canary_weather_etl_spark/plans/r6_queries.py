@@ -347,7 +347,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ASYMMETRIC near-dup: shingle containment |S(a)∩S(b)| / |S(a)| "
         "≥ 0.6 over word-bigram shingles — catches a document CONTAINED "
         "in a longer one, which symmetric Jaccard "
-        "(q_ngram_jaccard_pairs) misses when sizes differ widely; pairs "
+        "(q_setjoin_auto_regime) misses when sizes differ widely; pairs "
         "are ORDERED (a-in-b and b-in-a are different facts). "
         "Document-frequency cap (shingles in > 100 docs dropped, "
         "mirrored exactly in the oracle) is the blocking lever: it "

@@ -228,7 +228,11 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on its prefix of length |s|−⌈τ·|s|⌉+1, the positional filter "
         "drops pairs whose shared-token ranks cap the achievable overlap "
         "below ⌈τ/(1+τ)·(|a|+|b|)⌉, survivors verify with array-intersect "
-        "Jaccard. Same result set as q_ngram_jaccard_pairs (same oracle). "
+        "Jaccard. Runs dedup.near_dup_pairs_exact with a negative "
+        "all-pairs budget, which forces the prefix path; "
+        "q_setjoin_auto_regime runs the same chooser with its default "
+        "budget, which takes the all-pairs join at this scale, so the "
+        "two entries check both physical paths against one oracle. "
         "Regime (measured, scripts/setjoin_scale.py + SCALE.md): on "
         "SKEWED token frequencies — real corpora, where boilerplate "
         "shingles shared by every document make the count-based all-pairs "
@@ -241,8 +245,8 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_setjoin_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    return D.near_dup_pairs_prefix_filter(d, "doc_id", "text",
-                                          n=2, threshold=0.5)
+    return D.near_dup_pairs_exact(d, "doc_id", "text", n=2, threshold=0.5,
+                                  allpairs_candidate_budget=-1)
 
 
 # --- winsorized robust statistics ---------------------------------------------

@@ -252,15 +252,18 @@ def q_stream_upsert_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_setjoin_auto_regime",
     oracle=_JACCARD_SQL,
     doc="EXACT word-bigram Jaccard pairs (≥0.5) with the physical path "
-        "chosen BY THE ENGINE (r7 verdict #4): one cheap df-distribution "
-        "probe (Σ df·(df−1)/2 over the shingle table — the exact all-pairs "
-        "candidate count) decides between the count-based all-pairs join "
-        "(uniform-df regime, wins 8.6 vs 59.6 s on this fixture at sf0.1) "
-        "and the PPJoin prefix+positional path (Zipfian regime, where "
-        "all-pairs is quadratic on hot shingles). Identical result set "
-        "either way — same oracle as q_setjoin_prefix_filter / "
-        "q_ngram_jaccard_pairs; chooser behavior on both regimes pinned "
-        "in tests/test_r8_ops.py.",
+        "chosen BY THE ENGINE (dedup.near_dup_pairs_exact): one cheap "
+        "df-distribution probe (Σ df·(df−1)/2 over the shingle table — "
+        "the exact all-pairs candidate count) decides between the "
+        "count-based all-pairs join (uniform-df regime, wins 8.6 vs "
+        "59.6 s on this fixture at sf0.1) and the PPJoin "
+        "prefix+positional path (Zipfian regime, where all-pairs is "
+        "quadratic on hot shingles). Identical result set either way. "
+        "At the fixture scale the probe takes the all-pairs path "
+        "(dedup.exact_jaccard); q_setjoin_prefix_filter forces the "
+        "prefix path through the same operator against the same "
+        "oracle. Chooser behavior on both regimes pinned in "
+        "tests/test_r8_ops.py.",
     tags=("llm", "dedup"),
 )
 def q_setjoin_auto_regime(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -202,14 +202,14 @@ def q_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _assert_auto_k_is_8(emb: DataFrame, qname: str) -> None:
-    """Both semdedup registry entries plant an UNROLLED k=8 oracle, valid
-    only while the auto chooser's k = max(8, n // 64) resolves to 8
-    (n <= 575 — at n=576, 576 // 64 = 9). The fixture is 500 rows at
-    sf0.01; if the harness ever runs these at a larger SF the oracle
-    would silently diverge — fail LOUDLY as a setup error instead
-    (ADVICE r9; boundary corrected per ADVICE r10)."""
-    n = emb.count()  # bounded driver scalar, mirrors the chooser's probe
-    if max(8, n // 64) != 8:
+    """The semdedup registry entry plants an UNROLLED k=8 oracle, valid
+    only while the operator's k = max(K_MIN, n // TARGET_CLUSTER)
+    resolves to 8 (n <= 575 — at n=576, 576 // 64 = 9). The fixture is
+    500 rows at sf0.01; if the harness ever runs it at a larger SF the
+    oracle would silently diverge — fail LOUDLY as a setup error
+    instead."""
+    n = emb.count()  # bounded driver scalar, mirrors the operator's count
+    if max(C.K_MIN, n // C.TARGET_CLUSTER) != 8:
         raise RuntimeError(
             f"{qname}: fixture has n={n} embeddings, so the engine-chosen "
             "k = max(8, n // 64) > 8 and the planted k=8 oracle no longer "
@@ -254,15 +254,14 @@ _SEMDEDUP_THR_FINAL = """
         "EXISTS tail — bit-exact (the cosine folds run in deterministic "
         "element order in both engines). Scale: the corpus-wide O(n^2) "
         "cosine join becomes ONE equi-join on cluster_id with "
-        "Sigma C(|cluster|,2) candidates, controlled by k — the "
-        "published SemDeDup argument, Spark-first. r10 (r9 verdict #2): "
-        "the DEFAULT path is now the engine-chosen-k regime — this entry "
-        "calls the operator with NO k, so the registered query can no "
-        "longer be the measured 45-min-abort fixed-k path (explicit k "
-        "requires allow_fixed_k_quadratic=True). At sf0.01 (n=500) the "
-        "chooser resolves to k=8, so the planted oracle is unchanged; a "
-        "loud in-query guard fails as a SETUP error if the fixture ever "
-        "outgrows the k=8 regime (n > 576).",
+        "Sigma C(|cluster|,2) candidates, and the operator chooses "
+        "k = max(8, n // 64) so mean cluster size stays ~64 and the pair "
+        "volume stays ~n*32 (a fixed k=8 aborted after 45 min at 100x, "
+        "SCALE.md r9); above k=50 the assignment switches from "
+        "literal-centroid codegen to a broadcast join. At sf0.01 "
+        "(n=500) k resolves to 8, which is what the planted oracle "
+        "unrolls; an in-query guard fails as a SETUP error if the "
+        "fixture outgrows it (n > 575).",
     tags=("llm", "dedup", "clustering", "similarity"),
 )
 def q_semdedup_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,39 +271,5 @@ def q_semdedup_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
     surv = C.semantic_dedup_threshold(qdf, emb, iterations=2,
                                       threshold=0.40)
-    return (surv.join(docs, surv.vec_id == docs.doc_id)
-            .select("cluster_id", "doc_id", "source"))
-
-
-@register(
-    "q_semdedup_auto_k",
-    oracle=_kmeans_oracle(k=8, iterations=2,
-                          final_select=_SEMDEDUP_THR_FINAL),
-    doc="q_semdedup_threshold with ENGINE-CHOSEN k (operators/clustering."
-        "semantic_dedup_auto): k = max(8, n // 64) keeps mean cluster "
-        "size ~constant so the within-cluster PAIR volume is ~n*32 — "
-        "linear — where the fixed-k=8 variant degenerates quadratically "
-        "(measured: fixed-k aborted after 45 min at 100x, SCALE.md r9). "
-        "The assignment path is regime-chosen too: literal-centroid "
-        "codegen to k<=50, broadcast-join + min-struct beyond (constant "
-        "plan size; the two paths are pytest-pinned bit-equal). Honest "
-        "limit, measured: with k prop. to n the assignment itself does "
-        "n*k folds per round, so exact threshold dedup stays "
-        "superlinear — the linear production paths are q_cosine_near_dup "
-        "(hyperplane-LSH candidates + exact verify) and "
-        "q_pq_semantic_buckets' coarse pass; this operator is the "
-        "mid-scale exact tool and the verifier behind them. At sf0.01 "
-        "(n=500) the rule resolves to k=8, so the oracle is the same "
-        "unrolled prefix as q_semdedup_threshold; an in-query guard "
-        "fails LOUDLY as a setup error if n > 576 (ADVICE r9).",
-    tags=("llm", "dedup", "clustering", "similarity"),
-)
-def q_semdedup_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_par(spark, sf_dir, "embeddings")
-    docs = load(spark, sf_dir, "documents")
-    _assert_auto_k_is_8(emb, "q_semdedup_auto_k")
-    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
-    surv = C.semantic_dedup_auto(qdf, emb, target_cluster=64,
-                                 iterations=2, threshold=0.40)
     return (surv.join(docs, surv.vec_id == docs.doc_id)
             .select("cluster_id", "doc_id", "source"))

@@ -4,10 +4,10 @@
 Holds the BATCH fixed while the persisted corpus grows 1x/10x/100x and
 times one screen invocation per regime:
 
-- rescan (the r10 twin): re-reads and RE-SHINGLES the whole corpus per
+- rescan (no state_dir): re-reads and RE-SHINGLES the whole corpus per
   batch — per-batch wall should track corpus size.
-- postings (the r11 100 TB regime): equi-joins the batch's shingles
-  against the persisted postings state (seeded once by
+- postings (with a state_dir, the 100 TB shape): equi-joins the
+  batch's shingles against the persisted postings state (seeded once by
   admission_state_init; seed time reported separately as the amortized
   one-off) — per-batch wall should track batch size + postings-hit.
 
@@ -162,7 +162,7 @@ def main() -> None:
                 else:
                     v = D.admission_screen_batch(
                         batch, corpus_dir, state_dir=state_dir,
-                        regime=regime, threshold=0.5, n=2,
+                        threshold=0.5, n=2,
                         buckets=args.buckets,
                         writeback=not args.seed_once)
                 counts = {r["verdict"]: r["n"] for r in

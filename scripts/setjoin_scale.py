@@ -2,7 +2,8 @@
 """Regime probe for the EXACT set-similarity join strategies
 (SCALE.md evidence): count-based all-pairs shared-shingle join
 (`exact_jaccard`) vs PPJoin prefix-filtered candidate-verify
-(`near_dup_pairs_prefix_filter`).
+(`near_dup_pairs_exact` with a negative all-pairs budget, which forces
+the prefix path).
 
 The two are output-identical; their costs diverge on token-frequency
 SKEW:
@@ -76,9 +77,10 @@ def main() -> None:
                               D.exact_jaccard(sh, 0.5).collect()), args.reps)
         t_pf, n_pf = timed(
             lambda: frozenset((r["a"], r["b"]) for r in
-                              D.near_dup_pairs_prefix_filter(
-                                  df, "doc_id", "text", n=2,
-                                  threshold=0.5).collect()), args.reps)
+                              D.near_dup_pairs_exact(
+                                  df, "doc_id", "text", n=2, threshold=0.5,
+                                  allpairs_candidate_budget=-1).collect()),
+            args.reps)
         assert n_all == n_pf, "strategies disagree!"
         sets = D.shingle_sets(df, "doc_id", "text", n=2)
         n_cand = D.prefix_filter_candidates(sets, 0.5).count()

@@ -156,20 +156,17 @@ def test_containment_zipf_prefix_chosen_and_planted(spark):
 
 # --- persisted-postings admission screen ------------------------------------
 
-def _run_admission(spark, batches, corpus0, regime, tmp):
-    corpus_dir = os.path.join(tmp, f"corpus_{regime}")
-    state_dir = os.path.join(tmp, f"state_{regime}")
+def _run_admission(spark, batches, corpus0, stateful, tmp):
+    tag = "postings" if stateful else "rescan"
+    corpus_dir = os.path.join(tmp, f"corpus_{tag}")
+    state_dir = os.path.join(tmp, f"state_{tag}")
     corpus0.write.mode("overwrite").parquet(corpus_dir)
-    state = None
-    if regime != "rescan_stateless":
+    if stateful:
         D.admission_state_init(corpus0, state_dir, n=2)
-        state = state_dir
     rows = []
     for b in batches:
         v = D.admission_screen_batch(
-            b, corpus_dir, state_dir=state,
-            regime=("auto" if regime == "auto"
-                    else regime.replace("_stateless", "")),
+            b, corpus_dir, state_dir=state_dir if stateful else None,
             threshold=0.5, n=2)
         rows.extend((r["doc_id"], r["verdict"], r["n_near"])
                     for r in v.select("doc_id", "verdict", "n_near")
@@ -179,7 +176,7 @@ def _run_admission(spark, batches, corpus0, regime, tmp):
 
 def test_admission_postings_equals_rescan(spark):
     """The postings screen is EXACT: verdicts, near-dup counts and the
-    evolving corpus must be identical to the r10 rescan twin across
+    evolving corpus must be identical to the stateless rescan across
     both batches (batch 2 sees batch 1's admits either way)."""
     d = load_par(spark, SF, "documents")
     corpus0 = d.filter(F.col("doc_id") % 3 == 2).select("doc_id", "text")
@@ -189,25 +186,19 @@ def test_admission_postings_equals_rescan(spark):
     ]
     tmp = tempfile.mkdtemp(prefix="canary_admission_test_")
     try:
-        a = _run_admission(spark, batches, corpus0, "rescan_stateless", tmp)
-        b = _run_admission(spark, batches, corpus0, "postings", tmp)
+        a = _run_admission(spark, batches, corpus0, False, tmp)
+        b = _run_admission(spark, batches, corpus0, True, tmp)
         assert a == b
         assert any(v == "near_dup" for _, v, _ in a)
-        assert any(v == "exact_dup" for _, v, _ in a) or True
         assert any(v == "admit" for _, v, _ in a)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_admission_auto_chooser_is_state_gated(spark):
-    """auto = postings whenever state exists (measured faster at every
-    probed corpus scale, scripts/admission_scale.py — no crossover to
-    guard), rescan as the stateless fallback. Pin the gate by running
-    auto WITH state and asserting the postings-regime side effect (the
-    state tables grew by the admitted docs), and auto WITHOUT state
-    raising on an explicit postings request."""
-    import pytest
-
+    """Given a state_dir the screen runs on postings and maintains the
+    state: the hashes table grows by exactly the admitted docs'
+    distinct md5s."""
     d = load_par(spark, SF, "documents")
     corpus0 = d.limit(100).select("doc_id", "text")
     batch = (d.filter(F.col("doc_id") >= 400)
@@ -220,17 +211,13 @@ def test_admission_auto_chooser_is_state_gated(spark):
         D.admission_state_init(corpus0, state_dir, n=2)
         h_before = spark.read.parquet(
             os.path.join(state_dir, "hashes")).count()
-        v = D.admission_screen_batch(batch, corpus_dir,
-                                     state_dir=state_dir, regime="auto")
+        v = D.admission_screen_batch(batch, corpus_dir, state_dir=state_dir)
         admitted = v.filter(F.col("verdict") == "admit")
         assert admitted.count() > 0
         new_h = admitted.select(F.md5("text")).distinct().count()
         h_after = spark.read.parquet(
             os.path.join(state_dir, "hashes")).count()
-        assert h_after == h_before + new_h  # postings regime maintained state
-        with pytest.raises(ValueError):
-            D.admission_screen_batch(batch, corpus_dir, state_dir=None,
-                                     regime="postings")
+        assert h_after == h_before + new_h  # postings screen maintained state
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

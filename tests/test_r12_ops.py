@@ -47,8 +47,7 @@ def test_admission_screen_only_leaves_state_untouched(spark, tmp_path):
     before_state = _state_listing(state_dir)
     before_corpus = _state_listing(corpus_dir)
     v = D.admission_screen_batch(batch, corpus_dir, state_dir=state_dir,
-                                 regime="postings", threshold=0.5, n=2,
-                                 writeback=False)
+                                 threshold=0.5, n=2, writeback=False)
     assert v.count() == batch.count()
     assert _state_listing(state_dir) == before_state
     assert _state_listing(corpus_dir) == before_corpus
@@ -69,11 +68,11 @@ def test_admission_fixed_batch_verdicts_equal_rescan(spark, tmp_path):
     post = {(r["doc_id"]): (r["verdict"], r["n_near"]) for r in
             D.admission_screen_batch(batch, corpus_dir,
                                      state_dir=state_dir,
-                                     regime="postings", writeback=False)
+                                     writeback=False)
             .collect()}
     resc = {(r["doc_id"]): (r["verdict"], r["n_near"]) for r in
             D.admission_screen_batch(batch, corpus_dir, state_dir=None,
-                                     regime="rescan", writeback=False)
+                                     writeback=False)
             .collect()}
     assert post == resc
     assert any(v[0] != "admit" for v in post.values()), \

@@ -216,7 +216,7 @@ def test_banded_admission_vs_exact_screen(spark, sf_dir):
         corpus.write.parquet(cdir)
         exact = {r["doc_id"]: (r["verdict"], r["n_near"])
                  for r in D.admission_screen_batch(
-                     batch, cdir, state_dir=None, regime="rescan",
+                     batch, cdir, state_dir=None,
                      threshold=0.5, n=2).collect()}
         sdir = os.path.join(td, "state")
         D.admission_state_init_banded(corpus, sdir, n=2)

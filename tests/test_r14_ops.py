@@ -135,7 +135,7 @@ def test_banded_admission_recall_threshold_adjacent(spark):
         cdir = os.path.join(td, "corpus")
         corpus.write.parquet(cdir)
         exact = {r["doc_id"] for r in D.admission_screen_batch(
-            batch, cdir, state_dir=None, regime="rescan",
+            batch, cdir, state_dir=None,
             threshold=0.5, n=2).collect() if r["verdict"] == "near_dup"}
         sdir = os.path.join(td, "state")
         D.admission_state_init_banded(corpus, sdir, n=2)

@@ -114,8 +114,9 @@ def test_kmeans_assignment_tiebreak_smaller_cid(spark):
 def test_prefix_filter_equals_exact_jaccard(spark):
     d = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     got = {(r["a"], r["b"]): round(r["jaccard"], 9)
-           for r in D.near_dup_pairs_prefix_filter(
-               d, "doc_id", "text", n=2, threshold=0.5).collect()}
+           for r in D.near_dup_pairs_exact(
+               d, "doc_id", "text", n=2, threshold=0.5,
+               allpairs_candidate_budget=-1).collect()}
     sh = D.shingle_table(d, "doc_id", "text", n=2)
     want = {(r["a"], r["b"]): round(r["jaccard"], 9)
             for r in D.exact_jaccard(sh, threshold=0.5).collect()}

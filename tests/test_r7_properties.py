@@ -87,8 +87,9 @@ def test_prefix_filter_property_vs_naive(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(int(r["a"]), int(r["b"])): round(float(r["jaccard"]), 9)
-           for r in D.near_dup_pairs_prefix_filter(
-               df, "doc_id", "text", n=2, threshold=0.5).collect()}
+           for r in D.near_dup_pairs_exact(
+               df, "doc_id", "text", n=2, threshold=0.5,
+               allpairs_candidate_budget=-1).collect()}
     want = {}
     sets = {i: _bigrams(t) for i, t in rows}
     for a in sets:

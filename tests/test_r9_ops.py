@@ -130,9 +130,9 @@ def test_semdedup_threshold_matches_numpy(spark):
         if not dropped:
             expected.add(v)
 
-    surv = C.semantic_dedup_threshold(qdf, emb_df, k=k, iterations=iters,
-                                      threshold=tau,
-                                      allow_fixed_k_quadratic=True)
+    # n=200 at sf0.001: the engine picks k = max(8, 200 // 64) = 8
+    surv = C.semantic_dedup_threshold(qdf, emb_df, iterations=iters,
+                                      threshold=tau)
     got = {r["vec_id"] for r in surv.collect()}
     assert got == expected
     assert len(got) < len(vec)  # fixture actually drops something
@@ -147,63 +147,50 @@ def test_semdedup_threshold_matches_numpy(spark):
 
 
 def test_kmeans_joined_assignment_bit_equal(spark):
-    """The broadcast-join assignment path (large-k regime) is bit-equal
-    to the literal-centroid codegen path on shared k: same assignments,
-    same distances, same final centroids."""
+    """The broadcast-join assignment (k > LITERAL_K_MAX) is bit-equal to
+    the literal-centroid codegen assignment on the same centroids: same
+    clusters, same distances."""
     sf = "/root/testdata/sf0.001"
     qdf = C.quantize_vectors(load_par(spark, sf, "embeddings")) \
         .localCheckpoint(eager=True)
-    k, iters = 20, 2
-    a1, c1 = C.kmeans_fixed(qdf, k=k, iterations=iters)
-    a2, c2 = C.kmeans_fixed_joined(qdf, k=k, iterations=iters)
-    assert c1 == c2
+    _, cent = C.kmeans_fixed(qdf, k=20, iterations=2)
     r1 = {(r["vec_id"], r["cluster_id"], r["dist_units"])
-          for r in a1.collect()}
+          for r in C.assign_clusters(qdf, cent).collect()}
     r2 = {(r["vec_id"], r["cluster_id"], r["dist_units"])
-          for r in a2.collect()}
+          for r in C.assign_clusters_join(qdf, cent).collect()}
     assert r1 == r2
 
 
-def test_semdedup_auto_k_regimes(spark):
-    """The auto-k chooser: target_cluster=64 on the 200-vector fixture
-    resolves to k=8 (literal path) and equals semantic_dedup_threshold
-    at k=8; target_cluster=2 forces k=100 (join path) and still returns
-    a valid survivor partition."""
+def test_semdedup_auto_k_regimes(spark, monkeypatch):
+    """The engine-chosen k: on the 200-vector fixture k resolves to 8
+    and the operator equals k-means at k=8 + the survivor tail. With
+    TARGET_CLUSTER=2 it picks k = n//2 = 100 > LITERAL_K_MAX (join
+    assignment), and the survivors equal a numpy replay of the drop
+    rule over kmeans_fixed(k=n//2)'s clustering."""
+    import numpy as np
+
     sf = "/root/testdata/sf0.001"
     emb = load_par(spark, sf, "embeddings")
     qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
     n = qdf.count()
 
-    auto = {r["vec_id"] for r in
-            C.semantic_dedup_auto(qdf, emb, target_cluster=64,
-                                  iterations=2).collect()}
-    fixed = {r["vec_id"] for r in
-             C.semantic_dedup_threshold(qdf, emb, k=max(8, n // 64),
-                                        iterations=2,
-                                        allow_fixed_k_quadratic=True)
-             .collect()}
-    assert auto == fixed  # same k -> same result, chooser adds nothing
-
-    # r10 (r9 verdict #2): the DEFAULT path is the auto-k regime —
-    # omitting k routes through the chooser and equals the explicit
-    # auto call; an explicit fixed k without the acknowledgment flag
-    # REFUSES (the measured 45-min-abort path cannot be reached by
-    # accident), mirroring dedup.set_similarity_join's regime pin
     default = {r["vec_id"] for r in
                C.semantic_dedup_threshold(qdf, emb, iterations=2).collect()}
-    assert default == auto
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="quadratic"):
-        C.semantic_dedup_threshold(qdf, emb, k=8, iterations=2)
+    asg8, _ = C.kmeans_fixed(qdf, k=max(8, n // 64), iterations=2)
+    tail8 = {r["vec_id"] for r in C._within_cluster_drop_survivors(
+        asg8, emb, 0.40, "vec_id", "embedding").collect()}
+    assert default == tail8
 
-    # force the JOIN-assignment regime (k = n//2 > 50) and replay the
-    # drop rule in numpy against that clustering — exact, end-to-end
-    import numpy as np
-    big_k = C.semantic_dedup_auto(qdf, emb, target_cluster=2,
-                                  iterations=2).collect()
-    ids = [r["vec_id"] for r in big_k]
+    # the JOIN-assignment regime, replayed in numpy — exact, end-to-end
+    asg, _ = C.kmeans_fixed(qdf, k=n // 2, iterations=2)
+    tail = C._within_cluster_drop_survivors(asg, emb, 0.40,
+                                            "vec_id", "embedding").collect()
+    ids = [r["vec_id"] for r in tail]
     assert len(ids) == len(set(ids))  # one row per survivor
-    asg, _ = C.kmeans_fixed_joined(qdf, k=n // 2, iterations=2)
+    monkeypatch.setattr(C, "TARGET_CLUSTER", 2)
+    chosen = {r["vec_id"] for r in
+              C.semantic_dedup_threshold(qdf, emb, iterations=2).collect()}
+    assert chosen == set(ids)
     cluster = {r["vec_id"]: r["cluster_id"] for r in asg.collect()}
     vec = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
            for r in emb.collect()}

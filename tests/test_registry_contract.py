@@ -25,6 +25,36 @@ from canary_weather_etl_spark.plans import REGISTRY
 from conftest import SF_SMALL
 
 
+# Registry entries allowed to share one oracle, each with why the shared
+# oracle still checks a behaviour of its own.
+_SHARED_ORACLES = {
+    frozenset({"q_pca_power_projection", "q_stream_pca_update"}):
+        "streaming PCA must equal the batch projection",
+    frozenset({"q_corpus_drift_tv_strata", "q_stream_drift_tv_strata"}):
+        "streaming drift strata must equal the batch strata",
+    frozenset({"q_mix_weights_drift_adjusted",
+               "q_stream_mix_weights_drift"}):
+        "streaming drift-adjusted mix weights must equal the batch ones",
+    frozenset({"q_setjoin_auto_regime", "q_setjoin_prefix_filter"}):
+        "the chooser's all-pairs path and the forced prefix path differ "
+        "physically at sf0.01",
+}
+
+
+def test_identical_oracles_are_intended():
+    """Two entries with one oracle check one behaviour twice unless they
+    run different code for a stated reason: group the registry by
+    whitespace-normalised oracle SQL and allow only the listed groups."""
+    groups: dict[str, set[str]] = {}
+    for name, spec in REGISTRY.items():
+        if spec.oracle is not None:
+            groups.setdefault(" ".join(spec.oracle.split()), set()).add(name)
+    shared = {frozenset(g) for g in groups.values() if len(g) > 1}
+    assert shared == set(_SHARED_ORACLES), (
+        f"unlisted: {sorted(map(sorted, shared - set(_SHARED_ORACLES)))}; "
+        f"stale: {sorted(map(sorted, set(_SHARED_ORACLES) - shared))}")
+
+
 def test_no_top_level_complex_result_columns(spark):
     """Build every registered query at sf0.001; assert no result column is
     Array/Map/Struct at the top level. ~3 min: most entries only analyze a
