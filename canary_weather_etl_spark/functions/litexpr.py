@@ -133,7 +133,7 @@ def double_array_sql(vals: Iterable[float]) -> str:
 def case_long_array_sql(key_sql: str, arrays: dict[int, list[int]]) -> str:
     """``CASE WHEN key = k THEN array(...) ...`` selecting a literal
     BIGINT array by an integer key column — the when-chain shape of
-    _residuals_from_quantized, as SQL text (no ELSE: unmatched keys yield
+    similarity.ivf_residuals, as SQL text (no ELSE: unmatched keys yield
     NULL, same as the old F.when chain)."""
     whens = " ".join(
         f"WHEN {key_sql} = {int(k)} THEN {long_array_sql(v)}"

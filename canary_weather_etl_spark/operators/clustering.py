@@ -94,10 +94,11 @@ def assign_clusters(qdf: DataFrame, centroids: dict[int, list[int]]) -> DataFram
     ties to the smaller cluster id. One narrow projection — no shuffle.
     The whole k-way argmin tree parses from one SQL string (identical
     analyzed expression to the old per-element build — pinned by
-    tests/test_litexpr.py)."""
+    tests/test_litexpr.py). cluster_id is BIGINT, like
+    ``assign_clusters_join``'s: the ids are the init points' vec_ids."""
     best = F.expr(argmin_struct_sql("qvec", centroids))
     return (qdf.withColumn("_best", best)
-            .withColumn("cluster_id", F.col("_best.cid"))
+            .withColumn("cluster_id", F.col("_best.cid").cast("bigint"))
             .withColumn("dist_units", F.col("_best.d"))
             .drop("_best"))
 

@@ -770,18 +770,18 @@ def _sub_argmin(vec_sql: str, cents: dict[int, list[int]]) -> F.Column:
 
 def pq_encode(qdf: DataFrame,
               books: dict[int, dict[int, list[int]]]) -> DataFrame:
-    """(vec_id, code_0..code_{m-1}): each vector compressed to m small
-    codes — one narrow projection, no shuffle, 64 dims → m bytes of
-    residency per vector (the PQ memory win)."""
+    """Every input column but ``qvec``, then code_0..code_{m-1}: each
+    vector compressed to m small codes — one narrow projection, no
+    shuffle, 64 dims → m bytes of residency per vector (the PQ memory
+    win). A (vec_id, list_id, qvec=residual) frame keeps its list_id."""
     m = len(books)
-    dims = m * len(next(iter(books[0].values())))
-    sublen = dims // m
+    sublen = len(next(iter(books[0].values())))
     cols = [
         _sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})", books[s])
         .alias(f"code_{s}")
         for s in range(m)
     ]
-    return qdf.select("vec_id", *cols)
+    return qdf.select(*[c for c in qdf.columns if c != "qvec"], *cols)
 
 
 def pq_adc_topk(codes: DataFrame, query_qvec: list[int],
@@ -817,12 +817,12 @@ def pq_adc_topk(codes: DataFrame, query_qvec: list[int],
             .select("rank", "vec_id", "adc_units"))
 
 
-def _residuals_from_quantized(qdf, cents: dict[int, list[int]]):
-    """(vec_id, list_id, qvec=residual) from a pre-quantized frame:
-    integer argmin against literal centroids, then zip_with subtraction
-    against a when-chain of literal arrays — one codegen projection, no
-    join, no shuffle. The shared body of the IVFADC family (residual PQ
-    training, encode, frozen-model ingest)."""
+def ivf_residuals(qdf: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
+    """(vec_id, list_id, qvec=residual) from a quantized (vec_id, qvec)
+    frame: integer argmin against literal centroids, then zip_with
+    subtraction against a when-chain of literal arrays — one codegen
+    projection, no join, no shuffle. The residual step of the IVFADC
+    family (residual PQ training, encode, frozen-model ingest)."""
     from .clustering import assign_clusters
 
     asg = assign_clusters(qdf, cents)
@@ -849,8 +849,7 @@ def _adc_expr(q0: list[int], cents: dict[int, list[int]],
     (list_id, code_0..m-1) row: a when-chain on list_id selecting the
     per-(list, subspace) driver-literal distance table — the query
     residual differs per probed list, so each branch carries its own
-    m × pq_k integer table. Shared by topk_ivfpq_fixed / topk_ivfpq_multi
-    / ivfpq_adc_over_codes / ivfpq_sweep (one construction, four users)."""
+    m × pq_k integer table. Built per query by ivfpq_adc_over_codes."""
     m = len(books)
     dims = len(next(iter(cents.values())))
     sublen = dims // m
@@ -869,51 +868,21 @@ def _adc_expr(q0: list[int], cents: dict[int, list[int]],
     return F.expr("CASE " + " ".join(whens) + " END")
 
 
-def topk_ivfpq_fixed(embeddings: DataFrame, query_vec_id: int = 0,
-                     k_top: int = 10, id_col: str = "vec_id",
-                     vec_col: str = "embedding", n_lists: int = 8,
-                     ivf_iterations: int = 2, n_probe: int = 2,
-                     m: int = 2, pq_k: int = 4, pq_iterations: int = 2,
-                     centroids: DataFrame | None = None) -> DataFrame:
-    """Composed IVF + PQ-on-residuals ADC top-k — the IVFADC index of
-    Jégou et al., 'Product Quantization for Nearest Neighbor Search'
-    (TPAMI 2011, public method), which is THE canonical billion-vector
-    layout (FAISS's IndexIVFPQ): the coarse quantizer routes each vector
-    to one of ``n_lists`` inverted lists, PQ codebooks are trained on
-    the RESIDUALS (vector minus its list centroid — residuals have far
-    less variance than raw vectors, so the same code budget quantizes
-    them much more tightly), and a query probes only its ``n_probe``
-    nearest lists, scoring candidates by asymmetric distance against a
-    PER-LIST driver-literal table (the query residual differs per list).
-
-    Every stage is the repo's deterministic fixed-point discipline, so
-    the WHOLE composition is SQL-oracle-able end to end:
-
-    - coarse quantizer: ``train_ivf_quantizer_fixed`` (integer Lloyd,
-      init = first ``n_lists`` ids, ties to the smaller list, FLOOR
-      centroid update) — train-once/persist, never a fit job per query;
-    - assignment + residuals: one narrow codegen projection (integer
-      argmin against literal centroids, ``zip_with`` subtraction) — no
-      shuffle, no UDF;
-    - PQ codebooks: ``pq_train_codebooks`` over the residual frame (the
-      fused one-pass-per-round trainer);
-    - query: probe lists, query residuals and the n_probe × m × pq_k
-      ADC tables are all driver-side integer literals (bounded:
-      n_lists·dims + m·pq_k·n_probe ints), and each candidate row pays
-      m literal-array lookups selected by a when-chain on its list —
-      then TakeOrderedAndProject for the top-k.
-
-    At 100 TB: the code table is (8·m) bytes/vector, lists are the
-    partition key (a probe scans n_probe/n_lists of the codes), and
-    training runs once on a sample. Returns (rank, vec_id, adc_units),
-    ties broken by vec_id; the query vector itself is excluded.
-    """
-    from pyspark.sql import Window
-
+def _ivfadc_build(embeddings: DataFrame, query_ids: list[int], id_col: str,
+                  vec_col: str, n_lists: int, ivf_iterations: int,
+                  centroids: DataFrame | None
+                  ) -> tuple[dict[int, list[int]], DataFrame,
+                             dict[int, list[int]]]:
+    """The shared IVFADC build: the coarse quantizer as driver literals
+    (trained, or the persisted ``centroids`` table), the checkpointed
+    residual table and each query's quantized vector. Returns
+    (cents, residuals, {query_id: qvec})."""
     from .clustering import quantize_vectors
 
-    # one materialization feeds assignment, PQ training, encode and the
-    # query row (GC-released blocks)
+    if not query_ids:
+        raise ValueError("query_ids must be non-empty")
+    # one materialization feeds the residuals and the query rows
+    # (GC-released blocks)
     qdf = (quantize_vectors(embeddings, id_col, vec_col)
            .localCheckpoint(eager=True))
     cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
@@ -921,38 +890,47 @@ def topk_ivfpq_fixed(embeddings: DataFrame, query_vec_id: int = 0,
     # bounded driver collect: n_lists × dims ints (the persisted model)
     cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
              for r in cdf.collect()}
-    dims = len(next(iter(cents.values())))
-    if dims % m:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sublen = dims // m
+    rdf = ivf_residuals(qdf, cents).localCheckpoint(eager=True)
+    qrows = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
+             for r in qdf.filter(
+                 F.col("vec_id").isin(*[int(q) for q in query_ids]))
+             .collect()}
+    missing = [int(q) for q in query_ids if int(q) not in qrows]
+    if missing:
+        raise ValueError(f"query vec_id(s) {missing} not found")
+    return cents, rdf, qrows
 
-    # residuals: integer subtraction against the assigned list's literal
-    # centroid (when-chain over n_lists arrays — pure codegen, no join)
-    rdf = _residuals_from_quantized(qdf, cents).localCheckpoint(eager=True)
 
-    books = pq_train_codebooks(rdf.select("vec_id", "qvec"), m=m, k=pq_k,
-                               iterations=pq_iterations)
-    codes = rdf.filter(F.col("vec_id") != query_vec_id).select(
-        "vec_id", "list_id",
-        *[_sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})", books[s])
-          .alias(f"code_{s}") for s in range(m)])
+def ivfpq_adc_over_codes(codes: DataFrame, queries: dict[int, list[int]],
+                         cents: dict[int, list[int]],
+                         books: dict[int, dict[int, list[int]]],
+                         k_top: int = 10, n_probe: int = 2) -> DataFrame:
+    """ADC top-k over a (vec_id, list_id, code_*) table — the one search
+    of the IVFADC family. ``queries`` maps each query id to its quantized
+    vector; its probed lists and per-(list, subspace) distance tables are
+    driver ints derived from the literal model, and its scan is pruned to
+    the probed lists. The per-query scored branches union into one frame
+    cut by ``row_number() over (partition by query_id) <= k_top``, which
+    plans as a Partial WindowGroupLimit below the exchange: each partition
+    ships at most k rows per query. Returns (query_id, rank, vec_id,
+    adc_units), ties broken by vec_id; each query's own vec_id is
+    excluded."""
+    from pyspark.sql import Window
 
-    # query side: probe lists + per-(list, subspace) distance tables —
-    # all bounded driver integers, zero extra jobs beyond one row fetch
-    q0_rows = qdf.filter(F.col("vec_id") == query_vec_id).collect()
-    if not q0_rows:
-        raise ValueError(f"query vec_id {query_vec_id} not found")
-    q0 = [int(v) for v in q0_rows[0]["qvec"]]
-    probed = _probe_lists(q0, cents, n_probe)
-    adc = _adc_expr(q0, cents, books, probed)
-
-    scored = (codes.filter(F.col("list_id").isin(*[int(x) for x in probed]))
-              .select("vec_id", adc.cast("long").alias("adc_units")))
-    # sort+limit → TakeOrderedAndProject; rank AFTER the cut (k-row frame)
-    top = scored.orderBy("adc_units", "vec_id").limit(k_top)
-    w = Window.orderBy("adc_units", "vec_id")
-    return (top.withColumn("rank", F.row_number().over(w))
-            .select("rank", "vec_id", "adc_units"))
+    scored = None
+    for qid, q0 in queries.items():
+        probed = _probe_lists(q0, cents, n_probe)
+        branch = (codes
+                  .filter(F.col("list_id").isin(*[int(x) for x in probed])
+                          & (F.col("vec_id") != int(qid)))
+                  .select(F.lit(int(qid)).alias("query_id"), "vec_id",
+                          _adc_expr(q0, cents, books, probed)
+                          .cast("long").alias("adc_units")))
+        scored = branch if scored is None else scored.unionByName(branch)
+    w = Window.partitionBy("query_id").orderBy("adc_units", "vec_id")
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k_top)
+            .select("query_id", "rank", "vec_id", "adc_units"))
 
 
 def topk_ivfpq_multi(embeddings: DataFrame, query_ids: list[int],
@@ -961,63 +939,43 @@ def topk_ivfpq_multi(embeddings: DataFrame, query_ids: list[int],
                      ivf_iterations: int = 2, n_probe: int = 2,
                      m: int = 2, pq_k: int = 4, pq_iterations: int = 2,
                      centroids: DataFrame | None = None) -> DataFrame:
-    """`topk_ivfpq_fixed` for a query SET sharing one model build: the
-    quantizer, residual codebooks and code table are built ONCE; each
-    query contributes its own probed lists and per-(list, subspace)
-    driver-literal ADC tables, and the per-query top-k cuts union into
-    (query_id, rank, vec_id, adc_units). |query_ids| × n_probe × m × pq_k
-    driver ints — still bounded; the code table is scanned once per
-    query branch (at 100 TB the branches share the probe-pruned scan
-    via the list partition key)."""
-    from pyspark.sql import Window
+    """Composed IVF + PQ-on-residuals ADC top-k for a query set — the
+    IVFADC index of Jégou et al., 'Product Quantization for Nearest
+    Neighbor Search' (TPAMI 2011, public method), which is THE canonical
+    billion-vector layout (FAISS's IndexIVFPQ): the coarse quantizer
+    routes each vector to one of ``n_lists`` inverted lists, PQ codebooks
+    are trained on the RESIDUALS (vector minus its list centroid —
+    residuals have far less variance than raw vectors, so the same code
+    budget quantizes them much more tightly), and a query probes only its
+    ``n_probe`` nearest lists, scoring candidates by asymmetric distance
+    against a PER-LIST driver-literal table (the query residual differs
+    per list).
 
-    from .clustering import quantize_vectors
+    Every stage is the repo's deterministic fixed-point discipline, so
+    the WHOLE composition is SQL-oracle-able end to end:
 
-    qdf = (quantize_vectors(embeddings, id_col, vec_col)
-           .localCheckpoint(eager=True))
-    cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
-        embeddings, n_lists, ivf_iterations, id_col, vec_col)
-    cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
-             for r in cdf.collect()}
-    dims = len(next(iter(cents.values())))
-    # mirror topk_ivfpq_fixed's validation (the single-query twin): fail
-    # loudly here, not later inside pq_train_codebooks / a KeyError
-    if dims % m:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sublen = dims // m
+    - coarse quantizer: ``train_ivf_quantizer_fixed`` (integer Lloyd,
+      init = first ``n_lists`` ids, ties to the smaller list, FLOOR
+      centroid update) — train-once/persist, never a fit job per query;
+    - assignment + residuals: ``ivf_residuals``;
+    - PQ codebooks: ``pq_train_codebooks`` over the residual frame (the
+      fused one-pass-per-round trainer), codes by ``pq_encode``;
+    - query: ``ivfpq_adc_over_codes`` (probe lists, query residuals and
+      the n_probe × m × pq_k ADC tables are all driver-side integer
+      literals: n_lists·dims + |query_ids|·m·pq_k·n_probe ints).
 
-    rdf = _residuals_from_quantized(qdf, cents).localCheckpoint(eager=True)
-    books = pq_train_codebooks(rdf.select("vec_id", "qvec"), m=m, k=pq_k,
-                               iterations=pq_iterations)
-    codes = rdf.select(
-        "vec_id", "list_id",
-        *[_sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})", books[s])
-          .alias(f"code_{s}") for s in range(m)])
-
-    qrows = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
-             for r in qdf.filter(
-                 F.col("vec_id").isin(*[int(q) for q in query_ids]))
-             .collect()}
-    missing = [int(q) for q in query_ids if int(q) not in qrows]
-    if missing:
-        raise ValueError(f"query vec_id(s) {missing} not found")
-    branches = []
-    for qid in query_ids:
-        q0 = qrows[int(qid)]
-        probed = _probe_lists(q0, cents, n_probe)
-        adc = _adc_expr(q0, cents, books, probed)
-        scored = (codes
-                  .filter(F.col("list_id").isin(*[int(x) for x in probed])
-                          & (F.col("vec_id") != int(qid)))
-                  .select(F.lit(int(qid)).alias("query_id"), "vec_id",
-                          adc.cast("long").alias("adc_units")))
-        branches.append(scored.orderBy("adc_units", "vec_id").limit(k_top))
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    w = Window.partitionBy("query_id").orderBy("adc_units", "vec_id")
-    return (out.withColumn("rank", F.row_number().over(w))
-            .select("query_id", "rank", "vec_id", "adc_units"))
+    The quantizer, codebooks and code table are built ONCE for the query
+    set. At 100 TB: the code table is (8·m) bytes/vector, lists are the
+    partition key (a probe scans n_probe/n_lists of the codes), and
+    training runs once on a sample. Returns (query_id, rank, vec_id,
+    adc_units), ties broken by vec_id; each query vector itself is
+    excluded."""
+    cents, rdf, qrows = _ivfadc_build(embeddings, query_ids, id_col,
+                                      vec_col, n_lists, ivf_iterations,
+                                      centroids)
+    books = pq_train_codebooks(rdf, m=m, k=pq_k, iterations=pq_iterations)
+    return ivfpq_adc_over_codes(pq_encode(rdf, books), qrows, cents, books,
+                                k_top=k_top, n_probe=n_probe)
 
 
 def ivfpq_encode_frozen(vectors: DataFrame,
@@ -1028,16 +986,13 @@ def ivfpq_encode_frozen(vectors: DataFrame,
     """(vec_id, list_id, code_0..m-1) for NEW vectors against a FROZEN
     IVFADC model (centroid dict + PQ codebooks as driver literals) — the
     incremental-index primitive: a micro-batch of arrivals encodes with
-    literal arithmetic only (quantize → integer argmin assign → integer
-    residual → per-subspace code), ONE narrow codegen projection per
-    batch — no shuffle, no training job, no reference to the existing
-    index. This is how a 100 TB vector index stays fresh: the model
-    trains once on a seed sample, every later ingest appends codes."""
+    literal arithmetic only (quantize → ``ivf_residuals`` →
+    ``pq_encode``), ONE narrow codegen projection per batch — no shuffle,
+    no training job, no reference to the existing index. This is how a
+    100 TB vector index stays fresh: the model trains once on a seed
+    sample, every later ingest appends codes."""
     from .clustering import quantize_vectors
 
-    m = len(books)
-    dims = len(next(iter(cents.values())))
-    sublen = dims // m
     qdf = quantize_vectors(vectors, id_col, vec_col)
     # spread a narrow-split batch before the CPU-bound argmin/code folds
     # (a big drop file arrives as a handful of splits; the folds are
@@ -1046,35 +1001,7 @@ def ivfpq_encode_frozen(vectors: DataFrame,
     want = qdf.sparkSession.sparkContext.defaultParallelism
     if par < want:
         qdf = qdf.repartition(want)
-    r = _residuals_from_quantized(qdf, cents)
-    return r.select(
-        "vec_id", "list_id",
-        *[_sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})", books[s])
-          .alias(f"code_{s}") for s in range(m)])
-
-
-def ivfpq_adc_over_codes(codes: DataFrame, q0: list[int],
-                         cents: dict[int, list[int]],
-                         books: dict[int, dict[int, list[int]]],
-                         k_top: int = 10, n_probe: int = 2,
-                         exclude_vec_id: int | None = None) -> DataFrame:
-    """ADC top-k over an EXISTING (vec_id, list_id, code_*) table — the
-    query half of the frozen-model index: probe lists and per-(list,
-    subspace) distance tables are driver ints derived from the literal
-    model, the scan is pruned to the probed lists, the cut is
-    TakeOrderedAndProject. Returns (rank, vec_id, adc_units)."""
-    from pyspark.sql import Window
-
-    probed = _probe_lists(q0, cents, n_probe)
-    adc = _adc_expr(q0, cents, books, probed)
-    scored = codes.filter(F.col("list_id").isin(*[int(x) for x in probed]))
-    if exclude_vec_id is not None:
-        scored = scored.filter(F.col("vec_id") != int(exclude_vec_id))
-    scored = scored.select("vec_id", adc.cast("long").alias("adc_units"))
-    top = scored.orderBy("adc_units", "vec_id").limit(k_top)
-    w = Window.orderBy("adc_units", "vec_id")
-    return (top.withColumn("rank", F.row_number().over(w))
-            .select("rank", "vec_id", "adc_units"))
+    return pq_encode(ivf_residuals(qdf, cents), books)
 
 
 def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
@@ -1099,45 +1026,16 @@ def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
     than asserted: recall@k against the exact baseline (computed by the
     caller) vs scan fraction and code residency, Jégou et al. Fig. 5
     as a registry entry."""
-    from pyspark.sql import Window
-
-    from .clustering import quantize_vectors
-
-    if not query_ids:
-        # Fail loudly up front (r14, ADVICE): empty query_ids previously
-        # left scored_all as None and crashed opaquely at the
-        # window-rank step with AttributeError.
-        raise ValueError("query_ids must be non-empty")
-    qdf = (quantize_vectors(embeddings, id_col, vec_col)
-           .localCheckpoint(eager=True))
-    cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
-        embeddings, n_lists, ivf_iterations, id_col, vec_col)
-    cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
-             for r in cdf.collect()}
-    dims = len(next(iter(cents.values())))
-    for m, pq_k, n_probe in grid:
-        if dims % m:
-            raise ValueError(f"dims {dims} not divisible by m={m}")
+    for _, _, n_probe in grid:
         if not 1 <= n_probe <= n_lists:
             raise ValueError(f"n_probe={n_probe} outside 1..{n_lists}")
-
-    rdf = _residuals_from_quantized(qdf, cents).localCheckpoint(eager=True)
+    cents, rdf, qrows = _ivfadc_build(embeddings, query_ids, id_col,
+                                      vec_col, n_lists, ivf_iterations,
+                                      centroids)
     # bounded: <= n_lists rows — the deterministic cost axis
     sizes = {int(r["list_id"]): int(r["n"]) for r in
              rdf.groupBy("list_id").agg(F.count(F.lit(1)).alias("n"))
              .collect()}
-    own = {}   # query -> its assigned list (self-row exclusion)
-    qrows = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
-             for r in qdf.filter(
-                 F.col("vec_id").isin(*[int(q) for q in query_ids]))
-             .collect()}
-    missing = [int(q) for q in query_ids if int(q) not in qrows]
-    if missing:
-        raise ValueError(f"query vec_id(s) {missing} not found")
-    for r in (rdf.filter(F.col("vec_id")
-                         .isin(*[int(q) for q in query_ids]))
-              .select("vec_id", "list_id").collect()):
-        own[int(r["vec_id"])] = int(r["list_id"])
 
     out: list[dict] = []
     codes_by_mk: dict[tuple[int, int], tuple] = {}
@@ -1155,73 +1053,34 @@ def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
         uses[(m, pq_k)] = uses.get((m, pq_k), 0) + 1
     for m, pq_k, n_probe in grid:
         if (m, pq_k) not in codes_by_mk:
-            sublen = dims // m
             if codebooks_dir is not None:
                 # caller vouches the corpus behind this dir is immutable
                 # (deterministic fixture rebuilds) — train-once cache
                 import os
 
                 books = persist_pq_codebooks(
-                    rdf.select("vec_id", "qvec"),
+                    rdf,
                     os.path.join(codebooks_dir,
                                  f"books_m{m}_k{pq_k}"
                                  f"_i{pq_iterations}.json"),
                     m=m, k=pq_k, iterations=pq_iterations)
             else:
-                books = pq_train_codebooks(rdf.select("vec_id", "qvec"),
-                                           m=m, k=pq_k,
+                books = pq_train_codebooks(rdf, m=m, k=pq_k,
                                            iterations=pq_iterations)
-            codes = rdf.select(
-                "vec_id", "list_id",
-                *[_sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})",
-                              books[s]).alias(f"code_{s}")
-                  for s in range(m)])
+            codes = pq_encode(rdf, books)
             if uses[(m, pq_k)] > 1:
                 codes = codes.localCheckpoint(eager=True)
             codes_by_mk[(m, pq_k)] = (books, codes)
         books, codes = codes_by_mk[(m, pq_k)]
-        # ONE frame per grid point (r12 verdict #5): union every query's
-        # scored candidates and cut top-k with a single window rank,
-        # instead of a per-query orderBy/limit branch — the old shape ran
-        # ~|grid| x |queries| small TakeOrdered jobs (a driver-scheduling
-        # floor, not a data cost); this shape is one job per point over
-        # the same cached code table. Result-identical: ranking ALL
-        # candidates per query selects the same k_top rows the per-branch
-        # top-k + re-rank did, with the same (adc_units, vec_id) ties.
-        scored_all, cand_rows = None, 0
-        for qid in query_ids:
-            q0 = qrows[int(qid)]
-            probed = _probe_lists(q0, cents, n_probe)
-            cand_rows += (sum(sizes.get(lid, 0) for lid in probed)
-                          - (1 if own[int(qid)] in probed else 0))
-            scored = (codes
-                      .filter(F.col("list_id")
-                              .isin(*[int(x) for x in probed])
-                              & (F.col("vec_id") != int(qid)))
-                      .select(F.lit(int(qid)).alias("query_id"), "vec_id",
-                              _adc_expr(q0, cents, books, probed)
-                              .cast("long").alias("adc_units")))
-            scored_all = (scored if scored_all is None
-                          else scored_all.unionByName(scored))
-        w = Window.partitionBy("query_id").orderBy("adc_units", "vec_id")
+        # a query's own list is its nearest, so it is always probed:
+        # each query scans its probed lists minus its own row
+        cand_rows = sum(sum(sizes.get(lid, 0)
+                            for lid in _probe_lists(q0, cents, n_probe)) - 1
+                        for q0 in qrows.values())
         out.append({
             "m": m, "pq_k": pq_k, "n_probe": n_probe,
-            "topk": (scored_all.withColumn("rank", F.row_number().over(w))
-                     .filter(F.col("rank") <= k_top)
-                     .select("query_id", "rank", "vec_id", "adc_units")),
+            "topk": ivfpq_adc_over_codes(codes, qrows, cents, books,
+                                         k_top=k_top, n_probe=n_probe),
             "cand_rows": cand_rows, "code_bytes": m,
         })
     return out
-
-
-def ivf_residuals(vectors: DataFrame, cents: dict[int, list[int]],
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, list_id, qvec): each vector's integer residual against
-    its nearest literal centroid — the PQ training input of the IVFADC
-    family. One narrow codegen projection (argmin + zip_with subtract),
-    no shuffle."""
-    from .clustering import quantize_vectors
-
-    return _residuals_from_quantized(
-        quantize_vectors(vectors, id_col, vec_col), cents)

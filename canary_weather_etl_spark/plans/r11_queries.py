@@ -640,11 +640,12 @@ def _ivfpq_oracle() -> str:
         "actually runs: 8·m bytes of residency per vector, lists as the "
         "partition key (a probe scans n_probe/n_lists of the code "
         "table), training once on a sample. Every stage is fixed-point "
-        "deterministic (operators/similarity.topk_ivfpq_fixed), so the "
-        "FULL composition is bit-exact against an unrolled SQL oracle: "
-        "q_kmeans_lloyd's IVF prefix, residual subtraction, per-subspace "
-        "Lloyd on residuals, encode, probe, per-(list, subspace) ADC "
-        "tables, top-k cut. Quantizer shared with q_sim_ann_ivf via the "
+        "deterministic (operators/similarity.topk_ivfpq_multi with the "
+        "one query id 0), so the FULL composition is bit-exact against "
+        "an unrolled SQL oracle: q_kmeans_lloyd's IVF prefix, residual "
+        "subtraction, per-subspace Lloyd on residuals, encode, probe, "
+        "per-(list, subspace) ADC tables, top-k cut. Quantizer shared "
+        "with q_sim_ann_ivf via the "
         "same persisted table (train-once contract).",
     tags=("llm", "similarity", "approx", "iterative"),
 )
@@ -655,9 +656,9 @@ def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_par(spark, sf_dir, "embeddings")
     cdf = S.persist_ivf_quantizer_fixed(e, _ivf_quantizer_path(sf_dir),
                                         n_lists=8, iterations=2)
-    return S.topk_ivfpq_fixed(e, query_vec_id=0, k_top=10, n_lists=8,
+    return S.topk_ivfpq_multi(e, [0], k_top=10, n_lists=8,
                               ivf_iterations=2, n_probe=2, m=2, pq_k=4,
-                              pq_iterations=2, centroids=cdf)
+                              pq_iterations=2, centroids=cdf).drop("query_id")
 
 # ---------------------------------------------------------------------------
 # Deterministic PCA by power iteration, bit-exact oracle
@@ -840,18 +841,18 @@ def _stream_ann_oracle() -> str:
         "quantizer and the residual PQ codebooks train ONCE on the seed "
         "corpus (the low-id third), then micro-batches of arriving "
         "vectors encode against the frozen literals in foreachBatch "
-        "(operators/similarity.ivfpq_encode_frozen: quantize → integer "
-        "argmin assign → residual → per-subspace code, ONE narrow "
-        "codegen projection per batch — no shuffle, no training job, no "
-        "read of the existing index) and append (vec_id, list_id, "
-        "code_*) rows to the persisted code table; the query half "
-        "(ivfpq_adc_over_codes) probes its n_probe nearest lists over "
-        "the ACCUMULATED table. Batch boundaries cannot affect the "
-        "result (encoding is row-wise against frozen literals), so the "
-        "oracle replays the whole pipeline batch-free: seeded-training "
-        "k-means prefix (train on the seed third, assign everything), "
-        "PQ trained on seed residuals only (train_pred), encode all, "
-        "probe, ADC — bit-for-bit.",
+        "(operators/similarity.ivfpq_encode_frozen: quantize → "
+        "ivf_residuals → pq_encode, ONE narrow codegen projection per "
+        "batch — no shuffle, no training job, no read of the existing "
+        "index) and append (vec_id, list_id, code_*) rows to the "
+        "persisted code table; the query half is ivfpq_adc_over_codes, "
+        "the same ADC search q_sim_ann_ivfpq runs, probing its n_probe "
+        "nearest lists over the ACCUMULATED table. Batch boundaries "
+        "cannot affect the result (encoding is row-wise against frozen "
+        "literals), so the oracle replays the whole pipeline "
+        "batch-free: seeded-training k-means prefix (train on the seed "
+        "third, assign everything), PQ trained on seed residuals only "
+        "(train_pred), encode all, probe, ADC — bit-for-bit.",
     tags=("llm", "similarity", "streaming", "approx", "iterative"),
 )
 def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,9 +876,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = S.train_ivf_quantizer_fixed(seed, n_lists=8, iterations=2)
     cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
              for r in cdf.collect()}
-    rseed = S.ivf_residuals(seed, cents)
-    books = S.pq_train_codebooks(rseed.select("vec_id", "qvec"),
-                                 m=2, k=4, iterations=2)
+    rseed = S.ivf_residuals(C.quantize_vectors(seed), cents)
+    books = S.pq_train_codebooks(rseed, m=2, k=4, iterations=2)
 
     base = tempfile.mkdtemp(prefix="canary_ann_ingest_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
@@ -919,8 +919,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q0 = [int(v) for v in
           C.quantize_vectors(e).filter(F.col("vec_id") == 0)
           .collect()[0]["qvec"]]
-    return S.ivfpq_adc_over_codes(codes, q0, cents, books, k_top=10,
-                                  n_probe=2, exclude_vec_id=0)
+    return S.ivfpq_adc_over_codes(codes, {0: q0}, cents, books, k_top=10,
+                                  n_probe=2).drop("query_id")
 
 # ---------------------------------------------------------------------------
 # Streaming PCA: additive moment state, bit-identical to the batch entry

@@ -311,12 +311,11 @@ def test_ivfpq_clustered_recall_and_determinism(spark):
          .select(F.col("vec_id").alias("query_id"), "embedding"))
     exact = {r["vec_id"] for r in S.topk_brute_force(e, q, k=10).collect()}
 
-    got = S.topk_ivfpq_fixed(e, query_vec_id=0, k_top=10).collect()
+    got = S.topk_ivfpq_multi(e, [0], k_top=10).collect()
     approx = {r["vec_id"] for r in got}
     assert len(exact & approx) / 10 >= 0.7
 
-    re = S.topk_ivfpq_fixed(e.repartition(7), query_vec_id=0,
-                            k_top=10).collect()
+    re = S.topk_ivfpq_multi(e.repartition(7), [0], k_top=10).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, re))
 
 
@@ -375,15 +374,15 @@ def test_stream_ann_ingest_batch_invariance(spark):
     cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
              for r in cdf.collect()}
     books = S.pq_train_codebooks(
-        S.ivf_residuals(seed, cents).select("vec_id", "qvec"),
+        S.ivf_residuals(C.quantize_vectors(seed), cents),
         m=2, k=4, iterations=2)
     q0 = [int(v) for v in
           C.quantize_vectors(e).filter(F.col("vec_id") == 0)
           .collect()[0]["qvec"]]
     codes_all = S.ivfpq_encode_frozen(e, cents, books)
-    expect = S.ivfpq_adc_over_codes(codes_all, q0, cents, books,
-                                    k_top=10, n_probe=2,
-                                    exclude_vec_id=0).collect()
+    expect = (S.ivfpq_adc_over_codes(codes_all, {0: q0}, cents, books,
+                                     k_top=10, n_probe=2)
+              .drop("query_id").collect())
 
     got = REGISTRY["q_stream_ann_ingest"].fn(spark, SF).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, expect))

@@ -9,6 +9,7 @@ spectral exactness guard, drift zero-half guard)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,6 +148,19 @@ def test_ivfpq_sweep_shared_build_matches_multi(spark):
                   .select("query_id", "rank", "vec_id", "adc_units")
                   .collect())
     assert got == want
+
+
+def test_ivfpq_topk_cut_is_partial_window_group_limit(spark):
+    """The IVFADC top-k is one cut for the whole query set: a per-query
+    row_number rank filtered to k_top, which Spark plans as a Partial
+    WindowGroupLimit below the exchange (k rows per query per partition
+    shuffle), not one TakeOrderedAndProject per query branch."""
+    e = load_par(spark, SF, "embeddings").localCheckpoint(eager=True)
+    df = S.topk_ivfpq_multi(e, [0, 1, 2], k_top=5)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"WindowGroupLimit .*Partial", plan), plan[:3000]
+    assert "TakeOrderedAndProject" not in plan, plan[:3000]
 
 
 def test_ivfpq_validation_loud(spark):

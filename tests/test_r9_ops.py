@@ -203,3 +203,16 @@ def test_semdedup_auto_k_regimes(spark, monkeypatch):
                 if not any(cluster[a] == cluster[v] and cos(a, v) >= 0.40
                            for a in vec if a < v)}
     assert set(ids) == expected
+
+
+def test_kmeans_cluster_id_type_independent_of_k(spark):
+    """cluster_id is BIGINT (vec_id's type — the init ids are vec_ids) on
+    both sides of LITERAL_K_MAX: the literal-centroid assignment and the
+    broadcast-join assignment must not change the output schema with k."""
+    from pyspark.sql.types import LongType
+
+    emb = load_par(spark, "/root/testdata/sf0.001", "embeddings")
+    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
+    for k in (8, 100):
+        asg, _ = C.kmeans_fixed(qdf, k=k, iterations=1)
+        assert isinstance(asg.schema["cluster_id"].dataType, LongType), k
