@@ -18,7 +18,7 @@ layer every table format builds on:
   makes replayed-batch commits idempotent: the replay REPLACES its batch
   entry, never double-counts). The clean weather table
   (sources/weather.py) commits through the same lock, publish and delete
-  helpers, keyed by partition path;
+  helpers, keyed by partition path, with entries of the same shape;
 - the manifest is published with write-to-tmp + fsync + `os.replace`
   (each publish bumps ``version``), so a reader sees the old or the new
   state, never a mix, and a power loss keeps one of the two;
@@ -44,13 +44,16 @@ DEPLOYMENT NOTE — this implementation is local-filesystem only: executors
 ``open()`` part files and the driver uses ``os.replace``/``os.listdir``,
 so driver, executors, and readers must share one POSIX filesystem (true
 on local[k] and on clusters with a shared mount; NOT true on plain
-object stores). The PROTOCOL (unique task files, driver-published
-manifest, lock-serialized read-modify-write commits) is the part that
-transfers to object storage; porting it means swapping the four
-filesystem touchpoints (part-file open, manifest read/replace, list,
-delete) for store calls and replacing the O_EXCL lock with the store's
-conditional-put/CAS. The docstring's object-store framing describes the
-protocol's design target, not this module's deployment surface.
+object stores). The same holds for the clean weather table, whose
+executors write their Parquet files with pyarrow straight into the
+table's partition directories, at a path the driver shares. The
+PROTOCOL (unique task files, driver-published manifest, lock-serialized
+read-modify-write commits) is the part that transfers to object
+storage; porting it means swapping the four filesystem touchpoints
+(part-file open, manifest read/replace, list, delete) for store calls
+and replacing the O_EXCL lock with the store's conditional-put/CAS. The
+docstring's object-store framing describes the protocol's design
+target, not this module's deployment surface.
 """
 
 from __future__ import annotations
@@ -285,9 +288,8 @@ def vacuum_manifest_dir(path: str, force_unlock: bool = False) -> list[str]:
     complement to manifest isolation: orphans from crashed jobs are
     already invisible to readers, this reclaims their storage. Data files
     are the ``part-*`` files at any depth (the sink's JSONL files, the
-    clean table's partitioned Parquet files, sources/weather.py) with
-    their ``.crc`` sidecars, plus all of a crashed table write's
-    ``_write-*`` directory; directories left empty go too.
+    clean table's partitioned Parquet files, sources/weather.py);
+    directories left empty go too.
 
     The scan+delete runs UNDER the commit lock, so vacuum cannot race a
     concurrent committer: a job that is mid-commit holds the lock while
@@ -309,16 +311,11 @@ def vacuum_manifest_dir(path: str, force_unlock: bool = False) -> list[str]:
         deleted = []
         for dirpath, _dirs, files in os.walk(path, topdown=False):
             rel_dir = os.path.relpath(dirpath, path)
-            crashed_write = rel_dir.startswith("_write-")
             for name in files:
-                data = (name[1:-4] if name.startswith(".part-")
-                        and name.endswith(".crc") else name)
-                if crashed_write or (
-                        data.startswith("part-") and os.path.normpath(
-                            os.path.join(rel_dir, data)) not in live):
+                rel = os.path.normpath(os.path.join(rel_dir, name))
+                if name.startswith("part-") and rel not in live:
                     os.remove(os.path.join(dirpath, name))
-                    deleted.append(os.path.normpath(
-                        os.path.join(rel_dir, name)))
+                    deleted.append(rel)
             if dirpath != path and not os.listdir(dirpath):
                 os.rmdir(dirpath)
     return sorted(deleted)

@@ -15,15 +15,20 @@ single declarative plan:
 - per-partition upsert loop (B6, README.md:1488-1545) → left_anti +
   unionByName, one write committed as a new version of the table's file
   manifest (`_commit`, the protocol of sources/manifest_sink.py)
+- Spark's Hadoop Parquet writer → one ``mapInArrow`` pass in which each
+  task writes its partitions' files with pyarrow straight into place: no
+  staging directory, no renames, no checksum sidecars. The manifest alone
+  makes them visible, so the executors and the driver must share the
+  table's file system (the deployment note of sources/manifest_sink.py)
 
 Schemas are explicit ``StructType``s (no inference — at 100 TB schema
-inference is an extra full scan per read, SURVEY.md §1.3).
+inference is an extra full scan per read, SURVEY.md §1.3). The clean
+table's schema lives in its manifest, so reading it opens no file footer.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -242,7 +247,8 @@ def read_clean(spark: SparkSession, table_path: str) -> DataFrame:
 
 
 def _snapshot(spark: SparkSession, table_path: str) -> tuple[int, DataFrame]:
-    """(manifest version, frame over the files that version lists)."""
+    """(manifest version, frame over the files that version lists, read
+    with the schema the manifest records)."""
     if not table_exists(table_path):
         raise FileNotFoundError(
             f"{table_path} is not a clean table: it has no {_MANIFEST} "
@@ -251,16 +257,21 @@ def _snapshot(spark: SparkSession, table_path: str) -> tuple[int, DataFrame]:
     files = [os.path.join(table_path, e["file"]) for e in state["files"]]
     if not files:
         raise ValueError(f"clean table {table_path} lists no data files")
-    return state["version"], (spark.read.option("basePath", table_path)
-                              .parquet(*files))
+    if "schema" not in state:
+        raise ValueError(f"the {_MANIFEST} of clean table {table_path} "
+                         "records no schema")
+    return state["version"], (
+        spark.read.schema(StructType.fromJson(state["schema"]))
+        .option("basePath", table_path).parquet(*files))
 
 
 def write_clean(df: DataFrame, out: str) -> None:
     """Hive-partitioned parquet sink (README.md:750-752): 4-level layout so
     partition pruning replaces Athena's scan-cost cut (14x claim at
-    README.md:801). Rows are sorted within partitions by ``date`` so
+    README.md:801). `_commit` sorts each file's rows by ``date`` so
     parquet row-group min/max statistics prune date-range scans inside a
     month partition too (free at write time, pays on every range query).
+    Each write task writes one file per partition its rows hold.
 
     Creates the table at ``out``, or adds the frame's files to it: rows
     already in a partition stay (`upsert_clean` replaces them)."""
@@ -268,8 +279,6 @@ def write_clean(df: DataFrame, out: str) -> None:
         raise FileExistsError(
             f"{out} holds files but no {_MANIFEST}: not a clean table")
     version = _load_state(out).get("version", 0)
-    if "date" in df.columns:
-        df = df.sortWithinPartitions("date")
     _commit(df, out, version, replace=False)
 
 
@@ -305,11 +314,92 @@ def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
     _commit(combined, table_path, version, replace=True)
 
 
-def _with_crc(rel: str) -> list[str]:
-    """A data file and the checksum sidecar Hadoop's local file system
-    writes next to it."""
-    head, name = os.path.split(rel)
-    return [rel, os.path.join(head, f".{name}.crc")]
+# Characters Spark escapes as %XX in partition directory names
+# (ExternalCatalogUtils.escapePathName): ASCII controls, DEL and "#%'*/:=?\\{[]^
+_PATH_ESCAPED = frozenset(
+    [*map(chr, range(0x01, 0x20)), *"\"#%'*/:=?\\\x7f{[]^"])
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# parquet-mr's default row group size (parquet.block.size)
+_ROW_GROUP_BYTES = 128 << 20
+_WRITTEN_FILE = "partition string, file string, rows bigint, bytes bigint"
+
+
+def _partition_writer(table_path: str, write_id: str, data_cols: list[str]):
+    """The executor side of `_commit`, run by ``mapInArrow`` over a frame
+    sorted within each task by `PARTITION_COLS`. Each run of equal
+    partition keys streams into one Parquet file, written under a unique
+    name straight into its partition directory, named as Spark's
+    ``partitionBy`` names it. The task returns one row per file:
+    (partition, file, rows, bytes).
+
+    Self-contained (imports and helpers inside): cloudpickle then ships it
+    by value, so Spark's Python workers need not import this package."""
+
+    def write(batches):
+        import itertools
+        import os
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def path_value(v) -> str:
+            if v is None or v == "":
+                return _NULL_PARTITION
+            return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c
+                           for c in str(v))
+
+        def runs():
+            """(partition key, data-column slice), in input order."""
+            for batch in batches:
+                data, start = batch.select(data_cols), 0
+                keys = zip(*(batch.column(c).to_pylist()
+                             for c in PARTITION_COLS))
+                for key, same in itertools.groupby(keys):
+                    n = sum(1 for _ in same)
+                    yield key, data.slice(start, n)
+                    start += n
+
+        def row_groups(run):
+            """A run's slices merged into tables of about _ROW_GROUP_BYTES."""
+            chunk, size = [], 0
+            for _key, piece in run:
+                chunk.append(piece)
+                size += piece.nbytes
+                if size >= _ROW_GROUP_BYTES:
+                    yield pa.Table.from_batches(chunk)
+                    chunk, size = [], 0
+            if chunk:
+                yield pa.Table.from_batches(chunk)
+
+        task, written = uuid.uuid4().hex, []
+        for n, (key, run) in enumerate(
+                itertools.groupby(runs(), key=lambda r: r[0])):
+            part = "/".join(f"{c}={path_value(v)}"
+                            for c, v in zip(PARTITION_COLS, key))
+            rel = f"{part}/part-{write_id}-{task}-{n}.parquet"
+            path = os.path.join(table_path, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            tables = row_groups(run)
+            first = next(tables)
+            # Dictionaries for strings only: parquet-mr drops a column
+            # chunk's dictionary when it does not pay, as for the
+            # distinct doubles of a month partition; pyarrow keeps it.
+            strings = [f.name for f in first.schema
+                       if pa.types.is_string(f.type)]
+            rows = 0
+            with pq.ParquetWriter(path, first.schema, store_schema=False,
+                                  use_dictionary=strings) as out:
+                for table in itertools.chain([first], tables):
+                    out.write_table(table)
+                    rows += table.num_rows
+            written.append((part, rel, rows, os.path.getsize(path)))
+        if written:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in zip(*written)],
+                names=["partition", "file", "rows", "bytes"])
+
+    return write
 
 
 def _commit(df: DataFrame, table_path: str, version: int,
@@ -317,44 +407,34 @@ def _commit(df: DataFrame, table_path: str, version: int,
     """The table's one commit protocol, shared with the manifest sink
     (sources/manifest_sink.py; the design table formats build on, Delta
     Lake, Armbrust et al., VLDB 2020). The manifest lists the live files
-    of each partition path.
+    of each partition path, with their rows and bytes, and the table's
+    schema.
 
-    1. Spark writes ``df`` to a uniquely named directory inside the table
-       (``_write-<id>``; the underscore hides it from directory reads).
-    2. Each data file, then its ``.crc`` sidecar, is renamed into its
-       partition directory. Spark names files after its write job, so they
-       never collide with live files.
-    3. Under the manifest lock, if the manifest is still at ``version``
-       (the one the write read), publish the new file lists: with
-       ``replace`` each written partition's files replace its old ones,
-       else they are added. If not, raise `ConcurrentWriteError` and
-       remove this write's files.
-    4. Delete the superseded files and the write directory.
+    1. The executors write ``df``, sorted within each task by partition
+       then ``date``: each task writes one Parquet file per partition its
+       rows hold, under a name unique to this write and task, straight
+       into the partition directory (`_partition_writer`), and reports it.
+    2. Under the manifest lock, if the manifest is still at ``version``
+       (the one the write read), publish the reported files and
+       ``df``'s schema: with ``replace`` each written partition's files
+       replace its old ones, else they are added. If not, raise
+       `ConcurrentWriteError` and remove the reported files.
+    3. Delete the superseded files.
 
     Readers see the old snapshot until the publish and the new one after
-    it. A crash before the publish leaves files no manifest lists: no
-    reader opens them and `vacuum_manifest_dir` reclaims them. At rest the
-    directory holds exactly the snapshot.
+    it. A write that fails or crashes before the publish leaves files no
+    manifest lists: no reader opens them and `vacuum_manifest_dir`
+    reclaims them. At rest the directory holds exactly the snapshot.
     """
-    staged = os.path.join(table_path, f"_write-{uuid.uuid4().hex}")
-    df.write.partitionBy(*PARTITION_COLS).parquet(staged)
+    order = [*PARTITION_COLS, *(["date"] if "date" in df.columns else [])]
+    data_cols = [c for c in df.columns if c not in PARTITION_COLS]
+    writer = _partition_writer(table_path, uuid.uuid4().hex, data_cols)
     written: dict[str, list[dict]] = {}
-    moved = []
-    for dirpath, _dirs, files in os.walk(staged):
-        part = os.path.relpath(dirpath, staged)
-        for name in sorted(f for f in files if not f.startswith(("_", "."))):
-            rel = os.path.join(part, name)
-            os.makedirs(os.path.join(table_path, part), exist_ok=True)
-            for f in _with_crc(rel):
-                if os.path.exists(os.path.join(staged, f)):
-                    os.rename(os.path.join(staged, f),
-                              os.path.join(table_path, f))
-                    moved.append(f)
-            written.setdefault(part, []).append({
-                "file": rel,
-                "bytes": os.path.getsize(os.path.join(table_path, rel))})
+    for r in (df.sortWithinPartitions(*order)
+              .mapInArrow(writer, _WRITTEN_FILE).collect()):
+        written.setdefault(r["partition"], []).append(
+            {"file": r["file"], "rows": r["rows"], "bytes": r["bytes"]})
     if not written:  # an empty frame changes no partition
-        shutil.rmtree(staged)
         return
     try:
         with _manifest_lock(table_path):
@@ -368,18 +448,17 @@ def _commit(df: DataFrame, table_path: str, version: int,
             for part, entries in written.items():
                 old = state["batches"].get(part, [])
                 if replace:
-                    superseded += [f for e in old
-                                   for f in _with_crc(e["file"])]
+                    superseded += [e["file"] for e in old]
                 else:
                     entries = old + entries
                 state["batches"][part] = entries
+            state["schema"] = df.schema.jsonValue()
             _publish_state(table_path, state)
     except ConcurrentWriteError:
-        _remove_files(table_path, moved)
-        shutil.rmtree(staged, ignore_errors=True)
+        _remove_files(table_path, [e["file"] for entries in written.values()
+                                   for e in entries])
         raise
     _remove_files(table_path, superseded)
-    shutil.rmtree(staged)
 
 
 def compact_partitions(spark: SparkSession, table_path: str,

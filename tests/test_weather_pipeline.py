@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 import pytest
@@ -242,12 +241,9 @@ def _clean(spark, root, start_day, n_days, bias=0.0, suffix="a"):
 
 
 def _live_files(out):
-    """The manifest's files with their checksum sidecars, and the manifest."""
+    """The manifest and the files it lists."""
     with open(os.path.join(out, "_MANIFEST.json")) as f:
-        live = [e["file"] for e in json.load(f)["files"]]
-    return {"_MANIFEST.json", *live,
-            *(os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
-              for p in live)}
+        return {"_MANIFEST.json", *(e["file"] for e in json.load(f)["files"])}
 
 
 def _files_on_disk(out):
@@ -275,13 +271,12 @@ class _Crash(Exception):
     pass
 
 
-# (object, attribute, the call that raises, the snapshot a reader then sees)
+# (function of sources/weather.py, whether the crash comes before or after
+# its first call, the snapshot a reader then sees)
 _COMMIT_STEPS = {
-    "after_spark_write": (os, "rename", 1, "old"),
-    "after_rename_1": (os, "rename", 2, "old"),
-    "after_rename_3": (os, "rename", 4, "old"),
-    "after_publish": (W, "_remove_files", 1, "new"),
-    "after_delete": (shutil, "rmtree", 1, "new"),
+    "after_executor_write": ("_publish_state", "before", "old"),
+    "after_publish": ("_remove_files", "before", "new"),
+    "after_delete": ("_remove_files", "after", "new"),
 }
 
 
@@ -295,16 +290,15 @@ def test_upsert_crash_leaves_old_or_new_table(spark, tmp_path, monkeypatch,
     W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
     batch = _clean(spark, str(tmp_path / "raw2"), 6, 10, bias=100.0,
                    suffix="b")
-    obj, attr, crash_at, expect = _COMMIT_STEPS[step]
-    real, calls = getattr(obj, attr), []
+    attr, when, expect = _COMMIT_STEPS[step]
+    real = getattr(W, attr)
 
-    def crashing(*args, **kwargs):
-        calls.append(args)
-        if len(calls) == crash_at:
-            raise _Crash(step)
-        return real(*args, **kwargs)
+    def crashing(*args):
+        if when == "after":
+            real(*args)
+        raise _Crash(step)
 
-    monkeypatch.setattr(obj, attr, crashing)
+    monkeypatch.setattr(W, attr, crashing)
     with pytest.raises(_Crash):
         W.upsert_clean(spark, out, batch)
     monkeypatch.undo()
@@ -319,19 +313,20 @@ def test_upsert_crash_leaves_old_or_new_table(spark, tmp_path, monkeypatch,
 
 def test_reader_sees_whole_table_during_upsert(spark, tmp_path, monkeypatch):
     """A reader that registers the view and counts while the upsert is
-    paused inside its commit sees every row."""
+    paused at its publish, its files written in place, sees every row."""
     out = str(tmp_path / "clean")
     W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
     batch = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0,
                    suffix="b")
-    real, seen = os.rename, []
+    real, seen = W._publish_state, []
 
-    def paused_rename(src, dst):
+    def paused_publish(path, state):
+        assert _files_on_disk(out) - _live_files(out)
         Q.register_clean_view(spark, out)
         seen.append(spark.table(Q.VIEW).count())
-        real(src, dst)
+        real(path, state)
 
-    monkeypatch.setattr(os, "rename", paused_rename)
+    monkeypatch.setattr(W, "_publish_state", paused_publish)
     W.upsert_clean(spark, out, batch)
     monkeypatch.undo()
     assert seen and set(seen) == {30}
@@ -346,17 +341,16 @@ def test_second_writer_fails_loudly(spark, tmp_path, monkeypatch):
     late = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0, suffix="b")
     early = _clean(spark, str(tmp_path / "raw3"), 1, 3, bias=200.0,
                    suffix="c")
-    real, late_files = os.rename, []
+    real, late_files = W._manifest_lock, set()
 
-    def late_rename(src, dst):
-        if not late_files:  # the late writer has read and written: pause
-            monkeypatch.setattr(os, "rename", real)
-            W.upsert_clean(spark, out, early)
-            monkeypatch.setattr(os, "rename", late_rename)
-        late_files.append(os.path.relpath(dst, out))
-        real(src, dst)
+    def late_lock(path):
+        # the late writer has read and written its files: pause
+        late_files.update(_files_on_disk(out) - _live_files(out))
+        monkeypatch.setattr(W, "_manifest_lock", real)
+        W.upsert_clean(spark, out, early)
+        return real(path)
 
-    monkeypatch.setattr(os, "rename", late_rename)
+    monkeypatch.setattr(W, "_manifest_lock", late_lock)
     with pytest.raises(M.ConcurrentWriteError, match="version"):
         W.upsert_clean(spark, out, late)
     monkeypatch.undo()
@@ -367,6 +361,86 @@ def test_second_writer_fails_loudly(spark, tmp_path, monkeypatch):
     assert len(rows) == 30
     for r in rows:
         assert (r["temperature_2m_max"] >= 200) == (r["date"].day <= 3)
+
+
+def _scd2_frame(spark, rows, effective_from):
+    """SCD2-shaped rows (location, ISO date, metric) of one location."""
+    return (spark.createDataFrame(rows, ["location", "date", "metric"])
+            .withColumn("date", F.to_date("date"))
+            .withColumn("island", F.lit("isl"))
+            .withColumn("location_name", F.lit("L"))
+            .withColumn("year", F.year("date"))
+            .withColumn("month", F.month("date"))
+            .withColumn("effective_from",
+                        F.lit(effective_from).cast("timestamp"))
+            .withColumn("effective_to", F.lit(None).cast("timestamp")))
+
+
+def test_every_writer_leaves_only_the_snapshot(spark, tmp_path):
+    """After each of the four table writers the directory holds the
+    manifest and the files it lists: no checksum sidecar, staging
+    directory or job marker."""
+    out = str(tmp_path / "t")
+    jan_feb = [("a", f"2024-{m:02d}-{d:02d}", 1.0)
+               for m in (1, 2) for d in range(1, 6)]
+    batch = _scd2_frame(spark, [("a", "2024-01-03", 2.0)], "2024-03-01")
+    W.write_clean(_scd2_frame(spark, jan_feb, "2024-02-01"), out)
+    assert _files_on_disk(out) == _live_files(out)
+    W.upsert_scd2(spark, out, batch.drop("effective_from", "effective_to"),
+                  batch_ts="2024-03-01T00:00:00")
+    assert _files_on_disk(out) == _live_files(out)
+    W.upsert_clean(spark, out, batch)
+    assert _files_on_disk(out) == _live_files(out)
+    W.compact_partitions(spark, out)
+    assert _files_on_disk(out) == _live_files(out)
+    assert W.read_clean(spark, out).count() == 10
+    with open(os.path.join(out, "_MANIFEST.json")) as f:
+        state = json.load(f)
+    assert sum(e["rows"] for e in state["files"]) == 10
+    del state["schema"]  # a manifest without a schema is not read
+    M._publish_state(out, state)
+    with pytest.raises(ValueError, match="records no schema"):
+        W.read_clean(spark, out)
+
+
+def test_partition_paths_and_rows_match_spark_partitionby(spark, tmp_path):
+    """Partition directory names, escaped characters and the null
+    partition included, and the rows read back equal what Spark's own
+    partitioned Parquet writer produces."""
+    names = ["a b", "c=d", "e%f", "g:h"]
+    df = spark.createDataFrame(
+        [("isl", n, None if i == 1 else 2024, 1, float(i))
+         for i, n in enumerate(names)],
+        "island string, location_name string, year int, month int, v double")
+    spark_out, out = str(tmp_path / "spark"), str(tmp_path / "table")
+    df.write.partitionBy(*W.PARTITION_COLS).parquet(spark_out)
+    W.write_clean(df, out)
+
+    def partitions(root):
+        return sorted(os.path.relpath(d, root) for d, _, fs in os.walk(root)
+                      if any(f.endswith(".parquet") for f in fs))
+
+    assert partitions(out) == partitions(spark_out)
+    assert "island=isl/location_name=c%3Dd/year=__HIVE_DEFAULT_PARTITION__" \
+        "/month=1" in partitions(out)
+    want = spark.read.parquet(spark_out)
+    got = W.read_clean(spark, out)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+
+
+def test_schema_round_trips(spark, tmp_path):
+    """The date, long, double, string and SCD2 timestamp columns read back
+    with their types and values."""
+    df = (_scd2_frame(spark, [("a", "2024-01-01", 1.5), ("b", "2024-01-02",
+                                                        None)], "2024-02-01")
+          .withColumn("code", F.col("year").cast("long") * 100))
+    out = str(tmp_path / "t")
+    W.write_clean(df, out)
+    back = W.read_clean(spark, out)
+    assert {f.name: f.dataType for f in back.schema} == \
+        {f.name: f.dataType for f in df.schema}
+    assert sorted(back.select(*df.columns).collect()) == sorted(df.collect())
 
 
 def test_manifest_publish_is_durable(tmp_path, monkeypatch):
@@ -390,9 +464,10 @@ def test_manifest_publish_is_durable(tmp_path, monkeypatch):
     assert calls == ["fsync", "replace", "fsync"]
 
 
-def test_register_clean_view_runs_one_job(spark, tmp_path):
+def test_register_clean_view_runs_no_job(spark, tmp_path):
     """The view over a manifest of more than 32 files (Spark's default
-    parallel-listing threshold) runs only the schema footer read."""
+    parallel-listing threshold) runs no job: the manifest records the
+    schema, so no file footer is read."""
     out = str(tmp_path / "clean")
     loc = F.concat(F.lit("L"), F.col("id").cast("string"))
     W.write_clean(spark.range(40).select(
@@ -409,5 +484,5 @@ def test_register_clean_view_runs_one_job(spark, tmp_path):
         Q.register_clean_view(spark, out)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert spark.table(Q.VIEW).count() == 40
