@@ -41,8 +41,7 @@ def long_array(vals: Iterable[int]) -> Column:
 
 def sqdist_sql(vec_sql: str, cent: Iterable[int]) -> str:
     """Integer squared-L2 fold of a BIGINT-array column against a literal
-    centroid — the ``zip_with``/``aggregate`` shape of
-    clustering._dist_units, as SQL text."""
+    centroid, as one ``zip_with``/``aggregate`` SQL expression."""
     return (f"aggregate(zip_with({vec_sql}, {long_array_sql(cent)}, "
             f"(x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)")
 

@@ -19,9 +19,10 @@ learns the merge table itself, byte-pair-encoding style (Sennrich et al.
    same bounded-scalar class as connected_components' convergence count).
 
 Scale shape: `n_merges` rounds x (one pair-count shuffle over the vocab
-+ one narrow map to rewrite symbol arrays), with localCheckpoint cutting
-lineage each round. The vocab table is hash-partitioned once and stays
-put; pair counting is a plain aggregate, so AQE handles skewed pairs.
++ one narrow map to rewrite symbol arrays), with a materialization
+cutting lineage every other round. The vocab table is hash-partitioned
+once and stays put; pair counting is a plain aggregate, so AQE handles
+skewed pairs.
 
 Determinism: counts are integer sums (order-free) and the tie-break is
 total, so the merge sequence is bit-reproducible — pinned by an
@@ -38,26 +39,36 @@ from ..functions.litexpr import (
     string_int_map_sql,
     string_literal_sql,
 )
+from ..session import materialize
 
 # end-of-word marker, appended as a distinct final symbol so merges can
 # learn suffixes ("ing</w>") without crossing word boundaries
 EOW = "</w>"
 
+# The encoders materialize the partially merged symbol arrays every this
+# many merges. One nested fold per merge grows the expression tree with
+# the merge list, and Catalyst's project collapsing would re-inline
+# intermediate projections, so the cut caps codegen input per stage.
+FOLD_CADENCE = 64
+
+
+def _words(text_col: str) -> F.Column:
+    """The tokenizer of training, both encoders and the test reference:
+    lowercase, trim ASCII space, split on Java-default \\s+ — the ASCII
+    class [ \\t\\n\\x0B\\f\\r]. Unicode whitespace (U+00A0, U+2028, ...)
+    is NOT a separator; corpora that need it should normalize whitespace
+    upstream (operators/text.py cleaning) rather than rely on the
+    tokenizer, so the rule stays bit-reproducible across engines and the
+    Python reference twin (re.ASCII \\s+)."""
+    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus → (word, n, syms): word frequencies with each word as its
     initial symbol array (characters + end-of-word marker).
-
-    Tokenization rule (DOCUMENTED, shared by bpe_encode_len and the test
-    reference): lowercase, trim ASCII space, split on Java-default \\s+
-    — the ASCII class [ \\t\\n\\x0B\\f\\r]. Unicode whitespace
-    (U+00A0, U+2028, ...) is NOT a separator; corpora that need it should
-    normalize whitespace upstream (operators/text.py cleaning) rather
-    than rely on the tokenizer, so the rule stays bit-reproducible across
-    engines and the Python reference twin (re.ASCII \\s+)."""
-    words = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-        .alias("word")).filter(F.col("word") != "")
+    Words come from the shared tokenizer ``_words``."""
+    words = (docs.select(F.explode(_words(text_col)).alias("word"))
+             .filter(F.col("word") != ""))
     return (
         words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
         .withColumn(
@@ -107,6 +118,23 @@ def _merge_pair(vocab: DataFrame, left: str, right: str) -> DataFrame:
                             F.expr(_merge_fold_sql("syms", left, right)))
 
 
+def _fold_merges(words: DataFrame, key: str,
+                 merges: list[tuple[str, str]]) -> tuple[DataFrame, str]:
+    """Fold ``merges`` in learned order over each ``word``'s initial symbol
+    array. Returns ``(frame, sql)``: ``sql`` is the merged symbol array
+    over ``frame``. Every ``FOLD_CADENCE`` merges the partial arrays are
+    materialized as ``(key, __syms)`` and folding resumes from that
+    column."""
+    col_sql = f"concat(split(word, ''), array({string_literal_sql(EOW)}))"
+    for i, (left, right) in enumerate(merges):
+        col_sql = _merge_fold_sql(col_sql, left, right)
+        if (i + 1) % FOLD_CADENCE == 0 and (i + 1) < len(merges):
+            words = materialize(
+                words.select(key, F.expr(col_sql).alias("__syms")))
+            col_sql = "__syms"
+    return words, col_sql
+
+
 def bpe_train(docs: DataFrame, text_col: str = "text",
               n_merges: int = 10, min_pair_count: int = 2) -> DataFrame:
     """Learn `n_merges` BPE merges; returns the merge table
@@ -114,7 +142,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
     no pair reaches `min_pair_count` (merging hapax adjacencies is
     noise). The returned table is what a tokenizer ships."""
     spark = docs.sparkSession
-    vocab = word_freq_table(docs, text_col).localCheckpoint(eager=True)
+    vocab = materialize(word_freq_table(docs, text_col))
     rows = []
     for rank in range(n_merges):
         top = (_pair_counts(vocab)
@@ -132,7 +160,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
         # scheduling floor that dominates on vocab-sized data (results
         # unchanged — the pair-count aggregate realizes the folds anyway)
         if rank % 2 == 1:
-            vocab = vocab.localCheckpoint(eager=True)
+            vocab = materialize(vocab)
     return spark.createDataFrame(
         rows, "rank INT, left STRING, right STRING, merged STRING, "
               "pair_n BIGINT")
@@ -140,8 +168,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
 
 def bpe_encode_len(docs: DataFrame, merges: list[tuple[str, str]],
                    id_col: str = "doc_id", text_col: str = "text",
-                   out_col: str = "n_bpe",
-                   checkpoint_every: int = 64) -> DataFrame:
+                   out_col: str = "n_bpe") -> DataFrame:
     """Apply a learned merge list and report per-document token counts —
     the budget number sequence packing consumes. Word-level, mirroring
     training: explode words, fold each word's symbol array through the
@@ -149,31 +176,16 @@ def bpe_encode_len(docs: DataFrame, merges: list[tuple[str, str]],
     pair INLINED as literals), then sum symbols per document.
     Returns (id_col, out_col).
 
-    Plan-size bound: one nested fold per merge means the expression tree
-    grows linearly with the merge list, and Catalyst's project-collapsing
-    would re-inline intermediate projections — so every
-    ``checkpoint_every`` merges the symbol column is materialized with
-    localCheckpoint, capping codegen input at a constant per stage. That
-    keeps hundreds of merges feasible; for realistic tokenizer sizes
-    (10k+ merges) this whole-fold-per-merge shape is the wrong algorithm
-    regardless of plan size — use an Arrow-batched encoder that applies
-    the (broadcast) merge table per word in Python (rank-priority merge,
-    the standard BPE encode), which is O(len·#applied-merges) per word
-    instead of O(len·#all-merges)."""
-    words = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-        .alias("word")).filter(F.col("word") != "")
-    col_sql = f"concat(split(word, ''), array({string_literal_sql(EOW)}))"
-    cur = words
-    for i, (left, right) in enumerate(merges):
-        col_sql = _merge_fold_sql(col_sql, left, right)
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < len(merges):
-            # cut the expression tree: materialize the partially-merged
-            # symbol arrays, then keep folding from the stored column
-            cur = (cur.select(id_col, F.expr(col_sql).alias("__syms"))
-                   .localCheckpoint(eager=True))
-            col_sql = "__syms"
+    Plan-size bound: the symbol column is materialized every
+    ``FOLD_CADENCE`` merges, which keeps hundreds of merges feasible; for
+    realistic tokenizer sizes (10k+ merges) this whole-fold-per-merge
+    shape is the wrong algorithm regardless of plan size — use an
+    Arrow-batched encoder that applies the (broadcast) merge table per
+    word in Python (rank-priority merge, the standard BPE encode), which
+    is O(len·#applied-merges) per word instead of O(len·#all-merges)."""
+    words = (docs.select(id_col, F.explode(_words(text_col)).alias("word"))
+             .filter(F.col("word") != ""))
+    cur, col_sql = _fold_merges(words, id_col, merges)
     counts = (cur.select(id_col,
                          F.expr(f"size({col_sql})").alias("__w_toks"))
               .groupBy(id_col)
@@ -188,8 +200,8 @@ def bpe_encode_len(docs: DataFrame, merges: list[tuple[str, str]],
 
 def bpe_encode_ids(docs: DataFrame, merges: list[tuple[str, str]],
                    vocab: dict[str, int], id_col: str = "doc_id",
-                   text_col: str = "text", out_col: str = "token_ids",
-                   checkpoint_every: int = 64) -> DataFrame:
+                   text_col: str = "text",
+                   out_col: str = "token_ids") -> DataFrame:
     """Apply a learned merge list and emit the per-document TOKEN-ID
     ARRAYS — the actual pretraining artifact (bpe_encode_len only reports
     the budget number). Returns (id_col, out_col array<bigint>, n_tokens).
@@ -205,19 +217,11 @@ def bpe_encode_ids(docs: DataFrame, merges: list[tuple[str, str]],
 
     ID mapping: symbols missing from ``vocab`` map to -1 (UNK). Lookup is
     ``try_element_at`` so ANSI mode cannot throw on unknown symbols."""
-    words = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-        .alias("pos", "word")).filter(F.col("word") != "")
-    wv = words.select("word").distinct()
-    col_sql = f"concat(split(word, ''), array({string_literal_sql(EOW)}))"
-    cur = wv
-    for i, (left, right) in enumerate(merges):
-        col_sql = _merge_fold_sql(col_sql, left, right)
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < len(merges):
-            cur = (cur.select("word", F.expr(col_sql).alias("__syms"))
-                   .localCheckpoint(eager=True))
-            col_sql = "__syms"
+    words = (docs.select(id_col,
+                         F.posexplode(_words(text_col)).alias("pos", "word"))
+             .filter(F.col("word") != ""))
+    cur, col_sql = _fold_merges(words.select("word").distinct(), "word",
+                                merges)
     # vocab lookup as ONE parsed map literal (the create_map build paid
     # two py4j round-trips per vocab entry)
     encoded = cur.select(

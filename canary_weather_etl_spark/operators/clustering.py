@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.litexpr import argmin_struct_sql, sqdist_sql
+from ..functions.litexpr import argmin_struct_sql
 
 UNIT_SCALE = 1_000_000
 # largest k assigned by the literal-centroid argmin (module docstring)
@@ -77,16 +77,6 @@ def quantize_vectors(df: DataFrame, id_col: str = "vec_id",
                               + F.lit(0.5)).cast("long"),
         ).alias("qvec"),
     )
-
-
-def _dist_units(cent: list[int]):
-    """Integer squared L2 distance from `qvec` to one literal centroid —
-    a zip_with/aggregate fold, fully inside whole-stage codegen. Built
-    from ONE JVM-parsed SQL string (functions.litexpr, r14): the former
-    element-wise F.lit(v).cast 'long' construction paid two py4j
-    round-trips per centroid element, which dominated driver wall on the
-    iterative callers (the tree is rebuilt every Lloyd round)."""
-    return F.expr(sqdist_sql("qvec", cent))
 
 
 def assign_clusters(qdf: DataFrame, centroids: dict[int, list[int]]) -> DataFrame:

@@ -21,14 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .text import TOKEN_SPLIT_RE
-
-
-def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Exact dedup on a column set: keep one row per key (dropDuplicates).
-    At scale this is one hash-shuffle on the key; prefer a content hash
-    (xxhash64) as the key for long text so the shuffle moves 8 bytes/row."""
-    return df.dropDuplicates(key_cols)
 
 
 def dup_groups(df: DataFrame, id_col: str, key: F.Column) -> DataFrame:
@@ -266,7 +260,7 @@ def verify_pairs_jaccard(sets: DataFrame, pairs: DataFrame,
     # re-runs the banded self-join lineage upstream — measured OOM at
     # the 1000x decade before this checkpoint landed. Candidate-sized,
     # so the materialization is small by the LSH contract.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs)
     adocs = pairs.select(F.col("a").alias("doc")).distinct()
     bdocs = pairs.select(F.col("b").alias("doc")).distinct()
     # GUARDED broadcast on the candidate-doc lists (r14). Unconditional
@@ -310,13 +304,13 @@ def near_dup_pairs_minhash(df: DataFrame, id_col: str, text_col: str,
     Jaccard verification ≥ threshold. The canonical LLM-corpus near-dedup.
     Every stage (signatures → banding → candidate join → verification)
     is bit-reproducible by a SQL oracle."""
-    # materialized once (localCheckpoint, not cache — its blocks release
+    # materialized once (a checkpoint, not cache — it is released
     # on GC, so a long session running many queries doesn't accumulate
     # cached partitions): the set frame feeds signature banding (self-join
     # → 2 consumers) and both sides of verification — unmaterialized the
     # ngram+hash projection recomputes 4x (no shuffle boundary means no
     # exchange reuse).
-    sets = shingle_sets(df, id_col, text_col, n).localCheckpoint(eager=True)
+    sets = materialize(shingle_sets(df, id_col, text_col, n))
     sigs = minhash_signatures_from_sets(sets, num_hashes)
     cands = lsh_candidate_pairs(sigs, bands, num_hashes)
     return verify_pairs_jaccard(sets, cands, threshold=threshold)
@@ -610,7 +604,7 @@ def near_dup_pairs_simhash(df: DataFrame, id_col: str, text_col: str,
     """SimHash near-dup pipeline at 100 TB shape: signatures (one explode +
     one groupBy) → pigeonhole band buckets (equi self-join, exact recall)
     → Hamming verification on candidates only. Output (a, b, hamming)."""
-    sig = simhash(df, id_col, text_col, bits).localCheckpoint(eager=True)
+    sig = materialize(simhash(df, id_col, text_col, bits))
     cands = simhash_candidate_pairs(sig, bits, max_hamming)
     out = (
         cands
@@ -731,7 +725,7 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
     import os
 
     sp = batch.sparkSession
-    batch = batch.localCheckpoint(eager=True)
+    batch = materialize(batch)
 
     if state_dir is not None:
         bsets = shingle_sets(batch, "doc_id", "text", n)
@@ -740,7 +734,7 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
                             F.explode("sh").alias("shingle"))
                .withColumn("bucket",
                            F.pmod(F.xxhash64("shingle"), F.lit(buckets)))
-               .localCheckpoint(eager=True))
+               .transform(materialize))
         # exact gate: prune the hash scan to the batch's md5 buckets
         bh = (batch.select("doc_id", F.md5("text").alias("h"))
               .withColumn("hb", F.pmod(F.xxhash64("h"), F.lit(buckets))))
@@ -769,7 +763,7 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
                 .groupBy("doc_id")
                 .agg(F.count(F.lit(1)).alias("n_near")))
     else:
-        corpus = sp.read.parquet(corpus_dir).localCheckpoint(eager=True)
+        corpus = materialize(sp.read.parquet(corpus_dir))
         exact = (batch.select("doc_id", F.md5("text").alias("h"))
                  .join(corpus.select(F.md5("text").alias("h")).distinct(),
                        "h", "left_semi")
@@ -792,7 +786,7 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
              .when(F.coalesce("n_near", F.lit(0)) > 0, "near_dup")
              .otherwise("admit").alias("verdict"),
             F.coalesce("n_near", F.lit(0).cast("bigint")).alias("n_near"))
-        .localCheckpoint(eager=True))
+        .transform(materialize))
 
     if not writeback:
         return verdicts
@@ -941,12 +935,12 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
     import os
 
     sp = batch.sparkSession
-    batch = batch.localCheckpoint(eager=True)
+    batch = materialize(batch)
     bsets = shingle_sets(batch, "doc_id", "text", n)
     bsigs = minhash_signatures_from_sets(bsets, num_hashes)
     bbands = (portable_band_table(bsigs, bands, num_hashes)
               .select(F.col("doc").alias("bdoc"), "band", "band_hash")
-              .localCheckpoint(eager=True))
+              .transform(materialize))
 
     # exact gate — identical to the postings screen's
     bh = (batch.select("doc_id", F.md5("text").alias("h"))
@@ -973,7 +967,7 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
                   .filter(F.col("bucket").isin(b_touched)))
         cands = (bbands.join(sbands, ["band", "band_hash"])
                  .select("bdoc", F.col("doc").alias("cdoc")).distinct()
-                 .localCheckpoint(eager=True))
+                 .transform(materialize))
     else:  # empty batch
         cands = sp.createDataFrame([], "bdoc BIGINT, cdoc BIGINT")
 
@@ -1016,7 +1010,7 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
              .when(F.coalesce("n_near", F.lit(0)) > 0, "near_dup")
              .otherwise("admit").alias("verdict"),
             F.coalesce("n_near", F.lit(0).cast("bigint")).alias("n_near"))
-        .localCheckpoint(eager=True))
+        .transform(materialize))
 
     if not writeback:
         return verdicts
@@ -1235,7 +1229,7 @@ def near_dup_pairs_exact(df: DataFrame, id_col: str, text_col: str,
     wider cluster both sides scale with width: raise proportionally. A
     negative budget always takes the prefix path."""
     sets = shingle_sets(df, id_col, text_col, n=n)
-    sets = sets.localCheckpoint(eager=True)  # probe + both paths consume it
+    sets = materialize(sets)  # probe + both paths consume it
     c_all = estimate_allpairs_candidates(sets)
     if c_all <= allpairs_candidate_budget:
         sh = sets.select("doc", F.explode("sh").alias("shingle"))

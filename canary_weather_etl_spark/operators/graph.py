@@ -13,7 +13,7 @@ shallow (diameter rarely exceeds a handful of hops even for large
 clusters, because near-dup similarity is close to transitive), so 3-5
 rounds settle real corpora. Per round: one shuffle for the
 edges-to-labels join + one for the min aggregation, both keyed on node
-id, and the label frame is `localCheckpoint`ed to truncate lineage (an
+id, and the label frame is materialized to truncate lineage (an
 unbounded iterative plan otherwise re-executes every prior round and
 eventually overwhelms the optimizer). For adversarially long chains
 (diameter ~ n) the alternating large-star/small-star contraction of
@@ -33,6 +33,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
+
+# pagerank_fixed materializes its ranks every this many rounds (and after
+# the last). A few stacked rounds are still optimizer-cheap, and each
+# skipped materialization saves one eager job's scheduling floor, which
+# dominates wall time on small graphs. Ranks are integer math, hence
+# bit-identical at any cadence (tests/test_r6_ops.py); the knee is
+# measured in BENCHNOTES.md and OPTIMIZATION_r15.md. Unbounded stacking
+# is not free: plan size grows linearly with stacked rounds.
+PAGERANK_CADENCE = 3
 
 
 def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
@@ -63,7 +74,7 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .repartition("dst").sortWithinPartitions("dst")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     if nodes is None:
         labels = (edges.select(F.col("src").alias("id")).distinct()
@@ -71,7 +82,7 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
     else:
         labels = (nodes.select(F.col(id_col).alias("id")).distinct()
                   .withColumn("label", F.col("id")))
-    labels = labels.localCheckpoint(eager=True)
+    labels = materialize(labels)
 
     for _ in range(max_iter):
         nbr_min = (
@@ -87,7 +98,7 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
                 (F.col("nbr_min") < F.col("label")).alias("_chg"),
             )
         )
-        updated = updated.localCheckpoint(eager=True)
+        updated = materialize(updated)
         changed = updated.agg(
             F.sum(F.when(F.col("_chg"), 1).otherwise(0)).alias("n")
         ).collect()[0]["n"]
@@ -126,8 +137,7 @@ def pagerank_fixed(edges: DataFrame, nodes: DataFrame,
                    id_col: str = "id",
                    iterations: int = 5,
                    unit_scale: int = 1_000_000,
-                   damping_num: int = 17, damping_den: int = 20,
-                   checkpoint_every: int = 3) -> DataFrame:
+                   damping_num: int = 17, damping_den: int = 20) -> DataFrame:
     """Fixed-iteration PageRank in integer fixed-point arithmetic.
 
     Every rank is held in integer "units" (``unit_scale`` units = rank
@@ -166,12 +176,12 @@ def pagerank_fixed(edges: DataFrame, nodes: DataFrame,
           .withColumn("out_deg",
                       F.count(F.lit(1)).over(Window.partitionBy("src")))
           .sortWithinPartitions("src")
-          .localCheckpoint(eager=True))
+          .transform(materialize))
     base_units = (unit_scale * (damping_den - damping_num)) // damping_den
 
     ranks = (nodes.select(F.col(id_col).alias("node")).distinct()
              .withColumn("units", F.lit(unit_scale).cast("long"))
-             .localCheckpoint(eager=True))
+             .transform(materialize))
     for it in range(iterations):
         # `div`, never `/`: float quotients round to nearest double and can
         # cross an integer boundary, breaking bit-parity with the oracle's
@@ -192,18 +202,9 @@ def pagerank_fixed(edges: DataFrame, nodes: DataFrame,
                           f"div {damping_den}"))
                 .alias("units"))
         )
-        # materialize every ``checkpoint_every`` rounds (and the last):
-        # a few stacked rounds are still optimizer-cheap, and each skipped
-        # checkpoint saves one eager job's scheduling floor — which
-        # dominates wall time on small graphs. Results are integer math,
-        # hence bit-identical at ANY cadence (asserted in
-        # tests/test_r6_ops.py); the cadence knee is measured in
-        # BENCHNOTES.md (scripts/pagerank_cadence.py). Unbounded stacking
-        # is NOT free — plan size grows linearly with stacked rounds — so
-        # cadence stays a small constant rather than iterations.
-        if it % checkpoint_every == checkpoint_every - 1 \
+        if it % PAGERANK_CADENCE == PAGERANK_CADENCE - 1 \
                 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -283,7 +284,7 @@ def bfs_hop_levels(edges: DataFrame, max_hops: int = 4,
     Scale shape: classic frontier expansion — per hop one equi-join
     (frontier ⨝ edges on src: the frontier is small, Spark broadcasts it
     when it fits, AQE decides at runtime) + one distinct + one left_anti
-    against the visited set. The visited set is localCheckpoint-ed each
+    against the visited set. The visited set is materialized each
     round, so lineage stays flat and each round's anti-join probes a
     materialized table, not a growing plan. Hop count is fixed and small
     (the use cases above are k≤6); min-hop semantics make the result
@@ -292,18 +293,18 @@ def bfs_hop_levels(edges: DataFrame, max_hops: int = 4,
     no driver round-trip.
     """
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .localCheckpoint(eager=True))
+         .transform(materialize))
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node"))).distinct())
     source = nodes.agg(F.min("node").alias("node"))
     visited = (source.withColumn("hop", F.lit(0).cast("int"))
-               .localCheckpoint(eager=True))
+               .transform(materialize))
     frontier = visited
     for h in range(1, max_hops + 1):
         nxt = (frontier.join(e, frontier["node"] == e["src"])
                .select(F.col("dst").alias("node")).distinct()
                .join(visited.select("node"), "node", "left_anti")
                .withColumn("hop", F.lit(h).cast("int")))
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = materialize(visited.unionByName(nxt))
         frontier = visited.filter(F.col("hop") == h)
     return visited

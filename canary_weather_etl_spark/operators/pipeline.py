@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .dedup import lsh_candidate_pairs, minhash_signatures_from_sets, shingle_sets, verify_pairs_jaccard
 from .text import lang_id, quality_ok
 
@@ -131,7 +132,7 @@ def curation_survivors(
              .drop("__h", "__keep"))
 
     # 3. near-dup removal: LSH candidates → verified pairs → drop b-side
-    sets = shingle_sets(exact, id_col, text_col, n=2).localCheckpoint(eager=True)
+    sets = materialize(shingle_sets(exact, id_col, text_col, n=2))
     sigs = minhash_signatures_from_sets(sets, num_hashes=32)
     cands = lsh_candidate_pairs(sigs, bands=8, num_hashes=32)
     dup_pairs = verify_pairs_jaccard(sets, cands,

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.litexpr import int_map_sql
+from ..session import materialize
 
 
 def global_rank(df: DataFrame, order: list[Column],
@@ -37,19 +38,19 @@ def global_rank(df: DataFrame, order: list[Column],
 
     n = n_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions")
-    # localCheckpoint (eager) pins the range partitioning: RangePartitioner
+    # materialize pins the range partitioning: RangePartitioner
     # SAMPLES its boundaries, so the count job and the rank job would
     # otherwise see different partitionings of a recomputed frame (ranks
     # then gap or collide — observed, not hypothetical). Unlike cache(),
-    # a checkpoint severs lineage: if the materialized blocks are lost the
-    # job FAILS instead of silently recomputing with fresh boundaries
-    # (ADVICE r2 — cache eviction yielded gapped/duplicated ranks), and the
-    # blocks are released when the frame is garbage-collected rather than
-    # accumulating across calls. At production scale a staged table write
-    # gives the same pinning with executor-loss resilience.
+    # a checkpoint severs lineage: lost rows are never silently recomputed
+    # with fresh boundaries (ADVICE r2 — cache eviction yielded
+    # gapped/duplicated ranks). A reliable checkpoint (spark.checkpoint.dir
+    # set) survives executor loss; a local one FAILS the job instead. Either
+    # is released when the frame is garbage-collected rather than
+    # accumulating across calls.
     ranged = (df.repartitionByRange(int(n), *order)
               .withColumn("__pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))
+              .transform(materialize))
 
     # offsets: one row per partition — driver-side scalars, O(#partitions)
     counts = {r["__pid"]: r["n"] for r in
@@ -91,7 +92,7 @@ def global_cumsum(df: DataFrame, order: list[Column], value: str,
         "spark.sql.shuffle.partitions")
     ranged = (df.repartitionByRange(int(n), *order)
               .withColumn("__pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))
+              .transform(materialize))
 
     sums = {r["__pid"]: r["s"] for r in
             ranged.groupBy("__pid")

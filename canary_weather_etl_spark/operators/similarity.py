@@ -28,6 +28,7 @@ from ..functions.litexpr import (
     double_array_sql,
     long_array_sql,
 )
+from ..session import materialize
 
 
 def as_double(col: F.Column | str) -> F.Column:
@@ -884,13 +885,13 @@ def _ivfadc_build(embeddings: DataFrame, query_ids: list[int], id_col: str,
     # one materialization feeds the residuals and the query rows
     # (GC-released blocks)
     qdf = (quantize_vectors(embeddings, id_col, vec_col)
-           .localCheckpoint(eager=True))
+           .transform(materialize))
     cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
         embeddings, n_lists, ivf_iterations, id_col, vec_col)
     # bounded driver collect: n_lists × dims ints (the persisted model)
     cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
              for r in cdf.collect()}
-    rdf = ivf_residuals(qdf, cents).localCheckpoint(eager=True)
+    rdf = materialize(ivf_residuals(qdf, cents))
     qrows = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
              for r in qdf.filter(
                  F.col("vec_id").isin(*[int(q) for q in query_ids]))
@@ -1069,7 +1070,7 @@ def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
                                            iterations=pq_iterations)
             codes = pq_encode(rdf, books)
             if uses[(m, pq_k)] > 1:
-                codes = codes.localCheckpoint(eager=True)
+                codes = materialize(codes)
             codes_by_mk[(m, pq_k)] = (books, codes)
         books, codes = codes_by_mk[(m, pq_k)]
         # a query's own list is its nearest, so it is always probed:

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.litexpr import long_array
+from ..session import materialize
 
 # 1e3 coordinate units (not clustering.UNIT_SCALE's 1e6): Gram entries
 # are sums of coordinate PRODUCTS, so unit scale enters squared —
@@ -190,7 +191,7 @@ def pca_power_projection(embeddings: DataFrame, id_col: str = "vec_id",
     want = centered.sparkSession.sparkContext.defaultParallelism
     if par < want:
         centered = centered.repartition(want)
-    centered = centered.localCheckpoint(eager=True)  # feeds Gram + attach
+    centered = materialize(centered)  # feeds Gram + attach
 
     gram = gram_matrix(centered, dims)
     v = power_iterate(gram, iterations=iterations)
@@ -334,7 +335,7 @@ def pca_top2_projection(embeddings: DataFrame, id_col: str = "vec_id",
     want = centered.sparkSession.sparkContext.defaultParallelism
     if par < want:
         centered = centered.repartition(want)
-    centered = centered.localCheckpoint(eager=True)
+    centered = materialize(centered)
 
     gram = gram_matrix(centered, dims)
     v1 = power_iterate(gram, iterations=iterations)

@@ -186,23 +186,6 @@ def fingerprint_hash(col: Column | str) -> Column:
     return F.xxhash64(fingerprint(col))
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass profile: every metric above as columns. Single narrow
-    projection — no shuffle, fully codegen'd."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpe_ish_token_count(c).alias("n_bpe_tokens"),
-        avg_word_len(c).alias("avg_word_len"),
-        stopword_ratio(c).alias("stop_ratio"),
-        punct_ratio(c).alias("punct_ratio"),
-        quality_ok(c).alias("quality_ok"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fp"),
-    )
-
-
 # ------------------- character n-gram LM quality score ----------------------
 
 def char_trigrams(col_name: str) -> Column:

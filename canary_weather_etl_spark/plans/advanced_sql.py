@@ -29,6 +29,7 @@ from ..operators.graph import (
     orient_by_degree,
     pagerank_fixed,
 )
+from ..session import materialize
 from .registry import load, register
 
 
@@ -384,8 +385,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole blocking + cell-cap + pair-count pipeline (the expensive
     # phase), so the events scan ran 12x with 50 exchanges and 0 reused.
     # Same recompute-vs-materialize fix pagerank_fixed applies per
-    # iteration (operators/graph.py localCheckpoint cadence).
-    edges = edges.localCheckpoint(eager=True)
+    # iteration (operators/graph.py PAGERANK_CADENCE).
+    edges = materialize(edges)
     # (deg, id)-lexicographic re-orientation before enumeration: triangle
     # membership is orientation-invariant (any acyclic orientation counts
     # each triangle once), but on skewed degree distributions it collapses
@@ -401,7 +402,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lesson applied one level up). Values unchanged: orientation is a
     # deterministic row-wise relabeling.
     tri = enumerate_triangles(
-        orient_by_degree(edges).localCheckpoint(eager=True))
+        materialize(orient_by_degree(edges)))
     members = tri.select(
         F.explode(F.array("a_id", "b_id", "c_id")).alias("user_id"))
     return (
@@ -475,7 +476,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
         "order-free, so the result is also reproducible across "
         "partitionings and retries at cluster scale. Per iteration: one "
         "equi-join edges⨝ranks on src + one groupBy dst — two shuffles on "
-        "stable keys, lineage cut by localCheckpoint. Node ids are "
+        "stable keys, lineage cut by materialize. Node ids are "
         "parity-encoded (2k / 2k+1) to disjoin the two key spaces.",
     tags=("graph", "iterative"), bench=True,
 )

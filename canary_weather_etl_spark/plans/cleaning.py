@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .registry import load, register
 
 # --- PII redaction -----------------------------------------------------------
@@ -309,7 +310,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         nl, F.lit("(c) "), F.col("source"), F.lit(" all rights reserved"))
     lines = (d.select("doc_id", "source",
                       F.explode(F.split(dirty, "\n")).alias("line"))
-             .localCheckpoint(eager=True))
+             .transform(materialize))
     srcn = lines.groupBy("source").agg(
         F.countDistinct("doc_id").alias("n_docs"))
     freq = lines.groupBy("source", "line").agg(

@@ -21,6 +21,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as T
 from ..functions import round_det
+from ..session import materialize
 from .registry import load, load_par, register
 
 # ---- generated SQL fragments (single source of truth with operators.text) -
@@ -229,7 +230,7 @@ _JACCARD_SQL = r"""
         "transitive pairwise (A~B, B~C ⇏ A~C detected). Spark side is "
         "iterative min-label propagation (operators/graph.py) — "
         "O(diameter) rounds of equi-shuffle join + min agg with "
-        "localCheckpoint lineage truncation; oracle is a DuckDB recursive "
+        "materialize lineage truncation; oracle is a DuckDB recursive "
         "CTE computing min reachable label. Every document gets a row "
         "(singletons are their own keeper), so the output doubles as the "
         "dedup audit trail.",
@@ -308,7 +309,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the batch/corpus split feeds FIVE consumers (exact-hash
     # semi-join both sides, two shingle tables, final verdict join) —
     # uncached the census showed 7 corpus scans for one admission pass
-    d = load_par(spark, sf_dir, "documents").localCheckpoint(eager=True)
+    d = materialize(load_par(spark, sf_dir, "documents"))
     batch = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     exact = (
@@ -1031,7 +1032,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus + query set cached: FOUR ANN methods below each consume both
     # (plus the exact baseline) — uncached, the plan census showed the
     # embeddings scan repeated 30x across the composed measurement
-    e = load_par(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
+    e = materialize(load_par(spark, sf_dir, "embeddings"))
     q = (e.filter(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("query_id"), "embedding")).cache()
     exact = S.topk_brute_force(e, q, k=10).select("query_id", "vec_id").cache()
@@ -1116,7 +1117,7 @@ def clustered_embeddings(e: DataFrame, dim: int = 64,
 )
 def q_sim_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = clustered_embeddings(load_par(spark, sf_dir,
-                                      "embeddings")).localCheckpoint(eager=True)
+                                      "embeddings")).transform(materialize)
     q = (e.filter(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("query_id"), "embedding")).cache()
     exact = S.topk_brute_force(e, q, k=10).select("query_id", "vec_id").cache()

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..session import materialize
 from .llm import _ivf_quantizer_path, clustered_embeddings
 from .r10_queries import _admission_round_sql, _grams_sql
 from .registry import load, load_par, register
@@ -253,8 +254,8 @@ def _sweep_rows(regime: str, e: DataFrame, grid: list,
     tags=("llm", "similarity", "approx", "quality"),
 )
 def q_sim_ann_ivfpq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_par(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
-    clustered = clustered_embeddings(raw).localCheckpoint(eager=True)
+    raw = materialize(load_par(spark, sf_dir, "embeddings"))
+    clustered = materialize(clustered_embeddings(raw))
     # Content fingerprint for every sweep-owned cache key (the
     # _corpus_fingerprint discipline, embeddings-shaped): count +
     # vec_id sum + an xxhash64 fold over (vec_id, embedding-as-string).

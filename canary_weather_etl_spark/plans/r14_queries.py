@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.pipeline import chunk_stage, curation_survivors
+from ..session import materialize
 from .llm import _curation_chunk_select, _curation_survivors_cte
 from .r13_queries import _MIX_DRIFT_SQL, mix_weights_drift_adjusted, mix_weights_from_counts
 from .registry import load, load_par, register
@@ -124,7 +125,7 @@ def curate_corpus_drift_mix(docs: DataFrame,
     the quotas are all NULL and the epoch is empty (matching the base
     entry's degenerate-mix NULL routing).
 
-    Scale shape: survivors is localCheckpointed once — three consumers
+    Scale shape: survivors is materialized once — three consumers
     (the drift term-count pass, the per-source doc counts, the ranked
     pick) would otherwise each re-run the gate → dedup → near-dup
     lineage, the exact class the r9 semi-join fix and the r13 pairs
@@ -134,7 +135,7 @@ def curate_corpus_drift_mix(docs: DataFrame,
     surv = curation_survivors(
         docs, id_col=id_col, text_col=text_col, keep_langs=keep_langs,
         min_tokens=min_tokens,
-        near_dup_threshold=near_dup_threshold).localCheckpoint(eager=True)
+        near_dup_threshold=near_dup_threshold).transform(materialize)
     quota = (mix_weights_drift_adjusted(surv)
              .select(source_col, "docs_per_epoch"))
     rn = F.row_number().over(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import round_det
+from ..session import materialize
 from .advanced_sql import coactivity_edges
 from .registry import load, load_par, register
 
@@ -119,7 +120,7 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second scan-and-aggregate of part
     pts = (p.groupBy("p_brand", "p_size", "p_retailprice")
            .agg(F.count(F.lit(1)).alias("n_parts"))
-           .localCheckpoint(eager=True))
+           .transform(materialize))
     # cheapest point per (brand, size): within a size, any pricier point
     # is dominated by this one (same size, lower price). Derived from the
     # ALREADY-AGGREGATED pts, not a second scan of part — the aggregate-
@@ -195,7 +196,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # third scan for a compact spill, the standard choice at fact scale
     dev = (ev.join(F.broadcast(med), "event_type")
            .withColumn("adev", F.abs(F.col("value") - F.col("med")))
-           .localCheckpoint(eager=True))
+           .transform(materialize))
     mad = dev.groupBy("event_type").agg(
         F.expr("percentile(adev, 0.5)").alias("mad"))
     return (
@@ -284,7 +285,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_uni = uni.agg(F.sum("c").cast("double").alias("__nu"))
     big = (bigrams.groupBy("p.w1", "p.w2")
            .agg(F.count(F.lit(1)).alias("c_ab"))
-           .localCheckpoint(eager=True))  # feeds bi AND n_bi
+           .transform(materialize))  # feeds bi AND n_bi
     bi = big.filter(F.col("c_ab") >= 10)
     n_bi = big.agg(F.sum("c_ab").cast("double").alias("__nb"))
     ua = uni.select(F.col("term").alias("w1"), F.col("c").alias("c_a"))
@@ -378,7 +379,7 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the shared-shingle self-join — uncached, the whole
     # shingle+distinct+max-df pipeline would execute four times (the
     # recompute-before-self-join anti-pattern q_triangle_count hit in r5)
-    g = grams.join(keep, "shingle").localCheckpoint(eager=True)
+    g = materialize(grams.join(keep, "shingle"))
     sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     l = g.select(F.col("doc_id").alias("a"), "shingle")
     r = g.select(F.col("doc_id").alias("b"), "shingle")
@@ -455,7 +456,7 @@ def _kcore_oracle() -> str:
         "sf0.01 — a real avalanche, chosen near the graph's degeneracy). "
         "The dense-cohort extractor for curation and abuse graphs. "
         "Spark: per-round one semi-join-filtered degree aggregate, alive "
-        "sets localCheckpointed (they feed BOTH the next round and their "
+        "sets materialized (they feed BOTH the next round and their "
         "count row — the recompute-vs-materialize lesson from "
         "q_triangle_count r5); fixed rounds → unrolled SQL twin, exact "
         "integer counts. At 100 TB: rounds are Θ(diameter)-bounded "
@@ -467,10 +468,10 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the blocking pipeline ONCE — e0 feeds BOTH union
     # branches, so without this the whole edge build runs twice before
     # the ed checkpoint (the q_triangle_count r5 lesson)
-    e0 = coactivity_edges(spark, sf_dir).localCheckpoint(eager=True)
+    e0 = materialize(coactivity_edges(spark, sf_dir))
     ed = (e0.select(F.col("u1").alias("a"), F.col("u2").alias("b"))
           .unionAll(e0.select(F.col("u2").alias("a"), F.col("u1").alias("b")))
-          .localCheckpoint(eager=True))
+          .transform(materialize))
     counts = []
     alive = None
     for rnd in range(1, _KCORE_ROUNDS + 1):
@@ -483,7 +484,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .groupBy("a").agg(F.count(F.lit(1)).alias("d")))
         alive = (deg.filter(F.col("d") >= _KCORE_K)
                  .select(F.col("a").alias("node"))
-                 .localCheckpoint(eager=True))
+                 .transform(materialize))
         counts.append(alive.agg(
             F.lit(rnd).alias("round"),
             F.count(F.lit(1)).alias("n_alive")))
@@ -1262,7 +1263,7 @@ def q_anomaly_mad_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("approx_percentile(value, 0.5, 10000)").alias("med"))
     dev = (ev.join(F.broadcast(med), "event_type")
            .withColumn("adev", F.abs(F.col("value") - F.col("med")))
-           .localCheckpoint(eager=True))
+           .transform(materialize))
     mad = dev.groupBy("event_type").agg(
         F.expr("approx_percentile(adev, 0.5, 10000)").alias("mad"))
     return (

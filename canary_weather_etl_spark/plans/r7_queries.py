@@ -28,6 +28,7 @@ from ..operators import clustering as C
 from ..operators import dedup as D
 from ..operators import graph as G
 from ..operators import similarity as S
+from ..session import materialize
 from .llm import _JACCARD_SQL
 from .registry import load, load_par, register
 
@@ -138,11 +139,11 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_par(spark, sf_dir, "embeddings")
     qdf = C.quantize_vectors(emb)
     # one quantize projection feeds init + 3 iterations + final assignment
-    # (5 consumers): localCheckpoint at test scale (blocks release on GC —
+    # (5 consumers): materialized at test scale (released on GC —
     # a long driver session running all registry queries must not
     # accumulate pinned cache); at 100 TB you'd pre-materialize the
     # quantized table once
-    qdf = qdf.localCheckpoint(eager=True)
+    qdf = materialize(qdf)
     asg, _cent = C.kmeans_fixed(qdf, k=4, iterations=3)
     return C.kmeans_cluster_profile(asg)
 
@@ -799,7 +800,7 @@ def q_kmeans_assign_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_par(spark, sf_dir, "embeddings")
     qdf = C.quantize_vectors(emb)
-    qdf = qdf.localCheckpoint(eager=True)
+    qdf = materialize(qdf)
     _, cent = C.kmeans_fixed(qdf, k=4, iterations=3)
     # persist the model as a table (the "quantizer"), then load it back —
     # the round trip is the point: assignment must not depend on the
@@ -1100,7 +1101,7 @@ def _bellman_ford_oracle(rounds: int = 4) -> str:
         "fourth iterative-algorithm family with an unrolled bit-exact SQL "
         "oracle (PageRank, k-means, k-core before it): per round one "
         "equi-join dist⨝edges + one MIN groupBy — two shuffles on stable "
-        "keys, lineage cut by localCheckpoint, integer distances so MIN "
+        "keys, lineage cut by materialize, integer distances so MIN "
         "is order-free. Top-25 closest nodes surface.",
     tags=("graph", "iterative"),
 )
@@ -1128,17 +1129,17 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
              .union(e0.select(F.col("u2").alias("src"),
                               F.col("u1").alias("dst"), "w"))
              # edge build feeds every relaxation round — materialize once
-             .localCheckpoint(eager=True))
+             .transform(materialize))
     src = (edges.agg(F.min("src").alias("node"))
            .withColumn("dist", F.lit(0).cast("long")))
-    dist = src.localCheckpoint(eager=True)
+    dist = materialize(src)
     for _ in range(4):
         relaxed = (dist.join(edges, dist["node"] == edges["src"])
                    .select(F.col("dst").alias("node"),
                            (dist["dist"] + edges["w"]).alias("dist")))
         dist = (dist.unionByName(relaxed)
                 .groupBy("node").agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True))
+                .transform(materialize))
     return dist.orderBy("dist", "node").limit(25)
 
 
@@ -1219,7 +1220,7 @@ def _mmr_oracle(k: int = 5) -> str:
 def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_par(spark, sf_dir, "embeddings")
     qdf = C.quantize_vectors(emb)
-    qdf = qdf.localCheckpoint(eager=True)
+    qdf = materialize(qdf)
     q0 = qdf.filter(F.col("vec_id") == 0).collect()[0]["qvec"]
 
     def dot_to(vec):
@@ -1228,7 +1229,7 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pool = (qdf.filter(F.col("vec_id") != 0)
             .withColumn("rel", dot_to(q0))
-            .localCheckpoint(eager=True))
+            .transform(materialize))
     selected: list[tuple[int, list[int]]] = []
     picks = []
     for t in range(1, 6):
@@ -1497,7 +1498,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     activity = (e.select("user_id",
                          F.to_date(F.date_trunc("week", "ts"))
                           .alias("week"))
-                .distinct().localCheckpoint(eager=True))
+                .distinct().transform(materialize))
     cohorts = activity.groupBy("user_id").agg(F.min("week")
                                               .alias("cohort_week"))
     return (activity.join(cohorts, "user_id")
@@ -1644,7 +1645,7 @@ def q_perceptron_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("vec_id", "y", "ord",
                  F.floor(F.col("val").cast("double") * scale + 0.5)
                   .cast("bigint").alias("qx"))
-         .localCheckpoint(eager=True))
+         .transform(materialize))
     dims = q.agg(F.max("ord")).collect()[0][0] + 1
     w = [0] * dims
     out_rows = []
@@ -1750,7 +1751,7 @@ def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("l_partkey").alias("p"))
            .repartition("p").dropDuplicates(["c", "p"])
            .sortWithinPartitions("p")
-           .localCheckpoint(eager=True))
+           .transform(materialize))
 
     def normalize(raw_df, key, out):
         # checkpoint the raw aggregate (key-count-sized: #parts or
@@ -1760,7 +1761,7 @@ def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 100x decade (→ 34 s after the fused p-partitioned edge
         # checkpoint above; the remaining cost is the irreducible
         # edge-sized half-step passes, SCALE.md)
-        raw_df = raw_df.localCheckpoint(eager=True)
+        raw_df = materialize(raw_df)
         mx = raw_df.agg(F.max("raw")).collect()[0][0]  # driver scalar
         return raw_df.select(key, F.expr(f"(raw * {scale}L) div {mx}L")
                              .alias(out))
@@ -2122,7 +2123,7 @@ _NOVELTY_ORACLE = r"""
 def q_corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     sh = (D.shingle_table(d, "doc_id", "text", n=2).distinct()
-          .localCheckpoint(eager=True))
+          .transform(materialize))
     first = sh.groupBy("shingle").agg(F.min("doc").alias("first_doc"))
     flagged = (sh.join(first, "shingle")
                .select("doc",
@@ -2477,10 +2478,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     grams = (D.shingle_table(d, "source", "text", n=2)
              .withColumnRenamed("doc", "source").distinct()
-             .localCheckpoint(eager=True))
+             .transform(materialize))
     rare = (grams.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") <= 10).select("shingle"))
-    capped = grams.join(rare, "shingle").localCheckpoint(eager=True)
+    capped = materialize(grams.join(rare, "shingle"))
     sizes = capped.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
     a = capped.select(F.col("source").alias("source_a"), "shingle")
     b = capped.select(F.col("source").alias("source_b"), "shingle")
@@ -2773,7 +2774,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     items = (e.select("user_id", F.col("ts").cast("date").alias("day"),
                       "event_type").distinct()
-             .localCheckpoint(eager=True))  # feeds N/supports/self-join x2
+             .transform(materialize))  # feeds N/supports/self-join x2
     n = items.select("user_id", "day").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("n_baskets"))
     supp = items.groupBy("event_type").agg(
@@ -3146,7 +3147,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     daily = (e.groupBy(F.col("ts").cast("date").alias("day"))
              .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-             .localCheckpoint(eager=True))  # matrix-sized; 2 consumers
+             .transform(materialize))  # matrix-sized; 2 consumers
     tot = daily.agg(F.count(F.lit(1)).cast("bigint").alias("nd"),
                     F.sum("c").cast("bigint").alias("total"))
     w = (Window.orderBy("day")
@@ -3377,7 +3378,7 @@ def q_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     counts = (li.groupBy("l_partkey")
               .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-              .localCheckpoint(eager=True))  # key-sized; 2 consumers
+              .transform(materialize))  # key-sized; 2 consumers
     stats = counts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_keys"),
         F.sum("cnt").cast("bigint").alias("total_rows"),
@@ -3483,7 +3484,7 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     ud = (e.select("user_id", F.col("ts").cast("date").alias("day"))
           .distinct()
-          .localCheckpoint(eager=True))  # feeds calendar + fan-out legs
+          .transform(materialize))  # feeds calendar + fan-out legs
     caldays = ud.select("day").distinct()
     fanned = (ud.select(
         "user_id",
@@ -3616,7 +3617,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .otherwise(0)).cast("bigint").alias("x"),
                   F.sum(F.when(F.col("event_type") == "purchase", 1)
                         .otherwise(0)).cast("bigint").alias("y")))
-    daily = daily.localCheckpoint(eager=True)  # matrix-sized; feeds 4 consumers
+    daily = materialize(daily)  # matrix-sized; feeds 4 consumers
     a, b = daily.alias("a"), daily.alias("b")
     prod = ((F.col("a.x") - F.col("b.x")) * (F.col("a.y") - F.col("b.y")))
     pairs = (a.join(b, F.col("a.day") < F.col("b.day"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .llm import _JACCARD_SQL
 from .registry import load, load_par, register
 
@@ -400,7 +401,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_par(spark, sf_dir, "embeddings")
     # quantize feeds m trainings + the encode + the query row: one
     # materialization (GC-released blocks)
-    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
+    qdf = materialize(C.quantize_vectors(emb))
     books = S.pq_train_codebooks(qdf, m=2, k=4, iterations=2)
     q0 = [int(v) for v in
           qdf.filter(F.col("vec_id") == 0).collect()[0]["qvec"]]
@@ -493,7 +494,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .otherwise(0)).alias("nt"),
                    F.sum(F.when(F.col("source") != "src0", 1)
                          .otherwise(0)).alias("ns"))
-              .localCheckpoint(eager=True))
+              .transform(materialize))
     vsz = counts.count()
     tot = counts.agg(F.sum("nt").alias("t"), F.sum("ns").alias("s")) \
                 .collect()[0]
@@ -776,7 +777,7 @@ def q_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Semantic-dedup buckets from PQ codes: vectors sharing all m "
         "quantization codes are coarse semantic duplicates — group by the "
         "code tuple, keep the min-id vector per bucket (the same "
-        "keeper-selection convention as exact_dedup). This is the O(1)-"
+        "keeper-selection convention as dedup.dup_groups). This is the O(1)-"
         "memory-per-vector coarse pass an embedding-dedup pipeline runs "
         "BEFORE pairwise verification: at 100 TB the 16-bucket (k^m) "
         "histogram shuffles m bytes per vector, nothing pairwise. Codes "
@@ -788,7 +789,7 @@ def q_pq_semantic_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import clustering as C
     from ..operators import similarity as S
     emb = load_par(spark, sf_dir, "embeddings")
-    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
+    qdf = materialize(C.quantize_vectors(emb))
     books = S.pq_train_codebooks(qdf, m=2, k=4, iterations=2)
     codes = S.pq_encode(qdf, books)
     return (codes.groupBy("code_0", "code_1")
@@ -1046,7 +1047,7 @@ def q_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     wv = (words.select("word", vec.alias("v"))
           .withColumn("ss", F.aggregate(
               "v", F.lit(0.0), lambda a, x: a + x * x))
-          .localCheckpoint(eager=True))  # vocab-sized, feeds both sides
+          .transform(materialize))  # vocab-sized, feeds both sides
 
     qv = qtok.join(wv, "word").select(
         "query_id", F.col("word").alias("qw"),

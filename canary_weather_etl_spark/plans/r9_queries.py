@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators import clustering as C
 from ..operators import similarity as S
+from ..session import materialize
 from .r7_queries import _kmeans_oracle
 from .registry import load, load_par, register
 
@@ -63,8 +64,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exchange in the plan (verified via explain)
     docs = load(spark, sf_dir, "documents")
     # one quantize projection feeds init + 2 iterations + final assignment
-    # (4 consumers) — localCheckpoint, blocks release on GC
-    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
+    # (4 consumers) — materialized, released on GC
+    qdf = materialize(C.quantize_vectors(emb))
     keep = C.semantic_dedup(qdf, k=8, iterations=2)
     # k survivor rows — broadcast side of the documents join
     return (F.broadcast(keep)
@@ -268,7 +269,7 @@ def q_semdedup_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_par(spark, sf_dir, "embeddings")
     docs = load(spark, sf_dir, "documents")
     _assert_auto_k_is_8(emb, "q_semdedup_threshold")
-    qdf = C.quantize_vectors(emb).localCheckpoint(eager=True)
+    qdf = materialize(C.quantize_vectors(emb))
     surv = C.semantic_dedup_threshold(qdf, emb, iterations=2,
                                       threshold=0.40)
     return (surv.join(docs, surv.vec_id == docs.doc_id)

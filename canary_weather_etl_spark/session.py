@@ -3,16 +3,16 @@
 The reference (README.md:609-614) builds a GlueContext per job and relies on
 Glue defaults. We centralize one tuned builder: AQE on (adaptive shuffle
 coalescing, broadcast conversion, skew-join splitting — important because the
-reference's key domains are tiny: 14 locations, 5 event types), dynamic
-partition overwrite for partitioned overwrites, and Arrow for any pandas-UDF
-extension operator.
+reference's key domains are tiny: 14 locations, 5 event types) and Arrow
+for any pandas-UDF extension operator. ``materialize`` is the one way the
+engine computes an intermediate eagerly and cuts its lineage.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults are sized for local[32] test runs; on a real cluster these are
 # expected to be overridden by spark-submit conf (shuffle.partitions ~ 2-3x
@@ -24,9 +24,9 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # A partitioned overwrite replaces only the partitions present in the
-    # written frame (the admission-state writes in operators/dedup.py).
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # Delete a reliable checkpoint's files once its frame is unreachable,
+    # so a set spark.checkpoint.dir does not grow for the whole session.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     # Arrow-batched transfer for pandas_udf / mapInPandas extension ops.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Local-mode shuffle sizing; cluster deployments override.
@@ -47,7 +47,6 @@ _DEFAULT_CONF = {
     # default — stated, not changed.
     "spark.sql.parser.escapedStringLiterals": "false",
     "spark.sql.session.timeZone": "UTC",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
 }
 
@@ -59,7 +58,10 @@ def get_spark(app_name: str = "canary-weather-etl-spark",
 
     One session per process: at the small scale factors the driver benches
     at, JVM/session startup dominates, so every entry point (tests, bench,
-    __spark_entry__) funnels through here.
+    __spark_entry__) funnels through here. ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` are read here, not at import: the operator
+    modules import this one, so an import-time read would miss a value a
+    caller sets after importing the package.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
@@ -67,8 +69,20 @@ def get_spark(app_name: str = "canary-weather-etl-spark",
     )
     for k, v in _DEFAULT_CONF.items():
         builder = builder.config(k, v)
+    builder = builder.config(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return it with its lineage cut. With a
+    checkpoint directory (Spark's ``spark.checkpoint.dir``) the rows are
+    written there and survive the loss of an executor; without one they
+    stay in executor block storage (``localCheckpoint``)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

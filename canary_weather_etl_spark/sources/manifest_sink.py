@@ -93,10 +93,7 @@ def _load_state(path: str) -> dict:
     if not os.path.exists(manifest_path):
         return {"batches": {}}
     with open(manifest_path, encoding="utf-8") as f:
-        state = json.load(f)
-    if "batches" not in state:  # legacy flat manifest → one synthetic batch
-        state = {"batches": {"legacy": state.get("files", [])}}
-    return state
+        return json.load(f)
 
 
 def _publish_state(path: str, state: dict) -> None:

@@ -54,6 +54,30 @@ def test_admission_screen_only_leaves_state_untouched(spark, tmp_path):
     assert _state_listing(corpus_dir) == before_corpus
 
 
+def test_admission_state_reseed_replaces_old_corpus(spark, tmp_path):
+    """Seeding a state_dir that already holds state replaces it whole:
+    after a re-seed with one document, every state table of both the
+    postings and the banded layout holds only that document's rows. A
+    partition-scoped overwrite would keep the old corpus's rows in every
+    bucket the new corpus does not touch."""
+    d = load_par(spark, SF, "documents").select("doc_id", "text")
+    old = d.filter(F.col("doc_id") < 200)
+    new = d.filter(F.col("doc_id") == 7)
+    for init, doc_tables in ((D.admission_state_init, ("postings",)),
+                             (D.admission_state_init_banded,
+                              ("bands", "sets"))):
+        state_dir = str(tmp_path / init.__name__)
+        init(old, state_dir, n=2)
+        init(new, state_dir, n=2)
+        for t in doc_tables:
+            docs = {r["doc"] for r in spark.read.parquet(
+                os.path.join(state_dir, t)).select("doc").distinct()
+                .collect()}
+            assert docs == {7}, (init.__name__, t, len(docs))
+        assert spark.read.parquet(
+            os.path.join(state_dir, "hashes")).count() == 1, init.__name__
+
+
 def test_admission_fixed_batch_verdicts_equal_rescan(spark, tmp_path):
     """The postings screen in screen-only mode must be verdict-identical
     to the rescan twin over the same fixed corpus — the exactness claim

@@ -1,4 +1,4 @@
-"""Round-6 operator tests: pagerank checkpoint-cadence bit-identity,
+"""Round-6 operator tests: pagerank materialization-cadence bit-identity,
 degree-ordered triangle orientation, chunked BPE encode folds, and
 vacuum-under-lock."""
 
@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from canary_weather_etl_spark.operators import bpe, graph
 from canary_weather_etl_spark.operators.bpe import bpe_encode_len
 from canary_weather_etl_spark.operators.graph import (
     enumerate_triangles,
@@ -28,16 +29,16 @@ def _graph(spark):
     return e1.unionAll(e2).distinct(), nodes
 
 
-def test_pagerank_cadence_bit_identical(spark):
-    """localCheckpoint is a pure materialization boundary: ANY cadence
-    must produce bit-identical integer ranks (the cadence default is a
-    measured scheduling-floor knob, never a semantics knob —
-    scripts/pagerank_cadence.py measures the knee)."""
+def test_pagerank_cadence_bit_identical(spark, monkeypatch):
+    """materialize is a pure lineage boundary: ANY cadence must produce
+    bit-identical integer ranks (PAGERANK_CADENCE is a measured
+    scheduling-floor constant, never a semantics knob — BENCHNOTES.md
+    holds the knee)."""
     edges, nodes = _graph(spark)
     results = []
     for k in (1, 2, 3, 5):
-        rows = (pagerank_fixed(edges, nodes, iterations=5,
-                               checkpoint_every=k)
+        monkeypatch.setattr(graph, "PAGERANK_CADENCE", k)
+        rows = (pagerank_fixed(edges, nodes, iterations=5)
                 .orderBy("node").collect())
         results.append([(r["node"], r["units"]) for r in rows])
     assert results[0] == results[1] == results[2] == results[3]
@@ -81,9 +82,9 @@ def test_orient_by_degree_bounds_hub_out_degree(spark):
     assert max(out_deg.values()) <= 3
 
 
-def test_bpe_encode_len_chunked_fold_parity(spark):
-    """Chunking the per-merge folds with localCheckpoint (plan-size cap)
-    must not change a single count — compare checkpoint_every=2 against
+def test_bpe_encode_len_chunked_fold_parity(spark, monkeypatch):
+    """Chunking the per-merge folds with materialize (plan-size cap)
+    must not change a single count — compare FOLD_CADENCE=2 against
     the single-expression fold on the same merges."""
     docs = spark.createDataFrame(
         [(1, "low lower lowest"), (2, "new newer newest newest"),
@@ -91,10 +92,12 @@ def test_bpe_encode_len_chunked_fold_parity(spark):
         "doc_id int, text string")
     merges = [("l", "o"), ("lo", "w"), ("e", "s"), ("es", "t"),
               ("n", "e"), ("ne", "w")]
+    monkeypatch.setattr(bpe, "FOLD_CADENCE", 10_000)
     big = {r["doc_id"]: r["n_bpe"] for r in
-           bpe_encode_len(docs, merges, checkpoint_every=10_000).collect()}
+           bpe_encode_len(docs, merges).collect()}
+    monkeypatch.setattr(bpe, "FOLD_CADENCE", 2)
     chunked = {r["doc_id"]: r["n_bpe"] for r in
-               bpe_encode_len(docs, merges, checkpoint_every=2).collect()}
+               bpe_encode_len(docs, merges).collect()}
     assert big == chunked
     assert big[3] == 0  # empty doc still reported
     assert set(big) == {1, 2, 3, 4}

@@ -17,6 +17,10 @@ invariant local).
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
+
 import pytest
 from pyspark.sql import types as T
 
@@ -53,6 +57,63 @@ def test_identical_oracles_are_intended():
     assert shared == set(_SHARED_ORACLES), (
         f"unlisted: {sorted(map(sorted, shared - set(_SHARED_ORACLES)))}; "
         f"stale: {sorted(map(sorted, set(_SHARED_ORACLES) - shared))}")
+
+
+def test_materialize_is_the_only_checkpoint():
+    """Every eager materialization goes through ``session.materialize``,
+    which picks a reliable or a local checkpoint once for the whole
+    engine: no other package line may call ``.localCheckpoint(`` or
+    ``.checkpoint(``."""
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "canary_weather_etl_spark")
+    tree = ast.parse((pkg / "session.py").read_text())
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == "materialize")
+    allowed = {("session.py", i)
+               for i in range(fn.lineno, fn.end_lineno + 1)}
+    stray = [f"{rel}:{i}" for p in sorted(pkg.rglob("*.py"))
+             for rel in [str(p.relative_to(pkg))]
+             for i, line in enumerate(p.read_text().splitlines(), 1)
+             if re.search(r"\.(localCheckpoint|checkpoint)\(", line)
+             and (rel, i) not in allowed]
+    assert not stray, f"materialize through session.materialize: {stray}"
+
+
+def test_get_spark_reads_the_environment_when_called(monkeypatch):
+    """``get_spark`` takes cores and driver memory from the environment
+    when it is called. The operator modules import ``session``, so a
+    value read at import time would ignore a ``SPARK_GRAFT_DRIVER_MEM``
+    set after the package was imported."""
+    from canary_weather_etl_spark import session
+
+    seen = {}
+
+    class Built(Exception):
+        pass
+
+    class Builder:
+        def appName(self, _name):
+            return self
+
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise Built
+
+    monkeypatch.setattr(session, "SparkSession",
+                        type("FakeSession", (), {"builder": Builder()}))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1234m")
+    with pytest.raises(Built):
+        session.get_spark()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.driver.memory"] == "1234m"
 
 
 def test_no_top_level_complex_result_columns(spark):
