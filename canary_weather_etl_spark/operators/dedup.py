@@ -673,12 +673,17 @@ def admission_state_init(corpus: DataFrame, state_dir: str,
                             .alias("shingle"))
                 .withColumn("bucket",
                             F.pmod(F.xxhash64("shingle"), F.lit(buckets))))
+    # Static overwrite on every seeding write: a re-seed replaces the old
+    # state whole, also where the session sets partitionOverwriteMode to
+    # dynamic (which would keep the buckets the new corpus misses).
     (postings.write.mode("overwrite").partitionBy("bucket")
+     .option("partitionOverwriteMode", "static")
      .parquet(os.path.join(state_dir, "postings")))
     (corpus.select(F.md5(text_col).alias("h")).distinct()
      .withColumn("bucket", F.pmod(F.xxhash64("h"), F.lit(buckets)))
      .repartition("bucket")
      .write.mode("overwrite").partitionBy("bucket")
+     .option("partitionOverwriteMode", "static")
      .parquet(os.path.join(state_dir, "hashes")))
 
 
@@ -871,20 +876,24 @@ def admission_state_init_banded(corpus: DataFrame, state_dir: str,
 
     sets = shingle_sets(corpus, id_col, text_col, n)
     sigs = minhash_signatures_from_sets(sets, num_hashes)
+    # static overwrite: see admission_state_init
     (portable_band_table(sigs, bands, num_hashes)
      .withColumn("bucket", F.pmod(F.xxhash64("band_hash"), F.lit(buckets)))
      .repartition("bucket")
      .write.mode("overwrite").partitionBy("bucket")
+     .option("partitionOverwriteMode", "static")
      .parquet(os.path.join(state_dir, "bands")))
     (sets
      .withColumn("bucket", F.pmod(F.xxhash64("doc"), F.lit(buckets)))
      .repartition("bucket")
      .write.mode("overwrite").partitionBy("bucket")
+     .option("partitionOverwriteMode", "static")
      .parquet(os.path.join(state_dir, "sets")))
     (corpus.select(F.md5(text_col).alias("h")).distinct()
      .withColumn("bucket", F.pmod(F.xxhash64("h"), F.lit(buckets)))
      .repartition("bucket")
      .write.mode("overwrite").partitionBy("bucket")
+     .option("partitionOverwriteMode", "static")
      .parquet(os.path.join(state_dir, "hashes")))
 
 

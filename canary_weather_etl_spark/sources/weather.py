@@ -7,14 +7,20 @@ collect()s every array to the driver and zips in Python (README.md:694-725)
 — O(data) through one process. This module re-expresses the whole job as a
 single declarative plan:
 
-- struct-of-arrays (Open-Meteo shape)  → ``arrays_zip`` + ``explode``
-  (one narrow stage, never leaves the executors)
-- array-of-structs (Visual Crossing shape) → ``explode`` + struct flatten
+- struct-of-arrays (Open-Meteo shape) → one ``inline`` over
+  ``arrays_zip`` whose CASE raises on unequal lengths (one narrow stage,
+  never leaves the executors)
+- array-of-structs (Visual Crossing shape) → ``inline`` of the day structs
 - per-location loop → one global read; lineage recovered from file paths
   with ``input_file_name`` + ``regexp_extract`` (README.md:622-623)
-- per-partition upsert loop (B6, README.md:1488-1545) → left_anti +
-  unionByName, one write committed as a new version of the table's file
-  manifest (`_commit`, the protocol of sources/manifest_sink.py)
+- each read, flatten and join is one SQL-text ``selectExpr`` (the
+  functions/litexpr.py discipline): building a delivery's plan ships a
+  few strings over py4j, not a ``Column`` call per column
+- per-partition upsert loop (B6, README.md:1488-1545) → the batch computed
+  once, the old rows read only from the manifest files of the partitions
+  it touches, left_anti + unionByName, one write committed as a new
+  version of the table's file manifest (`_commit`, the protocol of
+  sources/manifest_sink.py)
 - Spark's Hadoop Parquet writer → one ``mapInArrow`` pass in which each
   task writes its partitions' files with pyarrow straight into place: no
   staging directory, no renames, no checksum sidecars. The manifest alone
@@ -31,7 +37,8 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -42,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.litexpr import string_literal_sql
+from ..session import materialize
 from .manifest_sink import (_MANIFEST, ConcurrentWriteError, _load_state,
                             _manifest_lock, _publish_state, _remove_files)
 from .schema_guard import check_batch_compatible
@@ -115,6 +124,7 @@ VISUAL_CROSSING_SCHEMA = StructType([
 
 # Raw-layer key scheme: .../<island>/<location>/<file>.json (README.md:232).
 _PATH_PATTERN = r".*/([^/]+)/([^/]+)/[^/]+\.json$"
+_PATH_SQL = string_literal_sql(_PATH_PATTERN)
 
 
 def lineage_from_path(df: DataFrame) -> DataFrame:
@@ -127,21 +137,16 @@ def lineage_from_path(df: DataFrame) -> DataFrame:
     runtime, and it survives into sources where `input_file_name()` is
     undefined. Falls back to `input_file_name()` when the source doesn't
     expose file metadata."""
+    def with_lineage(src: str) -> DataFrame:
+        return df.selectExpr(
+            "*", f"regexp_extract({src}, {_PATH_SQL}, 1) AS island",
+            f"regexp_extract({src}, {_PATH_SQL}, 2) AS location_name")
+
     try:
-        src = df.withColumn("__src_path", F.col("_metadata.file_path"))
-    except Exception:
-        src = df.withColumn("__src_path", F.input_file_name())
-    return (
-        src.withColumn("island",
-                       F.regexp_extract("__src_path", _PATH_PATTERN, 1))
-        .withColumn("location_name",
-                    F.regexp_extract("__src_path", _PATH_PATTERN, 2))
-        .drop("__src_path")
-        .filter(
-            F.col("island").isNotNull() & (F.length("island") > 0)
-            & F.col("location_name").isNotNull() & (F.length("location_name") > 0)
-        )
-    )
+        src = with_lineage("_metadata.file_path")
+    except AnalysisException:
+        src = with_lineage("input_file_name()")
+    return src.where("length(island) > 0 AND length(location_name) > 0")
 
 
 def read_open_meteo(spark: SparkSession, path: str) -> DataFrame:
@@ -158,36 +163,29 @@ def read_open_meteo(spark: SparkSession, path: str) -> DataFrame:
     return flatten_open_meteo(lineage_from_path(raw))
 
 
-def flatten_open_meteo(raw: DataFrame) -> DataFrame:
-    """The flatten behind `read_open_meteo`, for batch and streaming reads.
+_UNEQUAL_SQL = string_literal_sql(
+    "parallel daily arrays have unequal lengths for location='%s'")
+# One generator over the zipped parallel arrays: a row per day, its
+# fields named after the arrays. The reference treats unequal lengths as
+# fatal (README.md:699-704); a NULL size comparison passes, as a filter
+# would let it.
+_OPEN_METEO_DAYS_SQL = (
+    "inline(CASE WHEN NOT ("
+    + " AND ".join(f"size(daily.{f}) = size(daily.date)"
+                   for f in OPEN_METEO_DAILY_VARS)
+    + f") THEN raise_error(format_string({_UNEQUAL_SQL}, location))"
+    + " ELSE arrays_zip(daily.date, "
+    + ", ".join(f"daily.{f}" for f in OPEN_METEO_DAILY_VARS) + ") END)")
 
-    The reference treats unequal parallel-array lengths as fatal
-    (README.md:699-704). The check rides inside the projection: a row
-    whose arrays differ in length raises at the first action, so the raw
-    JSON is parsed once. A NULL size comparison passes, as a filter would
-    let it."""
-    fields = ["date", *OPEN_METEO_DAILY_VARS]
-    same_len = F.lit(True)
-    for f in OPEN_METEO_DAILY_VARS:
-        same_len = same_len & (F.size(F.col(f"daily.{f}"))
-                               == F.size(F.col("daily.date")))
-    days = (
-        F.when(~same_len, F.raise_error(F.format_string(
-            "parallel daily arrays have unequal lengths for location='%s'",
-            F.col("location"))))
-        .otherwise(F.arrays_zip(*[F.col(f"daily.{f}").alias(f)
-                                  for f in fields]))
-    )
-    zipped = raw.select(
-        "location", "latitude", "longitude", "elevation", "timezone",
-        "island", "location_name", F.explode(days).alias("day"),
-    )
-    return zipped.select(
-        "location", "latitude", "longitude", "elevation", "timezone",
-        "island", "location_name",
-        F.col("day.date").alias("date"),
-        *[F.col(f"day.{f}").alias(f) for f in OPEN_METEO_DAILY_VARS],
-    )
+
+def flatten_open_meteo(raw: DataFrame) -> DataFrame:
+    """The flatten behind `read_open_meteo`, for batch and streaming reads:
+    one projection whose generator zips the parallel arrays and checks
+    their lengths, so a row whose arrays differ raises at the first
+    action and the raw JSON is parsed once."""
+    return raw.selectExpr("location", "latitude", "longitude", "elevation",
+                          "timezone", "island", "location_name",
+                          _OPEN_METEO_DAYS_SQL)
 
 
 def read_visual_crossing(spark: SparkSession, path: str) -> DataFrame:
@@ -196,18 +194,10 @@ def read_visual_crossing(spark: SparkSession, path: str) -> DataFrame:
     """
     raw = (spark.read.schema(VISUAL_CROSSING_SCHEMA)
            .option("multiLine", "true").json(path))
-    raw = lineage_from_path(raw)
-    exploded = raw.select(
-        F.col("address").alias("location"),
-        "latitude", "longitude",
-        "island", "location_name",
-        F.explode("days").alias("day_data"),
-    )
-    return exploded.select(
-        "location", "latitude", "longitude", "island", "location_name",
-        F.col("day_data.datetime").alias("date"),
-        *[F.col(f"day_data.{f}").alias(f) for f in VISUAL_CROSSING_DAY_FIELDS],
-    )
+    return lineage_from_path(raw).selectExpr(
+        "address AS location", "latitude", "longitude", "island",
+        "location_name",
+        f"inline(days) AS (date, {', '.join(VISUAL_CROSSING_DAY_FIELDS)})")
 
 
 def build_clean(om: DataFrame, vc: DataFrame) -> DataFrame:
@@ -221,14 +211,13 @@ def build_clean(om: DataFrame, vc: DataFrame) -> DataFrame:
     pair (location, date) is already the declared grain.
     """
     keys = ["location", "date", "island", "location_name"]
-    vc_metrics = vc.select(*keys, *VISUAL_CROSSING_DAY_FIELDS)
-    merged = om.join(vc_metrics, on=keys, how="inner")
-    return (
-        merged
-        .withColumn("date", F.to_date("date", "yyyy-MM-dd"))
-        .withColumn("year", F.year("date"))
-        .withColumn("month", F.month("date"))
-    )
+    vc_metrics = vc.selectExpr(*keys, *VISUAL_CROSSING_DAY_FIELDS)
+    day = "to_date(date, 'yyyy-MM-dd')"
+    return om.join(vc_metrics, on=keys, how="inner").selectExpr(
+        "location", f"{day} AS date", "island", "location_name",
+        *[c for c in om.columns if c not in keys],
+        *VISUAL_CROSSING_DAY_FIELDS, f"year({day}) AS year",
+        f"month({day}) AS month")
 
 
 PARTITION_COLS = ("island", "location_name", "year", "month")
@@ -243,26 +232,42 @@ def read_clean(spark: SparkSession, table_path: str) -> DataFrame:
     """The table's current snapshot: exactly the files its manifest lists,
     partition columns parsed from their paths under ``basePath``. Nothing
     is listed, so the unlisted files of a crashed write are never read."""
-    return _snapshot(spark, table_path)[1]
+    state = _table_state(table_path)
+    return _read_files(spark, table_path, state,
+                       [e["file"] for e in state["files"]])
 
 
-def _snapshot(spark: SparkSession, table_path: str) -> tuple[int, DataFrame]:
-    """(manifest version, frame over the files that version lists, read
-    with the schema the manifest records)."""
+def _table_state(table_path: str) -> dict:
+    """The table's manifest: its version, its files by partition path and
+    its schema."""
     if not table_exists(table_path):
         raise FileNotFoundError(
             f"{table_path} is not a clean table: it has no {_MANIFEST} "
             "(create the table with write_clean)")
     state = _load_state(table_path)
-    files = [os.path.join(table_path, e["file"]) for e in state["files"]]
-    if not files:
+    if not state["files"]:
         raise ValueError(f"clean table {table_path} lists no data files")
     if "schema" not in state:
         raise ValueError(f"the {_MANIFEST} of clean table {table_path} "
                          "records no schema")
-    return state["version"], (
-        spark.read.schema(StructType.fromJson(state["schema"]))
-        .option("basePath", table_path).parquet(*files))
+    return state
+
+
+def _read_files(spark: SparkSession, table_path: str, state: dict,
+                files: list[str]) -> DataFrame:
+    """A frame over ``files`` (paths relative to the table), read with the
+    schema the manifest records. Its columns are the data columns, then
+    `PARTITION_COLS`, in the order `_read_columns` gives."""
+    return (spark.read.schema(StructType.fromJson(state["schema"]))
+            .option("basePath", table_path)
+            .parquet(*[os.path.join(table_path, f) for f in files]))
+
+
+def _read_columns(state: dict) -> list[str]:
+    """The column order of a read of the table: a Parquet read puts the
+    partition columns, parsed from the paths, after the data columns."""
+    names = [f["name"] for f in state["schema"]["fields"]]
+    return [c for c in names if c not in PARTITION_COLS] + [*PARTITION_COLS]
 
 
 def write_clean(df: DataFrame, out: str) -> None:
@@ -287,41 +292,96 @@ def upsert_clean(spark: SparkSession, table_path: str, new_batch: DataFrame,
     """Partition-level upsert: new batch wins on ``keys``; only partitions
     present in the batch are rewritten, all others stay byte-identical.
 
-    Replaces the whole of B6's per-partition driver loop
-    (README.md:1485-1545: distinct().collect() of affected partitions,
-    per-partition SQL NOT EXISTS, hand-built overwrite paths) with one plan:
+    Replaces B6's per-partition driver loop (README.md:1485-1545:
+    distinct().collect() of affected partitions, then per partition a SQL
+    NOT EXISTS read and a hand-built overwrite path) with one write:
 
-    1. survivors = existing rows in affected partitions whose key is NOT in
-       the new batch (left_anti — Catalyst's own rewrite of NOT EXISTS)
-    2. output = survivors ∪ new batch (unionByName)
-    3. ONE partitioned write, committed by `_commit`: its files replace
+    1. The batch is computed once (`_touched`, by `materialize`): the
+       rewrite reads it twice (its keys, its rows), and the raw delivery
+       behind it is parsed only once. The same pass observes its
+       distinct partition keys.
+    2. Those keys pick, from the manifest already loaded, the files of
+       the partitions the batch touches; only those files are read, with
+       the manifest's schema.
+    3. survivors = their rows whose key is NOT in the batch (left_anti,
+       Catalyst's own rewrite of NOT EXISTS); output = survivors ∪ batch.
+    4. ONE partitioned write, committed by `_commit`: its files replace
        the files of the partitions it writes.
+
+    Step 1 brings the partition keys to the driver as B6's collect did,
+    but not to loop over them: they are the file pruning a table format
+    does from its metadata (stations × months of keys, not rows), and
+    they replace a broadcast semi-join over a scan of the whole snapshot.
+    The rows are still read, merged and written by one plan, not by a
+    Spark job per partition.
 
     A batch whose schema drifted from the table's fails before anything is
     written (B6's schema introspection, README.md:1248-1262).
     """
-    version, existing = _snapshot(spark, table_path)
-    check_batch_compatible(new_batch, existing.schema)
-    cols = existing.columns
-    affected = new_batch.select(*PARTITION_COLS).distinct()
-    # restrict to affected partitions (broadcast semi join → the scan
-    # prunes everything else; untouched partitions are never read)
-    existing = existing.join(F.broadcast(affected), on=list(PARTITION_COLS),
-                             how="left_semi")
-    survivors = existing.join(new_batch.select(*keys), on=list(keys),
-                              how="left_anti")
-    combined = survivors.select(*cols).unionByName(new_batch.select(*cols))
-    _commit(combined, table_path, version, replace=True)
+    state = _table_state(table_path)
+    check_batch_compatible(new_batch,
+                           StructType.fromJson(state["schema"]))
+    batch, old = _touched(spark, table_path, state,
+                          new_batch.select(*_read_columns(state)))
+    if old is not None:
+        batch = old.join(batch.select(*keys), on=list(keys),
+                         how="left_anti").unionByName(batch)
+    _commit(batch, table_path, state["version"], replace=True)
 
 
-# Characters Spark escapes as %XX in partition directory names
-# (ExternalCatalogUtils.escapePathName): ASCII controls, DEL and "#%'*/:=?\\{[]^
-_PATH_ESCAPED = frozenset(
-    [*map(chr, range(0x01, 0x20)), *"\"#%'*/:=?\\\x7f{[]^"])
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+def _touched(spark: SparkSession, table_path: str, state: dict,
+             batch: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    """(``batch``, computed once by `materialize`; the rows the table
+    holds in the partitions the batch touches, or None where it touches
+    only new ones). The batch's distinct partition keys are observed on
+    the materializing pass itself (no job of their own). The old rows are
+    read from the files the manifest lists for those partitions, looked
+    up by the writer's own partition naming (`_partition_dir`), so no
+    other file of the table is opened."""
+    seen = Observation()
+    batch = materialize(batch.observe(
+        seen, F.collect_set(F.struct(*PARTITION_COLS)).alias("parts")))
+    parts = {_partition_dir(tuple(r)) for r in seen.get["parts"]}
+    files = [e["file"] for p in sorted(parts)
+             for e in state["batches"].get(p, [])]
+    return batch, (_read_files(spark, table_path, state, files)
+                   if files else None)
+
+
 # parquet-mr's default row group size (parquet.block.size)
 _ROW_GROUP_BYTES = 128 << 20
 _WRITTEN_FILE = "partition string, file string, rows bigint, bytes bigint"
+
+
+def _partition_naming():
+    """``partition_dir(key)``: the directory, relative to the table, of
+    the partition whose `PARTITION_COLS` values are ``key``, named as
+    Spark's ``partitionBy`` names it: characters that
+    ExternalCatalogUtils.escapePathName escapes (ASCII controls, DEL and
+    "#%'*/:=?\\{[]^) become %XX, and a null or empty value is the
+    default partition.
+
+    The executor writer names its files with it and the driver looks the
+    manifest up with it, so the two cannot disagree. It is built in
+    function scope so that cloudpickle ships it by value inside
+    `_partition_writer`."""
+    escaped = frozenset(
+        [*map(chr, range(0x01, 0x20)), *"\"#%'*/:=?\\\x7f{[]^"])
+
+    def value(v) -> str:
+        if v is None or v == "":
+            return "__HIVE_DEFAULT_PARTITION__"
+        return "".join(f"%{ord(c):02X}" if c in escaped else c
+                       for c in str(v))
+
+    def partition_dir(key) -> str:
+        return "/".join(f"{c}={value(v)}"
+                        for c, v in zip(PARTITION_COLS, key))
+
+    return partition_dir
+
+
+_partition_dir = _partition_naming()
 
 
 def _partition_writer(table_path: str, write_id: str, data_cols: list[str]):
@@ -342,12 +402,6 @@ def _partition_writer(table_path: str, write_id: str, data_cols: list[str]):
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-
-        def path_value(v) -> str:
-            if v is None or v == "":
-                return _NULL_PARTITION
-            return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c
-                           for c in str(v))
 
         def runs():
             """(partition key, data-column slice), in input order."""
@@ -375,8 +429,7 @@ def _partition_writer(table_path: str, write_id: str, data_cols: list[str]):
         task, written = uuid.uuid4().hex, []
         for n, (key, run) in enumerate(
                 itertools.groupby(runs(), key=lambda r: r[0])):
-            part = "/".join(f"{c}={path_value(v)}"
-                            for c, v in zip(PARTITION_COLS, key))
+            part = _partition_dir(key)
             rel = f"{part}/part-{write_id}-{task}-{n}.parquet"
             path = os.path.join(table_path, rel)
             os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -474,11 +527,13 @@ def compact_partitions(spark: SparkSession, table_path: str,
     guarantee as `upsert_clean`. At production scale this runs
     per-partition-group on a schedule, not table-wide.
     """
-    version, df = _snapshot(spark, table_path)
+    state = _table_state(table_path)
+    df = _read_files(spark, table_path, state,
+                     [e["file"] for e in state["files"]])
     if partitions_predicate is not None:
         df = df.filter(partitions_predicate)
     _commit(df.repartition(target_files_per_partition, *PARTITION_COLS),
-            table_path, version, replace=True)
+            table_path, state["version"], replace=True)
 
 
 def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
@@ -495,36 +550,40 @@ def upsert_scd2(spark: SparkSession, table_path: str, new_batch: DataFrame,
     - unaffected rows/partitions stay untouched (the same partition-
       replacing `_commit` as `upsert_clean`)
 
+    As in `upsert_clean`, the batch is computed once and the old rows are
+    read only from the manifest files of the partitions it touches
+    (`_touched`).
+
     `batch_ts` is passed explicitly (ISO string) — deterministic reruns,
     no wall-clock in the data path. The current view is
     ``WHERE effective_to IS NULL``; a time-travel view is
     ``WHERE effective_from <= t AND (effective_to > t OR effective_to IS NULL)``.
     """
     ts = F.lit(batch_ts).cast("timestamp")
-    version, existing = _snapshot(spark, table_path)
-
+    state = _table_state(table_path)
     batch = (new_batch
              .withColumn("effective_from", ts)
              .withColumn("effective_to", F.lit(None).cast("timestamp")))
-    cols = batch.columns
-    if sorted(existing.columns) != sorted(cols):
+    cols, table_cols = batch.columns, sorted(_read_columns(state))
+    if sorted(cols) != table_cols:
         raise ValueError(
             "table is not SCD2-shaped; expected columns "
-            f"{sorted(cols)}, found {sorted(existing.columns)}")
+            f"{sorted(cols)}, found {table_cols}")
 
-    affected = batch.select(*PARTITION_COLS).distinct()
-    existing = existing.join(F.broadcast(affected), on=list(PARTITION_COLS),
-                             how="left_semi")
-    redelivered = batch.select(*keys).distinct()
-    # close out still-open rows for re-delivered keys; history rows pass as-is
-    open_rows = existing.filter(F.col("effective_to").isNull())
-    closed_now = (open_rows.join(redelivered, on=list(keys), how="left_semi")
-                  .withColumn("effective_to", ts))
-    untouched_open = open_rows.join(redelivered, on=list(keys), how="left_anti")
-    history = existing.filter(F.col("effective_to").isNotNull())
-
-    combined = (history.select(*cols)
-                .unionByName(closed_now.select(*cols))
-                .unionByName(untouched_open.select(*cols))
-                .unionByName(batch.select(*cols)))
-    _commit(combined, table_path, version, replace=True)
+    batch, old = _touched(spark, table_path, state, batch)
+    if old is not None:
+        redelivered = batch.select(*keys).distinct()
+        # close out still-open rows for re-delivered keys; history rows
+        # pass as-is
+        open_rows = old.filter(F.col("effective_to").isNull())
+        closed_now = (open_rows.join(redelivered, on=list(keys),
+                                     how="left_semi")
+                      .withColumn("effective_to", ts))
+        untouched_open = open_rows.join(redelivered, on=list(keys),
+                                        how="left_anti")
+        history = old.filter(F.col("effective_to").isNotNull())
+        batch = (history.select(*cols)
+                 .unionByName(closed_now.select(*cols))
+                 .unionByName(untouched_open.select(*cols))
+                 .unionByName(batch))
+    _commit(batch, table_path, state["version"], replace=True)

@@ -2,11 +2,11 @@
 """Scale probe for the streaming foreachBatch upsert (r9 verdict #5).
 
 q_stream_upsert_readback claims the upsert is O(touched partitions +
-batch), not O(table): `sources.weather.upsert_clean` restricts the
-existing-table scan to the batch's partitions via a broadcast left_semi
-on the partition columns, rewrites ONLY those partitions (their new
-files replace the old ones in the table manifest), and never reads the
-rest. This probe measures that claim
+batch), not O(table): `sources.weather.upsert_clean` computes the batch
+once, observing its distinct partition keys on that pass, reads only the
+files the table manifest lists for those partitions, rewrites ONLY those
+partitions (their new files replace the old ones in the manifest), and
+never opens the rest. This probe measures that claim
 directly with three cells built from sf0.1 events' daily aggregate
 (40k rows, 4 leaf partitions at 1x):
 
@@ -16,7 +16,7 @@ directly with three cells built from sf0.1 events' daily aggregate
   worst case (max untouched partitions to NOT read).
 - cell A  table 1x,  batch 1x  (baseline; batch touches 4 partitions)
 - cell B  table 100x, batch 1x  (claim: ~flat vs A — 396 untouched
-  partitions cost only the driver-side file listing)
+  partitions cost only their manifest entries, read on the driver)
 - cell C  table 100x, batch 100x (batch touches all 400 partitions:
   wall must track BATCH size, not appear in cell B)
 

@@ -59,7 +59,19 @@ def test_admission_state_reseed_replaces_old_corpus(spark, tmp_path):
     after a re-seed with one document, every state table of both the
     postings and the banded layout holds only that document's rows. A
     partition-scoped overwrite would keep the old corpus's rows in every
-    bucket the new corpus does not touch."""
+    bucket the new corpus does not touch, so the seed must hold also
+    under a session whose partitionOverwriteMode is dynamic."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    _reseed_replaces_old_corpus(spark, tmp_path / "session_default")
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "dynamic")
+    try:
+        _reseed_replaces_old_corpus(spark, tmp_path / "dynamic")
+    finally:
+        spark.conf.set(conf, before)
+
+
+def _reseed_replaces_old_corpus(spark, tmp_path):
     d = load_par(spark, SF, "documents").select("doc_id", "text")
     old = d.filter(F.col("doc_id") < 200)
     new = d.filter(F.col("doc_id") == 7)

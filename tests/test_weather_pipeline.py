@@ -8,8 +8,12 @@ also materializes the committed driver-visible fixtures).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+import subprocess
+import sys
+import urllib.parse
 import uuid
 
 import pytest
@@ -427,6 +431,145 @@ def test_partition_paths_and_rows_match_spark_partitionby(spark, tmp_path):
     got = W.read_clean(spark, out)
     assert got.schema == want.schema
     assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+
+
+_ESCAPED_NAMES = ["a b", "c=d", "e%f", "g:h"]
+
+
+def _escaped_rows(spark, days, v):
+    """One row per day in January 2024 for each of four stations whose
+    partition directory names need escaping; the second station's year is
+    null, so its rows go to the default partition."""
+    return spark.createDataFrame(
+        [(f"isl/{n}", dt.date(2024, 1, d), "isl", n,
+          None if i == 1 else 2024, 1, v)
+         for d in days for i, n in enumerate(_ESCAPED_NAMES)],
+        "location string, date date, island string, location_name string, "
+        "year int, month int, v double")
+
+
+def test_upsert_keeps_survivors_of_escaped_and_null_partitions(spark,
+                                                               tmp_path):
+    """An upsert into partitions whose names are escaped, and into the
+    null-year partition, keeps every old row whose key the batch does not
+    redeliver: the driver finds each partition's files under the name the
+    writer gave them, and a partition it missed would lose its survivors
+    when the rewrite replaces it."""
+    out = str(tmp_path / "t")
+    W.write_clean(_escaped_rows(spark, [1, 2], 0.0), out)
+    W.upsert_clean(spark, out, _escaped_rows(spark, [2, 3], 1.0))
+    got = sorted((r["location_name"], r["date"].day, r["v"])
+                 for r in W.read_clean(spark, out).collect())
+    assert got == sorted((n, d, 0.0 if d == 1 else 1.0)
+                         for n in _ESCAPED_NAMES for d in (1, 2, 3))
+
+
+def test_partition_writer_ships_by_value(tmp_path):
+    """The executor writer unpickles and runs in a Python that cannot
+    import this package, and names its partition directories with the
+    same `_partition_dir` the driver looks the manifest up with."""
+    from pyspark import cloudpickle
+
+    table = str(tmp_path / "t")
+    writer = W._partition_writer(table, "w", ["v"])
+    key = ("isl", "c=d", None, 1)
+    batch = {"island": [key[0]], "location_name": [key[1]],
+             "year": [key[2]], "month": [key[3]], "v": [1.0]}
+    script = (
+        "import pickle, sys\n"
+        "import pyarrow as pa\n"
+        "try:\n"
+        "    import canary_weather_etl_spark\n"
+        "    sys.exit('the package is importable here')\n"
+        "except ImportError:\n"
+        "    pass\n"
+        "writer, batch = pickle.loads(sys.stdin.buffer.read())\n"
+        "batch = pa.RecordBatch.from_pydict(batch)\n"
+        "for out in writer(iter([batch])):\n"
+        "    print(out.column(0)[0].as_py())\n")
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True,
+        input=cloudpickle.dumps((writer, batch)),
+        env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"})
+    assert done.returncode == 0, done.stderr.decode()
+    part = done.stdout.decode().strip()
+    assert part == W._partition_dir(key)
+    assert os.listdir(os.path.join(table, part))
+
+
+def _commit_inputs(monkeypatch, out):
+    """The table files, relative to ``out``, read by each frame handed to
+    `_commit`."""
+    reads, real = [], W._commit
+
+    def spy(df, *args, **kwargs):
+        root = os.path.realpath(out)
+        paths = (os.path.realpath(urllib.parse.urlparse(f).path)
+                 for f in df.inputFiles())
+        reads.append({os.path.relpath(p, root) for p in paths
+                      if p.startswith(root + os.sep)})
+        real(df, *args, **kwargs)
+
+    monkeypatch.setattr(W, "_commit", spy)
+    return reads
+
+
+def _day_rows(spark, days, metric, scd2=False):
+    """Rows of one location on ``days`` ((month, day) pairs of 2024), in
+    the SCD2 shape or without its two validity columns."""
+    df = _scd2_frame(spark, [("a", f"2024-{m:02d}-{d:02d}", metric)
+                             for m, d in days], "2024-01-01")
+    return df if scd2 else df.drop("effective_from", "effective_to")
+
+
+def test_upsert_reads_only_the_partitions_it_touches(spark, tmp_path,
+                                                     monkeypatch):
+    """The rewrite reads the manifest files of the partitions the batch
+    touches and no other table file; a batch of only new partitions reads
+    none."""
+    out = str(tmp_path / "clean")
+    for month in (1, 2, 3):
+        W.write_clean(_day_rows(spark, [(month, d) for d in (1, 2)], 1.0),
+                      out)
+    with open(os.path.join(out, "_MANIFEST.json")) as f:
+        state = json.load(f)
+    jan = {e["file"] for p, es in state["batches"].items()
+           if p.endswith("/month=1") for e in es}
+    assert jan and len(jan) < len(state["files"])
+
+    reads = _commit_inputs(monkeypatch, out)
+    W.upsert_clean(spark, out, _day_rows(spark, [(1, 2), (1, 3)], 2.0))
+    W.upsert_clean(spark, out, _day_rows(spark, [(4, 1)], 2.0))
+    assert reads == [jan, set()]
+    got = {(r["date"].month, r["date"].day): r["metric"]
+           for r in W.read_clean(spark, out).collect()}
+    assert got == {(1, 1): 1.0, (1, 2): 2.0, (1, 3): 2.0, (2, 1): 1.0,
+                   (2, 2): 1.0, (3, 1): 1.0, (3, 2): 1.0, (4, 1): 2.0}
+
+
+@pytest.mark.parametrize("scd2", [False, True], ids=["clean", "scd2"])
+def test_upsert_computes_the_batch_once(spark, tmp_path, scd2):
+    """The batch is computed once per upsert, although the rewrite needs
+    its partitions, its keys and its rows: a Python filter in the batch
+    sees each row once."""
+    out = str(tmp_path / "t")
+    W.write_clean(_day_rows(spark, [(1, d) for d in range(1, 6)], 1.0,
+                            scd2), out)
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(_):
+        seen.add(1)
+        return True
+
+    batch = (_day_rows(spark, [(1, d) for d in range(4, 8)], 2.0)
+             .filter(F.udf(counted, "boolean")("location")))
+    (W.upsert_scd2 if scd2 else W.upsert_clean)(spark, out, batch)
+    assert seen.value == 4
+    current = W.read_clean(spark, out)
+    if scd2:
+        current = current.filter(F.col("effective_to").isNull())
+    assert {r["date"].day: r["metric"] for r in current.collect()} == \
+        {1: 1.0, 2: 1.0, 3: 1.0, 4: 2.0, 5: 2.0, 6: 2.0, 7: 2.0}
 
 
 def test_schema_round_trips(spark, tmp_path):
