@@ -80,33 +80,3 @@ def q2_corrected_best_location_per_month(spark: SparkSession) -> DataFrame:
         ) WHERE rn = 1
         ORDER BY month
     """)
-
-
-def register_clean_external(spark: SparkSession, table_path: str,
-                            table: str = "canary_weather_ext") -> None:
-    """The literal Glue-crawler equivalent (README.md:762-772, 1557):
-    an external partitioned table over the clean directory + partition
-    discovery via MSCK REPAIR TABLE. Unlike the temp view (which relies on
-    path-listing each query), the catalog table records partitions in the
-    metastore — the layout queried exactly as Athena queries the crawled
-    Glue table."""
-    import re
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
-        raise ValueError(f"invalid table identifier: {table!r}")
-    # LOCATION takes a string literal — escape quotes so a pathological
-    # path can't break out of the DDL statement
-    table_path_lit = table_path.replace("'", "''")
-    df = spark.read.parquet(table_path)
-    data_cols = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name not in ("island", "location_name", "year", "month"))
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"""
-        CREATE TABLE {table} ({data_cols})
-        USING PARQUET
-        PARTITIONED BY (island STRING, location_name STRING,
-                        year INT, month INT)
-        LOCATION '{table_path_lit}'
-    """)
-    spark.sql(f"MSCK REPAIR TABLE {table}")

@@ -12,13 +12,15 @@ layer every table format builds on:
   (file, row count, byte count) per task;
 - commits run on the DRIVER only after every task succeeded and publish
   `_MANIFEST.json` — the manifest IS the table state. One schema for
-  both writers: ``{"batches": {key: [entries]}, "files": flat,
+  every writer: ``{"batches": {key: [entries]}, "files": flat,
   "total_rows": n, "version": v}``, where batch jobs commit under a
   unique job key and streaming commits under the micro-batch id (which
   makes replayed-batch commits idempotent: the replay REPLACES its batch
   entry, never double-counts). The clean weather table
-  (sources/weather.py) commits through the same lock, publish and delete
-  helpers, keyed by partition path, with entries of the same shape;
+  (sources/weather.py) keys its entries, of the same shape, by partition
+  path and adds its ``schema``. Every writer commits through one
+  routine, `_commit_manifest`; no other module takes the lock, publishes
+  a state or deletes files;
 - the manifest is published with write-to-tmp + fsync + `os.replace`
   (each publish bumps ``version``), so a reader sees the old or the new
   state, never a mix, and a power loss keeps one of the two;
@@ -61,6 +63,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -74,9 +77,6 @@ _LOCK = "_MANIFEST.lock"
 
 class ConcurrentWriteError(RuntimeError):
     pass
-
-
-from dataclasses import dataclass
 
 
 @dataclass
@@ -96,12 +96,22 @@ def _load_state(path: str) -> dict:
         return json.load(f)
 
 
+def _committed_state(path: str) -> dict:
+    """The manifest a commit published at ``path``; FileNotFoundError
+    where none was (a state never published has no ``files``)."""
+    state = _load_state(path)
+    if "files" not in state:
+        raise FileNotFoundError(f"{path} has no committed {_MANIFEST}")
+    return state
+
+
 def _publish_state(path: str, state: dict) -> None:
     """Publish ``state`` as the next manifest version, durably: the temp
     file is synced before the rename and the directory after it, so a
     power loss keeps the old manifest or the new one."""
     state["files"] = [e for entries in state["batches"].values()
                       for e in entries]
+    state["total_rows"] = sum(e["rows"] for e in state["files"])
     state["version"] = state.get("version", 0) + 1
     manifest_path = os.path.join(path, _MANIFEST)
     tmp = manifest_path + f".tmp-{uuid.uuid4().hex}"
@@ -159,24 +169,50 @@ class _manifest_lock:
         return False
 
 
-def _commit_under_key(path: str, key: str, entries: list,
-                      truncate: bool) -> None:
-    """The one commit routine both writers share: update state[key],
-    publish, then delete superseded files (AFTER publish, so no reader
-    window observes missing live files)."""
-    with _manifest_lock(path):
-        state = _load_state(path)
-        superseded = []
-        if truncate:
-            superseded = [e["file"] for entries_ in state["batches"].values()
-                          for e in entries_]
-            state["batches"] = {}
-        elif key in state["batches"]:  # replayed stream batch: idempotent
-            superseded = [e["file"] for e in state["batches"][key]]
-        state["batches"][key] = entries
-        state["total_rows"] = sum(e["rows"] for entries_ in
-                                  state["batches"].values() for e in entries_)
-        _publish_state(path, state)
+def _commit_manifest(path: str, entries: dict[str, list[dict]], mode: str,
+                     version: int | None, schema: dict | None) -> None:
+    """The one commit routine of every writer: the sink's batch and
+    stream writers and the clean weather table (sources/weather.py).
+
+    1. Under the lock, load the state; with ``version``, check that the
+       manifest is still at the version the writer read.
+    2. Apply ``entries`` (file entries by key): ``mode`` "add" appends
+       them to their keys' entries, "replace" replaces their keys'
+       entries, "truncate" replaces the whole state. Record ``schema``
+       when given.
+    3. Publish, then delete the superseded files (AFTER the publish, so
+       no reader window observes missing live files).
+
+    A `ConcurrentWriteError` (the lock is held, or the manifest moved
+    past ``version``) removes the files of ``entries``, which no manifest
+    lists, and propagates."""
+    try:
+        with _manifest_lock(path):
+            state = _load_state(path)
+            now = state.get("version", 0)
+            if version is not None and now != version:
+                raise ConcurrentWriteError(
+                    f"{path} moved from version {version} to {now} "
+                    "while this write ran")
+            batches, superseded = state["batches"], []
+            if mode == "truncate":
+                superseded = [e["file"] for old in batches.values()
+                              for e in old]
+                batches.clear()
+            for key, new in entries.items():
+                old = batches.get(key, [])
+                if mode == "add":
+                    new = old + new
+                else:
+                    superseded += [e["file"] for e in old]
+                batches[key] = new
+            if schema is not None:
+                state["schema"] = schema
+            _publish_state(path, state)
+    except ConcurrentWriteError:
+        _remove_files(path, [e["file"] for new in entries.values()
+                             for e in new])
+        raise
     _remove_files(path, superseded)
 
 
@@ -207,8 +243,8 @@ class ManifestJsonlWriter(DataSourceWriter):
     # driver side — only after all tasks succeeded
     def commit(self, messages) -> None:
         entries = _split_messages(self.path, messages)
-        _commit_under_key(self.path, f"job-{uuid.uuid4().hex}", entries,
-                          truncate=self.overwrite)
+        _commit_manifest(self.path, {f"job-{uuid.uuid4().hex}": entries},
+                         "truncate" if self.overwrite else "add", None, None)
 
     def abort(self, messages) -> None:
         _remove_files(self.path, [m.filename for m in messages
@@ -237,8 +273,9 @@ class ManifestJsonlStreamWriter(DataSourceStreamWriter):
 
     def commit(self, messages, batchId: int) -> None:
         entries = _split_messages(self.path, messages)
-        _commit_under_key(self.path, str(batchId), entries,
-                          truncate=self.overwrite)
+        _commit_manifest(self.path, {str(batchId): entries},
+                         "truncate" if self.overwrite else "replace", None,
+                         None)
 
     def abort(self, messages, batchId: int) -> None:
         _remove_files(self.path, [m.filename for m in messages
@@ -265,9 +302,8 @@ def read_manifest_jsonl(spark: SparkSession, path: str,
     or in-flight jobs are invisible, which is the whole point. A
     legitimately-empty committed dataset reads as an empty frame (schema
     required then — there are no files to infer from)."""
-    with open(os.path.join(path, _MANIFEST), encoding="utf-8") as f:
-        manifest = json.load(f)
-    files = [os.path.join(path, e["file"]) for e in manifest["files"]]
+    files = [os.path.join(path, e["file"])
+             for e in _committed_state(path)["files"]]
     if not files:
         if schema is None:
             raise ValueError(
@@ -303,8 +339,7 @@ def vacuum_manifest_dir(path: str, force_unlock: bool = False) -> list[str]:
     if force_unlock:
         _remove_files(path, [_LOCK])
     with _manifest_lock(path):
-        with open(os.path.join(path, _MANIFEST), encoding="utf-8") as f:
-            live = {e["file"] for e in json.load(f)["files"]}
+        live = {e["file"] for e in _committed_state(path)["files"]}
         deleted = []
         for dirpath, _dirs, files in os.walk(path, topdown=False):
             rel_dir = os.path.relpath(dirpath, path)

@@ -1,7 +1,9 @@
 """Schema-drift defenses (reference B6, README.md:1248-1282, 1453-1476):
 the reference reads back the clean table's schema, detects duplicate column
 names, renames collisions, and bootstraps a minimal empty table when the
-clean layer doesn't exist yet. Same guarantees here, DataFrame-native:
+clean layer doesn't exist yet. The checks hold here, DataFrame-native; the
+bootstrap has no counterpart, as the first `sources.weather.write_clean`
+creates the table and its manifest records the schema:
 
 - duplicate-name detection is case-insensitive (Spark's resolver default)
 - collision repair renames right-side duplicates with a suffix instead of
@@ -122,24 +124,6 @@ def read_evolved(spark: SparkSession, path: str) -> DataFrame:
     gets sampled — a silently nondeterministic schema). Columns absent
     from a file read as NULL for its rows."""
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def ensure_table_exists(spark: SparkSession, path: str,
-                        schema: StructType,
-                        partition_cols: tuple[str, ...] = ()) -> bool:
-    """Bootstrap: if no parquet table exists at `path`, write an empty one
-    with the given schema (README.md:1270-1282's minimal-schema create).
-    Returns True if the table already existed."""
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        empty = spark.createDataFrame([], schema)
-        writer = empty.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-        return False
 
 
 def read_jsonl_quarantine(spark: SparkSession, path: str,

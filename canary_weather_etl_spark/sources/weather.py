@@ -19,8 +19,8 @@ single declarative plan:
 - per-partition upsert loop (B6, README.md:1488-1545) → the batch computed
   once, the old rows read only from the manifest files of the partitions
   it touches, left_anti + unionByName, one write committed as a new
-  version of the table's file manifest (`_commit`, the protocol of
-  sources/manifest_sink.py)
+  version of the table's file manifest (`_commit`, through the commit
+  routine of sources/manifest_sink.py)
 - Spark's Hadoop Parquet writer → one ``mapInArrow`` pass in which each
   task writes its partitions' files with pyarrow straight into place: no
   staging directory, no renames, no checksum sidecars. The manifest alone
@@ -51,8 +51,7 @@ from pyspark.sql.types import (
 
 from ..functions.litexpr import string_literal_sql
 from ..session import materialize
-from .manifest_sink import (_MANIFEST, ConcurrentWriteError, _load_state,
-                            _manifest_lock, _publish_state, _remove_files)
+from .manifest_sink import _MANIFEST, _commit_manifest, _load_state
 from .schema_guard import check_batch_compatible
 
 # The 20 daily variables (README.md:174-181) + the parallel date array.
@@ -457,22 +456,22 @@ def _partition_writer(table_path: str, write_id: str, data_cols: list[str]):
 
 def _commit(df: DataFrame, table_path: str, version: int,
             replace: bool) -> None:
-    """The table's one commit protocol, shared with the manifest sink
-    (sources/manifest_sink.py; the design table formats build on, Delta
-    Lake, Armbrust et al., VLDB 2020). The manifest lists the live files
-    of each partition path, with their rows and bytes, and the table's
-    schema.
+    """Write ``df`` as the table's next version. The manifest lists the
+    live files of each partition path, with their rows and bytes, and
+    the table's schema (the design table formats build on, Delta Lake,
+    Armbrust et al., VLDB 2020).
 
     1. The executors write ``df``, sorted within each task by partition
        then ``date``: each task writes one Parquet file per partition its
        rows hold, under a name unique to this write and task, straight
        into the partition directory (`_partition_writer`), and reports it.
-    2. Under the manifest lock, if the manifest is still at ``version``
-       (the one the write read), publish the reported files and
-       ``df``'s schema: with ``replace`` each written partition's files
-       replace its old ones, else they are added. If not, raise
-       `ConcurrentWriteError` and remove the reported files.
-    3. Delete the superseded files.
+    2. One call to the commit routine every manifest writer shares
+       (`manifest_sink._commit_manifest`): if the manifest is still at
+       ``version`` (the one the write read), it publishes the reported
+       files and ``df``'s schema, then deletes the superseded files. With
+       ``replace`` each written partition's files replace its old ones,
+       else they are added. If not, it removes the reported files and
+       raises `ConcurrentWriteError`.
 
     Readers see the old snapshot until the publish and the new one after
     it. A write that fails or crashes before the publish leaves files no
@@ -487,31 +486,9 @@ def _commit(df: DataFrame, table_path: str, version: int,
               .mapInArrow(writer, _WRITTEN_FILE).collect()):
         written.setdefault(r["partition"], []).append(
             {"file": r["file"], "rows": r["rows"], "bytes": r["bytes"]})
-    if not written:  # an empty frame changes no partition
-        return
-    try:
-        with _manifest_lock(table_path):
-            state = _load_state(table_path)
-            now = state.get("version", 0)
-            if now != version:
-                raise ConcurrentWriteError(
-                    f"{table_path} moved from version {version} to {now} "
-                    "while this write ran")
-            superseded = []
-            for part, entries in written.items():
-                old = state["batches"].get(part, [])
-                if replace:
-                    superseded += [e["file"] for e in old]
-                else:
-                    entries = old + entries
-                state["batches"][part] = entries
-            state["schema"] = df.schema.jsonValue()
-            _publish_state(table_path, state)
-    except ConcurrentWriteError:
-        _remove_files(table_path, [e["file"] for entries in written.values()
-                                   for e in entries])
-        raise
-    _remove_files(table_path, superseded)
+    if written:  # an empty frame changes no partition
+        _commit_manifest(table_path, written, "replace" if replace else "add",
+                         version, df.schema.jsonValue())
 
 
 def compact_partitions(spark: SparkSession, table_path: str,

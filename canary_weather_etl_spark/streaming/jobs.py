@@ -201,11 +201,14 @@ def stream_dedupe_within_watermark(events: DataFrame, keys: list[str],
 def stream_upsert_sink(stream: DataFrame, table_path: str,
                        checkpoint: str,
                        keys: tuple[str, ...] = ("location", "date")):
-    """foreachBatch sink running the SAME upsert operator as the batch path
-    (sources.weather.upsert_clean): each micro-batch is a '31-day window
-    re-fetch' and lands with new-wins-on-key, partition-scoped-rewrite
-    semantics. The first micro-batch creates the table; a later one
-    upserts into it. Returns the StreamingQuery."""
+    """foreachBatch sink running the SAME writers as the batch path
+    (sources.weather): each micro-batch is a '31-day window re-fetch'
+    and lands with new-wins-on-key, partition-scoped-rewrite semantics.
+    The first micro-batch creates the table (`write_clean`); a later one
+    upserts into it (`upsert_clean`). Either way it commits a new
+    version of the table's manifest, so `read_clean` reads the result,
+    a crash mid-batch leaves the previous version, and the batch's replay
+    replaces its own rows. Returns the StreamingQuery."""
     from ..sources.weather import table_exists, upsert_clean, write_clean
 
     def apply(batch: DataFrame, batch_id: int) -> None:
@@ -226,11 +229,13 @@ def stream_weather_ingest(spark: SparkSession, raw_glob: str,
                           table_path: str, checkpoint: str):
     """Streaming twin of the batch Open-Meteo ingestion: readStream over the
     raw struct-of-arrays JSON drops, the SAME flatten and length check
-    (sources.weather.flatten_open_meteo), partitioned parquet sink.
+    (sources.weather.flatten_open_meteo), committed by `stream_upsert_sink`.
 
-    New raw files landing under the glob are flattened and appended
-    incrementally — the reference's 'crawler notices new files monthly'
-    loop as a continuous query."""
+    New raw files landing under the glob are flattened and upserted per
+    micro-batch — the reference's 'crawler notices new files monthly'
+    loop as a continuous query. A drop that re-delivers days replaces
+    them (new wins on (location, date)), so the table keeps one row per
+    key. Returns the StreamingQuery."""
     from ..sources.weather import (
         OPEN_METEO_SCHEMA,
         flatten_open_meteo,
@@ -245,11 +250,4 @@ def stream_weather_ingest(spark: SparkSession, raw_glob: str,
         .withColumn("year", F.year("date"))
         .withColumn("month", F.month("date"))
     )
-    return (
-        flat.writeStream.format("parquet")
-        .option("path", table_path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("island", "location_name", "year", "month")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return stream_upsert_sink(flat, table_path, checkpoint)

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for every headline (bench=True) query into
-plans/r15/<name>_{before,after}.txt — the r15 optimization round's plan
-evidence (the judge checks plan claims against these files).
+plans/<round>/<name>_{before,after}.txt — an optimization round's plan
+evidence, checked against the plan claims the round makes.
 
 Usage:
-    python scripts/capture_plans_r15.py before [names...]
-    python scripts/capture_plans_r15.py after  [names...]
+    python scripts/capture_plans.py <round> before [names...]
+    python scripts/capture_plans.py <round> after  [names...]
+
+``<round>`` names the output directory under plans/ (e.g. r15).
 
 Plan-only: builds each DataFrame and formats its physical plan without
 executing it (queries whose *construction* runs bounded driver jobs —
@@ -25,15 +27,16 @@ from canary_weather_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    assert tag in ("before", "after"), "usage: capture_plans_r15.py before|after [names...]"
-    only = sys.argv[2:]
+    usage = "usage: capture_plans.py <round> before|after [names...]"
+    assert len(sys.argv) >= 3, usage
+    rnd, tag, only = sys.argv[1], sys.argv[2], sys.argv[3:]
+    assert tag in ("before", "after"), usage
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r15")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("canary-weather-etl-spark-plans-r15")
+    spark = get_spark(f"canary-weather-etl-spark-plans-{rnd}")
     names = only or sorted(n for n, s in REGISTRY.items() if s.bench)
     for name in names:
         spec = REGISTRY[name]

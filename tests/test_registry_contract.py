@@ -79,6 +79,30 @@ def test_materialize_is_the_only_checkpoint():
     assert not stray, f"materialize through session.materialize: {stray}"
 
 
+def test_manifest_sink_holds_the_only_commit():
+    """Every manifest commit goes through the one routine in
+    ``sources/manifest_sink.py``: no other package module may take the
+    manifest lock, publish a state or delete table files, and the paths
+    that went around the manifest are gone."""
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "canary_weather_etl_spark")
+    sink = pkg / "sources" / "manifest_sink.py"
+    stray = [f"{p.relative_to(pkg)}:{i}" for p in sorted(pkg.rglob("*.py"))
+             if p != sink
+             for i, line in enumerate(p.read_text().splitlines(), 1)
+             if re.search(r"\b(_manifest_lock|_publish_state|_remove_files)\(",
+                          line)]
+    assert not stray, f"commit through manifest_sink: {stray}"
+    gone = {"_commit_under_key", "register_clean_external",
+            "ensure_table_exists"}
+    defined = [f"{p.relative_to(pkg)}:{n.lineno} {n.name}"
+               for p in sorted(pkg.rglob("*.py"))
+               for n in ast.walk(ast.parse(p.read_text()))
+               if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+               and n.name in gone]
+    assert not defined, f"deleted paths are back: {defined}"
+
+
 def test_get_spark_reads_the_environment_when_called(monkeypatch):
     """``get_spark`` takes cores and driver memory from the environment
     when it is called. The operator modules import ``session``, so a

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -74,23 +73,6 @@ def test_batch_compatibility_gate(spark):
     with pytest.raises(ValueError, match="unexpected new columns"):
         G.check_batch_compatible(widened, table_schema)
     G.check_batch_compatible(widened, table_schema, allow_new_columns=True)
-
-
-def test_ensure_table_exists_bootstrap(spark, tmp_path):
-    schema = StructType([
-        StructField("location", StringType(), False),
-        StructField("date", DateType(), False),
-        StructField("year", IntegerType(), False),
-        StructField("month", IntegerType(), False),
-        StructField("island", StringType(), False),
-        StructField("location_name", StringType(), False),
-    ])  # the reference's minimal bootstrap schema (README.md:1270-1277)
-    path = str(tmp_path / "clean")
-    assert G.ensure_table_exists(spark, path, schema) is False  # created
-    back = spark.read.parquet(path)
-    assert back.count() == 0
-    assert {f.name for f in back.schema.fields} == {f.name for f in schema.fields}
-    assert G.ensure_table_exists(spark, path, schema) is True  # already there
 
 
 def test_append_evolved_column_add_and_merge_read(spark, tmp_path):

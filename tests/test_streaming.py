@@ -150,7 +150,7 @@ def test_stream_weather_ingest_matches_batch(spark, tmp_path):
                               str(tmp_path / "ckpt"))
     J.drain(q)
 
-    got = spark.read.parquet(out)
+    got = W.read_clean(spark, out)
     assert got.count() == 2 * 7
     batch = W.read_open_meteo(spark, f"{raw}/*/*/2*.json")
     assert batch.count() == got.count()
@@ -158,6 +158,28 @@ def test_stream_weather_ingest_matches_batch(spark, tmp_path):
                    & (F.col("date") == F.lit("2024-05-03").cast("date"))).collect()[0]
     assert g["temperature_2m_max"] == 1 + 2 * 0.5
     assert g["island"] == "Tenerife" and g["month"] == 5
+
+
+def test_stream_weather_redelivery_keeps_one_row_per_key(spark, tmp_path):
+    """A second raw drop that re-delivers days of the first, with shifted
+    values, replaces them: the streamed table keeps one row per
+    (location, date), the newest delivery wins, and it reads back through
+    the table's manifest."""
+    from canary_weather_etl_spark.sources import weather as W
+    from canary_weather_etl_spark.sources import weather_fixtures as WF
+
+    raw, out, ckpt = (str(tmp_path / d) for d in ("raw", "clean", "ckpt"))
+    WF.write_raw(raw, WF.dates(1, 10), suffix="a")
+    J.drain(J.stream_weather_ingest(spark, f"{raw}/*/*/om_*.json", out, ckpt))
+    WF.write_raw(raw, WF.dates(6, 10), bias=100.0, suffix="b")
+    J.drain(J.stream_weather_ingest(spark, f"{raw}/*/*/om_*.json", out, ckpt))
+
+    rows = W.read_clean(spark, out).select(
+        "location", "date", "temperature_2m_max").collect()
+    assert len(rows) == len(WF.LOCATIONS) * 15
+    assert len({(r["location"], r["date"]) for r in rows}) == len(rows)
+    for r in rows:
+        assert (r["temperature_2m_max"] >= 100) == (r["date"].day >= 6)
 
 
 def test_stream_sliding_equals_batch(spark, events_dir, sf_dir):

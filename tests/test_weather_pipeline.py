@@ -275,8 +275,8 @@ class _Crash(Exception):
     pass
 
 
-# (function of sources/weather.py, whether the crash comes before or after
-# its first call, the snapshot a reader then sees)
+# (function of sources/manifest_sink.py, whether the crash comes before or
+# after its first call, the snapshot a reader then sees)
 _COMMIT_STEPS = {
     "after_executor_write": ("_publish_state", "before", "old"),
     "after_publish": ("_remove_files", "before", "new"),
@@ -295,14 +295,14 @@ def test_upsert_crash_leaves_old_or_new_table(spark, tmp_path, monkeypatch,
     batch = _clean(spark, str(tmp_path / "raw2"), 6, 10, bias=100.0,
                    suffix="b")
     attr, when, expect = _COMMIT_STEPS[step]
-    real = getattr(W, attr)
+    real = getattr(M, attr)
 
     def crashing(*args):
         if when == "after":
             real(*args)
         raise _Crash(step)
 
-    monkeypatch.setattr(W, attr, crashing)
+    monkeypatch.setattr(M, attr, crashing)
     with pytest.raises(_Crash):
         W.upsert_clean(spark, out, batch)
     monkeypatch.undo()
@@ -322,7 +322,7 @@ def test_reader_sees_whole_table_during_upsert(spark, tmp_path, monkeypatch):
     W.write_clean(_clean(spark, str(tmp_path / "raw1"), 1, 10), out)
     batch = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0,
                    suffix="b")
-    real, seen = W._publish_state, []
+    real, seen = M._publish_state, []
 
     def paused_publish(path, state):
         assert _files_on_disk(out) - _live_files(out)
@@ -330,7 +330,7 @@ def test_reader_sees_whole_table_during_upsert(spark, tmp_path, monkeypatch):
         seen.append(spark.table(Q.VIEW).count())
         real(path, state)
 
-    monkeypatch.setattr(W, "_publish_state", paused_publish)
+    monkeypatch.setattr(M, "_publish_state", paused_publish)
     W.upsert_clean(spark, out, batch)
     monkeypatch.undo()
     assert seen and set(seen) == {30}
@@ -345,16 +345,16 @@ def test_second_writer_fails_loudly(spark, tmp_path, monkeypatch):
     late = _clean(spark, str(tmp_path / "raw2"), 6, 5, bias=100.0, suffix="b")
     early = _clean(spark, str(tmp_path / "raw3"), 1, 3, bias=200.0,
                    suffix="c")
-    real, late_files = W._manifest_lock, set()
+    real, late_files = M._manifest_lock, set()
 
     def late_lock(path):
         # the late writer has read and written its files: pause
         late_files.update(_files_on_disk(out) - _live_files(out))
-        monkeypatch.setattr(W, "_manifest_lock", real)
+        monkeypatch.setattr(M, "_manifest_lock", real)
         W.upsert_clean(spark, out, early)
         return real(path)
 
-    monkeypatch.setattr(W, "_manifest_lock", late_lock)
+    monkeypatch.setattr(M, "_manifest_lock", late_lock)
     with pytest.raises(M.ConcurrentWriteError, match="version"):
         W.upsert_clean(spark, out, late)
     monkeypatch.undo()

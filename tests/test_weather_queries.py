@@ -96,24 +96,3 @@ def test_q3_partition_pruned_uv(spark, clean_table):
     # the WHERE hits the partition column → pruned scan
     plan = Q.q3_best_uv_month(spark)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-
-
-def test_external_table_msck_crawler_parity(spark, clean_table):
-    """CREATE TABLE + MSCK REPAIR = the Glue crawler step: partitions
-    land in the metastore and partition-pruned SQL works through the
-    catalog table."""
-    Q.register_clean_external(spark, clean_table, "wx_ext")
-    try:
-        parts = spark.sql("SHOW PARTITIONS wx_ext").collect()
-        assert len(parts) == 4  # 2 locations x 2 months
-        n = spark.sql("SELECT COUNT(*) AS n FROM wx_ext").collect()[0]["n"]
-        assert n == 40
-        one = spark.sql("""
-            SELECT COUNT(*) AS n FROM wx_ext
-            WHERE location_name = 'Las_Palmas_de_Gran_Canaria' AND month = 1
-        """)
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        assert one.collect()[0]["n"] == 10
-        assert "PartitionFilters" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS wx_ext")
