@@ -43,6 +43,11 @@ to a broadcast join against a centroid DataFrame + min-struct
 aggregation (``assign_clusters_join``): one extra shuffle of assignment
 rows per iteration, but constant-size plans. Same integer arithmetic,
 same oracle semantics.
+
+One centroid model: k-means, the IVF coarse quantizer and the PQ
+codebooks are all ``train_codebooks`` (one codebook, or one per
+subspace) and persist through ``persisted_codebooks``, one JSON model
+file checked against the requested shape on every load.
 """
 
 from __future__ import annotations
@@ -124,53 +129,149 @@ def assign_clusters_join(qdf: DataFrame,
                     F.col("b.d").alias("dist_units")))
 
 
-def kmeans_fixed(qdf: DataFrame, k: int = 4,
-                 iterations: int = 3) -> tuple[DataFrame, dict[int, list[int]]]:
-    """Lloyd's k-means over a quantized (vec_id, qvec) frame.
+def _assigner(k: int):
+    """``assign_clusters`` for k <= LITERAL_K_MAX, ``assign_clusters_join``
+    above it (module docstring)."""
+    return assign_clusters if k <= LITERAL_K_MAX else assign_clusters_join
 
-    Returns (final assignment frame, final centroids). ``iterations``
-    assign→update rounds, then one final assignment against the last
-    centroids (the frame the caller aggregates). Empty clusters keep
-    their previous centroid — mirrored by the oracle's LEFT JOIN +
-    COALESCE. Assignment is ``assign_clusters`` for k <= LITERAL_K_MAX
-    and ``assign_clusters_join`` above it (module docstring).
+
+def _argmin_switched(vec_sql: str, key_sql: str,
+                     books: dict[int, dict[int, list[int]]]) -> F.Column:
+    """Nearest-centroid code with the codebook selected by the subspace
+    column: a when-chain over literal per-subspace argmin folds — pure
+    codegen, each row evaluates only its branch, the whole chain parsed
+    from ONE SQL string (functions.litexpr)."""
+    whens = " ".join(
+        f"WHEN {key_sql} = {int(s)} "
+        f"THEN ({argmin_struct_sql(vec_sql, books[s])}).cid"
+        for s in sorted(books))
+    return F.expr(f"CASE {whens} END")
+
+
+def train_codebooks(qdf: DataFrame, k: int, iterations: int, m: int = 1
+                    ) -> dict[int, dict[int, list[int]]]:
+    """The one Lloyd loop: ``m`` codebooks of ``k`` centroids each, one
+    per contiguous subspace of ``qvec`` — m=1 is k-means over whole
+    vectors, m>1 the product quantizer of Jégou et al., 'Product
+    Quantization for Nearest Neighbor Search' (TPAMI 2011). Returns
+    {subspace: {cluster_id: centroid}} in fixed-point units.
+
+    Init: the first ``k`` points in vec_id order — one TakeOrdered job,
+    k bounded rows sliced per subspace on the driver (on the dense ids
+    of every oracle fixture these are vec_id < k; unlike that filter it
+    also holds on sparse ids). Each round is one corpus pass and one
+    bounded collect for all m codebooks: assign, ``posexplode`` to
+    (subspace, cluster, dim), one map-side-combinable ``groupBy`` sum /
+    count, FLOOR centroid update; empty clusters keep their centroid.
+    m=1 assigns with ``assign_clusters`` (or the join above
+    LITERAL_K_MAX); m>1 explodes each vector into its m subvectors and
+    switches the literal centroids on the subspace column.
     """
-    assign = assign_clusters if k <= LITERAL_K_MAX else assign_clusters_join
-    # init: the first k points in vec_id order — one TakeOrdered job, k
-    # bounded rows to the driver. Unlike a `vec_id < k` filter it also
-    # holds on sparse ids (the scale amplifier shifts ids per copy)
     init_rows = (qdf.select("vec_id", "qvec")
                  .orderBy("vec_id").limit(k).collect())
-    centroids = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
-                 for r in init_rows}
-    if len(centroids) != k:
+    ids = {int(r["vec_id"]) for r in init_rows}
+    if len(ids) != k:
         raise ValueError(f"init needs k={k} distinct vec_ids, corpus "
-                         f"has only {len(centroids)}")
-    dims = len(next(iter(centroids.values())))
+                         f"has only {len(ids)}")
+    dims = len(init_rows[0]["qvec"])
+    if dims % m:
+        raise ValueError(f"dims {dims} not divisible by m={m}")
+    sublen = dims // m
+    books = {s: {int(r["vec_id"]):
+                 [int(v) for v in r["qvec"][s * sublen:(s + 1) * sublen]]
+                 for r in init_rows}
+             for s in range(m)}
+
+    if m == 1:
+        key, vec = [], "qvec"
+
+        def assign(books):
+            return _assigner(k)(qdf, books[0])
+    else:
+        key, vec = ["subspace"], "sub"
+        sub = qdf.select(F.explode(F.array(*[
+            F.struct(F.lit(s).alias("subspace"),
+                     F.slice("qvec", s * sublen + 1, sublen).alias("sub"))
+            for s in range(m)])).alias("e")).select("e.subspace", "e.sub")
+
+        def assign(books):
+            # the argmin lives in its OWN Project: co-located with the
+            # posexplode generator, Catalyst's generator rewrite strips
+            # the fold's struct field names (FIELD_NOT_FOUND col1/col2)
+            return sub.select(
+                "subspace",
+                _argmin_switched("sub", "subspace", books).alias("cluster_id"),
+                "sub")
 
     for _ in range(iterations):
-        asg = assign(qdf, centroids)
-        # one shuffle of k*dims keys, partial-aggregated map-side
-        sums = (asg.select("cluster_id",
-                           F.posexplode("qvec").alias("ord", "qv"))
-                .groupBy("cluster_id", "ord")
+        # one shuffle of m*k*sublen keys, partial-aggregated map-side
+        sums = (assign(books).select(*key, "cluster_id",
+                                     F.posexplode(vec).alias("ord", "qv"))
+                .groupBy(*key, "cluster_id", "ord")
                 .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
                 # FLOOR(double-div of exact ints): sums < 2^53, exact in
                 # double; single deterministic divide — NOT `div`, whose
                 # truncation disagrees with FLOOR on negatives
                 .withColumn("cv", F.floor(F.col("s").cast("double")
                                           / F.col("n")).cast("long"))
-                .select("cluster_id", "ord", "cv")
-                .collect())  # bounded: k*dims longs
-        new_cent = {cid: list(vec) for cid, vec in centroids.items()}
-        got: dict[int, dict[int, int]] = {}
+                .select(*key, "cluster_id", "ord", "cv")
+                .collect())  # bounded: m*k*sublen longs
+        got: dict[tuple[int, int], dict[int, int]] = {}
         for r in sums:
-            got.setdefault(int(r["cluster_id"]), {})[int(r["ord"])] = int(r["cv"])
-        for cid, by_ord in got.items():
-            new_cent[cid] = [by_ord[i] for i in range(dims)]
-        centroids = new_cent
+            s = int(r["subspace"]) if key else 0
+            got.setdefault((s, int(r["cluster_id"])), {})[
+                int(r["ord"])] = int(r["cv"])
+        books = {s: {c: ([got[(s, c)][i] for i in range(sublen)]
+                         if (s, c) in got else v)
+                     for c, v in cents.items()}
+                 for s, cents in books.items()}
+    return books
 
-    return assign(qdf, centroids), centroids
+
+def kmeans_fixed(qdf: DataFrame, k: int = 4,
+                 iterations: int = 3) -> tuple[DataFrame, dict[int, list[int]]]:
+    """Lloyd's k-means over a quantized (vec_id, qvec) frame: the
+    single-codebook ``train_codebooks``. Returns (final assignment frame,
+    final centroids) — the assignment against the last centroids is the
+    frame the caller aggregates."""
+    centroids = train_codebooks(qdf, k, iterations)[0]
+    return _assigner(k)(qdf, centroids), centroids
+
+
+def persisted_codebooks(path: str, qdf: DataFrame, k: int, iterations: int,
+                        m: int = 1, sublen: int | None = None
+                        ) -> dict[int, dict[int, list[int]]]:
+    """The centroid model file: the codebooks at ``path``, trained on
+    ``qdf`` by ``train_codebooks`` and published there first when the
+    file is missing. Publication is tmp-then-``os.replace``, so a crashed
+    writer never leaves a half file; training is deterministic, so
+    concurrent writers over one corpus publish the same file. Every load
+    checks the file against the request — ``m`` codebooks of ``k``
+    centroids, each ``sublen`` long when given (else all one length) —
+    and raises on a stale file rather than serve a mismatched model."""
+    import json
+    import os
+
+    if not os.path.isfile(path):
+        books = train_codebooks(qdf, k, iterations, m)
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        tmp = f"{path}.tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(books, f)
+        os.replace(tmp, path)
+    with open(path) as f:
+        books = {int(s): {int(c): [int(x) for x in v] for c, v in d.items()}
+                 for s, d in json.load(f).items()}
+    ks = sorted({len(d) for d in books.values()})
+    lens = sorted({len(v) for d in books.values() for v in d.values()})
+    if (sorted(books) != list(range(m)) or ks != [k] or len(lens) != 1
+            or sublen not in (None, lens[0])):
+        raise ValueError(
+            f"cached centroid model at {path} has shape (m={len(books)}, "
+            f"k={ks}, sublen={lens}) but (m={m}, k={k}, sublen={sublen}) "
+            f"was requested — delete the stale file or use a "
+            f"parameter-keyed path")
+    return books
 
 
 def kmeans_cluster_profile(asg: DataFrame) -> DataFrame:

@@ -301,101 +301,41 @@ def cosine_near_dup_pairs_planted(embeddings: DataFrame,
     )
 
 
-def train_ivf_quantizer_fixed(embeddings: DataFrame, n_lists: int = 8,
-                              iterations: int = 2,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> DataFrame:
-    """Deterministic IVF coarse quantizer: the repo's integer fixed-point
-    Lloyd (clustering.kmeans_fixed) — bit-reproducible across engines,
-    partitionings and retries, so an IVF query over it is FULLY
-    SQL-oracle-able (the r8 PQ-ADC discipline). This is a TRAINING JOB:
-    persist it once (`persist_ivf_quantizer_fixed`) and feed it to
-    `topk_ivf_fixed` via `centroids`. Returns (list_id int, centroid
-    array<bigint>) in 1e6 fixed-point units."""
-    from .clustering import kmeans_fixed, quantize_vectors
-
-    spark = embeddings.sparkSession
-    qdf = quantize_vectors(embeddings, id_col, vec_col)
-    _asg, cent = kmeans_fixed(qdf, k=n_lists, iterations=iterations)
-    rows = [(int(cid), [int(v) for v in vec])
-            for cid, vec in sorted(cent.items())]
-    return spark.createDataFrame(rows,
-                                 "list_id int, centroid array<bigint>")
-
-
-def persist_ivf_quantizer_fixed(embeddings: DataFrame, path: str,
-                                n_lists: int = 8, iterations: int = 2,
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding") -> DataFrame:
-    """Train-once/reuse-forever wrapper: read the quantizer table at
-    `path` if its write committed (_SUCCESS), else train and write it.
-    Returns the centroid DataFrame read back from the table, so query
-    plans reference the parquet scan, not a training job."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    spark = embeddings.sparkSession
-    # a crashed prior write leaves a partial directory that parquet would
-    # happily read as a short centroid table (ADVICE r2)
-    committed = (not path.startswith("/")  # non-local FS: trust the catalog
-                 or os.path.isfile(os.path.join(path, "_SUCCESS")))
-    if committed:
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            pass  # path missing → train below; other errors surface
-    cdf = train_ivf_quantizer_fixed(embeddings, n_lists, iterations,
-                                    id_col, vec_col)
-    cdf.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame, k: int = 10,
+def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame,
+                   centroids: dict[int, list[int]], k: int = 10,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "query_id", n_lists: int = 8,
-                   n_probe: int = 4, iterations: int = 2,
-                   round_to: int = 6,
-                   centroids: DataFrame | None = None) -> DataFrame:
+                   query_id_col: str = "query_id", n_probe: int = 4,
+                   round_to: int = 6) -> DataFrame:
     """IVF-style approximate top-k: the corpus is partitioned into
-    `n_lists` inverted lists by the DETERMINISTIC fixed-point quantizer
-    and each query is scored only against its `n_probe` nearest lists —
-    the data-adaptive complement to `topk_lsh`. Corpus
-    assignment and query probing are integer L2 folds against the
-    (persisted) centroid-units table — broadcast crossJoin of n_lists
-    rows + one window per side, ties to (dist, list_id) exactly like
-    kmeans_fixed's argmin — then exact cosine rescoring on candidates
-    with the deterministic rounding. Every stage replays in SQL: the
-    oracle reuses q_kmeans_lloyd's unrolled-iteration prefix and probes
-    the SAME final centroids."""
+    inverted lists by the fixed-point coarse quantizer ``centroids``
+    (clustering.kmeans_fixed, or its persisted model file) and each
+    query is scored only against its `n_probe` nearest lists — the
+    data-adaptive complement to `topk_lsh`. Corpus assignment is
+    ``assign_clusters`` (one narrow projection); the queries are few
+    (they broadcast), so one bounded collect brings their quantized
+    vectors to the driver for ``_probe_lists``. Both pick by (integer
+    distance, list_id). Candidates are rescored by exact cosine with the
+    deterministic rounding. Every stage replays in SQL: the oracle
+    reuses q_kmeans_lloyd's unrolled-iteration prefix and probes the
+    SAME final centroids."""
     from pyspark.sql import Window
 
-    from .clustering import quantize_vectors
+    from .clustering import assign_clusters, quantize_vectors
 
-    cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
-        embeddings, n_lists, iterations, id_col, vec_col)
     base = embeddings.select(F.col(id_col).alias("vec_id"),
                              as_double(vec_col).alias("v"))
     qbase = queries.select(F.col(query_id_col).alias("query_id"),
                            as_double(vec_col).alias("qv"))
-    cq = quantize_vectors(embeddings, id_col, vec_col)
-    qq = (quantize_vectors(queries, query_id_col, vec_col)
-          .withColumnRenamed("vec_id", "query_id"))
-
-    def nearest(df: DataFrame, idc: str, n: int) -> DataFrame:
-        scored = (df.crossJoin(F.broadcast(cdf))
-                  .withColumn("d2", F.aggregate(
-                      F.zip_with("qvec", "centroid",
-                                 lambda a, b: (a - b) * (a - b)),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)))
-        w = Window.partitionBy(idc).orderBy(F.asc("d2"), F.asc("list_id"))
-        return (scored.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= n).select(idc, "list_id"))
-
-    assigned = nearest(cq, "vec_id", 1)
-    probes = nearest(qq, "query_id", n_probe)
+    assigned = (assign_clusters(quantize_vectors(embeddings, id_col, vec_col),
+                                centroids)
+                .select("vec_id", F.col("cluster_id").alias("list_id")))
+    probes = embeddings.sparkSession.createDataFrame(
+        [(int(r["vec_id"]), lid)
+         for r in quantize_vectors(queries, query_id_col, vec_col).collect()
+         for lid in _probe_lists(r["qvec"], centroids, n_probe)],
+        "query_id bigint, list_id bigint")
     scored = (
-        assigned.join(probes, "list_id")
+        assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(base, "vec_id").join(qbase, "query_id")
         .select("query_id", "vec_id",
@@ -621,152 +561,24 @@ def arrow_quantized_norms(df: DataFrame, id_col: str = "vec_id",
 
 # --- product quantization (PQ) ANN -------------------------------------------
 
-def persist_pq_codebooks(qdf: DataFrame, path: str, m: int, k: int,
-                         iterations: int = 2
-                         ) -> dict[int, dict[int, list[int]]]:
-    """`persist_ivf_quantizer_fixed`'s train-once contract applied to the
-    PQ model: the codebooks are m·k·(dims/m) driver ints — a JSON file,
-    not a table — written via tmp-then-rename (the _SUCCESS analogue, so
-    a crashed writer never leaves a half file a reader would trust).
-    Training is deterministic (fixed init, fixed fold order), so any
-    concurrent same-corpus writer produces the identical file."""
-    import json
-    import os
-
-    if os.path.isfile(path):
-        with open(path) as f:
-            raw = json.load(f)
-        books = {int(s): {int(c): [int(x) for x in v]
-                          for c, v in d.items()}
-                 for s, d in raw.items()}
-        # Cache validation (r14, ADVICE): a caller reusing a path across
-        # parameter changes must not silently get a mismatched codebook.
-        # Shape fully determines (m, k): m subspaces × k codewords.
-        if len(books) != m or any(len(d) != k for d in books.values()):
-            got = (len(books),
-                   sorted({len(d) for d in books.values()}))
-            raise ValueError(
-                f"cached PQ codebook at {path} has shape "
-                f"(m={got[0]}, k per subspace={got[1]}) but "
-                f"(m={m}, k={k}) was requested — delete the stale file "
-                f"or use a parameter-keyed path")
-        return books
-    books = pq_train_codebooks(qdf, m=m, k=k, iterations=iterations)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(books, f)
-    os.replace(tmp, path)
-    return books
-
-
 def pq_train_codebooks(qdf: DataFrame, m: int = 2, k: int = 4,
                        iterations: int = 2) -> dict[int, dict[int, list[int]]]:
-    """Train PQ codebooks: split each fixed-point vector (`qvec`, from
-    clustering.quantize_vectors) into ``m`` contiguous subspaces and run
-    broadcast-centroid Lloyd k-means per subspace with EXACTLY
-    clustering.kmeans_fixed's math (same init = first k vec_ids, same
-    zero-shuffle assignment fold with ties to the smaller code, same
-    FLOOR(double-div) update, empty clusters keep their centroid).
-    Returns {subspace: {code: centroid_subvector}} — m·k·(dims/m) driver
-    ints, the model a 100 TB deployment persists once and broadcasts.
+    """PQ codebooks (Jégou et al., TPAMI 2011): ``m`` contiguous
+    subspaces of each fixed-point vector (`qvec`, from
+    clustering.quantize_vectors), ``k`` codes each — the m-codebook case
+    of clustering.train_codebooks, one fused Lloyd loop for all m.
+    Returns {subspace: {code: centroid_subvector}}, m·k·(dims/m) driver
+    ints."""
+    from .clustering import train_codebooks
 
-    FUSED across subspaces (r8): the m per-subspace trainings run as ONE
-    Lloyd loop over an exploded (vec_id, s, sub) frame whose assignment
-    expression switches centroid literals on the subspace column — so
-    each round is ONE corpus pass and ONE (m·k·sublen)-key aggregate
-    instead of m of each. Per-subspace training made m passes over the
-    corpus per round (and m driver jobs); at production m (8-16
-    subspaces) that's an 8-16x reduction in training scans. Output is
-    bit-identical to the per-subspace loop (same folds, same update
-    arithmetic, subspaces never interact), which the unrolled
-    q_pq_adc_topk oracle and the planted-cluster pytest pin.
-
-    Public method: Jégou et al., 'Product Quantization for Nearest
-    Neighbor Search' (TPAMI 2011)."""
-    head = qdf.select("qvec").head()
-    if head is None:  # explicit, not an opaque NoneType TypeError
-        raise ValueError("pq_train_codebooks: input frame is empty — "
-                         "cannot derive dims or seed codebooks")
-    dims = len(head["qvec"])
-    if dims % m:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sublen = dims // m
-    sub = qdf.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).cast("int").alias("s"),
-                     F.slice("qvec", s * sublen + 1, sublen).alias("sub"))
-            for s in range(m)])).alias("e")
-    ).select("vec_id", F.col("e.s").alias("s"), F.col("e.sub").alias("sub"))
-
-    # one init collect for ALL subspaces: first k points by id, sliced
-    init_rows = sub.filter(F.col("vec_id") < k).collect()
-    books: dict[int, dict[int, list[int]]] = {s: {} for s in range(m)}
-    for r in init_rows:
-        books[int(r["s"])][int(r["vec_id"])] = [int(v) for v in r["sub"]]
-    for s in range(m):
-        if len(books[s]) != k:
-            raise ValueError(f"init expects vec_id 0..{k - 1} present, "
-                             f"got {sorted(books[s])} in subspace {s}")
-
-    for _ in range(iterations):
-        cid = _sub_argmin_switched("sub", "s", books)
-        # the assignment fold lives in its OWN Project: co-locating it
-        # with the posexplode generator trips Catalyst's generator
-        # rewrite, which strips the alias-derived struct field names
-        # inside the fold (FIELD_NOT_FOUND col1/col2); two stacked
-        # Projects collapse to one in the optimizer anyway
-        asg = sub.select("s", cid.alias("cluster_id"), "sub")
-        # ONE shuffle of m*k*sublen keys, partial-aggregated map-side;
-        # ONE bounded collect per round (vs one per subspace per round)
-        sums = (asg.select("s", "cluster_id",
-                           F.posexplode("sub").alias("ord", "qv"))
-                .groupBy("s", "cluster_id", "ord")
-                .agg(F.sum("qv").alias("sv"),
-                     F.count(F.lit(1)).alias("n"))
-                # FLOOR(double-div of exact ints) — clustering.py's rule
-                .withColumn("cv", F.floor(F.col("sv").cast("double")
-                                          / F.col("n")).cast("long"))
-                .select("s", "cluster_id", "ord", "cv")
-                .collect())
-        new_books = {s: {c: list(v) for c, v in books[s].items()}
-                     for s in range(m)}
-        got: dict[tuple[int, int], dict[int, int]] = {}
-        for r in sums:
-            got.setdefault((int(r["s"]), int(r["cluster_id"])), {})[
-                int(r["ord"])] = int(r["cv"])
-        for (s, cid_), by_ord in got.items():
-            new_books[s][cid_] = [by_ord[i] for i in range(sublen)]
-        books = new_books
-    return books
-
-
-def _sub_argmin_switched(vec_sql: str, key_sql: str,
-                         books: dict[int, dict[int, list[int]]]) -> F.Column:
-    """_sub_argmin with the centroid set selected by the subspace column:
-    a when-chain over literal per-subspace folds — still pure codegen,
-    each row evaluates only its branch. Takes SQL text for the subvector
-    and subspace-key columns: the whole chain parses from ONE string
-    (functions.litexpr, r14 — the element-wise py4j build dominated
-    driver wall at m·k·sublen literals per training round)."""
-    whens = " ".join(
-        f"WHEN {key_sql} = {int(s)} THEN {_sub_argmin_sql(vec_sql, books[s])}"
-        for s in sorted(books))
-    return F.expr(f"CASE {whens} END")
-
-
-def _sub_argmin_sql(vec_sql: str, cents: dict[int, list[int]]) -> str:
-    """SQL text of the nearest-centroid code for one subvector against
-    literal centroids: integer squared L2, ties to the smaller code.
-    Pure codegen fold, identical analyzed expression to the former
-    element-wise F.lit build (tests/test_litexpr.py)."""
-    return f"({argmin_struct_sql(vec_sql, cents)}).cid"
+    return train_codebooks(qdf, k, iterations, m)
 
 
 def _sub_argmin(vec_sql: str, cents: dict[int, list[int]]) -> F.Column:
-    """Column form of `_sub_argmin_sql` — one JVM parse."""
-    return F.expr(_sub_argmin_sql(vec_sql, cents))
+    """The nearest-centroid code of one subvector against literal
+    centroids: integer squared L2, ties to the smaller code — one pure
+    codegen fold parsed from one SQL string."""
+    return F.expr(f"({argmin_struct_sql(vec_sql, cents)}).cid")
 
 
 def pq_encode(qdf: DataFrame,
@@ -774,11 +586,15 @@ def pq_encode(qdf: DataFrame,
     """Every input column but ``qvec``, then code_0..code_{m-1}: each
     vector compressed to m small codes — one narrow projection, no
     shuffle, 64 dims → m bytes of residency per vector (the PQ memory
-    win). A (vec_id, list_id, qvec=residual) frame keeps its list_id."""
+    win). A (vec_id, list_id, qvec=residual) frame keeps its list_id.
+    A code is the nearest centroid's position 0..k-1 in its codebook's
+    id order — the index of the ADC distance tables — whatever ids the
+    codebook's init points carried."""
     m = len(books)
     sublen = len(next(iter(books[0].values())))
     cols = [
-        _sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})", books[s])
+        _sub_argmin(f"slice(qvec, {s * sublen + 1}, {sublen})",
+                    dict(enumerate(c for _, c in sorted(books[s].items()))))
         .alias(f"code_{s}")
         for s in range(m)
     ]
@@ -871,26 +687,23 @@ def _adc_expr(q0: list[int], cents: dict[int, list[int]],
 
 def _ivfadc_build(embeddings: DataFrame, query_ids: list[int], id_col: str,
                   vec_col: str, n_lists: int, ivf_iterations: int,
-                  centroids: DataFrame | None
+                  centroids: dict[int, list[int]] | None
                   ) -> tuple[dict[int, list[int]], DataFrame,
                              dict[int, list[int]]]:
-    """The shared IVFADC build: the coarse quantizer as driver literals
-    (trained, or the persisted ``centroids`` table), the checkpointed
-    residual table and each query's quantized vector. Returns
-    (cents, residuals, {query_id: qvec})."""
-    from .clustering import quantize_vectors
+    """The shared IVFADC build: the coarse quantizer (``centroids``, or
+    trained by clustering.kmeans_fixed on the quantized corpus), the
+    checkpointed residual table and each query's quantized vector.
+    Returns (cents, residuals, {query_id: qvec})."""
+    from .clustering import kmeans_fixed, quantize_vectors
 
     if not query_ids:
         raise ValueError("query_ids must be non-empty")
-    # one materialization feeds the residuals and the query rows
-    # (GC-released blocks)
+    # one materialization feeds the training, the residuals and the
+    # query rows (GC-released blocks)
     qdf = (quantize_vectors(embeddings, id_col, vec_col)
            .transform(materialize))
-    cdf = centroids if centroids is not None else train_ivf_quantizer_fixed(
-        embeddings, n_lists, ivf_iterations, id_col, vec_col)
-    # bounded driver collect: n_lists × dims ints (the persisted model)
-    cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
-             for r in cdf.collect()}
+    cents = (centroids if centroids is not None
+             else kmeans_fixed(qdf, n_lists, ivf_iterations)[1])
     rdf = materialize(ivf_residuals(qdf, cents))
     qrows = {int(r["vec_id"]): [int(v) for v in r["qvec"]]
              for r in qdf.filter(
@@ -939,7 +752,8 @@ def topk_ivfpq_multi(embeddings: DataFrame, query_ids: list[int],
                      vec_col: str = "embedding", n_lists: int = 8,
                      ivf_iterations: int = 2, n_probe: int = 2,
                      m: int = 2, pq_k: int = 4, pq_iterations: int = 2,
-                     centroids: DataFrame | None = None) -> DataFrame:
+                     centroids: dict[int, list[int]] | None = None
+                     ) -> DataFrame:
     """Composed IVF + PQ-on-residuals ADC top-k for a query set — the
     IVFADC index of Jégou et al., 'Product Quantization for Nearest
     Neighbor Search' (TPAMI 2011, public method), which is THE canonical
@@ -955,12 +769,14 @@ def topk_ivfpq_multi(embeddings: DataFrame, query_ids: list[int],
     Every stage is the repo's deterministic fixed-point discipline, so
     the WHOLE composition is SQL-oracle-able end to end:
 
-    - coarse quantizer: ``train_ivf_quantizer_fixed`` (integer Lloyd,
-      init = first ``n_lists`` ids, ties to the smaller list, FLOOR
-      centroid update) — train-once/persist, never a fit job per query;
+    - coarse quantizer: ``centroids`` (clustering.kmeans_fixed — integer
+      Lloyd, init = first ``n_lists`` ids, ties to the smaller list,
+      FLOOR centroid update — trained once and persisted by
+      clustering.persisted_codebooks), else trained here;
     - assignment + residuals: ``ivf_residuals``;
     - PQ codebooks: ``pq_train_codebooks`` over the residual frame (the
-      fused one-pass-per-round trainer), codes by ``pq_encode``;
+      same Lloyd loop, one pass per round for all m), codes by
+      ``pq_encode``;
     - query: ``ivfpq_adc_over_codes`` (probe lists, query residuals and
       the n_probe × m × pq_k ADC tables are all driver-side integer
       literals: n_lists·dims + |query_ids|·m·pq_k·n_probe ints).
@@ -1010,7 +826,7 @@ def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 n_lists: int = 8, ivf_iterations: int = 2,
                 pq_iterations: int = 2,
-                centroids: DataFrame | None = None,
+                centroids: dict[int, list[int]] | None = None,
                 codebooks_dir: str | None = None) -> list[dict]:
     """IVFADC PARAMETER SWEEP — the recall/cost trade measured from one
     shared build: ``grid`` is a list of (m, pq_k, n_probe) points; the
@@ -1059,12 +875,14 @@ def ivfpq_sweep(embeddings: DataFrame, query_ids: list[int],
                 # (deterministic fixture rebuilds) — train-once cache
                 import os
 
-                books = persist_pq_codebooks(
-                    rdf,
+                from .clustering import persisted_codebooks
+
+                books = persisted_codebooks(
                     os.path.join(codebooks_dir,
                                  f"books_m{m}_k{pq_k}"
                                  f"_i{pq_iterations}.json"),
-                    m=m, k=pq_k, iterations=pq_iterations)
+                    rdf, k=pq_k, iterations=pq_iterations, m=m,
+                    sublen=len(next(iter(cents.values()))) // m)
             else:
                 books = pq_train_codebooks(rdf, m=m, k=pq_k,
                                            iterations=pq_iterations)

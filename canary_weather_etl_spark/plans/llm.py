@@ -944,50 +944,50 @@ def _ivf_fixed_oracle() -> str:
 @register(
     "q_sim_ann_ivf",
     oracle=_ivf_fixed_oracle(),
-    doc="IVF-style approximate top-10: coarse quantizer (8 lists) TRAINED "
-        "ONCE and persisted as a centroid table — the query plan probes "
-        "the 4 nearest lists per query via a broadcast of the centroid "
-        "parquet, with NO clustering fit job inside the query. Exact "
-        "cosine rescoring on candidates only. The data-adaptive "
-        "complement to the hyperplane-LSH path. r10: the quantizer is "
-        "now the repo's DETERMINISTIC integer fixed-point Lloyd "
-        "(operators/similarity.train_ivf_quantizer_fixed wrapping "
-        "clustering.kmeans_fixed) instead of MLlib KMeans, which "
-        "upgrades the entry from rows-only to a FULL SQL oracle: "
-        "q_kmeans_lloyd's unrolled-iteration prefix rebuilds the SAME "
-        "final centroids, then the oracle replays integer-L2 probing, "
-        "the list equi-join and the rounded exact-cosine rank cut "
-        "(the r8 PQ-ADC discipline). The fixed-point quantizer is the "
-        "only one; its recall vs brute force is pytest-asserted.",
+    doc="IVF-style approximate top-10: the coarse quantizer (8 lists) is "
+        "the fixed-point Lloyd of clustering.kmeans_fixed, trained once "
+        "and read back from its model file, so the query plan runs no "
+        "clustering fit. Corpus vectors are assigned to their nearest "
+        "list; each query probes its 4 nearest lists, and only those "
+        "candidates are rescored by rounded exact cosine. The "
+        "data-adaptive complement to the hyperplane-LSH path. Full SQL "
+        "oracle: q_kmeans_lloyd's unrolled-iteration prefix rebuilds the "
+        "same final centroids, then the oracle replays integer-L2 "
+        "probing, the list equi-join and the rank cut. Recall vs brute "
+        "force is pytest-asserted.",
     tags=("llm", "similarity", "approx"),
 )
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_par(spark, sf_dir, "embeddings")
     q = (e.filter(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("query_id"), "embedding"))
-    cdf = S.persist_ivf_quantizer_fixed(e, _ivf_quantizer_path(sf_dir),
-                                        n_lists=8, iterations=2)
-    return S.topk_ivf_fixed(e, q, k=10, n_lists=8, n_probe=4,
-                            iterations=2, centroids=cdf)
+    return S.topk_ivf_fixed(e, q, _ivf_quantizer(e, sf_dir), k=10,
+                            n_probe=4)
 
 
-def _ivf_quantizer_path(sf_dir: str) -> str:
-    """Deterministic per-corpus location for the persisted quantizer —
-    the stand-in for a catalog table at production scale. Scoped by uid so
-    shared-tempdir hosts don't collide across users (ADVICE r2); same-user
-    concurrent runs are safe because training is deterministic and
-    `persist_ivf_quantizer_fixed` only trusts a committed (_SUCCESS)
-    table."""
+def _ivf_quantizer_path(key: str) -> str:
+    """Deterministic per-corpus location of a centroid model file — the
+    stand-in for a catalog table at production scale. Scoped by uid so
+    shared-tempdir hosts don't collide across users (ADVICE r2)."""
     import hashlib
     import os
     import tempfile
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    # "fx" since r10: the deterministic fixed-point quantizer table —
-    # distinct name so a stale MLlib-era table is never read back
+    tag = hashlib.sha1(key.encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(),
                         f"canary_ivf_u{os.getuid()}",
-                        f"quantizer_fx_{tag}.parquet")
+                        f"quantizer_{tag}.json")
+
+
+def _ivf_quantizer(e: DataFrame, key: str) -> dict[int, list[int]]:
+    """The 8-list, 2-round coarse quantizer of corpus ``e``: trained once
+    by clustering.kmeans_fixed's Lloyd loop and read back from its model
+    file at ``_ivf_quantizer_path(key)``."""
+    from ..operators import clustering as C
+
+    return C.persisted_codebooks(_ivf_quantizer_path(key),
+                                 C.quantize_vectors(e), k=8,
+                                 iterations=2)[0]
 
 
 def _recall_rows(exact: DataFrame, approx: dict[str, DataFrame],
@@ -1037,15 +1037,13 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("query_id"), "embedding")).cache()
     exact = S.topk_brute_force(e, q, k=10).select("query_id", "vec_id").cache()
     n_total = exact.count()  # 50-row ground truth — a metric-sized scalar
-    # same quantizer table + probe path as the registered q_sim_ann_ivf
-    # (the deterministic fixed-point trainer since r10), so this recall
-    # row measures exactly the path the oracled entry ships
-    cdf = S.persist_ivf_quantizer_fixed(e, _ivf_quantizer_path(sf_dir),
-                                        n_lists=8, iterations=2)
+    # same quantizer file + probe path as the registered q_sim_ann_ivf,
+    # so this recall row measures exactly the path the oracled entry
+    # ships
+    cents = _ivf_quantizer(e, sf_dir)
     approx = {
         "lsh": S.topk_lsh(e, q, k=10, dim=64, bits=4, probes=16),
-        "ivf": S.topk_ivf_fixed(e, q, k=10, n_lists=8, n_probe=4,
-                                iterations=2, centroids=cdf),
+        "ivf": S.topk_ivf_fixed(e, q, cents, k=10, n_probe=4),
         # out_dim=32/pool=60: unclustered random fixtures are JL's worst
         # case (cosine gaps shrink toward 0 as dims mix) — halving the
         # width with a 60-candidate re-rank pool is the honest operating
@@ -1061,7 +1059,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pinned at 0.8 by q_sim_ann_recall_clustered's ivfpq row)
         "ivfpq": S.topk_ivfpq_multi(e, [0, 1, 2, 3, 4], k_top=10,
                                     m=4, pq_k=8, n_probe=2,
-                                    centroids=cdf),
+                                    centroids=cents),
     }
     return _recall_rows(exact, approx, n_total)
 

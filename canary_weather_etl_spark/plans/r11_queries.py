@@ -629,36 +629,29 @@ def _ivfpq_oracle() -> str:
     "q_sim_ann_ivfpq",
     oracle=_ivfpq_oracle(),
     doc="COMPOSED IVF + PQ-on-residuals ADC top-k — the IVFADC index of "
-        "Jégou et al. (TPAMI 2011, public method), the canonical "
-        "billion-vector ANN layout (coarse quantizer routes to inverted "
-        "lists; PQ codebooks train on the RESIDUALS, which carry far "
-        "less variance than raw vectors; a query probes its n_probe=2 "
-        "nearest lists and scores by asymmetric distance against "
-        "per-list driver-literal tables). The repo shipped IVF routing "
-        "(q_sim_ann_ivf) and raw-vector PQ (q_pq_adc_topk) separately; "
-        "this is their composition, which is what a 100 TB deployment "
-        "actually runs: 8·m bytes of residency per vector, lists as the "
-        "partition key (a probe scans n_probe/n_lists of the code "
-        "table), training once on a sample. Every stage is fixed-point "
-        "deterministic (operators/similarity.topk_ivfpq_multi with the "
-        "one query id 0), so the FULL composition is bit-exact against "
-        "an unrolled SQL oracle: q_kmeans_lloyd's IVF prefix, residual "
+        "Jégou et al. (TPAMI 2011, public method): the coarse quantizer "
+        "routes vectors to inverted lists, PQ codebooks train on the "
+        "residuals (vector minus list centroid), and the query probes "
+        "its n_probe=2 nearest lists and scores by asymmetric distance "
+        "against per-list driver-literal tables "
+        "(operators/similarity.topk_ivfpq_multi with the one query id "
+        "0). The coarse quantizer is q_sim_ann_ivf's model file; the "
+        "quantizer and the codebooks come from the one fixed-point Lloyd "
+        "loop of clustering.train_codebooks. Bit-exact against an "
+        "unrolled SQL oracle: q_kmeans_lloyd's IVF prefix, residual "
         "subtraction, per-subspace Lloyd on residuals, encode, probe, "
-        "per-(list, subspace) ADC tables, top-k cut. Quantizer shared "
-        "with q_sim_ann_ivf via the "
-        "same persisted table (train-once contract).",
+        "per-(list, subspace) ADC tables, top-k cut.",
     tags=("llm", "similarity", "approx", "iterative"),
 )
 def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as S
-    from .llm import _ivf_quantizer_path
+    from .llm import _ivf_quantizer
 
     e = load_par(spark, sf_dir, "embeddings")
-    cdf = S.persist_ivf_quantizer_fixed(e, _ivf_quantizer_path(sf_dir),
-                                        n_lists=8, iterations=2)
-    return S.topk_ivfpq_multi(e, [0], k_top=10, n_lists=8,
-                              ivf_iterations=2, n_probe=2, m=2, pq_k=4,
-                              pq_iterations=2, centroids=cdf).drop("query_id")
+    return S.topk_ivfpq_multi(e, [0], k_top=10, n_probe=2, m=2, pq_k=4,
+                              pq_iterations=2,
+                              centroids=_ivf_quantizer(e, sf_dir)
+                              ).drop("query_id")
 
 # ---------------------------------------------------------------------------
 # Deterministic PCA by power iteration, bit-exact oracle
@@ -836,23 +829,21 @@ def _stream_ann_oracle() -> str:
 @register(
     "q_stream_ann_ingest",
     oracle=_stream_ann_oracle(),
-    doc="STREAMING vector-index ingest against a FROZEN IVFADC model — "
-        "how a 100 TB similarity index stays fresh: the coarse "
-        "quantizer and the residual PQ codebooks train ONCE on the seed "
-        "corpus (the low-id third), then micro-batches of arriving "
-        "vectors encode against the frozen literals in foreachBatch "
-        "(operators/similarity.ivfpq_encode_frozen: quantize → "
-        "ivf_residuals → pq_encode, ONE narrow codegen projection per "
-        "batch — no shuffle, no training job, no read of the existing "
-        "index) and append (vec_id, list_id, code_*) rows to the "
-        "persisted code table; the query half is ivfpq_adc_over_codes, "
-        "the same ADC search q_sim_ann_ivfpq runs, probing its n_probe "
-        "nearest lists over the ACCUMULATED table. Batch boundaries "
-        "cannot affect the result (encoding is row-wise against frozen "
-        "literals), so the oracle replays the whole pipeline "
-        "batch-free: seeded-training k-means prefix (train on the seed "
-        "third, assign everything), PQ trained on seed residuals only "
-        "(train_pred), encode all, probe, ADC — bit-for-bit.",
+    doc="Streaming vector-index ingest against a frozen IVFADC model: "
+        "the coarse quantizer (clustering.kmeans_fixed) and the residual "
+        "PQ codebooks (pq_train_codebooks, the same Lloyd loop) train "
+        "once on the seed corpus (the low-id third); micro-batches of "
+        "arriving vectors then encode against the frozen literals in "
+        "foreachBatch (operators/similarity.ivfpq_encode_frozen: one "
+        "narrow projection per batch, no shuffle, no training job, no "
+        "read of the existing index) and append (vec_id, list_id, "
+        "code_*) rows to the code table. The query half is "
+        "ivfpq_adc_over_codes, q_sim_ann_ivfpq's search, over the "
+        "accumulated table. Encoding is row-wise against frozen "
+        "literals, so batch boundaries cannot affect the result and the "
+        "oracle replays the pipeline batch-free: k-means trained on the "
+        "seed third, PQ trained on seed residuals (train_pred), encode "
+        "all, probe, ADC — bit-for-bit.",
     tags=("llm", "similarity", "streaming", "approx", "iterative"),
 )
 def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -872,11 +863,10 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                       & (F.col("vec_id") * 3 < 2 * n))
     drop_b = e.filter(F.col("vec_id") * 3 >= 2 * n)
 
-    # frozen model: trained once on the seed, collected as literals
-    cdf = S.train_ivf_quantizer_fixed(seed, n_lists=8, iterations=2)
-    cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
-             for r in cdf.collect()}
-    rseed = S.ivf_residuals(C.quantize_vectors(seed), cents)
+    # frozen model: trained once on the seed, held as literals
+    qseed = C.quantize_vectors(seed)
+    _, cents = C.kmeans_fixed(qseed, k=8, iterations=2)
+    rseed = S.ivf_residuals(qseed, cents)
     books = S.pq_train_codebooks(rseed, m=2, k=4, iterations=2)
 
     base = tempfile.mkdtemp(prefix="canary_ann_ingest_")

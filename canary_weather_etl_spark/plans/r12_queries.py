@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..session import materialize
-from .llm import _ivf_quantizer_path, clustered_embeddings
+from .llm import _ivf_quantizer, _ivf_quantizer_path, clustered_embeddings
 from .r10_queries import _admission_round_sql, _grams_sql
 from .registry import load, load_par, register
 
@@ -184,12 +184,12 @@ def q_stream_admission_fixed_batch(spark: SparkSession,
 # at the recommended budget's probe extremes.
 _SWEEP_CLUSTERED = [(2, 4, 2), (4, 8, 1), (4, 8, 2), (4, 8, 4), (4, 8, 8)]
 _SWEEP_RAW = [(4, 8, 2), (4, 8, 8)]
-_SWEEP_N_LISTS = 8
+_SWEEP_N_LISTS = 8  # the lists of llm._ivf_quantizer
 
 
 def _sweep_rows(regime: str, e: DataFrame, grid: list,
-                centroids=None, codebooks_dir: str | None = None
-                ) -> DataFrame:
+                centroids: dict[int, list[int]],
+                codebooks_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("query_id"), "embedding")).cache()
     exact = (S.topk_brute_force(e, q, k=10)
@@ -232,25 +232,23 @@ def _sweep_rows(regime: str, e: DataFrame, grid: list,
 @register(
     "q_sim_ann_ivfpq_sweep",
     oracle=None,  # quality/cost metric of engine-specific ANN paths
-    doc="IVFADC PARAMETER SWEEP — the recall/cost trade as driver data "
-        "(r11 verdict #6: the operating point was pinned at two spot "
-        "values; this records the CURVE, so the 100 TB regime is chosen "
-        "from data): recall@10 vs brute force for (m, pq_k, n_probe) "
-        "grid points, each row carrying its deterministic cost axes — "
-        "scan_frac_ppm = n_probe/n_lists (the published IVFADC cost "
-        "model), MEASURED cand_rows / cand_frac_ppm (code rows the "
-        "probes actually scan, from one bounded n_lists-row aggregate), "
-        "and code_bytes = m per vector (residency). Clustered regime "
-        "(the one embedding corpora live in, md5-rebuildable fixture): "
-        "the shipped (2,4,2) default plus the (4,8) budget across "
-        "n_probe 1/2/4/8; unclustered random fixture: the (4,8) budget "
-        "at probe extremes, anchoring quantization's worst case. The "
-        "whole sweep shares ONE quantizer + residual build and one code "
-        "table per (m, pq_k) (operators/similarity.ivfpq_sweep). "
-        "Rows-only BY DESIGN (hash-seeded model internals); the "
-        "recommended-regime floor (clustered (4,8,2) recall >= 0.8) and "
-        "probe-axis monotonicity are pytest-asserted "
-        "(tests/test_r12_ops.py).",
+    doc="IVFADC parameter sweep — the recall/cost trade as driver data, "
+        "so the operating point is chosen from data: recall@10 vs brute "
+        "force for (m, pq_k, n_probe) grid points, each row carrying its "
+        "deterministic cost axes — scan_frac_ppm = n_probe/n_lists (the "
+        "published IVFADC cost model), measured cand_rows / "
+        "cand_frac_ppm (code rows the probes scan, from one bounded "
+        "n_lists-row aggregate), and code_bytes = m per vector "
+        "(residency). Clustered regime (md5-rebuildable fixture): the "
+        "shipped (2,4,2) default plus the (4,8) budget across n_probe "
+        "1/2/4/8; unclustered random fixture: the (4,8) budget at the "
+        "probe extremes, quantization's worst case. Each regime shares "
+        "one quantizer and residual build and one code table per (m, "
+        "pq_k) (operators/similarity.ivfpq_sweep); the quantizer and "
+        "the codebooks are centroid model files keyed by corpus content. "
+        "Rows-only by design; the recommended-regime floor (clustered "
+        "(4,8,2) recall >= 0.8) and probe-axis monotonicity are "
+        "pytest-asserted (tests/test_r12_ops.py).",
     tags=("llm", "similarity", "approx", "quality"),
 )
 def q_sim_ann_ivfpq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,49 +265,31 @@ def q_sim_ann_ivfpq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bit_xor(F.xxhash64("vec_id", F.col("embedding").cast("string")))
         .alias("c")).collect()[0]
     fp = f"{frow['n']}.{frow['s']}.{frow['c']}"
-    # BOTH regimes reuse persisted train-once quantizer tables (the
-    # q_sim_ann_ivf catalog-table pattern): the raw fixture's table is
-    # shared with the oracled entries (content-checked there by the
-    # oracle itself, which replays training from the fixture); the
-    # clustered corpus is a deterministic md5-rebuild of the fixture,
-    # so its quantizer caches under the content key. Training is the
-    # sweep's single largest fixed cost (~10 s at sf0.1), paid once per
-    # corpus per host, exactly like a production index build.
-    cdf_raw = S.persist_ivf_quantizer_fixed(
-        raw, _ivf_quantizer_path(sf_dir), n_lists=_SWEEP_N_LISTS,
-        iterations=2)
-    cdf_cl = S.persist_ivf_quantizer_fixed(
-        clustered, _ivf_quantizer_path(f"{sf_dir}::clustered::{fp}"),
-        n_lists=_SWEEP_N_LISTS, iterations=2)
-    # PQ codebooks get the same train-once treatment (deterministic
-    # corpora + deterministic training → identical files on rebuild);
-    # dirs keyed per corpus AND content AND quantizer so the regimes
-    # never share a model, a regenerated fixture never stale-hits, and —
-    # since residuals are computed AGAINST the centroids — books trained
-    # under an older persisted quantizer can never pair with a newer one
-    # (the raw quantizer table is path-keyed, not content-keyed, so the
-    # corpus fingerprint alone would not see a refreshed table)
+    # BOTH regimes reuse train-once quantizer model files (the
+    # q_sim_ann_ivf pattern): the raw fixture's file is shared with the
+    # oracled entries (content-checked there by the oracle itself, which
+    # replays training from the fixture); the clustered corpus is a
+    # deterministic md5-rebuild of the fixture, so its quantizer caches
+    # under the content key. Training is the sweep's single largest
+    # fixed cost, paid once per corpus per host, like an index build.
+    cents_raw = _ivf_quantizer(raw, sf_dir)
+    cents_cl = _ivf_quantizer(clustered, f"{sf_dir}::clustered::{fp}")
+    # PQ codebooks get the same treatment, keyed per regime, corpus
+    # content AND quantizer: residuals are computed against the
+    # centroids, so books trained under an older quantizer file never
+    # pair with a newer one
     import hashlib
-    import os
 
-    def _cent_fp(cdf) -> str:
-        rows = sorted((int(r["list_id"]),
-                       tuple(int(v) for v in r["centroid"]))
-                      for r in cdf.collect())  # <= n_lists rows
-        return hashlib.md5(repr(rows).encode()).hexdigest()[:12]
+    def _books_dir(regime: str, cents: dict[int, list[int]]) -> str:
+        cfp = hashlib.md5(repr(sorted(cents.items())).encode()).hexdigest()
+        return _ivf_quantizer_path(
+            f"{sf_dir}::pqbooks::{regime}::{fp}::{cfp[:12]}"
+        ).removesuffix(".json")
 
-    books_c = _ivf_quantizer_path(
-        f"{sf_dir}::pqbooks::clustered::{fp}::{_cent_fp(cdf_cl)}")
-    books_r = _ivf_quantizer_path(
-        f"{sf_dir}::pqbooks::raw::{fp}::{_cent_fp(cdf_raw)}")
     rows_c = _sweep_rows("clustered", clustered, _SWEEP_CLUSTERED,
-                         centroids=cdf_cl,
-                         codebooks_dir=os.path.dirname(books_c)
-                         + "/pqb_" + os.path.basename(books_c))
+                         cents_cl, _books_dir("clustered", cents_cl))
     rows_r = _sweep_rows("unclustered", raw, _SWEEP_RAW,
-                         centroids=cdf_raw,
-                         codebooks_dir=os.path.dirname(books_r)
-                         + "/pqb_" + os.path.basename(books_r))
+                         cents_raw, _books_dir("raw", cents_raw))
     return (rows_c.unionByName(rows_r)
             .orderBy("regime", "m", "pq_k", "n_probe"))
 

@@ -779,17 +779,14 @@ def _kmeans_assign_oracle(k: int = 4, iterations: int = 3,
     "q_kmeans_assign_incremental",
     oracle=_kmeans_assign_oracle(k=4, iterations=3),
     doc="Incremental corpus admission for semantic clustering: centroids "
-        "train ONCE (same 3-iteration fixed-point Lloyd as "
-        "q_kmeans_lloyd), persist to a parquet quantizer table — the same "
-        "persisted-model pattern as the IVF quantizer "
-        "(operators/similarity.py) and incremental MinHash admission "
-        "(q_dedup_incremental) — then each NEW batch (here vec_id%10==7) "
-        "assigns with ZERO shuffles: read k rows, inline as literals, one "
-        "narrow projection over the batch. At 100 TB this is the "
-        "every-day path (train weekly, assign per-arrival, O(batch) not "
-        "O(corpus)); the training cost amortizes away. The oracle "
-        "re-derives the same centroids and filters its final assignment "
-        "to the batch.",
+        "train once (the 3-iteration fixed-point Lloyd of q_kmeans_lloyd) "
+        "into a centroid model file (clustering.persisted_codebooks, the "
+        "one model file of the IVF quantizer and the PQ codebooks), are "
+        "read back from it, and each new batch (here vec_id%10==7) "
+        "assigns with zero shuffles: k literal centroids, one narrow "
+        "projection over the batch — O(batch), not O(corpus). The "
+        "oracle re-derives the same centroids and filters its final "
+        "assignment to the batch.",
     tags=("llm", "clustering", "incremental"),
 )
 def q_kmeans_assign_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,19 +798,13 @@ def q_kmeans_assign_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_par(spark, sf_dir, "embeddings")
     qdf = C.quantize_vectors(emb)
     qdf = materialize(qdf)
-    _, cent = C.kmeans_fixed(qdf, k=4, iterations=3)
-    # persist the model as a table (the "quantizer"), then load it back —
-    # the round trip is the point: assignment must not depend on the
-    # training lineage being alive
+    # train into the model file and load it back — the round trip is
+    # the point: assignment must not depend on the training lineage
+    # being alive
     base = tempfile.mkdtemp(prefix="canary_kmeans_model_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    model_path = os.path.join(base, "centroids.parquet")
-    spark.createDataFrame(
-        [(cid, vec) for cid, vec in sorted(cent.items())],
-        "cluster_id int, centroid array<long>",
-    ).write.mode("overwrite").parquet(model_path)
-    loaded = {int(r["cluster_id"]): [int(v) for v in r["centroid"]]
-              for r in spark.read.parquet(model_path).collect()}
+    loaded = C.persisted_codebooks(os.path.join(base, "centroids.json"),
+                                   qdf, k=4, iterations=3)[0]
     batch = qdf.filter(F.col("vec_id") % 10 == 7)
     asg = C.assign_clusters(batch, loaded)
     return (asg.groupBy("cluster_id")

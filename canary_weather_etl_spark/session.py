@@ -31,7 +31,7 @@ _DEFAULT_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Local-mode shuffle sizing; cluster deployments override.
     "spark.sql.shuffle.partitions": "32",
-    # Parquet: vectorized reader on, don't write _SUCCESS noise in tests.
+    # Parquet: push filters into the scan.
     "spark.sql.parquet.filterPushdown": "true",
     # List the files of a manifest read (sources/weather.read_clean) on
     # the driver. At the default threshold (32 paths) Spark lists more

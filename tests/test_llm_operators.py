@@ -9,6 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from canary_weather_etl_spark.operators import clustering as C
 from canary_weather_etl_spark.operators import dedup as D
 from canary_weather_etl_spark.operators import multimodal as M
 from canary_weather_etl_spark.operators import similarity as S
@@ -209,8 +210,8 @@ def test_ivf_recall_vs_brute_force(spark, emb, quantizer):
     q = (emb.filter(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("query_id"), "embedding"))
     exact = S.topk_brute_force(emb, q, k=10).collect()
-    approx = S.topk_ivf_fixed(emb, q, k=10, n_lists=8, n_probe=4,
-                              iterations=2).collect()
+    _, cents = C.kmeans_fixed(C.quantize_vectors(emb), k=8, iterations=2)
+    approx = S.topk_ivf_fixed(emb, q, cents, k=10, n_probe=4).collect()
     exact_sets, approx_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -265,30 +266,31 @@ def test_ann_recall_clustered_floors(spark, sf_dir):
     assert rows["ivfpq"] >= 0.7, rows
 
 
-def test_ivf_query_uses_persisted_quantizer(spark, sf_dir):
-    """After the quantizer table exists, building the IVF query plan must
-    not run a KMeans fit (VERDICT r1 item 5): the plan reads the centroid
-    parquet instead."""
+def test_ivf_query_uses_persisted_quantizer(spark, sf_dir, monkeypatch):
+    """After the quantizer model file exists, building the IVF query plan
+    must not train (VERDICT r1 item 5): the centroids are read back from
+    the file."""
+    import os
+
     from canary_weather_etl_spark.plans.llm import _ivf_quantizer_path
     from canary_weather_etl_spark.plans.registry import REGISTRY
 
-    REGISTRY["q_sim_ann_ivf"].fn(spark, sf_dir)  # ensures table exists
+    REGISTRY["q_sim_ann_ivf"].fn(spark, sf_dir)  # ensures the file exists
+    assert os.path.isfile(_ivf_quantizer_path(sf_dir))
+
+    def no_training(*_a, **_k):
+        raise AssertionError("q_sim_ann_ivf trained a model")
+
+    monkeypatch.setattr(C, "train_codebooks", no_training)
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
-    df = REGISTRY["q_sim_ann_ivf"].fn(spark, sf_dir)  # plan build only
+    REGISTRY["q_sim_ann_ivf"].fn(spark, sf_dir)  # plan build only
     after = tracker.getJobIdsForGroup(None)
-    # building the plan against the persisted quantizer launches at most a
-    # couple of parquet-footer reads; a KMeans fit would run ~10 iteration
-    # jobs. The plan assertion below is the structural check.
+    # bounded jobs only: the embeddings footer read and the two-job
+    # collect of the five query vectors (load_par's repartition adds a
+    # shuffle) that picks each query's probed lists. Training would add
+    # an init job and one job per Lloyd round.
     assert len(after) - len(before) <= 3, (before, after)
-    import re
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # centroids come from a parquet Relation (paths are truncated in the
-    # plan string, so match the relation's schema), not a LocalRelation
-    # materialized by an in-query fit
-    assert re.search(r"Relation \[list_id#\d+,\s*centroid#\d+\] parquet",
-                     plan), plan
-    assert "LocalRelation" not in plan, plan
 
 
 def test_greedy_packing_invariants(spark, sf_dir):

@@ -319,6 +319,31 @@ def test_ivfpq_clustered_recall_and_determinism(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, re))
 
 
+def test_pq_and_ivfpq_train_on_sparse_ids(spark):
+    """Every codebook starts from the first k points in vec_id order, so
+    a corpus without ids 0..k-1 trains the same model: with every id
+    shifted by 1000, PQ returns the dense corpus's codebooks (keyed by
+    the init points' ids, shifted too) and the IVFADC top-k returns the
+    dense result with shifted ids."""
+    from canary_weather_etl_spark.operators import clustering as C
+    from canary_weather_etl_spark.operators import similarity as S
+
+    e = load_par(spark, SF, "embeddings")
+    shifted = e.withColumn("vec_id", F.col("vec_id") + 1000)
+    dense = S.pq_train_codebooks(C.quantize_vectors(e), m=2, k=4,
+                                 iterations=2)
+    sparse = S.pq_train_codebooks(C.quantize_vectors(shifted), m=2, k=4,
+                                  iterations=2)
+    assert sparse == {s: {c + 1000: v for c, v in d.items()}
+                      for s, d in dense.items()}
+
+    want = [(q + 1000, rank, v + 1000, adc) for q, rank, v, adc in
+            S.topk_ivfpq_multi(e, [0, 1], k_top=10).collect()]
+    got = S.topk_ivfpq_multi(shifted, [1000, 1001], k_top=10).collect()
+    assert len(want) == 20
+    assert sorted(map(tuple, got)) == sorted(want)
+
+
 # --- deterministic PCA power projection --------------------------------------
 
 def test_pca_power_matches_numpy_dominant_direction(spark):
@@ -370,12 +395,10 @@ def test_stream_ann_ingest_batch_invariance(spark):
     e = load_par(spark, SF, "embeddings")
     n = e.count()
     seed = e.filter(F.col("vec_id") * 3 < n)
-    cdf = S.train_ivf_quantizer_fixed(seed, n_lists=8, iterations=2)
-    cents = {int(r["list_id"]): [int(v) for v in r["centroid"]]
-             for r in cdf.collect()}
-    books = S.pq_train_codebooks(
-        S.ivf_residuals(C.quantize_vectors(seed), cents),
-        m=2, k=4, iterations=2)
+    qseed = C.quantize_vectors(seed)
+    _, cents = C.kmeans_fixed(qseed, k=8, iterations=2)
+    books = S.pq_train_codebooks(S.ivf_residuals(qseed, cents),
+                                 m=2, k=4, iterations=2)
     q0 = [int(v) for v in
           C.quantize_vectors(e).filter(F.col("vec_id") == 0)
           .collect()[0]["qvec"]]

@@ -223,18 +223,40 @@ def test_pq_codebook_cache_validates_params(spark, tmp_path):
     """r13 ADVICE: a cached codebook JSON reused across parameter
     changes must raise, not silently return the mismatched model."""
     e = load_par(spark, SF, "embeddings").filter(F.col("vec_id") < 60)
-    from canary_weather_etl_spark.operators.clustering import quantize_vectors
+    from canary_weather_etl_spark.operators.clustering import (
+        persisted_codebooks, quantize_vectors)
     qdf = quantize_vectors(e, "vec_id", "embedding")
     path = str(tmp_path / "books.json")
-    books = S.persist_pq_codebooks(qdf, path, m=2, k=4)
+    books = persisted_codebooks(path, qdf, k=4, iterations=2, m=2)
     assert len(books) == 2 and all(len(d) == 4 for d in books.values())
     # same params → cache hit, identical model
-    again = S.persist_pq_codebooks(qdf, path, m=2, k=4)
+    again = persisted_codebooks(path, qdf, k=4, iterations=2, m=2)
     assert again == books
     with pytest.raises(ValueError, match="stale"):
-        S.persist_pq_codebooks(qdf, path, m=4, k=4)
+        persisted_codebooks(path, qdf, k=4, iterations=2, m=4)
     with pytest.raises(ValueError, match="stale"):
-        S.persist_pq_codebooks(qdf, path, m=2, k=8)
+        persisted_codebooks(path, qdf, k=8, iterations=2, m=2)
+
+
+def test_model_file_must_match_the_request(spark, tmp_path):
+    """One model file serves the IVF quantizer and the PQ codebooks, and
+    every load checks it against the model asked for: a 4-list request
+    at a path holding an 8-list quantizer raises, and so does a PQ
+    request whose subvector length differs from the file's."""
+    from canary_weather_etl_spark.operators.clustering import (
+        persisted_codebooks, quantize_vectors)
+    qdf = quantize_vectors(load_par(spark, SF, "embeddings")
+                           .filter(F.col("vec_id") < 60))
+    ivf = str(tmp_path / "ivf.json")
+    cents = persisted_codebooks(ivf, qdf, k=8, iterations=2)[0]
+    assert len(cents) == 8 and {len(v) for v in cents.values()} == {64}
+    with pytest.raises(ValueError, match="stale"):
+        persisted_codebooks(ivf, qdf, k=4, iterations=2)
+    pq = str(tmp_path / "pq.json")
+    books = persisted_codebooks(pq, qdf, k=4, iterations=2, m=2, sublen=32)
+    assert {len(v) for d in books.values() for v in d.values()} == {32}
+    with pytest.raises(ValueError, match="stale"):
+        persisted_codebooks(pq, qdf, k=4, iterations=2, m=2, sublen=16)
 
 
 # --- per-stratum TV drift ----------------------------------------------------

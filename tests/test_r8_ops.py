@@ -130,7 +130,7 @@ def test_pq_adc_ranks_planted_neighbors_first(spark):
         else:       # far cluster
             vec = [50.0 + 0.001 * i + 0.01 * (j % 5) for j in range(dims)]
         rows.append((i, vec))
-    # init uses vec_id < k: make ids 0..3 span both clusters
+    # init takes the first k ids: make ids 0..3 span both clusters
     rows[2] = (2, [50.0 + 0.01 * (j % 5) for j in range(dims)])
     rows[3] = (3, [50.5 + 0.01 * (j % 7) for j in range(dims)])
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])

@@ -48,7 +48,7 @@ def test_semantic_dedup_idempotent_on_survivors(spark):
     ids = sorted(r["vec_id"] for r in surv.collect())
     kept = (qdf.join(F.broadcast(surv.select("vec_id")), "vec_id")
             .select("vec_id", "qvec"))
-    # re-id survivors 0..k-1 so kmeans_fixed's vec_id<k init applies
+    # re-id survivors 0..k-1 (kmeans_fixed seeds from the k smallest ids)
     remap = {v: i for i, v in enumerate(ids)}
     mapping = F.create_map(*[F.lit(x) for v, i in remap.items()
                              for x in (v, i)])

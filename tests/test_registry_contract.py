@@ -103,6 +103,30 @@ def test_manifest_sink_holds_the_only_commit():
     assert not defined, f"deleted paths are back: {defined}"
 
 
+def test_clustering_holds_the_only_lloyd_loop():
+    """k-means, the IVF quantizer and the PQ codebooks train in the one
+    Lloyd loop of ``operators/clustering.py`` and persist through its one
+    model file: no other package module may carry the FLOOR centroid
+    update, and the deleted trainers and model writers are defined
+    nowhere."""
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "canary_weather_etl_spark")
+    home = pkg / "operators" / "clustering.py"
+    update = re.compile(r"F\.floor\(\s*F\.col\([^)]*\)\.cast\(\"double\"\)"
+                        r"\s*/\s*F\.col\(\"n\"\)")
+    stray = [str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+             if p != home and update.search(p.read_text())]
+    assert not stray, f"train through clustering.train_codebooks: {stray}"
+    assert update.search(home.read_text())
+    gone = {"train_ivf_quantizer_fixed", "persist_ivf_quantizer_fixed",
+            "persist_pq_codebooks"}
+    defined = [f"{p.relative_to(pkg)}:{n.lineno} {n.name}"
+               for p in sorted(pkg.rglob("*.py"))
+               for n in ast.walk(ast.parse(p.read_text()))
+               if isinstance(n, ast.FunctionDef) and n.name in gone]
+    assert not defined, f"deleted paths are back: {defined}"
+
+
 def test_get_spark_reads_the_environment_when_called(monkeypatch):
     """``get_spark`` takes cores and driver memory from the environment
     when it is called. The operator modules import ``session``, so a
