@@ -74,14 +74,17 @@ def quantize_vectors(df: DataFrame, id_col: str = "vec_id",
     a fixed 3-op double sequence, deterministic across engines. All
     downstream distance math is integer.
     """
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * F.lit(float(scale))
-                              + F.lit(0.5)).cast("long"),
-        ).alias("qvec"),
-    )
+    return df.select(F.col(id_col).alias("vec_id"),
+                     quantized(F.col(vec_col), scale).alias("qvec"))
+
+
+def quantized(vec: F.Column, scale: int) -> F.Column:
+    """The fixed-point coordinates of one vector column, as
+    `quantize_vectors` computes them."""
+    return F.transform(
+        vec,
+        lambda x: F.floor(x.cast("double") * F.lit(float(scale))
+                          + F.lit(0.5)).cast("long"))
 
 
 def assign_clusters(qdf: DataFrame, centroids: dict[int, list[int]]) -> DataFrame:

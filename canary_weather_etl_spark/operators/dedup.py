@@ -74,8 +74,8 @@ def word_ngrams(col: F.Column | str, n: int = 2) -> F.Column:
 
 def shingle_table(df: DataFrame, id_col: str, text_col: str,
                   n: int = 2) -> DataFrame:
-    """Exploded (id, shingle) table — the input to MinHash and to exact
-    Jaccard verification."""
+    """Exploded (doc, shingle) table, one row per distinct n-gram of a
+    document. The set-similarity joins take `shingle_sets` instead."""
     return (
         df.select(F.col(id_col).alias("doc"),
                   F.explode(word_ngrams(text_col, n)).alias("shingle"))
@@ -198,90 +198,90 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 8,
     return pairs
 
 
-def exact_jaccard(shingles: DataFrame, threshold: float = 0.0) -> DataFrame:
-    """Exact all-pairs Jaccard via the shared-shingle join. Quadratic in
-    per-shingle document frequency — the oracle-checkable ground truth at
-    test scale, NOT the 100 TB path (use `near_dup_pairs_minhash`, which
-    verifies only LSH candidates via `verify_pairs_jaccard`).
+# ---------------------------------------------------------------------------
+# Exact set-similarity joins: one set of parts for Jaccard and containment
+# (the overlap primitive of SSJoin, Chaudhuri et al. ICDE 2006, with the
+# prefix filter of PPJoin, Xiao et al. WWW 2008). Every operator takes
+# `shingle_sets` frames (doc, sh, sz) and scores a pair from the exact
+# integer counts common = |A∩B|, sz_a = |A| and sz_b = |B|.
+# ---------------------------------------------------------------------------
 
-    jaccard(a,b) = |A∩B| / (|A| + |B| − |A∩B|) — computed from exact
-    integer counts, so the double division is engine-deterministic.
-    """
-    sizes = shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    l = shingles.alias("l")
-    r = shingles.alias("r")
-    common = (
-        l.join(r, (F.col("l.shingle") == F.col("r.shingle"))
-               & (F.col("l.doc") < F.col("r.doc")))
-        .groupBy(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    out = (
-        common
-        .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn("jaccard",
-                    F.col("common").cast("double")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
-    )
-    return out.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
+def _shingle_rows(sets: DataFrame) -> DataFrame:
+    """(doc, sz, shingle): one row per set element — the narrow explode
+    the shared-shingle joins and the frequency ranking run on."""
+    return sets.select("doc", "sz", F.explode("sh").alias("shingle"))
 
 
-# Candidate-pair ceiling for the guarded broadcast in
-# verify_pairs_jaccard: below it, each side's candidate-doc list is at
-# most n_pairs distinct longs (<= ~32 MB of ids at the limit — well
-# inside executor broadcast budgets at any sane executor size); above
-# it, banding has degenerated (the lists approach |docs|) and the
-# broadcast that would OOM is skipped in favor of a shuffle semi-join.
+def _overlap_counts(rows_a: DataFrame, rows_b: DataFrame,
+                    doc_cmp: str | None) -> DataFrame:
+    """(a, sz_a, b, sz_b, common) for every doc pair sharing a shingle:
+    the shared-shingle join of two `_shingle_rows` frames, counted per
+    pair. ``doc_cmp`` ("<" or "!=") restricts the pairs of a self-join.
+    The join volume is Σ df² over the shingles — the all-pairs cost."""
+    on = F.col("l.shingle") == F.col("r.shingle")
+    if doc_cmp is not None:
+        on = on & F.expr(f"l.doc {doc_cmp} r.doc")
+    return (rows_a.alias("l").join(rows_b.alias("r"), on)
+            .groupBy(F.col("l.doc").alias("a"), F.col("l.sz").alias("sz_a"),
+                     F.col("r.doc").alias("b"), F.col("r.sz").alias("sz_b"))
+            .agg(F.count(F.lit(1)).alias("common")))
+
+
+def _rarest_first(sets: DataFrame, min_overlap: F.Column) -> DataFrame:
+    """(doc, sz, shingle, df, rn, in_prefix): each doc's shingles ranked
+    rarest first — ascending document frequency ``df``, ties by shingle,
+    one total order for the whole corpus — with ``in_prefix`` on the
+    first sz − min_overlap + 1. A doc sharing at least ``min_overlap``
+    shingles with another shares one inside this prefix, so prefix rows
+    generate every candidate pair while the hot shingles, last in every
+    doc, never enter a join."""
+    from pyspark.sql import Window
+
+    rows = _shingle_rows(sets)
+    dft = rows.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc").orderBy("df", "shingle")
+    return (rows.join(dft, "shingle")
+            .withColumn("rn", F.row_number().over(w))
+            .withColumn("in_prefix",
+                        F.col("rn") <= F.col("sz") - min_overlap + 1))
+
+
+# Candidate-pair ceiling for the guarded broadcast in _verify_overlap:
+# below it, each side's candidate-doc list is at most n_pairs distinct
+# longs (<= ~32 MB of ids at the limit — well inside executor broadcast
+# budgets at any sane executor size); above it, candidate generation has
+# degenerated (the lists approach |docs|) and the broadcast that would
+# OOM is skipped in favor of a shuffle semi-join.
 _BROADCAST_CANDIDATE_PAIRS = 4_000_000
 
 
-def verify_pairs_jaccard(sets: DataFrame, pairs: DataFrame,
-                         threshold: float = 0.0) -> DataFrame:
-    """Exact Jaccard for *candidate pairs only*: join each side's shingle
-    set (from `shingle_sets`) and intersect with array ops. Cost is
-    O(|candidates|) — independent of how common individual shingles are,
-    which is what makes the LSH pipeline scale where the all-pairs join
-    degenerates.
+def _verify_overlap(pairs: DataFrame, sets_a: DataFrame,
+                    sets_b: DataFrame) -> DataFrame:
+    """Exact overlap of CANDIDATE pairs only: each side's shingle set
+    joined to the materialized (a, b) ``pairs`` and intersected, adding
+    sh_a, sz_a, sh_b, sz_b and common = size(array_intersect). The cost
+    is O(|candidates|), whatever the shingle frequencies.
 
-    r13 shape: BOTH fat joins are preceded by a semi-join reduction of
-    `sets` to each side's candidate docs. Without it the b-side join
-    shuffled the ENTIRE fat sets frame: the a-side join broadcasts
-    `pairs` (small) and streams sets shuffle-free, but its output
-    carries sh_a arrays — too fat to broadcast — so the planner fell
-    back to shuffling all of `sets` (corpus-sized string arrays)
-    against it. The candidate-doc id lists are bounded by |docs| and in
-    practice LSH-sparse (longs), so the semi-joins broadcast them and
-    the fat shuffles that remain are candidate-sized on both sides.
-    Result-identical: inner equi-joins only ever read the rows the
-    semi-join keeps."""
-    # pairs is consumed three times now (two candidate-doc broadcast
-    # builds + the verification join); unmaterialized, each consumer
-    # re-runs the banded self-join lineage upstream — measured OOM at
-    # the 1000x decade before this checkpoint landed. Candidate-sized,
-    # so the materialization is small by the LSH contract.
-    pairs = materialize(pairs)
+    Both fat joins are preceded by a semi-join of each side's sets to
+    its candidate docs, so the shuffles that remain are candidate-sized:
+    without it the b-side join shuffled the whole sets frame, since the
+    a-side output carries sh_a arrays too fat to broadcast. The semi-join
+    builds are BROADCAST while ``pairs`` stays under the ceiling: with no
+    hint they plan as SortMergeJoin, and even where AQE converts them at
+    runtime the corpus-sized shuffle WRITE of ``sets`` is already paid
+    (q_corpus_curation at 1000x ran 264 s against 214 s with the hint);
+    an unconditional hint OOMs under degenerate banding, where one band
+    hash collides across much of the corpus. ``pairs`` must be
+    materialized: it feeds the guard's count, both doc lists and the
+    join (unmaterialized, the candidate lineage ran three times and
+    OOMed at the 1000x decade)."""
     adocs = pairs.select(F.col("a").alias("doc")).distinct()
     bdocs = pairs.select(F.col("b").alias("doc")).distinct()
-    # GUARDED broadcast on the candidate-doc lists (r14). Unconditional
-    # F.broadcast OOMs under degenerate banding (one band hash colliding
-    # across a large corpus fraction pushes the lists toward |docs| —
-    # the r13 ADVICE finding); but leaving the hint off entirely plans
-    # both semi-joins as SortMergeJoin, and even when AQE converts them
-    # to broadcasts at runtime the corpus-sized shuffle WRITE of the fat
-    # `sets` frame has already been paid — measured: q_corpus_curation
-    # 1000x regressed 214 -> 264 s (outside the 1.4x same-code band)
-    # with the hint off, while the guarded shape restores the band.
-    # `pairs` is checkpointed, so the guard's count() is a cheap local
-    # scan; n_pairs bounds each side's distinct doc count, so the
-    # broadcast is <= ~8 bytes * n_pairs per side — far under executor
-    # memory at the threshold, and the degenerate case falls back to
-    # the gracefully-degrading shuffle semi-join.
     if pairs.count() <= _BROADCAST_CANDIDATE_PAIRS:
         adocs, bdocs = F.broadcast(adocs), F.broadcast(bdocs)
-    sets_a = sets.join(adocs, "doc", "left_semi")
-    sets_b = sets.join(bdocs, "doc", "left_semi")
-    out = (
+    sets_a = sets_a.join(adocs, "doc", "left_semi")
+    sets_b = sets_b.join(bdocs, "doc", "left_semi")
+    return (
         pairs
         .join(sets_a.select(F.col("doc").alias("a"),
                             F.col("sh").alias("sh_a"),
@@ -290,11 +290,71 @@ def verify_pairs_jaccard(sets: DataFrame, pairs: DataFrame,
                             F.col("sh").alias("sh_b"),
                             F.col("sz").alias("sz_b")), "b")
         .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard",
-                    F.col("common").cast("double")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
     )
-    return out.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
+
+
+def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard) for the pairs of an overlap frame with Jaccard ≥
+    ``threshold``. jaccard = |A∩B| / (|A| + |B| − |A∩B|) from exact
+    integer counts, so the double division is engine-deterministic."""
+    return (overlap
+            .withColumn("jaccard",
+                        F.col("common").cast("double")
+                        / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
+            .filter(F.col("jaccard") >= threshold)
+            .select("a", "b", "jaccard"))
+
+
+def _containment_at_least(directed: DataFrame,
+                       threshold_units: int) -> DataFrame:
+    """(contained, container, common, sz_contained, containment_units)
+    for the pairs (a contained in b) of an overlap frame with
+    1e6·common DIV sz_a ≥ ``threshold_units``: integer fixed point, so
+    every SQL engine computes the same DIV."""
+    return (directed
+            .select(F.col("a").alias("contained"),
+                    F.col("b").alias("container"),
+                    F.col("common").cast("long").alias("common"),
+                    F.col("sz_a").cast("long").alias("sz_contained"))
+            .withColumn("containment_units",
+                        F.expr("1000000 * common DIV sz_contained"))
+            .filter(F.col("containment_units") >= threshold_units))
+
+
+def exact_jaccard(sets: DataFrame, threshold: float = 0.0) -> DataFrame:
+    """Exact all-pairs Jaccard (a, b, jaccard), a < b, over a
+    `shingle_sets` frame via the shared-shingle count. Quadratic in
+    per-shingle document frequency: the oracle-checkable ground truth and
+    the cheap plan on flat vocabularies; `near_dup_pairs_exact` switches
+    to the prefix filter where that cost explodes, and
+    `near_dup_pairs_minhash` verifies only LSH candidates."""
+    rows = _shingle_rows(sets)
+    return _jaccard_at_least(_overlap_counts(rows, rows, "<"), threshold)
+
+
+def exact_jaccard_cross(sets_a: DataFrame, sets_b: DataFrame,
+                        threshold: float = 0.0) -> DataFrame:
+    """Exact Jaccard between two `shingle_sets` frames — the
+    incremental-admission variant of `exact_jaccard`: score each new
+    (a-side) document against the existing corpus (b-side) without the
+    self-join's a<b de-duplication. Same cost profile: quadratic in
+    per-shingle document frequency, correctness-scale ground truth; the
+    100 TB path precomputes MinHash band signatures for the corpus once
+    (a persisted table, like the IVF quantizer) and equi-joins only the
+    new batch's bands against it."""
+    return _jaccard_at_least(
+        _overlap_counts(_shingle_rows(sets_a), _shingle_rows(sets_b), None),
+        threshold)
+
+
+def verify_pairs_jaccard(sets: DataFrame, pairs: DataFrame,
+                         threshold: float = 0.0) -> DataFrame:
+    """Exact Jaccard (a, b, jaccard) of the candidate ``pairs`` only, from
+    the shingle sets of ``sets`` (`shingle_sets`). The candidates are
+    materialized here (candidate-sized by the LSH and prefix-filter
+    contracts) and verified by `_verify_overlap`."""
+    return _jaccard_at_least(
+        _verify_overlap(materialize(pairs), sets, sets), threshold)
 
 
 def near_dup_pairs_minhash(df: DataFrame, id_col: str, text_col: str,
@@ -316,9 +376,76 @@ def near_dup_pairs_minhash(df: DataFrame, id_col: str, text_col: str,
     return verify_pairs_jaccard(sets, cands, threshold=threshold)
 
 
-def containment_pairs(shingles: DataFrame,
-                      threshold_units: int = 900_000,
-                      regime: str = "auto") -> DataFrame:
+def _containment_min_overlap(threshold_units: int) -> F.Column:
+    """The fewest shared shingles that reach ``threshold_units`` for a doc
+    of size sz: ceil(T·sz / 1e6), the final integer-DIV gate inverted, so
+    the prefix bound is tight. sz is an INT, so the product is taken in
+    bigint: T·sz passes 2^31 from about 2400 shingles at T = 0.9."""
+    return F.expr(
+        f"({threshold_units} * CAST(sz AS BIGINT) + 999999) DIV 1000000")
+
+
+def exact_containment(sets: DataFrame, threshold_units: int) -> DataFrame:
+    """Exact containment pairs by the shared-shingle count over every
+    ordered pair (a ≠ b). Join volume Σ df², each row consumed by ONE
+    count: the cheap plan on a small or flat vocabulary (the documents
+    fixture: 3.3 s against 109 s for the prefix plan at sf0.1)."""
+    rows = _shingle_rows(sets)
+    return _containment_at_least(_overlap_counts(rows, rows, "!="),
+                                 threshold_units)
+
+
+def containment_candidates(sets: DataFrame,
+                           threshold_units: int) -> DataFrame:
+    """Directed candidate pairs (a, b), a ≠ b, for containment ≥
+    ``threshold_units``: a's rarest-first prefix joined to b's whole
+    set. containment(a → b) ≥ T needs common ≥ ceil(T·|A|), so a
+    qualifying pair shares one of A's |A| − ceil(T·|A|) + 1 rarest
+    shingles. Linear on Zipf-distributed text, where the prefix is the
+    rare tail; on a flat vocabulary the candidates are nearly all
+    sharing pairs."""
+    pref = _rarest_first(sets, _containment_min_overlap(threshold_units))
+    rows = _shingle_rows(sets)
+    return (pref.filter("in_prefix").alias("l")
+            .join(rows.alias("r"),
+                  (F.col("l.shingle") == F.col("r.shingle"))
+                  & (F.col("l.doc") != F.col("r.doc")))
+            .select(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
+            .distinct())
+
+
+def verify_pairs_containment(sets: DataFrame, pairs: DataFrame,
+                             threshold_units: int) -> DataFrame:
+    """Exact containment of the directed candidate ``pairs`` (a contained
+    in b) only, verified like `verify_pairs_jaccard`."""
+    return _containment_at_least(
+        _verify_overlap(materialize(pairs), sets, sets), threshold_units)
+
+
+def _containment_probe(sets: DataFrame,
+                       threshold_units: int) -> tuple[int, int, int, int]:
+    """(Σ df², shingle rows, docs, prefix-join volume) from ONE aggregate
+    over the rarest-first rows: Σ df over all rows is Σ df² over the
+    shingles, the rows with rn = 1 count the docs, and Σ df over the
+    prefix rows is the volume of `containment_candidates`' join."""
+    row = (_rarest_first(sets, _containment_min_overlap(threshold_units))
+           .agg(F.sum("df"), F.count(F.lit(1)),
+                F.count(F.when(F.col("rn") == 1, 1)),
+                F.sum(F.when(F.col("in_prefix"), F.col("df"))))
+           .collect()[0])
+    return tuple(int(v or 0) for v in row)
+
+
+def _containment_prefers_prefix(probe: tuple[int, int, int, int]) -> bool:
+    """The containment plan choice from `_containment_probe`'s integers:
+    the prefix plan iff its volume — prefix-join volume × (1 + 2·mean set
+    size), the verification's upper bound — is below the all-pairs Σ df²."""
+    v_naive, rows, docs, v_join = probe
+    return v_join * (1 + 2 * rows / max(docs, 1)) < v_naive
+
+
+def containment_pairs(sets: DataFrame,
+                      threshold_units: int = 900_000) -> DataFrame:
     """Exact shingle CONTAINMENT pairs: containment(a → b) =
     |Sh(a) ∩ Sh(b)| / |Sh(a)| — the asymmetric near-dup relation Jaccard
     misses. A page wrapped in boilerplate, a quoted email, a doc chunked
@@ -327,127 +454,28 @@ def containment_pairs(shingles: DataFrame,
     MinHash-LSH — which approximates JACCARD — structurally under-recalls
     exactly these pairs. A curation pipeline needs both relations.
 
-    Input: (doc, shingle) from `shingle_table`. Output
+    Input: `shingle_sets` (doc, sh, sz). Output
     (contained, container, common, sz_contained, containment_units) for
     every ordered pair with 1e6·common DIV sz_contained ≥
-    ``threshold_units`` — integer fixed-point throughout, so the result
-    is engine-exact (same DIV in any SQL engine). Mutual containment
-    (near-identical docs) correctly emits both directions.
+    ``threshold_units``. Mutual containment (near-identical docs) emits
+    both directions.
 
-    ENGINE-CHOSEN REGIME (same discipline as `near_dup_pairs_exact`'s
-    candidate probe), two exact plans with a measured crossover
-    (SCALE.md r10):
-
-    - ``naive``: shared-shingle self-join → count per ordered pair.
-      Join volume = Σ df² but each row is consumed by ONE count
-      aggregate — the cheap plan when the vocabulary is small/flat
-      (the synthetic fixture: 3.3 s vs 109 s at sf0.1).
-    - ``prefix``: the containment-form PREFIX FILTER (PPJoin
-      discipline): containment ≥ t needs common ≥ ceil(t·|A|), so A's
-      (|A| − ceil(t·|A|) + 1) globally-rarest shingles (df-ascending,
-      shingle tie-break) must intersect B — candidates come from the
-      prefix × full-index join, then an exact recount on candidates
-      only. Linearizes on Zipf-distributed real text where the prefix
-      is the rare tail; LOSES when candidates ≈ all sharing pairs
-      (flat vocab) because the recount multiplies by set size.
-
-    ``auto`` probes both integrals from one ranking pass (driver
-    scalars): V_naive = Σ df², V_prefix = prefix-join volume × (1 +
-    2·avg set size) — the recount upper bound — and picks the smaller.
-    Both paths are pytest-pinned identical. The probe is NOT free: the
-    V_prefix integral executes the ranking pass (a full shuffle over the
-    shingle rows) into one bounded-output aggregate at plan-build time,
-    and the prefix execution re-derives that ranking (the measured
-    re-derive-vs-checkpoint no-win below) — so ``auto`` costs one extra
-    bounded-output job plus the intentional re-derive, not a metadata
-    scan (ADVICE r10). A corpus with NO rare tail leaves exact
-    containment inherently near-all-pairs (measured: the flat-vocab
-    fixture at 100× spilled past local disk) — the bounded-recall path
-    there is a banded candidate generator + the prefix regime's exact
-    recount as its verification tail."""
-    if regime not in ("auto", "naive", "prefix"):
-        raise ValueError(f"unknown regime {regime!r}")
-    sizes = shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    dftab = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("doc").orderBy("df", "shingle")
-    # minimum shared-shingle count for doc A: ceil(T·sz / 1e6) — exactly
-    # the final integer-DIV filter inverted, so the prefix bound is tight
-    ranked = (shingles.join(dftab, "shingle")
-              .withColumn("rn", F.row_number().over(w)))
-    pref = (ranked.join(sizes, "doc")
-            .withColumn("minc",
-                        F.expr(f"({threshold_units} * sz + 999999) "
-                               "DIV 1000000"))
-            .filter(F.col("rn") <= F.col("sz") - F.col("minc") + 1)
-            .select("doc", "shingle"))
-
-    if regime == "auto":
-        # one probe job, three driver scalars: the two volume integrals
-        # + the recount multiplier. The prefix integral re-derives the
-        # ranking pass rather than checkpointing `pref` for the
-        # execution to reuse — measured (scripts/containment_zipf.py):
-        # the eager materialization saved nothing at 30k docs and LOST
-        # at 100k (the probe's agg pipelines with the ranking anyway),
-        # the same re-derive-narrow-state rule as the r8 DSIR lesson.
-        probe = dftab.agg(
-            F.sum(F.col("df") * F.col("df")).alias("v_naive"),
-            F.sum("df").alias("gram_rows"),
-            F.count(F.lit(1)).alias("n_sh")).collect()[0]
-        pj = (pref.join(dftab, "shingle")
-              .agg(F.sum("df").alias("v"),
-                   F.count(F.lit(1)).alias("pref_rows")).collect()[0])
-        n_docs = max(sizes.count(), 1)
-        avg_sz = (probe["gram_rows"] or 0) / n_docs
-        v_naive = probe["v_naive"] or 0
-        v_prefix = (pj["v"] or 0) * (1 + 2 * avg_sz)
-        regime = "naive" if v_naive <= v_prefix else "prefix"
-
-    if regime == "naive":
-        l, r = shingles.alias("l"), shingles.alias("r")
-        common = (
-            l.join(r, (F.col("l.shingle") == F.col("r.shingle"))
-                   & (F.col("l.doc") != F.col("r.doc")))
-            .groupBy(F.col("l.doc").alias("contained"),
-                     F.col("r.doc").alias("container"))
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    else:
-        cands = (
-            pref.alias("l")
-            .join(shingles.alias("r"),
-                  (F.col("l.shingle") == F.col("r.shingle"))
-                  & (F.col("l.doc") != F.col("r.doc")))
-            .select(F.col("l.doc").alias("contained"),
-                    F.col("r.doc").alias("container"))
-            .distinct()
-        )
-        # exact recount over candidates only: common = |Sh(A) ∩ Sh(B)|
-        # via a left_semi against the container's shingles (no fan-out:
-        # shingles are distinct per doc, the semi keeps each pair-shingle
-        # row once)
-        a_side = cands.join(
-            shingles.select(F.col("doc").alias("contained"), "shingle"),
-            "contained")
-        common = (
-            a_side.join(
-                shingles.select(F.col("doc").alias("container"),
-                                "shingle"),
-                ["container", "shingle"], "left_semi")
-            .groupBy("contained", "container")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    out = (
-        common
-        .join(sizes.select(F.col("doc").alias("contained"),
-                           F.col("sz").alias("sz_contained")), "contained")
-        .withColumn("containment_units",
-                    F.expr("1000000 * common DIV sz_contained"))
-    )
-    return (out.filter(F.col("containment_units") >= threshold_units)
-            .select("contained", "container", "common", "sz_contained",
-                    "containment_units"))
+    The engine picks one of two exact plans with a measured crossover
+    (SCALE.md r10): `exact_containment` or `containment_candidates`
+    verified by `verify_pairs_containment`. `_containment_probe` runs one
+    bounded-output job over the ranking pass at build time (a full
+    shuffle over the shingle rows); the prefix plan re-derives that
+    ranking rather than reusing a checkpoint of it, which saved nothing
+    at 30k docs and lost at 100k (scripts/containment_zipf.py). A corpus
+    with NO rare tail leaves exact containment near-all-pairs under
+    either plan (the flat-vocab fixture at 100× spilled past local
+    disk); `containment_pairs_banded` is the bounded-recall path there."""
+    if _containment_prefers_prefix(_containment_probe(sets,
+                                                      threshold_units)):
+        return verify_pairs_containment(
+            sets, containment_candidates(sets, threshold_units),
+            threshold_units)
+    return exact_containment(sets, threshold_units)
 
 
 def containment_pairs_banded(sets: DataFrame,
@@ -455,14 +483,12 @@ def containment_pairs_banded(sets: DataFrame,
                              num_hashes: int = 32,
                              bands: int = 8) -> DataFrame:
     """BOUNDED-RECALL containment pairs — the 100 TB path for corpora
-    with NO rare tail, where BOTH exact regimes of `containment_pairs`
+    with NO rare tail, where both exact plans of `containment_pairs`
     are inherently near-all-pairs (the flat-vocab fixture's measured
     100x disk abort, SCALE.md r10): candidates come from the MinHash-LSH
-    band join (pairs agreeing on >= 1 of ``bands`` signature bands), the
-    verification tail is the prefix regime's EXACT recount — here as an
-    `array_intersect` over the candidates' shingle-set arrays, emitting
-    BOTH directions of every candidate pair with 1e6·common DIV sz >=
-    ``threshold_units``. Same output schema and integer fixed-point
+    band join (pairs agreeing on >= 1 of ``bands`` signature bands), and
+    the exact verification of `_verify_overlap` scores BOTH directions of
+    every candidate pair. Same output schema and integer fixed-point
     semantics as `containment_pairs`; the only relaxation is WHICH pairs
     are examined.
 
@@ -478,37 +504,21 @@ def containment_pairs_banded(sets: DataFrame,
     recall vs the exact operator on the fixture, and the honest scale
     statement lives in SCALE.md. Every stage is SQL-replayable, so the
     registry entry carries a full oracle."""
+    # materialized once, as in near_dup_pairs_minhash: the sets feed the
+    # signatures and both verification sides, and the candidates'
+    # checkpoint cuts the lineage, so unmaterialized the ngram projection
+    # ran in two jobs (sf0.1, local[8]: 2.2 s per call against 1.7 s)
+    sets = materialize(sets)
     sigs = minhash_signatures_from_sets(sets, num_hashes)
-    cands = lsh_candidate_pairs(sigs, bands, num_hashes)
-    joined = (
-        cands
-        .join(sets.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a"),
-                          F.col("sz").alias("sz_a")), "a")
-        .join(sets.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b"),
-                          F.col("sz").alias("sz_b")), "b")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b"))
-                    .cast("long"))
-        .select("a", "b", "common", "sz_a", "sz_b")
-    )
-    # one candidate row fans into the two ordered directions, then the
-    # same fixed-point gate as the exact operator
-    both = joined.select(
-        F.explode(F.array(
-            F.struct(F.col("a").alias("contained"),
-                     F.col("b").alias("container"),
-                     F.col("common"),
-                     F.col("sz_a").cast("long").alias("sz_contained")),
-            F.struct(F.col("b").alias("contained"),
-                     F.col("a").alias("container"),
-                     F.col("common"),
-                     F.col("sz_b").cast("long").alias("sz_contained")),
-        )).alias("d")
-    ).select("d.*")
-    out = both.withColumn(
-        "containment_units", F.expr("1000000 * common DIV sz_contained"))
-    return (out.filter(F.col("containment_units") >= threshold_units)
-            .select("contained", "container", "common", "sz_contained",
-                    "containment_units"))
+    cands = materialize(lsh_candidate_pairs(sigs, bands, num_hashes))
+    pairs = _verify_overlap(cands, sets, sets)
+    # one verified pair fans into its two directions
+    directed = pairs.select(F.explode(F.array(
+        F.struct("a", "b", "common", "sz_a"),
+        F.struct(F.col("b").alias("a"), F.col("a").alias("b"), "common",
+                 F.col("sz_b").alias("sz_a")),
+    )).alias("d")).select("d.*")
+    return _containment_at_least(directed, threshold_units)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str,
@@ -620,35 +630,6 @@ def near_dup_pairs_simhash(df: DataFrame, id_col: str, text_col: str,
     return out
 
 
-def exact_jaccard_cross(sh_a: DataFrame, sh_b: DataFrame,
-                        threshold: float = 0.0) -> DataFrame:
-    """Exact Jaccard between two shingle tables (`shingle_table` output) —
-    the incremental-admission variant of `exact_jaccard`: score each new
-    (a-side) document against the existing corpus (b-side) without the
-    self-join's a<b de-duplication. Same cost profile: quadratic in
-    per-shingle document frequency, correctness-scale ground truth; the
-    100 TB path precomputes MinHash band signatures for the corpus once
-    (a persisted table, like the IVF quantizer) and equi-joins only the
-    new batch's bands against it."""
-    sza = sh_a.groupBy("doc").agg(F.count(F.lit(1)).alias("sz_a"))
-    szb = sh_b.groupBy("doc").agg(F.count(F.lit(1)).alias("sz_b"))
-    common = (
-        sh_a.alias("l").join(sh_b.alias("r"),
-                             F.col("l.shingle") == F.col("r.shingle"))
-        .groupBy(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    out = (
-        common
-        .join(sza.withColumnRenamed("doc", "a"), "a")
-        .join(szb.withColumnRenamed("doc", "b"), "b")
-        .withColumn("jaccard",
-                    F.col("common").cast("double")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
-    )
-    return out.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
-
-
 # ---------------------------------------------------------------------------
 # Streaming corpus admission: persisted-postings screen (the 100 TB regime)
 # ---------------------------------------------------------------------------
@@ -733,10 +714,7 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
     batch = materialize(batch)
 
     if state_dir is not None:
-        bsets = shingle_sets(batch, "doc_id", "text", n)
-        bsh = (bsets.select(F.col("doc").alias("doc_id"),
-                            F.col("sz").alias("sz_a"),
-                            F.explode("sh").alias("shingle"))
+        bsh = (_shingle_rows(shingle_sets(batch, "doc_id", "text", n))
                .withColumn("bucket",
                            F.pmod(F.xxhash64("shingle"), F.lit(buckets)))
                .transform(materialize))
@@ -754,19 +732,8 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
                    for r in bsh.select("bucket").distinct().collect()]
         postings = (sp.read.parquet(os.path.join(state_dir, "postings"))
                     .filter(F.col("bucket").isin(touched)))
-        common = (bsh.join(postings, "shingle")
-                  .groupBy("doc_id", F.col("doc").alias("b"))
-                  .agg(F.count(F.lit(1)).alias("common"),
-                       F.first("sz_a").alias("sz_a"),
-                       F.first("sz").alias("sz_b")))
-        near = (common
-                .withColumn("jaccard",
-                            F.col("common").cast("double")
-                            / (F.col("sz_a") + F.col("sz_b")
-                               - F.col("common")))
-                .filter(F.col("jaccard") >= threshold)
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_near")))
+        scored = _jaccard_at_least(_overlap_counts(bsh, postings, None),
+                                   threshold)
     else:
         corpus = materialize(sp.read.parquet(corpus_dir))
         exact = (batch.select("doc_id", F.md5("text").alias("h"))
@@ -774,12 +741,11 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
                        "h", "left_semi")
                  .select("doc_id").distinct()
                  .withColumn("is_exact", F.lit(True)))
-        near = (exact_jaccard_cross(
-                    shingle_table(batch, "doc_id", "text", n=n),
-                    shingle_table(corpus, "doc_id", "text", n=n),
-                    threshold=threshold)
-                .groupBy(F.col("a").alias("doc_id"))
-                .agg(F.count(F.lit(1)).alias("n_near")))
+        scored = exact_jaccard_cross(
+            shingle_sets(batch, "doc_id", "text", n),
+            shingle_sets(corpus, "doc_id", "text", n), threshold)
+    near = (scored.groupBy(F.col("a").alias("doc_id"))
+            .agg(F.count(F.lit(1)).alias("n_near")))
 
     verdicts = (
         batch.select("doc_id", "text")
@@ -799,15 +765,14 @@ def admission_screen_batch(batch: DataFrame, corpus_dir: str,
     (admitted.select("doc_id", "text")
      .write.mode("append").parquet(corpus_dir))
     if state_dir is not None:
-        adm_ids = admitted.select("doc_id")
+        adm_ids = admitted.select(F.col("doc_id").alias("doc"))
         # repartition on the partition column before the append: without
         # it every task writes a sliver into every touched bucket dir
         # (up to tasks x buckets small files PER BATCH — a long-running
         # stream would fragment the state table); with it, one file per
         # touched bucket per batch, and the shuffle is only batch-sized
-        (bsh.join(adm_ids, "doc_id", "left_semi")
-         .select(F.col("doc_id").alias("doc"), F.col("sz_a").alias("sz"),
-                 "shingle", "bucket")
+        (bsh.join(adm_ids, "doc", "left_semi")
+         .select("doc", "sz", "shingle", "bucket")
          .repartition("bucket")
          .write.mode("append").partitionBy("bucket")
          .parquet(os.path.join(state_dir, "postings")))
@@ -975,36 +940,23 @@ def admission_screen_batch_banded(batch: DataFrame, state_dir: str,
         sbands = (sp.read.parquet(os.path.join(state_dir, "bands"))
                   .filter(F.col("bucket").isin(b_touched)))
         cands = (bbands.join(sbands, ["band", "band_hash"])
-                 .select("bdoc", F.col("doc").alias("cdoc")).distinct()
+                 .select(F.col("bdoc").alias("a"), F.col("doc").alias("b"))
+                 .distinct()
                  .transform(materialize))
     else:  # empty batch
-        cands = sp.createDataFrame([], "bdoc BIGINT, cdoc BIGINT")
+        cands = sp.createDataFrame([], "a BIGINT, b BIGINT")
 
     # point-fetch candidate corpus sets: sparse doc-bucket pruning
-    cdocs = cands.select(F.col("cdoc").alias("doc")).distinct()
     d_touched = [r["db"] for r in
-                 cdocs.select(F.pmod(F.xxhash64("doc"),
+                 cands.select(F.pmod(F.xxhash64("b"),
                                      F.lit(buckets)).alias("db"))
                  .distinct().collect()]
     if d_touched:
         csets = (sp.read.parquet(os.path.join(state_dir, "sets"))
-                 .filter(F.col("bucket").isin(d_touched))
-                 .join(cdocs, "doc", "left_semi"))
-        near = (cands
-                .join(bsets.select(F.col("doc").alias("bdoc"),
-                                   F.col("sh").alias("sh_a"),
-                                   F.col("sz").alias("sz_a")), "bdoc")
-                .join(csets.select(F.col("doc").alias("cdoc"),
-                                   F.col("sh").alias("sh_b"),
-                                   F.col("sz").alias("sz_b")), "cdoc")
-                .withColumn("common",
-                            F.size(F.array_intersect("sh_a", "sh_b")))
-                .withColumn("jaccard",
-                            F.col("common").cast("double")
-                            / (F.col("sz_a") + F.col("sz_b")
-                               - F.col("common")))
-                .filter(F.col("jaccard") >= threshold)
-                .groupBy(F.col("bdoc").alias("doc_id"))
+                 .filter(F.col("bucket").isin(d_touched)))
+        near = (_jaccard_at_least(_verify_overlap(cands, bsets, csets),
+                                  threshold)
+                .groupBy(F.col("a").alias("doc_id"))
                 .agg(F.count(F.lit(1)).alias("n_near")))
     else:
         near = sp.createDataFrame([], "doc_id BIGINT, n_near BIGINT")
@@ -1130,38 +1082,22 @@ def duplicated_span_table(df: DataFrame, id_col: str, text_col: str,
 def prefix_filter_candidates(sets: DataFrame,
                              threshold: float = 0.5) -> DataFrame:
     """PPJoin-style prefix-filtered candidate pairs (a, b), a < b, for an
-    exact Jaccard join at threshold ``threshold``.
+    exact Jaccard join at threshold ``threshold``; `verify_pairs_jaccard`
+    scores them.
 
     The all-pairs shared-shingle join (`exact_jaccard`) is quadratic in
     per-shingle document frequency — the classic scale cliff for EXACT
-    set-similarity joins. Prefix filtering (Chaudhuri et al. 2006 /
-    Xiao et al. PPJoin, public literature) restores scale while keeping
-    exactness: order every document's shingles by a global canonical
-    order (ascending document frequency, ties lexicographic — rarest
-    first), and join only on each side's PREFIX of length
-    |s| − ⌈τ·|s|⌉ + 1. Completeness: J(a,b) ≥ τ implies
-    |A∩B| ≥ τ·max(|A|,|B|) (from c ≥ τ(|a|+|b|)/(1+τ) and c ≤ min), so
-    two qualifying sets must collide inside both prefixes under any
-    shared total order. A length filter (min ≥ τ·max) prunes further.
-
-    Rare-first ordering makes prefixes collide on LOW-frequency shingles,
-    so the candidate join's key skew is bounded by construction — the
-    hot shingles that blow up the naive join sit at the back of every
-    document and never enter the prefix. τ = 0.5 is exact in binary
-    floating point, so the length/prefix arithmetic has no rounding edge.
-    """
-    from pyspark.sql import Window
-
-    sh = sets.select("doc", "sz", F.explode("sh").alias("shingle"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("dfreq"))
-    w = Window.partitionBy("doc").orderBy("dfreq", "shingle")
-    prefix = (
-        sh.join(dfreq, "shingle")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn")
-                <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
-        .select("doc", "sz", "shingle", "rn")
-    )
+    set-similarity joins. Prefix filtering restores scale while keeping
+    exactness: J(a,b) ≥ τ implies |A∩B| ≥ τ·max(|A|,|B|) (from
+    c ≥ τ(|a|+|b|)/(1+τ) and c ≤ min), so two qualifying sets collide
+    inside both `_rarest_first` prefixes of length |s| − ⌈τ·|s|⌉ + 1. A
+    length filter (min ≥ τ·max) prunes further. Rare-first ordering
+    makes prefixes collide on LOW-frequency shingles, so the candidate
+    join's key skew is bounded by construction. τ = 0.5 is exact in
+    binary floating point, so the length/prefix arithmetic has no
+    rounding edge."""
+    prefix = (_rarest_first(sets, F.ceil(F.lit(threshold) * F.col("sz")))
+              .filter("in_prefix"))
     a, b = prefix.alias("a"), prefix.alias("b")
     # positional filter (the "P" in PPJoin): a shared prefix token at
     # ranks (ra, rb) in the canonical order caps the achievable overlap
@@ -1199,7 +1135,7 @@ def estimate_allpairs_candidates(sets: DataFrame) -> int:
     # double and lose exactness above ~2^53 candidates — right where the
     # budget comparison matters. df·(df−1) is even, so summing it and
     # halving once at the end is exact in bigint.
-    row = (sets.select(F.explode("sh").alias("shingle"))
+    row = (_shingle_rows(sets)
            .groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
            .agg((F.sum(F.col("df") * (F.col("df") - 1)).cast("bigint"))
                 .alias("c2"))
@@ -1207,41 +1143,38 @@ def estimate_allpairs_candidates(sets: DataFrame) -> int:
     return int(row[0]["c2"] or 0) // 2
 
 
-def near_dup_pairs_exact(df: DataFrame, id_col: str, text_col: str,
-                         n: int = 2, threshold: float = 0.5,
-                         allpairs_candidate_budget: int = 150_000_000,
-                         ) -> DataFrame:
-    """EXACT Jaccard near-dup pairs with an ENGINE-CHOSEN physical path
-    (r7 verdict #4: the regime decision belongs in the engine, not a
-    docstring).
+# All-pairs candidate budget of `near_dup_pairs_exact`, calibrated on
+# local[32] measurements (r8): at c_all = 36M (sf0.1 fixture) all-pairs
+# runs the candidate join+agg in ~4 s where the prefix path takes ~30 s
+# of extra df/window/positional machinery; the prefix path's cost is
+# near-FLAT in corpus size (candidates track output size), so the
+# crossover sits where the quadratic all-pairs term overtakes that flat
+# cost — ~300M candidates here; 150M leaves 2x headroom. On a wider
+# cluster both sides scale with width.
+_ALLPAIRS_BUDGET = 150_000_000
 
-    Both physical paths return the identical exact result set; they differ
-    only in cost regime, and the committed sf0.1 measurements
-    (scripts/setjoin_scale.py) show a 7× split in EACH direction:
+
+def near_dup_pairs_exact(df: DataFrame, id_col: str, text_col: str,
+                         n: int = 2, threshold: float = 0.5) -> DataFrame:
+    """EXACT Jaccard near-dup pairs with an ENGINE-CHOSEN physical path.
+
+    Both paths return the identical exact result set; they differ only in
+    cost, and the committed sf0.1 measurements (scripts/setjoin_scale.py)
+    show a 7× split in EACH direction:
 
     - near-uniform df (synthetic fixtures): the all-pairs shared-shingle
-      join wins (8.6 s vs 59.6 s) — candidate volume is modest and the
-      prefix path's extra shuffles (dfreq join, per-doc window, positional
-      filter) are pure overhead;
+      join (`exact_jaccard`) wins (8.6 s vs 59.6 s) — candidate volume is
+      modest and the prefix path's extra shuffles (df join, per-doc
+      window, positional filter) are pure overhead;
     - Zipfian df (real corpora): all-pairs degenerates quadratically on
-      hot shingles; the prefix path's candidates stay near output size.
+      hot shingles; the prefix path (`prefix_filter_candidates` verified
+      by `verify_pairs_jaccard`) keeps candidates near output size.
 
     The chooser runs `estimate_allpairs_candidates` (one aggregate over
-    the shingle table that both paths need anyway) and takes all-pairs iff
-    the estimate fits ``allpairs_candidate_budget``. Default calibrated on
-    local[32] measurements (r8): at c_all = 36M (sf0.1 fixture) all-pairs
-    runs the candidate join+agg in ~4 s where the prefix path takes ~30 s
-    of extra dfreq/window/positional machinery; the prefix path's cost is
-    near-FLAT in corpus size (candidates track output size), so the
-    crossover sits where the quadratic all-pairs term overtakes that flat
-    cost — ~300M candidates here; budget = 150M leaves 2x headroom. On a
-    wider cluster both sides scale with width: raise proportionally. A
-    negative budget always takes the prefix path."""
-    sets = shingle_sets(df, id_col, text_col, n=n)
-    sets = materialize(sets)  # probe + both paths consume it
-    c_all = estimate_allpairs_candidates(sets)
-    if c_all <= allpairs_candidate_budget:
-        sh = sets.select("doc", F.explode("sh").alias("shingle"))
-        return exact_jaccard(sh, threshold=threshold)
-    cand = prefix_filter_candidates(sets, threshold=threshold)
-    return verify_pairs_jaccard(sets, cand, threshold=threshold)
+    the shingle sets both paths need anyway) and takes all-pairs iff the
+    estimate fits ``_ALLPAIRS_BUDGET``."""
+    sets = materialize(shingle_sets(df, id_col, text_col, n=n))
+    if estimate_allpairs_candidates(sets) <= _ALLPAIRS_BUDGET:
+        return exact_jaccard(sets, threshold)
+    return verify_pairs_jaccard(
+        sets, prefix_filter_candidates(sets, threshold), threshold)

@@ -311,24 +311,27 @@ def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame,
     (clustering.kmeans_fixed, or its persisted model file) and each
     query is scored only against its `n_probe` nearest lists — the
     data-adaptive complement to `topk_lsh`. Corpus assignment is
-    ``assign_clusters`` (one narrow projection); the queries are few
-    (they broadcast), so one bounded collect brings their quantized
-    vectors to the driver for ``_probe_lists``. Both pick by (integer
-    distance, list_id). Candidates are rescored by exact cosine with the
-    deterministic rounding. Every stage replays in SQL: the oracle
-    reuses q_kmeans_lloyd's unrolled-iteration prefix and probes the
-    SAME final centroids."""
+    ``assign_clusters`` (one narrow projection that also carries each
+    vector for the rescoring, so the corpus is read once); the queries
+    are few (they broadcast), so one bounded collect brings their
+    quantized vectors to the driver for ``_probe_lists``. Both pick by
+    (integer distance, list_id). Candidates are rescored by exact cosine
+    with the deterministic rounding. Every stage replays in SQL: the
+    oracle reuses q_kmeans_lloyd's unrolled-iteration prefix and probes
+    the SAME final centroids."""
     from pyspark.sql import Window
 
-    from .clustering import assign_clusters, quantize_vectors
+    from .clustering import (UNIT_SCALE, assign_clusters, quantize_vectors,
+                             quantized)
 
-    base = embeddings.select(F.col(id_col).alias("vec_id"),
-                             as_double(vec_col).alias("v"))
     qbase = queries.select(F.col(query_id_col).alias("query_id"),
                            as_double(vec_col).alias("qv"))
-    assigned = (assign_clusters(quantize_vectors(embeddings, id_col, vec_col),
-                                centroids)
-                .select("vec_id", F.col("cluster_id").alias("list_id")))
+    corpus = embeddings.select(F.col(id_col).alias("vec_id"),
+                               quantized(F.col(vec_col), UNIT_SCALE)
+                               .alias("qvec"),
+                               as_double(vec_col).alias("v"))
+    assigned = (assign_clusters(corpus, centroids)
+                .select("vec_id", "v", F.col("cluster_id").alias("list_id")))
     probes = embeddings.sparkSession.createDataFrame(
         [(int(r["vec_id"]), lid)
          for r in quantize_vectors(queries, query_id_col, vec_col).collect()
@@ -337,7 +340,7 @@ def topk_ivf_fixed(embeddings: DataFrame, queries: DataFrame,
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .join(base, "vec_id").join(qbase, "query_id")
+        .join(qbase, "query_id")
         .select("query_id", "vec_id",
                 cosine(F.col("qv"), F.col("v")).alias("cos"))
     )

@@ -238,8 +238,8 @@ _JACCARD_SQL = r"""
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    sh = D.shingle_table(d, "doc_id", "text", n=2)
-    pairs = D.exact_jaccard(sh, threshold=0.5)
+    pairs = D.exact_jaccard(D.shingle_sets(d, "doc_id", "text", n=2),
+                            threshold=0.5)
     return (
         G.dedup_clusters(pairs, d.select("doc_id"), id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "component",
@@ -321,8 +321,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     near = (
         D.exact_jaccard_cross(
-            D.shingle_table(batch, "doc_id", "text", n=2),
-            D.shingle_table(corpus, "doc_id", "text", n=2),
+            D.shingle_sets(batch, "doc_id", "text", n=2),
+            D.shingle_sets(corpus, "doc_id", "text", n=2),
             threshold=0.5)
         .groupBy(F.col("a").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_near"))

@@ -64,26 +64,28 @@ _CONTAINMENT_SQL = r"""
         "the MinHash-LSH path structurally under-recalls exactly these "
         "pairs; a curation pipeline needs both relations "
         "(operators/dedup.containment_pairs). Mutual containment "
-        "(near-identical docs) correctly emits both directions. EXACT "
-        "with an ENGINE-CHOSEN regime (probe on two volume integrals, "
-        "same discipline as the r8 set-join chooser): the naive "
-        "shared-shingle count-aggregate (wins on flat vocabularies — "
-        "the fixture: 3.3 s vs 109 s at sf0.1, measured) vs the "
-        "containment-form PREFIX FILTER + exact recount (PPJoin "
-        "discipline — linearizes on Zipf text where the contained "
-        "side's rarest-shingle prefix is selective). Both plans are "
-        "pytest-pinned identical; the oracle is the semantic "
-        "ground-truth form. Honest limit in SCALE.md r10: a corpus "
+        "(near-identical docs) correctly emits both directions. EXACT, "
+        "with the plan chosen by one build-time probe job over the "
+        "rarest-first ranking (Σ df² against the prefix-join volume): "
+        "the shared-shingle count over every ordered pair "
+        "(dedup.exact_containment, wins on flat vocabularies — the "
+        "fixture: 3.3 s vs 109 s at sf0.1, measured) or the "
+        "rarest-first PREFIX candidates verified by array intersection "
+        "(PPJoin discipline — linearizes on Zipf text where the "
+        "contained side's prefix is selective). On this flat fixture "
+        "the probe picks the shared-shingle count at sf0.01 and sf0.1. "
+        "The oracle recounts every ordered pair's shared bigrams in "
+        "DuckDB and checks each pair at ≥800000 units with its common "
+        "count, size and units. Honest limit in SCALE.md r10: a corpus "
         "with NO rare tail leaves exact containment inherently "
-        "near-all-pairs; the bounded-recall 100 TB path is a banded "
-        "candidate generator + the prefix regime's recount as its "
-        "verification tail.",
+        "near-all-pairs; the bounded-recall path there is "
+        "q_containment_banded_recall.",
     tags=("llm", "dedup"),
 )
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    sh = D.shingle_table(d, "doc_id", "text", n=2)
-    return D.containment_pairs(sh, threshold_units=800_000)
+    return D.containment_pairs(D.shingle_sets(d, "doc_id", "text", n=2),
+                               threshold_units=800_000)
 
 
 # ---------------------------------------------------------------------------

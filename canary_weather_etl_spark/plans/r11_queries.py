@@ -103,13 +103,15 @@ _CONTAINMENT_BANDED_SQL = rf"""
     "q_containment_banded_recall",
     oracle=_CONTAINMENT_BANDED_SQL,
     doc="BOUNDED-RECALL containment pairs — the 100 TB path for corpora "
-        "with NO rare tail, where BOTH exact regimes of "
+        "with NO rare tail, where both exact plans of "
         "q_containment_pairs are inherently near-all-pairs (the "
         "flat-vocab fixture's measured 100x disk abort, SCALE.md r10; "
         "this implements the banded design that row named): candidates "
-        "come from the portable MinHash-LSH band join, verification is "
-        "the EXACT fixed-point recount over candidate pairs only, both "
-        "directions emitted (operators/dedup.containment_pairs_banded). "
+        "come from the portable MinHash-LSH band join and are verified "
+        "by the shared candidate verification (array intersection of "
+        "the two shingle sets, dedup._verify_overlap), each verified "
+        "pair scored in both directions at ≥800000 fixed-point units "
+        "(operators/dedup.containment_pairs_banded). "
         "A full band collision needs all 4 permutation mins of some "
         "band to agree (probability ~ Jaccard^4 per band), so the "
         "4-5%%-of-n² coincidental sharing pairs that sink the exact "
@@ -215,19 +217,20 @@ def _zipf_corpus(ids: DataFrame) -> DataFrame:
         " The corpus is template boilerplate (5 classes, df grows with "
         "n) + a unique 10-token tail per doc + a contained twin every "
         "50th doc, constructed bit-identically in Spark and SQL from "
-        "the same literals. The ENGINE-CHOSEN regime picks the prefix "
-        "filter here (v_prefix < v_naive at every driver scale factor — "
-        "the tails make rarest-shingle prefixes selective; "
-        "pytest-pinned, tests/test_r11_ops.py) and the result is the "
-        "planted twins at containment 1.0 — exact under either regime, "
-        "so the oracle is regime-independent (the semantic ground-truth "
-        "form).",
+        "the same literals. dedup.containment_pairs' probe picks the "
+        "prefix plan here (rarest-first candidates verified by array "
+        "intersection) at sf0.01 and sf0.1 — the tails make "
+        "rarest-shingle prefixes selective; the decision is "
+        "pytest-pinned in tests/test_r11_ops.py. The oracle recounts "
+        "every ordered pair's shared bigrams in DuckDB, so it checks "
+        "the semantic result whichever plan runs: the planted twins at "
+        "containment 1.0 with their common counts and sizes.",
     tags=("llm", "dedup"),
 )
 def q_containment_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = load_par(spark, sf_dir, "documents").select("doc_id")
-    sh = D.shingle_table(_zipf_corpus(ids), "doc_id", "text", n=2)
-    return D.containment_pairs(sh, threshold_units=800_000, regime="auto")
+    sets = D.shingle_sets(_zipf_corpus(ids), "doc_id", "text", n=2)
+    return D.containment_pairs(sets, threshold_units=800_000)
 
 
 # ---------------------------------------------------------------------------

@@ -229,12 +229,13 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on its prefix of length |s|−⌈τ·|s|⌉+1, the positional filter "
         "drops pairs whose shared-token ranks cap the achievable overlap "
         "below ⌈τ/(1+τ)·(|a|+|b|)⌉, survivors verify with array-intersect "
-        "Jaccard. Runs dedup.near_dup_pairs_exact with a negative "
-        "all-pairs budget, which forces the prefix path; "
-        "q_setjoin_auto_regime runs the same chooser with its default "
-        "budget, which takes the all-pairs join at this scale, so the "
-        "two entries check both physical paths against one oracle. "
-        "Regime (measured, scripts/setjoin_scale.py + SCALE.md): on "
+        "Jaccard (dedup.verify_pairs_jaccard). This is the prefix path "
+        "of dedup.near_dup_pairs_exact, called directly; "
+        "q_setjoin_auto_regime runs the chooser, which takes the "
+        "all-pairs join at this scale, so the two entries check both "
+        "physical paths against one oracle: every pair with bigram "
+        "Jaccard ≥0.5 and its exact score. "
+        "Measured (scripts/setjoin_scale.py + SCALE.md): on "
         "SKEWED token frequencies — real corpora, where boilerplate "
         "shingles shared by every document make the count-based all-pairs "
         "join quadratic — hot shingles never enter any prefix and this is "
@@ -246,8 +247,9 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_setjoin_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_par(spark, sf_dir, "documents")
-    return D.near_dup_pairs_exact(d, "doc_id", "text", n=2, threshold=0.5,
-                                  allpairs_candidate_budget=-1)
+    sets = materialize(D.shingle_sets(d, "doc_id", "text", n=2))
+    return D.verify_pairs_jaccard(
+        sets, D.prefix_filter_candidates(sets, threshold=0.5), threshold=0.5)
 
 
 # --- winsorized robust statistics ---------------------------------------------

@@ -260,10 +260,11 @@ def q_stream_upsert_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "59.6 s on this fixture at sf0.1) and the PPJoin "
         "prefix+positional path (Zipfian regime, where all-pairs is "
         "quadratic on hot shingles). Identical result set either way. "
-        "At the fixture scale the probe takes the all-pairs path "
-        "(dedup.exact_jaccard); q_setjoin_prefix_filter forces the "
-        "prefix path through the same operator against the same "
-        "oracle. Chooser behavior on both regimes pinned in "
+        "At sf0.01 and sf0.1 the probe stays under the 150M budget and "
+        "takes the all-pairs path (dedup.exact_jaccard); "
+        "q_setjoin_prefix_filter runs the prefix path's parts directly "
+        "against the same oracle (every pair with bigram Jaccard ≥0.5 "
+        "and its exact score). Both paths on one corpus pinned in "
         "tests/test_r8_ops.py.",
     tags=("llm", "dedup"),
 )

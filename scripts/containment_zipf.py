@@ -5,16 +5,19 @@ The synthetic documents fixture has a flat vocabulary, where the naive
 count-aggregate wins and the prefix filter loses 33x. This probe builds
 the opposite — a Zipf-shaped corpus (20 boilerplate templates shared by
 N/20 docs each + a unique 30-token tail per doc, 1% planted
-contained-in-container twins) — and measures the same three regimes:
+contained-in-container twins) — and measures both exact plans of
+`containment_pairs`, each called directly, and the operator itself:
 
-- naive: join volume Sigma df^2 ~ 11 * 20 * (N/20)^2 — quadratic in N
-  (boilerplate df grows with the corpus), measurable only at small N.
-- prefix: the contained side's ~9 rarest shingles are its UNIQUE tail
-  bigrams (df 1-2), so the candidate join touches ~9N rows and
-  candidates ~ the planted pairs — linear in N.
-- auto: must pick prefix here (and naive on the flat fixture — the
-  pytest pins both directions); correctness = the planted pairs are
-  found by every regime run.
+- naive (`exact_containment`): join volume Sigma df^2 ~ 11 * 20 *
+  (N/20)^2 — quadratic in N (boilerplate df grows with the corpus),
+  measurable only at small N.
+- prefix (`containment_candidates` verified by
+  `verify_pairs_containment`): the contained side's ~9 rarest shingles
+  are its UNIQUE tail bigrams (df 1-2), so the candidate join touches
+  ~9N rows and candidates ~ the planted pairs — linear in N.
+- auto (`containment_pairs`): must pick prefix here (and naive on the
+  flat fixture — the pytest pins both directions); correctness = the
+  planted pairs are found by every run.
 
 Usage: SPARK_GRAFT_DRIVER_MEM=48g python scripts/containment_zipf.py
            [--small 30000] [--large 100000] [--reps 2]
@@ -34,8 +37,11 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from canary_weather_etl_spark.operators.dedup import (  # noqa: E402
+    containment_candidates,
     containment_pairs,
-    shingle_table,
+    exact_containment,
+    shingle_sets,
+    verify_pairs_containment,
 )
 from canary_weather_etl_spark.session import get_spark  # noqa: E402
 
@@ -68,14 +74,21 @@ def zipf_docs(spark, n: int):
     return base.unionByName(twins)
 
 
+PLANS = {
+    "naive": lambda sets: exact_containment(sets, 900_000),
+    "prefix": lambda sets: verify_pairs_containment(
+        sets, containment_candidates(sets, 900_000), 900_000),
+    "auto": lambda sets: containment_pairs(sets, 900_000),
+}
+
+
 def run(spark, docs, regime: str, reps: int, n: int) -> dict:
-    sh = shingle_table(docs, "doc_id", "text", n=2) \
+    sets = shingle_sets(docs, "doc_id", "text", n=2) \
         .localCheckpoint(eager=True)
     walls, found = [], None
     for _ in range(reps):
         t0 = time.time()
-        out = containment_pairs(sh, threshold_units=900_000,
-                                regime=regime).collect()
+        out = PLANS[regime](sets).collect()
         walls.append(time.time() - t0)
         planted = {(r["contained"], r["container"]) for r in out}
         found = sum(1 for i in range(0, n, PLANT_EVERY)

@@ -2,8 +2,8 @@
 """Regime probe for the EXACT set-similarity join strategies
 (SCALE.md evidence): count-based all-pairs shared-shingle join
 (`exact_jaccard`) vs PPJoin prefix-filtered candidate-verify
-(`near_dup_pairs_exact` with a negative all-pairs budget, which forces
-the prefix path).
+(`prefix_filter_candidates` verified by `verify_pairs_jaccard`) — the two
+paths `near_dup_pairs_exact` chooses between, each called directly.
 
 The two are output-identical; their costs diverge on token-frequency
 SKEW:
@@ -71,18 +71,18 @@ def main() -> None:
     for label, df in (("uniform-df (raw fixture)", base),
                       (f"hot-shingle (+{args.hot} boilerplate tokens "
                        f"on every doc)", hot)):
-        sh = D.shingle_table(df, "doc_id", "text", n=2)
+        sets = D.shingle_sets(df, "doc_id", "text", n=2)
         t_all, n_all = timed(
             lambda: frozenset((r["a"], r["b"]) for r in
-                              D.exact_jaccard(sh, 0.5).collect()), args.reps)
+                              D.exact_jaccard(sets, 0.5).collect()),
+            args.reps)
         t_pf, n_pf = timed(
             lambda: frozenset((r["a"], r["b"]) for r in
-                              D.near_dup_pairs_exact(
-                                  df, "doc_id", "text", n=2, threshold=0.5,
-                                  allpairs_candidate_budget=-1).collect()),
+                              D.verify_pairs_jaccard(
+                                  sets, D.prefix_filter_candidates(sets, 0.5),
+                                  0.5).collect()),
             args.reps)
         assert n_all == n_pf, "strategies disagree!"
-        sets = D.shingle_sets(df, "doc_id", "text", n=2)
         n_cand = D.prefix_filter_candidates(sets, 0.5).count()
         print(json.dumps({
             "variant": label, "pairs": len(n_all),

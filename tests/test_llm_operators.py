@@ -30,9 +30,9 @@ def emb(spark, sf_dir):
 def test_minhash_lsh_recall_vs_exact_jaccard(spark, docs, family):
     """The md5 universal-hash family — the only one, and the SQL-oracle
     basis q_dedup_minhash_lsh runs (r10) — clears the recall floor."""
-    sh = D.shingle_table(docs, "doc_id", "text", n=2)
+    sets = D.shingle_sets(docs, "doc_id", "text", n=2)
     exact = {(r["a"], r["b"]) for r in
-             D.exact_jaccard(sh, threshold=0.5).collect()}
+             D.exact_jaccard(sets, threshold=0.5).collect()}
     assert len(exact) >= 10, "fixture should contain planted near-dups"
     found = {(r["a"], r["b"]) for r in
              D.near_dup_pairs_minhash(docs, "doc_id", "text",
@@ -49,8 +49,8 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, docs, family):
 def test_simhash_separates_near_dups(spark, docs):
     """Planted near-dup pairs (jaccard>=0.8) should sit at much smaller
     hamming distance than random pairs."""
-    sh = D.shingle_table(docs, "doc_id", "text", n=2)
-    planted = D.exact_jaccard(sh, threshold=0.8).collect()
+    sets = D.shingle_sets(docs, "doc_id", "text", n=2)
+    planted = D.exact_jaccard(sets, threshold=0.8).collect()
     assert planted, "expect some high-jaccard planted pairs"
     sim = D.simhash(docs, "doc_id", "text", bits=32)
     sigs = {r["doc"]: r["simhash"] for r in sim.collect()}
@@ -335,9 +335,9 @@ def test_corpus_curation_invariants(spark, docs):
     assert 0 < n_out <= n_docs_in
 
     # no surviving near-dup pair at the pipeline's threshold
-    sh = D.shingle_table(docs.join(surviving_docs, "doc_id"),
-                         "doc_id", "text", n=2)
-    leftover = D.exact_jaccard(sh, threshold=0.5).collect()
+    sets = D.shingle_sets(docs.join(surviving_docs, "doc_id"),
+                          "doc_id", "text", n=2)
+    leftover = D.exact_jaccard(sets, threshold=0.5).collect()
     assert leftover == [], f"near-dups survived curation: {leftover[:5]}"
 
     # every survivor passed the gates
@@ -473,8 +473,8 @@ def test_incremental_admission_exact_dup_branch(spark):
               "h", "left_semi").collect()}
     assert exact_ids == {0}
     near = D.exact_jaccard_cross(
-        D.shingle_table(batch, "doc_id", "text", n=2),
-        D.shingle_table(corpus, "doc_id", "text", n=2), threshold=0.5)
+        D.shingle_sets(batch, "doc_id", "text", n=2),
+        D.shingle_sets(corpus, "doc_id", "text", n=2), threshold=0.5)
     near_ids = {r.a for r in near.collect()}
     assert 0 in near_ids          # exact dup is jaccard 1.0 too
     assert 5 in near_ids          # one-word-suffix diff stays >= 0.5

@@ -3,8 +3,6 @@ integer-exact quality logit score."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from canary_weather_etl_spark.operators import dedup as D
 from canary_weather_etl_spark.plans.registry import REGISTRY
 
@@ -22,14 +20,14 @@ def test_containment_catches_what_jaccard_misses(spark):
         [(1, core), (2, core + " " + boiler), (3, "totally unrelated words"
           " about other things entirely")],
         "doc_id INT, text STRING")
-    sh = D.shingle_table(docs, "doc_id", "text", n=2)
+    sets = D.shingle_sets(docs, "doc_id", "text", n=2)
 
     jac = {(r["a"], r["b"]): r["jaccard"]
-           for r in D.exact_jaccard(sh, threshold=0.0).collect()}
+           for r in D.exact_jaccard(sets, threshold=0.0).collect()}
     assert jac.get((1, 2), 0.0) < 0.2  # jaccard collapses with size gap
 
     got = {(r["contained"], r["container"]): r for r in
-           D.containment_pairs(sh, threshold_units=900_000).collect()}
+           D.containment_pairs(sets, threshold_units=900_000).collect()}
     assert (1, 2) in got  # ...but containment sees it
     r = got[(1, 2)]
     # every one of doc 1's 7 bigrams appears in doc 2
@@ -40,73 +38,117 @@ def test_containment_catches_what_jaccard_misses(spark):
     assert all(a != 3 and b != 3 for a, b in got)
 
 
+def _probe_reference(sets, thr):
+    """Pure-Python replay of the containment probe's four integers from
+    the collected shingle sets: Σ df², shingle rows, docs, and Σ df over
+    each doc's sz − ceil(thr·sz/1e6) + 1 rarest (df, shingle) shingles."""
+    docs = {r["doc"]: r["sh"] for r in sets.collect() if r["sh"]}
+    df = {}
+    for sh in docs.values():
+        for s in sh:
+            df[s] = df.get(s, 0) + 1
+    v_join = 0
+    for sh in docs.values():
+        keep = len(sh) - (thr * len(sh) + 999_999) // 1_000_000 + 1
+        v_join += sum(d for d, _ in sorted((df[s], s) for s in sh)[:keep])
+    return (sum(d * d for d in df.values()), sum(df.values()), len(docs),
+            v_join)
+
+
 def test_containment_regimes_identical_and_chooser(spark):
-    """The two exact plans (naive count-aggregate vs prefix-filter +
-    recount) are bit-identical on both vocabulary shapes, and the auto
-    probe picks the cheap one for each: naive on the flat-vocab fixture
-    (every shingle common — candidates ≈ all sharing pairs, recount
-    would multiply by set size), prefix on a Zipf-ish corpus (rare-tail
-    prefixes are selective)."""
+    """The two exact plans (shared-shingle count vs prefix candidates +
+    verification) are bit-identical on both vocabulary shapes, and the
+    operator's own probe picks the cheap one for each: the count on the
+    flat-vocab fixture (every shingle common — candidates ≈ all sharing
+    pairs, verification would multiply by set size), prefix on a
+    Zipf-ish corpus (rare-tail prefixes are selective). The probe's four
+    integers equal a pure-Python replay of their definition."""
     from canary_weather_etl_spark.plans.registry import load_par
 
-    def run(sh, regime):
+    def rows(df):
         return {(r["contained"], r["container"], r["common"],
-                 r["containment_units"])
-                for r in D.containment_pairs(
-                    sh, threshold_units=800_000, regime=regime).collect()}
+                 r["containment_units"]) for r in df.collect()}
+
+    def run(sets, plan):
+        if plan == "naive":
+            return rows(D.exact_containment(sets, threshold_units=800_000))
+        if plan == "prefix":
+            return rows(D.verify_pairs_containment(
+                sets, D.containment_candidates(sets, 800_000), 800_000))
+        return rows(D.containment_pairs(sets, threshold_units=800_000))
 
     # flat vocab: the sf0.01 documents fixture
-    sh_flat = D.shingle_table(load_par(spark, SF, "documents"),
-                              "doc_id", "text", n=2)
-    naive = run(sh_flat, "naive")
-    assert naive and naive == run(sh_flat, "prefix") == run(sh_flat, "auto")
+    sets_flat = D.shingle_sets(load_par(spark, SF, "documents"),
+                               "doc_id", "text", n=2)
+    naive = run(sets_flat, "naive")
+    assert naive and naive == run(sets_flat, "prefix") \
+        == run(sets_flat, "auto")
 
     # Zipf-ish: shared boilerplate + mostly-unique bodies; doc 100
     # contained in doc 101
     boiler = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(i, boiler + " " + " ".join(f"u{i}w{j}" for j in range(30)))
-            for i in range(150)]
-    rows.append((1000, " ".join(f"core{j} fill{j}" for j in range(20))))
-    rows.append((1001, rows[-1][1] + " " + boiler))
-    zipf = spark.createDataFrame(rows, "doc_id INT, text STRING")
-    sh_zipf = D.shingle_table(zipf, "doc_id", "text", n=2)
-    nz = run(sh_zipf, "naive")
-    assert nz == run(sh_zipf, "prefix") == run(sh_zipf, "auto")
+    rows_z = [(i, boiler + " " + " ".join(f"u{i}w{j}" for j in range(30)))
+              for i in range(150)]
+    rows_z.append((1000, " ".join(f"core{j} fill{j}" for j in range(20))))
+    rows_z.append((1001, rows_z[-1][1] + " " + boiler))
+    zipf = spark.createDataFrame(rows_z, "doc_id INT, text STRING")
+    sets_zipf = D.shingle_sets(zipf, "doc_id", "text", n=2)
+    nz = run(sets_zipf, "naive")
+    assert nz == run(sets_zipf, "prefix") == run(sets_zipf, "auto")
     assert any(a == 1000 and b == 1001 for a, b, *_ in nz)
 
-    # chooser picks the measured-cheap plan on each shape: replicate its
-    # integrals and assert the inequality direction differs
-    def integrals(sh, thr=800_000):
-        from pyspark.sql import Window, functions as F
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-        dftab = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        w = Window.partitionBy("doc").orderBy("df", "shingle")
-        pref = (sh.join(dftab, "shingle")
-                .withColumn("rn", F.row_number().over(w))
-                .join(sizes, "doc")
-                .filter(F.col("rn") <= F.col("sz")
-                        - F.expr(f"({thr} * sz + 999999) DIV 1000000") + 1)
-                .select("doc", "shingle"))
-        vn = dftab.agg(F.sum(F.col("df") * F.col("df"))).collect()[0][0]
-        gram = sh.count()
-        nd = sizes.count()
-        vp = (pref.join(dftab, "shingle").agg(F.sum("df"))
-              .collect()[0][0] or 0) * (1 + 2 * gram / nd)
-        return vn, vp
+    # the operator's own decision, from its own one-job probe; the
+    # literals are the integers the earlier three-collect probe gave
+    probe_flat = D._containment_probe(sets_flat, 800_000)
+    assert probe_flat == _probe_reference(sets_flat, 800_000) \
+        == (761467, 25709, 500, 121091)
+    assert not D._containment_prefers_prefix(probe_flat)  # flat -> naive
+    probe_zipf = D._containment_probe(sets_zipf, 800_000)
+    assert probe_zipf == _probe_reference(sets_zipf, 800_000) \
+        == (255468, 6240, 152, 1387)
+    assert D._containment_prefers_prefix(probe_zipf)      # Zipf -> prefix
 
-    vn_f, vp_f = integrals(sh_flat)
-    assert vn_f <= vp_f          # flat vocab -> naive
-    vn_z, vp_z = integrals(sh_zipf)
-    assert vp_z < vn_z           # Zipf -> prefix
+
+def test_containment_long_doc_no_int_overflow(spark):
+    """A doc of 3000 distinct bigrams: T·sz (900000 × 2999) passes 2^31,
+    so the prefix bound must be taken in bigint. Under ANSI an INT
+    product raises ARITHMETIC_OVERFLOW; both plans, the probe and the
+    operator must instead find both directions with the exact counts."""
+    long_text = " ".join(f"w{j}" for j in range(3000))
+    docs = spark.createDataFrame(
+        [(1, long_text), (2, long_text + " tail1 tail2 tail3"),
+         (3, "short unrelated text")],
+        "doc_id INT, text STRING")
+    sets = D.shingle_sets(docs, "doc_id", "text", n=2)
+    conf = spark.conf
+    prev = conf.get("spark.sql.ansi.enabled")
+    conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        plans = {
+            "auto": D.containment_pairs(sets, threshold_units=900_000),
+            "naive": D.exact_containment(sets, 900_000),
+            "prefix": D.verify_pairs_containment(
+                sets, D.containment_candidates(sets, 900_000), 900_000),
+        }
+        got = {k: {(r["contained"], r["container"], r["common"],
+                    r["sz_contained"], r["containment_units"])
+                   for r in df.collect()} for k, df in plans.items()}
+        probe = D._containment_probe(sets, 900_000)
+    finally:
+        conf.set("spark.sql.ansi.enabled", prev)
+    # doc 1 is wholly inside doc 2; doc 2 is 2999/3002 inside doc 1
+    want = {(1, 2, 2999, 2999, 1_000_000), (2, 1, 2999, 3002, 999_000)}
+    assert got["naive"] == got["prefix"] == got["auto"] == want
+    assert probe == _probe_reference(sets, 900_000)
 
 
 def test_containment_mutual_for_identical_docs(spark):
     docs = spark.createDataFrame(
         [(1, "one two three four"), (2, "one two three four")],
         "doc_id INT, text STRING")
-    sh = D.shingle_table(docs, "doc_id", "text", n=2)
+    sets = D.shingle_sets(docs, "doc_id", "text", n=2)
     got = {(r["contained"], r["container"]) for r in
-           D.containment_pairs(sh, threshold_units=1_000_000).collect()}
+           D.containment_pairs(sets, threshold_units=1_000_000).collect()}
     assert got == {(1, 2), (2, 1)}  # both directions, by design
 
 

@@ -76,11 +76,10 @@ def test_containment_banded_subset_and_recall(spark):
     banding keeps."""
     d = load_par(spark, SF, "documents")
     sets = D.shingle_sets(d, "doc_id", "text", n=2)
-    sh = D.shingle_table(d, "doc_id", "text", n=2)
 
     exact = {(r["contained"], r["container"]): r["containment_units"]
              for r in D.containment_pairs(
-                 sh, threshold_units=800_000).collect()}
+                 sets, threshold_units=800_000).collect()}
     banded = {(r["contained"], r["container"]): r["containment_units"]
               for r in D.containment_pairs_banded(
                   sets, threshold_units=800_000).collect()}
@@ -102,10 +101,8 @@ def test_containment_banded_recall_sf01(spark):
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     sets = D.shingle_sets(docs, "doc_id", "text", n=2) \
         .localCheckpoint(eager=True)
-    sh = D.shingle_table(docs, "doc_id", "text", n=2)
     exact = {(r["contained"], r["container"]) for r in
-             D.containment_pairs(sh, threshold_units=800_000,
-                                 regime="naive").collect()}
+             D.exact_containment(sets, threshold_units=800_000).collect()}
     banded = {(r["contained"], r["container"]) for r in
               D.containment_pairs_banded(
                   sets, threshold_units=800_000).collect()}
@@ -118,39 +115,26 @@ def test_containment_banded_recall_sf01(spark):
 def test_containment_zipf_prefix_chosen_and_planted(spark):
     ids = load_par(spark, SF, "documents").select("doc_id")
     corpus = _zipf_corpus(ids)
-    sh = D.shingle_table(corpus, "doc_id", "text", n=2) \
+    sets = D.shingle_sets(corpus, "doc_id", "text", n=2) \
         .localCheckpoint(eager=True)
 
-    # replicate the auto probe's two integrals: prefix must be cheaper
-    # on this corpus (the driver-visible Zipf side of the crossover)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    dftab = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql import Window
-    w = Window.partitionBy("doc").orderBy("df", "shingle")
-    pref = (sh.join(dftab, "shingle")
-            .withColumn("rn", F.row_number().over(w))
-            .join(sizes, "doc")
-            .filter(F.col("rn") <= F.col("sz")
-                    - F.expr("(800000 * sz + 999999) DIV 1000000") + 1)
-            .select("doc", "shingle"))
-    v_naive = dftab.agg(F.sum(F.col("df") * F.col("df"))).collect()[0][0]
-    gram = sh.count()
-    nd = sizes.count()
-    v_prefix = (pref.join(dftab, "shingle").agg(F.sum("df"))
-                .collect()[0][0] or 0) * (1 + 2 * gram / nd)
-    assert v_prefix < v_naive, (v_prefix, v_naive)
+    # the operator's own probe: prefix must be cheaper on this corpus
+    # (the driver-visible Zipf side of the crossover)
+    probe = D._containment_probe(sets, 800_000)
+    assert D._containment_prefers_prefix(probe), probe
 
-    # result = exactly the planted twins, containment 1.0, both regimes
+    # result = exactly the planted twins, containment 1.0, both plans
     out = {(r["contained"], r["container"]): r["containment_units"]
-           for r in D.containment_pairs(
-               sh, threshold_units=800_000, regime="prefix").collect()}
+           for r in D.verify_pairs_containment(
+               sets, D.containment_candidates(sets, 800_000),
+               800_000).collect()}
     n_twins = ids.filter(F.col("doc_id") % 50 == 0).count()
     assert len(out) == n_twins
     for (a, b), units in out.items():
         assert a == b + 1_000_000 and units == 1_000_000
     naive = {(r["contained"], r["container"]): r["containment_units"]
-             for r in D.containment_pairs(
-                 sh, threshold_units=800_000, regime="naive").collect()}
+             for r in D.exact_containment(
+                 sets, threshold_units=800_000).collect()}
     assert naive == out
 
 

@@ -86,10 +86,11 @@ def _bigrams(text: str) -> frozenset[str]:
 def test_prefix_filter_property_vs_naive(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    sets = D.shingle_sets(df, "doc_id", "text", n=2)
     got = {(int(r["a"]), int(r["b"])): round(float(r["jaccard"]), 9)
-           for r in D.near_dup_pairs_exact(
-               df, "doc_id", "text", n=2, threshold=0.5,
-               allpairs_candidate_budget=-1).collect()}
+           for r in D.verify_pairs_jaccard(
+               sets, D.prefix_filter_candidates(sets, threshold=0.5),
+               threshold=0.5).collect()}
     want = {}
     sets = {i: _bigrams(t) for i, t in rows}
     for a in sets:

@@ -68,33 +68,33 @@ def _pairs(df):
     return {(r["a"], r["b"], round(r["jaccard"], 9)) for r in df.collect()}
 
 
-def test_setjoin_regime_chooser_both_paths_equal_exact(spark):
+def test_setjoin_regime_chooser_both_paths_equal_exact(spark, monkeypatch):
     """The chooser must (a) pick all-pairs on a small/uniform corpus and
     prefix-filter on one whose df distribution explodes the all-pairs
     candidate count, and (b) return the IDENTICAL exact result set either
     way."""
+    from canary_weather_etl_spark.operators import dedup as D
     from canary_weather_etl_spark.operators.dedup import (
         estimate_allpairs_candidates, exact_jaccard, near_dup_pairs_exact,
-        shingle_sets, shingle_table)
+        shingle_sets)
 
     docs = load(spark, "/root/testdata/sf0.001", "documents") \
         .select("doc_id", "text").limit(60)
 
-    exp = _pairs(exact_jaccard(shingle_table(docs, "doc_id", "text", n=2),
-                               threshold=0.5))
-
     sets = shingle_sets(docs, "doc_id", "text", n=2)
+    exp = _pairs(exact_jaccard(sets, threshold=0.5))
+
     c_all = estimate_allpairs_candidates(sets)
     assert c_all > 0
 
     # budget above the estimate → all-pairs path taken
+    monkeypatch.setattr(D, "_ALLPAIRS_BUDGET", c_all + 1)
     got_all = _pairs(near_dup_pairs_exact(
-        docs, "doc_id", "text", n=2, threshold=0.5,
-        allpairs_candidate_budget=c_all + 1))
+        docs, "doc_id", "text", n=2, threshold=0.5))
     # budget below the estimate → prefix-filter path forced
+    monkeypatch.setattr(D, "_ALLPAIRS_BUDGET", c_all - 1)
     got_prefix = _pairs(near_dup_pairs_exact(
-        docs, "doc_id", "text", n=2, threshold=0.5,
-        allpairs_candidate_budget=c_all - 1))
+        docs, "doc_id", "text", n=2, threshold=0.5))
     assert got_all == exp
     assert got_prefix == exp
 

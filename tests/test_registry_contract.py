@@ -40,8 +40,8 @@ _SHARED_ORACLES = {
                "q_stream_mix_weights_drift"}):
         "streaming drift-adjusted mix weights must equal the batch ones",
     frozenset({"q_setjoin_auto_regime", "q_setjoin_prefix_filter"}):
-        "the chooser's all-pairs path and the forced prefix path differ "
-        "physically at sf0.01",
+        "the chooser's all-pairs path and the prefix path called "
+        "directly differ physically at sf0.01",
 }
 
 
@@ -125,6 +125,36 @@ def test_clustering_holds_the_only_lloyd_loop():
                for n in ast.walk(ast.parse(p.read_text()))
                if isinstance(n, ast.FunctionDef) and n.name in gone]
     assert not defined, f"deleted paths are back: {defined}"
+
+
+def test_one_exact_set_similarity_join():
+    """Jaccard and containment run on one set of parts in
+    ``operators/dedup.py``: one candidate verification (the only
+    ``array_intersect(``), one Jaccard formula (the only
+    ``sz_a + sz_b - common``), one rarest-first ranking (the only per-doc
+    window ordered by shingle frequency), and no function takes a
+    parameter that only forces a physical path."""
+    ops = (pathlib.Path(__file__).resolve().parents[1]
+           / "canary_weather_etl_spark" / "operators")
+    src = {p.name: p.read_text() for p in sorted(ops.glob("*.py"))}
+    parts = {
+        "array_intersect(": r"array_intersect\(",
+        "sz_a + sz_b - common":
+            r"sz_a\W*\+\W*(?:F\.col\W*)?sz_b\W*-\W*(?:F\.col\W*)?common",
+        "rarest-first window":
+            r"Window\.partitionBy\(\"doc\"\)\.orderBy\([^)]*\"shingle\"",
+    }
+    for part, pat in parts.items():
+        hits = [name for name, text in src.items()
+                for _ in re.finditer(pat, text)]
+        assert hits == ["dedup.py"], f"{part}: {hits}"
+    knobs = [f"{name}:{n.lineno} {n.name}({a.arg})"
+             for name, text in src.items()
+             for n in ast.walk(ast.parse(text))
+             if isinstance(n, ast.FunctionDef)
+             for a in n.args.args + n.args.kwonlyargs
+             if a.arg == "regime" or a.arg.endswith("_candidate_budget")]
+    assert not knobs, f"path-forcing parameters: {knobs}"
 
 
 def test_get_spark_reads_the_environment_when_called(monkeypatch):
